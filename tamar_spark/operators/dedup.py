@@ -27,6 +27,8 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from tamar_spark.sources import widen_shingles
+
 SIMHASH_BITS = 60
 
 __all__ = [
@@ -104,46 +106,6 @@ def shingles(
     )
 
 
-def _widen_narrow_shingles(sh: DataFrame, id_col: str, width: int = 8) -> DataFrame:
-    """Hash-repartition a shingle frame to a MODEST width when its
-    underlying scan is narrow (r15; guide §2.5 under-parallel input +
-    §2.2 shuffle-block growth).
-
-    The shingle explode inherits the scan's partitioning — locally the
-    fixture parquet is one file, so every downstream map side (the
-    document-frequency partial aggregate, the posting self-join's shuffle
-    write, the 128-permutation MinHash partial min, the SimHash bit sums,
-    the verify ``collect_list``) serializes on 1 task (~0.5-2 s each,
-    measured via REST stage metrics).  Two earlier cures measured WORSE:
-    ``spread()`` on the *documents* input (r15 batch 2/3 — full 32-way
-    width multiplied per-task machinery on the family's many tiny
-    shuffles, summed executor time 11 → 95 s) and doing nothing (the
-    serialized map sides).  The sweet spot is a narrow hash repartition of
-    the exploded frame: width 8 keeps M×R shuffle-block growth negligible
-    while un-serializing every map side, and hashing on ``id_col`` lets
-    the per-document aggregates (signature/fingerprint/``collect_list``)
-    run WITHOUT a further exchange (hash clustering on the grouping key
-    satisfies their distribution).  Interleaved A/B at sf0.1:
-    dedup_ngram_jaccard −24%, dedup_keep_best −53% median, every pair
-    improved.  Width 16 re-tested r16 (hash-on-id keeps the
-    no-extra-exchange property, so doubling was plausible for the
-    CPU-heavy members): keep_best/edit_distance within noise,
-    ngram_jaccard consistently worse (2.09 → 2.29 s) — 8 stands.
-
-    Production posture: the repartition fires only when the
-    FilePartition estimate (``sources.scan_partition_estimate`` — the
-    ``spread()`` probe) says the scan is narrower than ``width``; a
-    pre-split 100 TB corpus estimates wide and the frame passes through
-    UNCHANGED — no shuffle is added at scale, same measured-condition
-    contract as ``spread``."""
-    from tamar_spark.sources import scan_partition_estimate
-
-    est = scan_partition_estimate(sh)
-    if est is not None and est[0] < width:
-        return sh.repartition(width, F.col(id_col))
-    return sh
-
-
 def jaccard_pairs(
     df: DataFrame,
     threshold: float,
@@ -186,7 +148,7 @@ def jaccard_pairs(
     own = []  # persists created by THIS call (a caller-passed sh is theirs)
     if sh is None:
         sh = leased_persist(
-            _widen_narrow_shingles(shingles(df, text_col, id_col, n), id_col),
+            widen_shingles(shingles(df, text_col, id_col, n), id_col),
             StorageLevel.MEMORY_AND_DISK,
         )
         own.append(sh)
@@ -388,7 +350,7 @@ def containment_pairs(
     from tamar_spark.operators.cache import leased_persist, scope_caches
 
     sh = leased_persist(
-        _widen_narrow_shingles(shingles(df, text_col, id_col, n), id_col),
+        widen_shingles(shingles(df, text_col, id_col, n), id_col),
         StorageLevel.MEMORY_AND_DISK,
     )
     if max_doc_freq is None:
@@ -578,7 +540,7 @@ def minhash_lsh_pairs(
     # one persisted shingle set feeds both the signature aggregation and the
     # exact-Jaccard verification — without this the explode+distinct runs twice
     sh = leased_persist(
-        _widen_narrow_shingles(shingles(df, text_col, id_col, n), id_col),
+        widen_shingles(shingles(df, text_col, id_col, n), id_col),
         StorageLevel.MEMORY_AND_DISK,
     )
     # both sides of the band self-join derive from the signature table; persist
@@ -653,7 +615,7 @@ def minhash_lsh_join(
         old_df.select(F.col(id_col), F.col(text_col), F.lit(False).alias("_is_new"))
     )
     sh = leased_persist(
-        _widen_narrow_shingles(
+        widen_shingles(
             shingles(both, text_col, id_col, n, carry_cols=("_is_new",)), id_col
         ),
         StorageLevel.MEMORY_AND_DISK,
@@ -717,7 +679,7 @@ def simhash_fingerprints(
     """
     if bits not in (60, 120):
         raise ValueError("bits must be 60 or 120")
-    sh = _widen_narrow_shingles(
+    sh = widen_shingles(
         shingles(df, text_col, id_col, n, carry_cols=extra_cols), id_col
     ).withColumn(
         "h",

@@ -136,7 +136,8 @@ def mmr_topk(
     bit-identical across engines (same fold order, same literals).
     Returns ``(query_id, pick, vec_id, mmr_score, relevance)`` with
     ``pick`` = 1-based selection order; ``pick`` 1 is the raw top-1 (its
-    mmr_score = relevance; no penalty term yet)."""
+    mmr_score = relevance; no penalty term yet).  Raises ``ValueError``
+    (inside the selection stage) when a query's candidate ids repeat."""
     q = queries.select(
         F.col(id_col).alias(query_id_col),
         _as_double(F.col(vec_col)).alias("_qv"),
@@ -242,6 +243,9 @@ def mmr_topk(
         out = {query_id_col: [], "cand": [], "mmr": [], "rel": [], "pick": []}
         if not left.empty:
             qid = left[query_id_col].iloc[0]
+            dup = left["cand"][left["cand"].duplicated()].tolist()
+            if dup:
+                raise ValueError(f"mmr_topk: query {qid} has duplicate ids {dup}")
             rel_by_c = dict(zip(left["cand"], left["rel"]))
             sim = {}
             for ca, cb, s in zip(right["ca"], right["cb"], right["sim"]):

@@ -17,6 +17,8 @@ from typing import List, Optional
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from tamar_spark.sources import session_width
+
 __all__ = [
     "auto_salt",
     "auto_salted_join",
@@ -211,9 +213,7 @@ def auto_salt(
     import math
 
     if partitions is None:
-        partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
+        partitions = session_width(df.sparkSession)
     row = (
         df.groupBy(key)
         .agg(F.count(F.lit(1)).alias("n"))

@@ -17,16 +17,16 @@ Determinism rules applied throughout:
 
 from __future__ import annotations
 
-import contextlib
 import itertools
 import os
+import threading
 from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from tamar_spark.env import Environment, prep_session
-from tamar_spark.sources import load_table
+from tamar_spark.sources import load_table, session_width, state_width
 from tamar_spark import windows
 from tamar_spark.operators import dedup as D
 from tamar_spark.operators import similarity as S
@@ -37,6 +37,7 @@ QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
 
 _mem_sink_counter = itertools.count()
+_stream_start_lock = threading.Lock()
 
 
 def query(name: str, oracle: str | None = None):
@@ -2057,10 +2058,7 @@ def streaming_session_agg(spark, sf_dir):
             "sum_value",
         )
     )
-    # state width bound at stream start, inside the guard (see
-    # _stream_state_width — input-size-derived, restored on exit)
-    with _stream_state_width(spark, sf_dir):
-        return _run_to_memory(agg)
+    return _run_to_memory(agg, sized_by=_events_path(sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -2258,25 +2256,26 @@ def streaming_tumbling_agg(spark, sf_dir):
     emission — windows not closed by the final watermark never emit (same
     no-end-of-stream-flush contract as the session variant)."""
     prep_session(spark)
-    # state width follows input size (r16: the r15 batch-11 rule extended
-    # to the un-benched stateful streaming family)
-    with _stream_state_width(spark, sf_dir):
-        sdf = _events_stream(spark, sf_dir)
-        agg = (
-            sdf.groupBy(F.window(F.col("ts"), "1 hour"), F.col("event_type"))
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                dsum_r("value").alias("sum_value"),
-            )
-            .select(
-                F.col("window.start").alias("window_start"),
-                F.col("window.end").alias("window_end"),
-                "event_type",
-                "n_events",
-                "sum_value",
-            )
+    sdf = _events_stream(spark, sf_dir)
+    agg = (
+        sdf.groupBy(F.window(F.col("ts"), "1 hour"), F.col("event_type"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            dsum_r("value").alias("sum_value"),
         )
-        return _run_to_memory(agg)
+        .select(
+            F.col("window.start").alias("window_start"),
+            F.col("window.end").alias("window_end"),
+            "event_type",
+            "n_events",
+            "sum_value",
+        )
+    )
+    return _run_to_memory(agg, sized_by=_events_path(sf_dir))
+
+
+def _events_path(sf_dir):
+    return os.path.join(sf_dir, "events.parquet")
 
 
 def _events_stream(spark, sf_dir, watermark: str | None = "10 minutes"):
@@ -2293,9 +2292,7 @@ def _events_stream(spark, sf_dir, watermark: str | None = "10 minutes"):
     TIMESTAMP(MICROS) parquet arrives as TIMESTAMP_NTZ and is cast to LTZ
     (a value identity under the UTC session timezone) so window bounds and
     emitted schemas are stable either way."""
-    import os
-
-    path = os.path.join(sf_dir, "events.parquet")
+    path = _events_path(sf_dir)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = spark.read.parquet(path).schema
     raw_ts = {f.name: f.dataType.simpleString() for f in raw_schema.fields}["ts"]
@@ -2313,104 +2310,27 @@ def _events_stream(spark, sf_dir, watermark: str | None = "10 minutes"):
     return sdf.withWatermark("ts", watermark) if watermark is not None else sdf
 
 
-def _dataset_size(path):
-    """Total data bytes of a parquet dataset at ``path`` — a plain file's
-    size, or the sum over a directory's non-hidden files (part files; the
-    ``_SUCCESS`` / ``.crc`` sidecars are noise at this granularity but are
-    skipped anyway for exactness).  ``None`` when the path is missing or
-    unreadable — callers treat that as "don't derive, keep configured"."""
-    try:
-        if os.path.isdir(path):
-            total = 0
-            for root, dirs, names in os.walk(path):
-                dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-                for n in names:
-                    if not n.startswith((".", "_")):
-                        total += os.path.getsize(os.path.join(root, n))
-            return total or None
-        return os.path.getsize(path)
-    except OSError:
-        return None
-
-
-@contextlib.contextmanager
-def _stream_state_width(spark, sf_dir, source="events", floor=8):
-    """Scope the streaming state-partition width to the INPUT SIZE, never
-    the core count (r15 optimization; guide §2.5 — make partitioning
-    scale-adaptive rather than a constant tuned for either local mode or
-    the cluster).
-
-    A stateful streaming operator instantiates one state store per shuffle
-    partition per micro-batch, and — unlike batch exchanges — AQE cannot
-    coalesce a streaming state exchange: the width is frozen into the
-    checkpoint at query start.  Measured (REST stage metrics, sf0.1): every
-    stateful query in the family spends its dominant executor time opening
-    32 RocksDB instances × 2 micro-batches over ~0.09 MB of state EACH —
-    pure per-instance fixed cost, the same byte-blind-width class as the
-    AQE-exempt repartitions of the r15 batch-4/-10 fixes but in the
-    opposite direction.  The cure is the rule ``streaming_stream_join``
-    has shipped since r2 (sized to in-flight state volume, measured
-    10.8→5.7 s there), generalized and made size-derived instead of a
-    constant: width = input_bytes / 8 MB, floored at 8 (so per-batch
-    compute still fans out locally) and capped at the session's configured
-    ``spark.sql.shuffle.partitions`` (env-derived — a production
-    deployment sizes THAT to its cluster, and a 100 TB input blows past
-    the cap immediately, so at scale this is exactly the configured width
-    and the context manager is a no-op by value).  In-flight keyed state
-    is a fraction of input bytes, so 8 MB of input per state partition is
-    a conservative (wide) target.  Restored on exit — the override must
-    not leak into unrelated batch plans on the shared session (the r2
-    ADVICE rule); the width is bound into the streaming query at
-    ``start()``, which every caller invokes inside this scope.  The
-    save/derive/restore races if two guarded queries run concurrently on
-    one session (Spark has no per-query state-width knob) — the bench and
-    the driver run queries strictly sequentially, which this relies on.
-
-    ``source`` names the parquet dataset the stream reads (the guarded
-    queries all stream ``events``); the size basis must follow the actual
-    input, not a hardcoded filename.  The dataset may be a single file
-    (the fixture layout) or a DIRECTORY of part files (the standard
-    at-scale layout) — ``os.path.getsize`` on a directory returns the
-    inode size (~4 KB) without raising, which would silently clamp a
-    100 TB stream's state width to the floor of 8, so directories are
-    summed file-by-file (r15 VERDICT/ADVICE fix).  Anything unreadable or
-    oddly shaped derives ``None`` → no override, configured width wins.
-
-    ``floor`` is the minimum derived width.  The default 8 suits
-    state-store-fixed-cost-bound queries (aggregations, joins, dedup —
-    fewer RocksDB opens per micro-batch win).  Queries whose stateful op
-    is CPU-BOUND per partition (pandas/Python kernels) pass a higher
-    floor: narrowing their exchange serializes the compute (r16 measured
-    on streaming_dedup_minhash: derived 8 vs the old constant 16 read
-    49.5 → 74.5 s — the same lesson as streaming_session_process, which
-    is not guarded at all).  At 100 TB the size term dominates either
-    floor and the configured width binds, so the floor is local-only."""
-    import math
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    size = _dataset_size(os.path.join(sf_dir, f"{source}.parquet"))
-    if size is not None:
-        width = min(int(prev), max(floor, math.ceil(size / (8 << 20))))
-        spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def _run_to_memory(sdf, mode: str = "append"):
+def _run_to_memory(sdf, mode: str = "append", sized_by=None, floor: int = 8):
     """Run a streaming DataFrame to completion (Trigger.AvailableNow — the
     reference's run-to-termination ``execute``, src/lib.rs:920-925) into a
-    uniquely-named memory sink and return the result table."""
+    uniquely-named memory sink and return the result table.
+
+    ``sized_by`` is the path of the dataset the stream reads; when given,
+    the state width is :func:`sources.state_width` of it at ``floor``,
+    else the configured width.  The width is set only around ``start()``,
+    under a lock: the stream clones the session conf as it starts, so the
+    shared conf is back at the configured width while the stream runs."""
     spark = sdf.sparkSession
     name = f"tamar_stream_out_{next(_mem_sink_counter)}"
-    q = (
-        sdf.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    writer = sdf.writeStream.outputMode(mode).format("memory").queryName(name)
+    with _stream_start_lock:
+        configured = session_width(spark)
+        width = state_width(sized_by, configured, floor) if sized_by else None
+        spark.conf.set("spark.sql.shuffle.partitions", str(width or configured))
+        try:
+            q = writer.trigger(availableNow=True).start()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", str(configured))
     q.awaitTermination()
     return spark.table(name)
 
@@ -2434,42 +2354,33 @@ def streaming_stream_join(spark, sf_dir):
     2-hour relevance window.  At 100 TB the state store holds only the
     watermark-live horizon, not the full history."""
     prep_session(spark)
-    # a stream-stream join instantiates 4 state stores PER shuffle
-    # partition per micro-batch; size partitions to the in-flight state
-    # volume (the standing scale rule since r2, measured 10.8→5.7 s here)
-    # — r16 replaces the constant 8 with the shared size-derived guard:
-    # identical width at this SF (2 MB events → the floor of 8), but the
-    # configured session width — not 8 — at 100 TB, where a constant
-    # would throttle the join state exchange.
-    with _stream_state_width(spark, sf_dir):
-        clicks = (
-            _events_stream(spark, sf_dir)
-            .filter(F.col("event_type") == "click")
-            .select("event_id", "user_id", "ts")
+    clicks = (
+        _events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "click")
+        .select("event_id", "user_id", "ts")
+    )
+    views = (
+        _events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "view")
+        .select(
+            F.col("event_id").alias("view_id"),
+            F.col("user_id").alias("v_user_id"),
+            F.col("ts").alias("view_ts"),
         )
-        views = (
-            _events_stream(spark, sf_dir)
-            .filter(F.col("event_type") == "view")
-            .select(
-                F.col("event_id").alias("view_id"),
-                F.col("user_id").alias("v_user_id"),
-                F.col("ts").alias("view_ts"),
-            )
-        )
-        joined = clicks.join(
-            views,
-            (F.col("user_id") == F.col("v_user_id"))
-            & (F.col("view_ts") >= F.col("ts") - F.expr("INTERVAL 2 HOURS"))
-            & (F.col("view_ts") <= F.col("ts")),
-        ).select(
-            F.col("event_id").alias("click_id"),
-            "view_id",
-            "user_id",
-            F.col("ts").alias("click_ts"),
-            "view_ts",
-        )
-        # the partition override is bound at stream start, inside the guard
-        return _run_to_memory(joined)
+    )
+    joined = clicks.join(
+        views,
+        (F.col("user_id") == F.col("v_user_id"))
+        & (F.col("view_ts") >= F.col("ts") - F.expr("INTERVAL 2 HOURS"))
+        & (F.col("view_ts") <= F.col("ts")),
+    ).select(
+        F.col("event_id").alias("click_id"),
+        "view_id",
+        "user_id",
+        F.col("ts").alias("click_ts"),
+        "view_ts",
+    )
+    return _run_to_memory(joined, sized_by=_events_path(sf_dir))
 
 
 @query(
@@ -2486,16 +2397,13 @@ def streaming_dedup(spark, sf_dir):
     evicts state for expired keys (``dropDuplicatesWithinWatermark`` is the
     bounded-state variant at 100 TB)."""
     prep_session(spark)
-    # state width follows input size (r16: the r15 batch-11 rule extended
-    # to the un-benched stateful streaming family)
-    with _stream_state_width(spark, sf_dir):
-        dedup = (
-            _events_stream(spark, sf_dir)
-            .select("user_id", "event_type", "ts")
-            .dropDuplicates(["user_id", "event_type"])
-            .select("user_id", "event_type")
-        )
-        return _run_to_memory(dedup)
+    dedup = (
+        _events_stream(spark, sf_dir)
+        .select("user_id", "event_type", "ts")
+        .dropDuplicates(["user_id", "event_type"])
+        .select("user_id", "event_type")
+    )
+    return _run_to_memory(dedup, sized_by=_events_path(sf_dir))
 
 
 @query(
@@ -2554,42 +2462,31 @@ def streaming_dedup_minhash(spark, sf_dir):
     event-time timers and self-clean at window expiry (the
     sessions/CEP mechanism).  Stream-batch signature parity is pinned
     by test (same hash family via minhash_coeffs)."""
-    import os
-
     from tamar_spark.streaming.dedup import (
         attach_minhash_bands,
         minhash_dedup_streaming,
     )
 
     prep_session(spark)
-    # width follows the DOCUMENTS input size (r16 — replaces the old
-    # constant 16, which would have under-partitioned a 100 TB document
-    # stream).  floor=16, NOT the default 8: the per-bucket minhash
-    # verification is CPU-bound Python, and the derived 8 measured 49.5 →
-    # 74.5 s against the old 16 (interleaved A/B) — the floor keeps the
-    # measured-optimal local width while the size term still takes over
-    # at scale.
-    with _stream_state_width(spark, sf_dir, source="documents", floor=16):
-        schema = spark.read.parquet(
-            os.path.join(sf_dir, "documents.parquet")
-        ).schema
-        sdf = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "documents.parquet")
-            .parquet(sf_dir)
-            .withColumn(
-                "ts",
-                F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")),
-            )
-            .withWatermark("ts", "60 seconds")
-            .select("doc_id", "ts", "text")
+    path = os.path.join(sf_dir, "documents.parquet")
+    schema = spark.read.parquet(path).schema
+    sdf = (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "documents.parquet")
+        .parquet(sf_dir)
+        .withColumn(
+            "ts",
+            F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")),
         )
-        out = minhash_dedup_streaming(
-            attach_minhash_bands(sdf),
-            threshold=0.5,
-            window_us=3600 * 1_000_000,
-        )
-        return _run_to_memory(out)
+        .withWatermark("ts", "60 seconds")
+        .select("doc_id", "ts", "text")
+    )
+    out = minhash_dedup_streaming(
+        attach_minhash_bands(sdf),
+        threshold=0.5,
+        window_us=3600 * 1_000_000,
+    )
+    return _run_to_memory(out, sized_by=path, floor=16)
 
 
 @query(
@@ -2648,38 +2545,34 @@ def streaming_dedup_minhash_sig(spark, sf_dir):
     generation stays an equi-shuffle on (band, bucket), state stays
     window-bounded with timer self-cleanup; only the per-doc payload
     constant shrinks."""
-    import os
-
     from tamar_spark.streaming.dedup import (
         attach_minhash_bands,
         minhash_dedup_streaming,
     )
 
     prep_session(spark)
-    # width follows the documents input size, floor=16 for the CPU-bound
-    # per-bucket Python verification (r16 — see the base variant's A/B)
-    with _stream_state_width(spark, sf_dir, source="documents", floor=16):
-        schema = spark.read.parquet(
-            os.path.join(sf_dir, "documents.parquet")
-        ).schema
-        sdf = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "documents.parquet")
-            .parquet(sf_dir)
-            .withColumn(
-                "ts",
-                F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")),
-            )
-            .withWatermark("ts", "60 seconds")
-            .select("doc_id", "ts", "text")
+    path = os.path.join(sf_dir, "documents.parquet")
+    schema = spark.read.parquet(path).schema
+    sdf = (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "documents.parquet")
+        .parquet(sf_dir)
+        .withColumn(
+            "ts",
+            F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id")),
         )
-        out = minhash_dedup_streaming(
-            attach_minhash_bands(sdf, keep_signature=True),
-            threshold=0.5,
-            window_us=3600 * 1_000_000,
-            store_shingles=False,
-        )
-        return _run_to_memory(out.select("doc_id_1", "doc_id_2"))
+        .withWatermark("ts", "60 seconds")
+        .select("doc_id", "ts", "text")
+    )
+    out = minhash_dedup_streaming(
+        attach_minhash_bands(sdf, keep_signature=True),
+        threshold=0.5,
+        window_us=3600 * 1_000_000,
+        store_shingles=False,
+    )
+    return _run_to_memory(
+        out.select("doc_id_1", "doc_id_2"), sized_by=path, floor=16
+    )
 
 
 # Extended inventory (TPC-H-shaped joins/aggregates, scalar-function library,

@@ -39,9 +39,9 @@ from tamar_spark.queries import (
     floor_div,
     dsum_r,
     round_ieee,
+    _events_path,
     _events_stream,
     _run_to_memory,
-    _stream_state_width,
 )
 from tamar_spark.sources import load_table
 
@@ -261,10 +261,7 @@ def streaming_dedup_bounded(spark, sf_dir):
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    # state width bound at stream start, inside the guard (see
-    # _stream_state_width — input-size-derived, restored on exit)
-    with _stream_state_width(spark, sf_dir):
-        return _run_to_memory(dedup)
+    return _run_to_memory(dedup, sized_by=_events_path(sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -1068,10 +1065,8 @@ def streaming_cep_funnel(spark, sf_dir):
         within_us=172_800 * 1_000_000,
         id_names=("view_id", "click_id", "purchase_id"),
     )
-    # state width bound at stream start, inside the guard (see
-    # _stream_state_width — input-size-derived, restored on exit)
-    with _stream_state_width(spark, sf_dir):
-        return _run_to_memory(out.to_df()).orderBy("user_id", "purchase_id")
+    out = _run_to_memory(out.to_df(), sized_by=_events_path(sf_dir))
+    return out.orderBy("user_id", "purchase_id")
 
 
 @query(
@@ -1134,10 +1129,8 @@ def streaming_cep_funnel4(spark, sf_dir):
         within_us=345_600 * 1_000_000,
         id_names=("signup_id", "view_id", "click_id", "purchase_id"),
     )
-    # state width bound at stream start, inside the guard (see
-    # _stream_state_width — input-size-derived, restored on exit)
-    with _stream_state_width(spark, sf_dir):
-        return _run_to_memory(out.to_df()).orderBy("user_id", "purchase_id")
+    out = _run_to_memory(out.to_df(), sized_by=_events_path(sf_dir))
+    return out.orderBy("user_id", "purchase_id")
 
 
 @query(
@@ -1259,10 +1252,8 @@ def streaming_cep_runs(spark, sf_dir):
     )
     keyed = DataStream(sdf, event_time="ts").key_by("user_id")
     out = type_runs_streaming(keyed, min_len=3)
-    # state width bound at stream start, inside the guard (see
-    # _stream_state_width — input-size-derived, restored on exit)
-    with _stream_state_width(spark, sf_dir):
-        return _run_to_memory(out.to_df()).orderBy("user_id", "run_start_id")
+    out = _run_to_memory(out.to_df(), sized_by=_events_path(sf_dir))
+    return out.orderBy("user_id", "run_start_id")
 
 
 # --------------------------------------------------------------------------

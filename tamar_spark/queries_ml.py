@@ -27,10 +27,11 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from tamar_spark.env import prep_session
 from tamar_spark.operators import clustering as C
 from tamar_spark.operators import dedup as D
-from tamar_spark.queries import query
-from tamar_spark.sources import load_table, spread
+from tamar_spark.queries import query, _events_path, _events_stream, _run_to_memory
+from tamar_spark.sources import load_table, pin_session_width, spread
 from tamar_spark.functions import text as T
 
 
@@ -655,14 +656,6 @@ def streaming_heavy_hitters(spark, sf_dir):
     table equals the batch sketch exactly and the whole query shares the
     batch oracle.  The probe/rank side (exact counts for the true top-20
     and the one-sided-error pin) reads the same fixture in batch."""
-    from tamar_spark.queries import (
-        _events_stream,
-        _run_to_memory,
-        _stream_state_width,
-        prep_session,
-    )
-    from tamar_spark.sources import load_table as _lt
-
     prep_session(spark)
     e_s = _events_stream(spark, sf_dir).select(
         F.col("user_id").cast("string").alias("u")
@@ -670,15 +663,13 @@ def streaming_heavy_hitters(spark, sf_dir):
     pos_s = e_s.select("u", F.explode(_cms_positions("u")).alias("kp")).select(
         F.col("kp.k").alias("k"), F.col("kp.pos").alias("pos")
     )
-    # state width bound at stream start, inside the guard (see
-    # _stream_state_width — input-size-derived, restored on exit)
-    with _stream_state_width(spark, sf_dir):
-        cells = _run_to_memory(
-            pos_s.groupBy("k", "pos").agg(F.count(F.lit(1)).alias("cnt")),
-            mode="complete",
-        )
+    cells = _run_to_memory(
+        pos_s.groupBy("k", "pos").agg(F.count(F.lit(1)).alias("cnt")),
+        mode="complete",
+        sized_by=_events_path(sf_dir),
+    )
 
-    e = _lt(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         F.col("user_id").cast("string").alias("u")
     )
     pos = e.select("u", F.explode(_cms_positions("u")).alias("kp")).select(
@@ -738,17 +729,9 @@ def _semdedup_pairs(spark, sf_dir, k: int, tau: float = 0.4):
         "vec_id", F.col("embedding").cast("array<double>").alias("_v")
     )
     pv = asg.join(v, "vec_id")
-    # Pin the pair-join width: the within-cluster quadratic scoring is
-    # CPU-bound per OUTPUT pair, but its INPUT shuffle is sub-MB at
-    # fixture scale, so AQE (which coalesces by bytes) folds the cluster
-    # shuffle to one task and serializes ~n²/k cosine folds (measured: a
-    # 2.7 s single-task stage reading 0.8 MB).  REPARTITION_BY_NUM is
-    # exempt from coalescing, and hash(cluster) satisfies both join
-    # sides' clustering so no further exchange appears.  N = the
-    # session's configured shuffle width (the env-derived sizing knob,
-    # not a local constant).
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    pv = pv.repartition(width, "cluster")
+    # the within-cluster cosine is CPU-bound per output pair over a
+    # sub-MB shuffle: keep AQE from folding it into one task
+    pv = pin_session_width(pv, "cluster")
     from tamar_spark.operators.similarity import dot, l2_norm
 
     x = pv.select(

@@ -2788,13 +2788,16 @@ def bpe_apply_merges(
     rule-broadcast chain, not the encode projection, dominated
     bpe_encode).  With literal rules the whole application folds into
     the scan-side projection and the barriers disappear at every
-    scale."""
+    scale.  Raises ``ValueError`` when the merge table holds fewer than
+    ``steps`` rules, rather than silently applying fewer."""
     rules = (
         merges.where(F.col("step") <= steps)
         .select("step", "pair_left", "pair_right")
         .orderBy("step")
         .collect()
     )
+    if len(rules) < steps:
+        raise ValueError(f"bpe_apply_merges: steps={steps}, only {len(rules)} rules")
     expr = F.col(repr_col)
     for r in rules:
         a, b = r["pair_left"], r["pair_right"]

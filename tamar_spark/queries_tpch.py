@@ -22,7 +22,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from tamar_spark.env import prep_session
 from tamar_spark.queries import query, dsum_r, round_ieee, _DEC, epoch_us, floor_div
+from tamar_spark.queries import _events_path, _events_stream, _run_to_memory
 from tamar_spark.sources import load_table
 from tamar_spark.operators import dedup as D
 
@@ -800,32 +802,22 @@ def streaming_sliding_agg(spark, sf_dir):
     """Streaming sliding (hopping) windows, 1 h / 30 min, append mode: only
     windows closed by the final watermark emit (run-to-completion semantics
     as streaming_session_agg; the oracle filters to exactly those)."""
-    from tamar_spark.queries import (
-        _events_stream,
-        _run_to_memory,
-        _stream_state_width,
-        prep_session,
-    )
-
     prep_session(spark)
-    # state width follows input size (r16: the r15 batch-11 rule extended
-    # to the un-benched stateful streaming family)
-    with _stream_state_width(spark, sf_dir):
-        sdf = _events_stream(spark, sf_dir)
-        agg = (
-            sdf.groupBy(F.window(F.col("ts"), "1 hour", "30 minutes"))
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                dsum_r("value").alias("sum_value"),
-            )
-            .select(
-                F.col("window.start").alias("window_start"),
-                F.col("window.end").alias("window_end"),
-                "n_events",
-                "sum_value",
-            )
+    sdf = _events_stream(spark, sf_dir)
+    agg = (
+        sdf.groupBy(F.window(F.col("ts"), "1 hour", "30 minutes"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            dsum_r("value").alias("sum_value"),
         )
-        return _run_to_memory(agg)
+        .select(
+            F.col("window.start").alias("window_start"),
+            F.col("window.end").alias("window_end"),
+            "n_events",
+            "sum_value",
+        )
+    )
+    return _run_to_memory(agg, sized_by=_events_path(sf_dir))
 
 
 # The IVF pipeline over any (c: neighbor_id, cv) corpus and (q: query_id,
@@ -1269,20 +1261,10 @@ def streaming_complete_counts(spark, sf_dir):
     """Complete-output-mode streaming aggregation: the sink holds the full
     current aggregate after every micro-batch (vs append's finalized-only
     rows) — after run-to-completion it equals the batch group-by."""
-    from tamar_spark.queries import (
-        _events_stream,
-        _run_to_memory,
-        _stream_state_width,
-        prep_session,
-    )
-
     prep_session(spark)
-    # state width follows input size (r16: the r15 batch-11 rule extended
-    # to the un-benched stateful streaming family)
-    with _stream_state_width(spark, sf_dir):
-        sdf = _events_stream(spark, sf_dir)
-        agg = sdf.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-        return _run_to_memory(agg, mode="complete")
+    sdf = _events_stream(spark, sf_dir)
+    agg = sdf.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    return _run_to_memory(agg, mode="complete", sized_by=_events_path(sf_dir))
 
 
 @query(
@@ -1539,12 +1521,6 @@ def streaming_session_process(spark, sf_dir):
     the oracle's final-watermark filter is strict too."""
     import pandas as pd
 
-    from tamar_spark.queries import (
-        _events_stream,
-        _run_to_memory,
-        _stream_state_width,
-        prep_session,
-    )
     from tamar_spark.stream import DataStream
     from tamar_spark.streaming.sessions import session_process_streaming
 
@@ -1568,13 +1544,8 @@ def streaming_session_process(spark, sf_dir):
             }
         )
 
-    # DELIBERATELY NOT under _stream_state_width (r16, measured): the
-    # per-session pandas fire is CPU-bound Python, so narrowing the state
-    # exchange to 8 serializes it — interleaved A/B read 10.05 → 26.15 s
-    # median (worse in every pair).  This is the r15 batch-4 rule
-    # (stateful_event_numbering pinned its Python width UP) winning over
-    # the batch-11 state-store-count rule; the configured session width
-    # stays, exactly as for the batch process_state path.
+    # not sized: the per-session pandas fire is CPU-bound, so it keeps the
+    # configured state width (see the sources partitioning policy)
     sdf = _events_stream(spark, sf_dir).select(
         "user_id", "ts", "value", "event_id"
     )
@@ -1780,8 +1751,6 @@ def streaming_static_join(spark, sf_dir):
     dimension (broadcast — no stream-side state at all, unlike
     stream-stream joins) then aggregated in complete mode.  The canonical
     'enrich events with a dim table' pattern at any scale."""
-    from tamar_spark.queries import _events_stream, _run_to_memory, prep_session
-
     prep_session(spark)
     dim = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     sdf = _events_stream(spark, sf_dir).select("user_id")
@@ -1830,13 +1799,6 @@ def streaming_asof_dim(spark, sf_dir):
     match — identical semantics in both engines.  Price rounds via
     round_ieee (floor(x·100+0.5)/100) so the hash is engine-stable on
     .5-boundary cells."""
-    from tamar_spark.queries import (
-        _events_stream,
-        _run_to_memory,
-        prep_session,
-        round_ieee,
-    )
-
     prep_session(spark)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     dim = (
@@ -2866,53 +2828,40 @@ def streaming_stream_outer_join(spark, sf_dir):
     invariants (matched set == batch inner join; every emitted NULL row
     genuinely unmatched) stay pinned by
     ``test_stream_outer_join_invariants``."""
-    from tamar_spark.queries import (
-        _events_stream,
-        _run_to_memory,
-        _stream_state_width,
-        prep_session,
-    )
-
     prep_session(spark)
-    # a stream-stream join instantiates 4 state stores per shuffle
-    # partition per micro-batch; width follows input size (r16 — the same
-    # rule streaming_stream_join has carried since r2, size-derived)
-    with _stream_state_width(spark, sf_dir):
-        clicks = (
-            _events_stream(spark, sf_dir)
-            .filter(F.col("event_type") == "click")
-            .select("event_id", "user_id", "ts")
+    clicks = (
+        _events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "click")
+        .select("event_id", "user_id", "ts")
+    )
+    views = (
+        _events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "view")
+        .select(
+            F.col("event_id").alias("view_id"),
+            F.col("user_id").alias("v_user_id"),
+            F.col("ts").alias("view_ts"),
         )
-        views = (
-            _events_stream(spark, sf_dir)
-            .filter(F.col("event_type") == "view")
-            .select(
-                F.col("event_id").alias("view_id"),
-                F.col("user_id").alias("v_user_id"),
-                F.col("ts").alias("view_ts"),
-            )
-        )
-        joined = clicks.join(
-            views,
-            (F.col("user_id") == F.col("v_user_id"))
-            & (F.col("view_ts") >= F.col("ts") - F.expr("INTERVAL 2 HOURS"))
-            & (F.col("view_ts") <= F.col("ts")),
-            "left_outer",
-        ).select(
-            F.col("event_id").alias("click_id"),
-            "view_id",
-            "user_id",
-            F.col("ts").alias("click_ts"),
-        )
-        out = _run_to_memory(joined)
+    )
+    joined = clicks.join(
+        views,
+        (F.col("user_id") == F.col("v_user_id"))
+        & (F.col("view_ts") >= F.col("ts") - F.expr("INTERVAL 2 HOURS"))
+        & (F.col("view_ts") <= F.col("ts")),
+        "left_outer",
+    ).select(
+        F.col("event_id").alias("click_id"),
+        "view_id",
+        "user_id",
+        F.col("ts").alias("click_ts"),
+    )
+    out = _run_to_memory(joined, sized_by=_events_path(sf_dir))
     # reconstruct the final watermark from the batch table: min over the two
     # filtered sides of (ms-truncated max event time) − delay; 1-row
     # aggregate, broadcast by the cross join
     # epoch_us handles TIMESTAMP_NTZ inputs; cast the reconstructed
     # watermark back to click_ts's own type so the comparison below never
     # mixes NTZ with LTZ.
-    from tamar_spark.queries import epoch_us
-
     ts_type = dict(out.dtypes)["click_ts"]
     ms_floor = lambda c: F.timestamp_millis((epoch_us(c) / 1000).cast("long")).cast(
         ts_type
@@ -3100,12 +3049,6 @@ def streaming_global_state(spark, sf_dir):
     task) is the documented semantic, not an accident."""
     import pandas as pd
 
-    from tamar_spark.queries import (
-        _events_stream,
-        _run_to_memory,
-        _stream_state_width,
-        prep_session,
-    )
     from tamar_spark.stream import DataStream
     from tamar_spark.streaming.stateful import global_process_state_streaming
 
@@ -3147,21 +3090,16 @@ def streaming_global_state(spark, sf_dir):
             }
         )
 
-    # state width follows input size (r16): the singleton key means all
-    # rows land in ONE state partition regardless, so every extra shuffle
-    # partition is an empty state-store open per micro-batch — pure fixed
-    # cost the size-derived width trims
-    with _stream_state_width(spark, sf_dir):
-        sdf = _events_stream(spark, sf_dir).select(
-            "event_id", "ts", "event_type", "value"
-        )
-        out = global_process_state_streaming(
-            DataStream(sdf, event_time="ts"),
-            walk,
-            schema,
-            init_state=lambda: {"seq": 0, "purchases": 0, "max": None},
-        )
-        return _run_to_memory(out.df)
+    sdf = _events_stream(spark, sf_dir).select(
+        "event_id", "ts", "event_type", "value"
+    )
+    out = global_process_state_streaming(
+        DataStream(sdf, event_time="ts"),
+        walk,
+        schema,
+        init_state=lambda: {"seq": 0, "purchases": 0, "max": None},
+    )
+    return _run_to_memory(out.df, sized_by=_events_path(sf_dir))
 
 
 @query(
@@ -3214,46 +3152,35 @@ def streaming_stream_full_outer_join(spark, sf_dir):
     margin that keeps the kept set strictly inside the eviction bound
     under either boundary convention.  The oracle is inner join ∪
     closed left anti ∪ closed right anti."""
-    from tamar_spark.queries import (
-        _events_stream,
-        _run_to_memory,
-        _stream_state_width,
-        epoch_us,
-        prep_session,
-    )
-
     prep_session(spark)
-    # 4 state stores per shuffle partition per micro-batch; width follows
-    # input size (r16 — same rule as streaming_stream_join)
-    with _stream_state_width(spark, sf_dir):
-        clicks = (
-            _events_stream(spark, sf_dir)
-            .filter(F.col("event_type") == "click")
-            .select("event_id", "user_id", "ts")
+    clicks = (
+        _events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "click")
+        .select("event_id", "user_id", "ts")
+    )
+    views = (
+        _events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "view")
+        .select(
+            F.col("event_id").alias("view_id"),
+            F.col("user_id").alias("v_user_id"),
+            F.col("ts").alias("view_ts"),
         )
-        views = (
-            _events_stream(spark, sf_dir)
-            .filter(F.col("event_type") == "view")
-            .select(
-                F.col("event_id").alias("view_id"),
-                F.col("user_id").alias("v_user_id"),
-                F.col("ts").alias("view_ts"),
-            )
-        )
-        joined = clicks.join(
-            views,
-            (F.col("user_id") == F.col("v_user_id"))
-            & (F.col("view_ts") >= F.col("ts") - F.expr("INTERVAL 2 HOURS"))
-            & (F.col("view_ts") <= F.col("ts")),
-            "full_outer",
-        ).select(
-            F.col("event_id").alias("click_id"),
-            "view_id",
-            F.coalesce(F.col("user_id"), F.col("v_user_id")).alias("user_id"),
-            F.col("ts").alias("click_ts"),
-            "view_ts",
-        )
-        out = _run_to_memory(joined)
+    )
+    joined = clicks.join(
+        views,
+        (F.col("user_id") == F.col("v_user_id"))
+        & (F.col("view_ts") >= F.col("ts") - F.expr("INTERVAL 2 HOURS"))
+        & (F.col("view_ts") <= F.col("ts")),
+        "full_outer",
+    ).select(
+        F.col("event_id").alias("click_id"),
+        "view_id",
+        F.coalesce(F.col("user_id"), F.col("v_user_id")).alias("user_id"),
+        F.col("ts").alias("click_ts"),
+        "view_ts",
+    )
+    out = _run_to_memory(joined, sized_by=_events_path(sf_dir))
     ts_type = dict(out.dtypes)["click_ts"]
     ms_floor = lambda c: F.timestamp_millis(
         (epoch_us(c) / 1000).cast("long")
@@ -3333,12 +3260,6 @@ def streaming_ewma_anomaly(spark, sf_dir):
 
     import pandas as pd
 
-    from tamar_spark.queries import (
-        _events_stream,
-        _run_to_memory,
-        _stream_state_width,
-        prep_session,
-    )
     from tamar_spark.stream import DataStream
     from tamar_spark.streaming.stateful import process_state_streaming
 
@@ -3386,10 +3307,7 @@ def streaming_ewma_anomaly(spark, sf_dir):
     out = process_state_streaming(
         keyed, walk, schema, init_state=lambda k: {"ewma": None}
     )
-    # state width bound at stream start, inside the guard (see
-    # _stream_state_width — input-size-derived, restored on exit)
-    with _stream_state_width(spark, sf_dir):
-        return _run_to_memory(out.df)
+    return _run_to_memory(out.df, sized_by=_events_path(sf_dir))
 
 
 @query(
@@ -3431,12 +3349,6 @@ def streaming_attribution(spark, sf_dir):
     shared with streaming_ewma_anomaly."""
     import pandas as pd
 
-    from tamar_spark.queries import (
-        _events_stream,
-        _run_to_memory,
-        _stream_state_width,
-        prep_session,
-    )
     from tamar_spark.stream import DataStream
     from tamar_spark.streaming.stateful import process_state_streaming
 
@@ -3475,10 +3387,7 @@ def streaming_attribution(spark, sf_dir):
     out = process_state_streaming(
         keyed, walk, schema, init_state=lambda k: {"channel": None}
     )
-    # state width bound at stream start, inside the guard (see
-    # _stream_state_width — input-size-derived, restored on exit)
-    with _stream_state_width(spark, sf_dir):
-        return _run_to_memory(out.df)
+    return _run_to_memory(out.df, sized_by=_events_path(sf_dir))
 
 
 _BLOOM_HASHES = 3

@@ -44,6 +44,8 @@ from typing import Any, Callable, Optional
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from tamar_spark.sources import pin_session_width
+
 __all__ = [
     "process_state",
     "process_state_streaming",
@@ -78,20 +80,9 @@ def process_state(
         state = init_state(key) if init_state is not None else None
         return fn(key, pdf, state)
 
-    # Pin the pre-Python exchange width (r15 optimization, guide §4):
-    # AQE coalesces shuffles by BYTES, and a keyed pandas walk is
-    # CPU-bound per row, not byte-bound — at bench scale the ~10 MB
-    # event shuffle coalesced to 2 partitions and the per-group Python
-    # work serialized 2-wide (measured: one 2-task 5.6 s-exec stage
-    # dominating stateful_event_numbering).  An explicit
-    # repartition(N, keys) is REPARTITION_BY_NUM, which AQE never
-    # coalesces, and its hashpartitioning satisfies the groupBy's
-    # clustering requirement, so no second exchange is added.  N is the
-    # session's configured shuffle width (the pre-AQE sizing knob the
-    # operator inherits on any cluster), not a local constant.
-    n_parts = int(keyed.df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # the pandas walk is CPU-bound per row: keep AQE from coalescing it
     out = (
-        keyed.df.repartition(n_parts, *keyed.keys)
+        pin_session_width(keyed.df, *keyed.keys)
         .groupBy(*keyed.keys)
         .applyInPandas(apply, schema=schema)
     )

@@ -30,6 +30,8 @@ from typing import Callable, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from tamar_spark.sources import default_parallelism
+
 __all__ = [
     "SessionWindowFactory",
     "TumblingWindowFactory",
@@ -268,12 +270,7 @@ def auto_salted_sessions(
     ``n_events``, one DECIMAL column per ``sums`` entry.  Pass
     ``decision`` (a dict) to capture the measurement for telemetry."""
     if partitions is None:
-        try:
-            partitions = df.sparkSession.sparkContext.defaultParallelism
-        except Exception:  # Spark Connect: no SparkContext handle
-            partitions = int(
-                df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-            )
+        partitions = default_parallelism(df.sparkSession)
     row = (
         df.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("n"))

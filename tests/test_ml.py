@@ -166,6 +166,18 @@ def test_mmr_matches_direct_greedy_model(spark):
     assert len(set(sel) - plain) >= 2
 
 
+def test_mmr_rejects_duplicate_candidate_ids(spark):
+    """A repeated corpus ``vec_id`` would merge two candidates into one
+    relevance entry; mmr_topk must fail loudly instead."""
+    from tamar_spark.operators.similarity import mmr_topk
+
+    rows = [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.8, 0.3]), (2, [0.1, 0.9])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    queries = df.filter(F.col("vec_id") == 0)
+    with pytest.raises(Exception, match=r"query 0 has duplicate ids \[2\]"):
+        mmr_topk(df, queries, k=2, n_candidates=3).collect()
+
+
 def test_hybrid_rrf_fuses_leg_ranks_exactly(spark, sf_dir):
     """The fused score must equal 1/(60+lex_rank) + 1/(60+sem_rank)
     recomputed directly from the emitted leg ranks (missing leg = 0), the

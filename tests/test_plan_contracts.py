@@ -10,6 +10,7 @@ These tests pin those properties so a refactor can't silently regress them.
 """
 
 import pytest
+from pyspark.sql.streaming import StreamingQueryListener
 
 from tamar_spark.plans import (
     broadcast_join_count,
@@ -943,71 +944,246 @@ def test_weighted_sample_topk_is_take_ordered(spark, sf_dir):
     assert "TakeOrdered" in plan
 
 
-def test_stream_state_width_is_input_size_derived_and_restored(spark, sf_dir):
-    """The r15 streaming state-width rule (queries._stream_state_width):
-    one state store is instantiated per shuffle partition per micro-batch
-    and AQE cannot coalesce a streaming state exchange, so the width must
-    derive from INPUT SIZE — min(configured, max(8, ceil(bytes/8MB))) —
-    never sit at the core count for a fixture-sized input, and must grow
-    back to the configured width as soon as the input is large (the
-    100 TB posture: the cap binds immediately at scale).  The override
-    must restore on exit, including the exception path — a leaked
-    override would rewrite every later batch plan on the shared session
-    (the r2 ADVICE rule)."""
+# ---------------------------------------------------------------------------
+# The streaming state-width rule (sources.state_width) and the stream runner
+# that applies it (queries._run_to_memory).
+# ---------------------------------------------------------------------------
+
+_MIB8 = 8 << 20
+
+
+def _sparse(path, nbytes):
+    with open(path, "wb") as fh:
+        fh.truncate(nbytes)  # sparse: no real I/O
+
+
+def test_state_width_single_file_is_size_derived(sf_dir):
     import math
-    import os as _os
+    import os
 
-    from tamar_spark.queries import _stream_state_width
+    from tamar_spark.sources import state_width
 
+    path = os.path.join(sf_dir, "events.parquet")
+    size = os.path.getsize(path)
+    want = min(32, max(8, math.ceil(size / _MIB8)))
+    assert state_width(path, 32) == want
+    assert state_width(path, 4) == 4  # never above the configured width
+
+
+def test_state_width_sums_directory_parts_and_skips_sidecars(tmp_path):
+    from tamar_spark.sources import state_width
+
+    ds = tmp_path / "events.parquet"
+    ds.mkdir()
+    for i in range(6):
+        _sparse(ds / f"part-{i:05d}.parquet", 24 << 20)  # 144 MiB summed
+    # sidecars large enough to change the answer if they were counted
+    _sparse(ds / "_SUCCESS", 256 << 20)
+    _sparse(ds / ".part-00000.parquet.crc", 256 << 20)
+    (ds / "_temporary").mkdir()
+    _sparse(ds / "_temporary" / "part-x.parquet", 256 << 20)
+    assert state_width(str(ds), 32) == 18  # not the inode size's floor 8
+
+
+def test_state_width_huge_input_gives_configured_cap(tmp_path):
+    from tamar_spark.sources import state_width
+
+    big = tmp_path / "events.parquet"
+    _sparse(big, 32 * _MIB8 + 1)
+    assert state_width(str(big), 32) == 32
+
+
+def test_state_width_missing_input_keeps_configured(tmp_path):
+    from tamar_spark.sources import state_width
+
+    assert state_width("/nonexistent-dir/events.parquet", 32) is None
+    (tmp_path / "empty.parquet").mkdir()
+    assert state_width(str(tmp_path / "empty.parquet"), 32) is None
+
+
+def test_state_width_floor_16_on_documents(sf_dir):
+    import os
+
+    from tamar_spark.sources import state_width
+
+    path = os.path.join(sf_dir, "documents.parquet")
+    assert os.path.getsize(path) < 16 * _MIB8  # the floor binds here
+    assert state_width(path, 32, floor=16) == 16
+    assert state_width(path, 12, floor=16) == 12
+
+
+@pytest.fixture
+def wide_session(spark, monkeypatch):
+    """Configured width 32 (``prep_session`` reads SPARK_GRAFT_CPUS), so a
+    derived state width is narrower than the configured one."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    size = _os.path.getsize(_os.path.join(sf_dir, "events.parquet"))
-    expect = min(int(prev), max(8, math.ceil(size / (8 << 20))))
-    with _stream_state_width(spark, sf_dir):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(expect)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    # exception path restores too
-    try:
-        with _stream_state_width(spark, sf_dir):
-            raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    # a huge input must bind the configured cap through the REAL code
-    # path (r15 ADVICE: the old clause re-derived the same arithmetic
-    # and tested an identity): a sparse file the size of a large shard
-    # set must leave the conf at the configured width inside the scope
-    import tempfile
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    yield 32
+    spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    with tempfile.TemporaryDirectory() as tmp:
-        big = _os.path.join(tmp, "events.parquet")
-        with open(big, "wb") as fh:
-            fh.truncate(int(prev) * (8 << 20) + 1)  # sparse — no real I/O
-        with _stream_state_width(spark, tmp):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    # directory-shaped dataset (the standard at-scale parquet layout):
-    # the width must derive from the SUM of the part files, never from
-    # the directory inode size (~4 KB → floor 8) — r15 VERDICT item 2
-    with tempfile.TemporaryDirectory() as tmp:
-        ds = _os.path.join(tmp, "events.parquet")
-        _os.makedirs(ds)
-        n_parts, part_bytes = 6, 24 << 20  # 144 MB summed → width 18
-        for i in range(n_parts):
-            with open(_os.path.join(ds, f"part-{i:05d}.parquet"), "wb") as fh:
-                fh.truncate(part_bytes)
-        open(_os.path.join(ds, "_SUCCESS"), "wb").close()  # sidecar: skipped
-        want = min(int(prev), max(8, math.ceil(n_parts * part_bytes / (8 << 20))))
-        assert want > 8 or int(prev) <= 8  # the case must exercise the sum
-        with _stream_state_width(spark, tmp):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == str(want)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    # and a missing source directory is a safe no-op
-    with _stream_state_width(spark, "/nonexistent-dir"):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    # per-query floor (r16): CPU-bound Python kernels pass floor=16 —
-    # a fixture-sized input must bind the floor, not 8 (the minhash
-    # streams' measured 49.5 → 74.5 s regression at the default floor),
-    # while the size term still dominates at scale (clamped by configured)
-    with _stream_state_width(spark, sf_dir, source="documents", floor=16):
-        want16 = min(int(prev), 16)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(want16)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+class _WidthListener(StreamingQueryListener):
+    """Records, per progress event, the shared session width read while
+    the stream runs and the stream's state-exchange widths."""
+
+    def __init__(self, spark):
+        self.spark, self.seen, self.done = spark, [], set()
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        p = event.progress
+        width = self.spark.conf.get("spark.sql.shuffle.partitions")
+        ops = [o.numShufflePartitions for o in p.stateOperators]
+        self.seen.append((str(p.id), width, ops))
+
+    def onQueryTerminated(self, event):
+        self.done.add(str(event.id))
+
+
+def _started_queries(monkeypatch):
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    started, orig = [], DataStreamWriter.start
+
+    def start(self, *a, **k):
+        started.append(orig(self, *a, **k))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    return started
+
+
+def test_run_to_memory_sets_state_width_only_around_start(
+    spark, sf_dir, wide_session, monkeypatch
+):
+    """streaming_session_agg's state exchange runs at the derived width,
+    while the shared session reads the configured width for the whole
+    run (read from the listener bus as progress arrives)."""
+    import os
+    import time
+
+    from tamar_spark.sources import state_width
+
+    want = state_width(os.path.join(sf_dir, "events.parquet"), wide_session)
+    assert want < wide_session
+    started = _started_queries(monkeypatch)
+    listener = _WidthListener(spark)
+    spark.streams.addListener(listener)
+    try:
+        QUERIES["streaming_session_agg"](spark, sf_dir)
+        (q,) = started
+        deadline = time.time() + 60
+        while str(q.id) not in listener.done and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    seen = [(w, n) for qid, w, n in listener.seen if qid == str(q.id)]
+    assert seen, "no progress event arrived"
+    assert all(w == str(wide_session) for w, _ in seen), seen
+    assert all(n and set(n) == {want} for _, n in seen), seen
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(wide_session)
+
+
+def test_run_to_memory_restores_width_when_start_raises(
+    spark, sf_dir, wide_session, monkeypatch
+):
+    import os
+
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from tamar_spark.queries import _events_stream, _run_to_memory
+    from tamar_spark.sources import state_width
+
+    path = os.path.join(sf_dir, "events.parquet")
+    at_start = []
+
+    def start(self, *a, **k):
+        at_start.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        raise RuntimeError("start failed")
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    with pytest.raises(RuntimeError, match="start failed"):
+        _run_to_memory(_events_stream(spark, sf_dir), sized_by=path)
+    assert at_start == [str(state_width(path, wide_session))]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(wide_session)
+
+
+def test_run_to_memory_concurrent_starts_keep_their_widths(
+    spark, sf_dir, wide_session, monkeypatch
+):
+    """Threads starting streams at different widths on one session: each
+    start sees its own width from entry to exit, and the configured width
+    is restored after the last one."""
+    import os
+    import sys
+    import threading
+    import time
+
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from tamar_spark.queries import _events_stream, _run_to_memory
+
+    class Started(Exception):
+        pass
+
+    def start(self, *a, **k):
+        first = spark.conf.get("spark.sql.shuffle.partitions")
+        time.sleep(0.02)
+        raise Started(first, spark.conf.get("spark.sql.shuffle.partitions"))
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    sdf = _events_stream(spark, sf_dir)
+    path = os.path.join(sf_dir, "events.parquet")
+    seen = {}
+
+    def run(floor):
+        try:
+            _run_to_memory(sdf, sized_by=path, floor=floor)
+        except Started as e:
+            seen[floor] = e.args
+
+    floors = range(8, 20)  # more threads than cores
+    threads = [threading.Thread(target=run, args=(f,)) for f in floors]
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads)
+    assert seen == {f: (str(f), str(f)) for f in floors}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(wide_session)
+
+
+@pytest.mark.parametrize(
+    "name,source,floor",
+    [
+        ("streaming_session_agg", "events", 8),
+        ("streaming_dedup_minhash", "documents", 16),
+        # measured exception: its CPU-bound pandas fire keeps the
+        # configured width (see the sources partitioning policy)
+        ("streaming_session_process", None, None),
+    ],
+)
+def test_stream_state_width_contract(
+    spark, sf_dir, wide_session, monkeypatch, name, source, floor
+):
+    import os
+
+    from tamar_spark.sources import state_width
+
+    want = wide_session
+    if source is not None:
+        path = os.path.join(sf_dir, f"{source}.parquet")
+        want = state_width(path, wide_session, floor)
+    started = _started_queries(monkeypatch)
+    QUERIES[name](spark, sf_dir)
+    (q,) = started
+    widths = {o["numShufflePartitions"] for o in q.lastProgress["stateOperators"]}
+    assert widths == {want}

@@ -848,6 +848,22 @@ def test_bpe_learn_matches_reference_model(spark, pairs):
         assert got == expected, f"local_below={local_below}"
 
 
+def test_bpe_apply_merges_rejects_truncated_merge_table(spark):
+    """A merge table shorter than ``steps`` must raise, not under-apply."""
+    import pytest
+
+    from tamar_spark.queries_pipeline import bpe_apply_merges
+
+    merges = spark.createDataFrame(
+        [(1, "a", "b", "ab", 3), (2, "ab", "c", "abc", 2)],
+        "step INT, pair_left STRING, pair_right STRING, merged STRING, cnt BIGINT",
+    )
+    df = spark.createDataFrame([(1, "<a><b><c><_>")], "doc_id long, r string")
+    assert bpe_apply_merges(df, merges, 2).first()["r"] == "<abc><_>"
+    with pytest.raises(ValueError, match="steps=3, only 2 rules"):
+        bpe_apply_merges(df, merges, 3)
+
+
 token_list_strategy = st.lists(
     st.sampled_from(["a", "bb", "ccc", "a", "dd", "e"]),
     min_size=0,
