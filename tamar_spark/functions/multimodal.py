@@ -1,40 +1,23 @@
 """Multimodal column convention: opaque binary payloads + typed metadata.
 
 Image/audio/video content is carried as a ``binary`` column plus a metadata
-struct — the Spark-native layout for a 100 TB multimodal corpus (payload
-bytes stay columnar in parquet, metadata predicates prune row groups
-without touching payloads).
+struct (:data:`MEDIA_SCHEMA`): payload bytes stay columnar in parquet, and
+metadata predicates prune row groups without touching payloads.
 
-The decode/feature steps run as Arrow-batched ``mapInPandas`` stages.
-Image codecs auto-detect: when PIL/Pillow is importable on the executors
-(:data:`HAS_PIL`), :func:`decode_image` and :func:`resize_images` run the
-real codec; without PIL, the CODEC-FREE raster formats still decode for
-real — BMP (bottom-up rows, 4-byte stride) and binary PPM/PGM via the
-pure-Python :func:`parse_bmp`/:func:`parse_ppm`, and TWO genuinely
-COMPRESSED codecs decode for real with numpy + the stdlib: PNG
-(:func:`parse_png` — CRC-checked chunk walk, zlib inflate, all five
-scanline filters incl. Paeth) and baseline JPEG (:func:`parse_jpeg` —
-marker walk, embedded-table parse, bit-level Huffman entropy decode,
-dequantize, inverse zigzag, IDCT, color convert; r12), with
-:func:`decode_image_pixels` exposing the full pixel-level round trip
-for all of them and :func:`jpeg_roundtrip_check` proving the lossy
-round trip under a measured error bound.
-For other codec-bearing formats without PIL the stages raise
-``NotImplementedError`` unless ``fake=True``, which produces a
-deterministic fake decode (dimensions derived from the payload hash) so
-the Spark-side plumbing — schema, batching, partitioning — stays real
-and tested in codec-less CI.  Video frame SAMPLING (``sample_frames``)
-is real for two containers that need no codec: MJPEG (structural JPEG
-segment walk) and rawvideo (fixed-size frame slicing); pixel decode of
-progressive JPEG, sampling factors beyond 2×2, and inter-frame video
-(H.264, …) remains the documented out-of-scope line.
+Decode stages are Arrow-batched ``mapInPandas`` over pure-Python parsers
+with no codec dependency:
 
-Scale notes: payload columns are heavy — always ``select`` metadata-only
-projections for filtering/joins and re-attach payloads late (column pruning
-does this automatically when expressed declaratively).  ``mapInPandas``
-batch size is governed by ``spark.sql.execution.arrow.maxRecordsPerBatch``;
-decode stages should repartition to ~(cores × small factor) partitions since
-they are CPU-bound, not IO-bound.
+- images (:func:`decode_image_pixels`): BMP, binary PPM/PGM, PNG and
+  baseline JPEG, dispatched on magic bytes.  A recognised format with a
+  corrupt body raises the parser's ``ValueError``; any other payload
+  raises ``NotImplementedError``.
+- video (:func:`sample_frames`): MJPEG and rawvideo frame splitting.
+- audio (:func:`decode_audio`, :func:`pcm_stats`,
+  :func:`pcm_silence_segments`): RIFF/WAV PCM.
+
+Other containers and codecs raise ``NotImplementedError`` at execution.
+Decode stages are CPU-bound: select metadata-only projections for
+filtering and joins, and re-attach payloads late.
 """
 
 from __future__ import annotations
@@ -43,7 +26,7 @@ import hashlib
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -53,13 +36,10 @@ from pyspark.sql.types import (
 )
 
 __all__ = [
-    "HAS_PIL",
     "MEDIA_SCHEMA",
     "attach_media_meta",
     "decode_audio",
-    "decode_image",
     "decode_image_pixels",
-    "extract_image_features",
     "jpeg_roundtrip_check",
     "mjpeg_frame_pixel_check",
     "make_bmp",
@@ -72,24 +52,9 @@ __all__ = [
     "parse_ppm",
     "pcm_silence_segments",
     "pcm_stats",
-    "resize_images",
     "sample_frames",
 ]
 
-
-def _pil_available() -> bool:
-    try:
-        from PIL import Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-#: True when Pillow is importable — decode/resize run the real codec.
-#: Evaluated at import on the driver; executors re-check inside the UDF
-#: (a heterogeneous cluster could differ).
-HAS_PIL = _pil_available()
 
 # canonical multimodal column layout: (payload binary, meta struct)
 MEDIA_SCHEMA = StructType(
@@ -129,12 +94,10 @@ def attach_media_meta(df: DataFrame, payload_col: str = "payload", media_type: s
 # Codec-free raster formats: BMP and binary PPM/PGM — pure-Python, REAL.
 #
 # These are the image-side analogue of the repo's MJPEG/WAV standard: the
-# formats need no external codec (raw pixels + a fixed header), so the
-# decode path can be genuinely real in a PIL-less environment instead of a
-# deterministic fake.  The writer/parser pair round-trips the two details
-# that make BMP a real format and not a memcpy: rows are stored BOTTOM-UP
-# (positive height; negative means top-down) and every row is padded to a
-# 4-byte stride.
+# formats need no external codec (raw pixels + a fixed header).  The
+# writer/parser pair round-trips the two details that make BMP a real
+# format and not a memcpy: rows are stored BOTTOM-UP (positive height;
+# negative means top-down) and every row is padded to a 4-byte stride.
 # ---------------------------------------------------------------------------
 
 
@@ -1151,95 +1114,21 @@ def mjpeg_frame_pixel_check(
 
 
 def _parse_raster(buf: bytes):
-    """Dispatch on magic bytes to the codec-free parsers — the stdlib-only
-    PNG inflate+unfilter path, and the baseline JPEG entropy decoder, the
-    two genuinely COMPRESSED codecs the sandbox decodes for real."""
+    """Magic-byte dispatch to the raster parsers → ``(width, height,
+    n_channels, pixels)``.  A recognised format with a corrupt body raises
+    the parser's ``ValueError``; an unrecognised one raises
+    ``NotImplementedError``."""
     if buf[:2] == b"BM":
         return parse_bmp(buf)
     if buf[: len(_PNG_SIG)] == _PNG_SIG:
         return parse_png(buf)
     if buf[:2] == b"\xff\xd8":
         return parse_jpeg(buf)
-    return parse_ppm(buf)
-
-
-_DECODE_SCHEMA = "id long, width int, height int, n_channels int, sha256 string"
-
-
-def decode_image(df: DataFrame, id_col: str = "id", payload_col: str = "payload", fake: bool = False) -> DataFrame:
-    """Decode image payloads to (width, height, channels) via mapInPandas.
-
-    Real decode when possible: PIL when importable on the executor (any
-    format Pillow reads); without PIL, BMP, binary PPM/PGM, PNG, and
-    baseline JPEG payloads still decode for REAL via the pure-Python
-    parsers above (magic-byte dispatch).  ``fake=True`` runs a
-    deterministic fake decode (dims from the payload hash) so the
-    distributed plumbing is exercised end-to-end in any environment;
-    ``fake=False`` on a remaining codec-bearing format without PIL
-    raises ``NotImplementedError`` at execution time — loudly, never
-    silently faking.
-    """
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        real = (not fake) and _pil_available()
-        if real:
-            import io
-
-            from PIL import Image
-        for pdf in batches:
-            out = pd.DataFrame()
-            out["id"] = pdf[id_col]
-            digests = pdf[payload_col].map(
-                lambda b: hashlib.sha256(bytes(b or b"")).hexdigest()
-            )
-            if not fake and not real:
-                # stdlib-decodable path: BMP / binary PPM / PNG.  A
-                # payload whose MAGIC we recognize but whose body fails
-                # to parse is corrupt DATA — re-raise the parser's
-                # ValueError verbatim; converting it to "codec not
-                # available" would misdiagnose a bad file as a missing
-                # dependency.  Only an unrecognized format is a codec
-                # gap.
-                def _dims(b):
-                    buf = bytes(b or b"")
-                    known = (
-                        buf[:2] in (b"BM", b"P5", b"P6", b"\xff\xd8")
-                        or buf[: len(_PNG_SIG)] == _PNG_SIG
-                    )
-                    try:
-                        w, h, nch, _ = _parse_raster(buf)
-                    except ValueError:
-                        if known:
-                            raise
-                        raise NotImplementedError(
-                            "image codec (Pillow) not available in this "
-                            "environment and payload is not a stdlib-"
-                            "decodable BMP/PPM/PNG/baseline-JPEG; pass "
-                            "fake=True to exercise the pipeline"
-                        )
-                    return w, h, nch
-                parsed = pdf[payload_col].map(_dims)
-                out["width"] = parsed.map(lambda t: t[0]).astype("int32")
-                out["height"] = parsed.map(lambda t: t[1]).astype("int32")
-                out["n_channels"] = parsed.map(lambda t: t[2]).astype("int32")
-            elif real:
-                dims = pdf[payload_col].map(
-                    lambda b: Image.open(io.BytesIO(bytes(b))).size
-                )
-                bands = pdf[payload_col].map(
-                    lambda b: len(Image.open(io.BytesIO(bytes(b))).getbands())
-                )
-                out["width"] = dims.map(lambda wh: wh[0]).astype("int32")
-                out["height"] = dims.map(lambda wh: wh[1]).astype("int32")
-                out["n_channels"] = bands.astype("int32")
-            else:
-                out["width"] = digests.map(lambda d: 64 + int(d[:4], 16) % 1920).astype("int32")
-                out["height"] = digests.map(lambda d: 64 + int(d[4:8], 16) % 1080).astype("int32")
-                out["n_channels"] = 3
-            out["sha256"] = digests
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(decode, schema=_DECODE_SCHEMA)
+    if buf[:2] in (b"P5", b"P6"):
+        return parse_ppm(buf)
+    raise NotImplementedError(
+        "image format not supported (BMP, binary PPM/PGM, PNG, baseline JPEG)"
+    )
 
 
 _PIXEL_SCHEMA = (
@@ -1258,8 +1147,9 @@ def decode_image_pixels(
     ``pixel_sha`` is sha256 over the row-major TOP-DOWN unpadded pixel
     bytes.  The hash is the proof the decode is real: it only matches a
     reference if row order and stride handling are exactly right, which a
-    header-only peek can't fake.  Arrow-batched ``mapInPandas``; scale
-    notes as :func:`decode_image`."""
+    header-only peek can't fake.  Arrow-batched ``mapInPandas``.  At
+    execution, a recognised format with a corrupt body raises the parser's
+    ``ValueError`` and any other payload ``NotImplementedError``."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1278,19 +1168,6 @@ def decode_image_pixels(
 
     return df.select(id_col, payload_col).mapInPandas(
         decode, schema=_PIXEL_SCHEMA
-    )
-
-
-def extract_image_features(decoded: DataFrame) -> DataFrame:
-    """Feature extraction over decoded dims — expression-only example stage
-    (aspect ratio, megapixels, orientation bucket)."""
-    return decoded.select(
-        "id",
-        (F.col("width") / F.col("height")).alias("aspect_ratio"),
-        (F.col("width") * F.col("height") / F.lit(1e6)).alias("megapixels"),
-        F.when(F.col("width") >= F.col("height"), "landscape")
-        .otherwise("portrait")
-        .alias("orientation"),
     )
 
 
@@ -1354,7 +1231,6 @@ def sample_frames(
     width: int = 0,
     height: int = 0,
     channels: int = 3,
-    fake: bool = False,
 ) -> DataFrame:
     """Sample every ``every_n``-th frame from video payloads: 1→n rows
     ``(id, frame_idx, n_bytes, sha)`` via Arrow-batched ``mapInPandas``.
@@ -1363,13 +1239,11 @@ def sample_frames(
     ``fmt="mjpeg"`` walks JPEG segment structure (:func:`_iter_jpeg_frames`)
     and ``fmt="rawvideo"`` slices fixed-size ``width*height*channels``
     frames.  Other containers raise ``NotImplementedError`` at execution —
-    an ffmpeg-class decoder is out of scope in this environment.
-    ``fake=True`` keeps the legacy deterministic plumbing fake
-    (frame count = bytes % 100 + 1, empty frames).  Each emitted row
-    carries the frame's byte length and content sha256, so downstream
+    an ffmpeg-class decoder is out of scope.  Each emitted row carries
+    the frame's byte length and content sha256, so downstream
     dedup/feature stages key on frames without re-reading payloads.
     """
-    if fmt == "rawvideo" and not fake and (width <= 0 or height <= 0 or channels <= 0):
+    if fmt == "rawvideo" and (width <= 0 or height <= 0 or channels <= 0):
         raise ValueError("rawvideo frame sampling needs width/height/channels")
     frame_size = width * height * channels
 
@@ -1381,16 +1255,6 @@ def sample_frames(
             shas: list = []
             for rid, payload in zip(pdf[id_col], pdf[payload_col]):
                 buf = bytes(payload or b"")
-                if fake:
-                    n_frames = (len(buf) % 100) + 1
-                    for k in range(0, n_frames, every_n):
-                        ids.append(rid)
-                        idxs.append(k)
-                        sizes.append(0)
-                        shas.append(
-                            hashlib.sha256(f"{rid}:{k}".encode()).hexdigest()
-                        )
-                    continue
                 if fmt == "mjpeg":
                     bounds = list(_iter_jpeg_frames(buf))
                 elif fmt == "rawvideo":
@@ -1494,7 +1358,6 @@ def decode_audio(
     df: DataFrame,
     id_col: str = "id",
     payload_col: str = "payload",
-    fake: bool = False,
 ) -> DataFrame:
     """Decode audio payload headers to ``(sample_rate, n_channels,
     bits_per_sample, n_samples, duration_ms)`` via Arrow-batched
@@ -1503,11 +1366,9 @@ def decode_audio(
     RIFF/WAV PCM is parsed for REAL (:func:`_parse_wav` — pure Python
     chunk walk, no codec dependency; this reads container metadata, it
     does not decode compressed audio).  Other containers raise
-    ``NotImplementedError`` at execution; ``fake=True`` substitutes a
-    deterministic hash-derived decode for plumbing tests, mirroring
-    :func:`decode_image`.  ``duration_ms`` is the raw IEEE division
-    ``n_samples * 1000.0 / sample_rate`` (exactly-rounded, so
-    cross-engine deterministic)."""
+    ``NotImplementedError`` at execution.  ``duration_ms`` is the raw
+    IEEE division ``n_samples * 1000.0 / sample_rate`` (exactly-rounded,
+    so cross-engine deterministic)."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1517,17 +1378,11 @@ def decode_audio(
             bits: list = []
             ns: list = []
             for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                buf = bytes(payload or b"")
-                if fake:
-                    h = hashlib.sha256(buf).hexdigest()
-                    meta = (8000, 1, 16, int(h[:6], 16) % 100000)
-                else:
-                    meta = _parse_wav(buf)
-                    if meta is None:
-                        raise NotImplementedError(
-                            "audio container not supported (RIFF/WAV PCM"
-                            " only); pass fake=True for plumbing tests"
-                        )
+                meta = _parse_wav(bytes(payload or b""))
+                if meta is None:
+                    raise NotImplementedError(
+                        "audio container not supported (RIFF/WAV PCM only)"
+                    )
                 sr, ch, bps, n = meta
                 ids.append(rid)
                 srs.append(sr)
@@ -1727,61 +1582,4 @@ def pcm_silence_segments(
 
     return df.select(id_col, payload_col).mapInPandas(
         segs, schema=_SILENCE_SCHEMA
-    )
-
-
-def resize_images(
-    df: DataFrame,
-    target_w: int,
-    target_h: int,
-    id_col: str = "id",
-    payload_col: str = "payload",
-    fake: bool = False,
-) -> DataFrame:
-    """Resize: (payload) → (resized payload, new dims) via mapInPandas —
-    real PIL resize when Pillow is importable, deterministic fake payload
-    (hash-derived byte budget) otherwise so batch shapes and schemas are
-    exercised for real.
-
-    Scale note: resize is CPU-bound and payload-heavy — run it LAST in the
-    pipeline (after metadata filtering pruned the corpus) and size Arrow
-    batches down (`spark.sql.execution.arrow.maxRecordsPerBatch`) so a batch
-    of large payloads fits executor memory.
-    """
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        real = (not fake) and _pil_available()
-        if real:
-            import io
-
-            from PIL import Image
-        for pdf in batches:
-            if not fake and not real:
-                raise NotImplementedError(
-                    "image codec (Pillow) not available; pass fake=True for plumbing tests"
-                )
-            out = pd.DataFrame()
-            out["id"] = pdf[id_col]
-            if real:
-
-                def _resize(b: bytes) -> bytes:
-                    img = Image.open(io.BytesIO(bytes(b)))
-                    fmt = img.format or "PNG"
-                    buf = io.BytesIO()
-                    img.resize((target_w, target_h)).save(buf, format=fmt)
-                    return buf.getvalue()
-
-                out["payload"] = pdf[payload_col].map(_resize)
-            else:
-                # fake "resized" payload: truncated/padded, deterministic size
-                budget = max(16, (target_w * target_h) // 1024)
-                out["payload"] = pdf[payload_col].map(
-                    lambda b: bytes(b or b"")[:budget].ljust(budget, b"\0")
-                )
-            out["width"] = target_w
-            out["height"] = target_h
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(
-        resize, schema="id long, payload binary, width int, height int"
     )

@@ -27,7 +27,6 @@ from pyspark.sql.window import Window
 __all__ = [
     "dot",
     "l2_norm",
-    "cosine",
     "cosine_topk",
     "lsh_topk",
     "mmr_topk",
@@ -50,10 +49,6 @@ def dot(a: Column, b: Column) -> Column:
 
 def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
 def _as_double(c: Column) -> Column:

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from tamar_spark.env import Environment, prep_session
-from tamar_spark.sources import load_table, session_width, state_width
+from tamar_spark.sources import load_table, session_width, state_width, ts_ns_columns
 from tamar_spark import windows
 from tamar_spark.operators import dedup as D
 from tamar_spark.operators import similarity as S
@@ -77,11 +77,6 @@ def _c(col):
     return col if not isinstance(col, str) else F.col(col)
 
 
-def dsum(col):
-    """Exact (order-independent) sum of a double expression, as double."""
-    return F.sum(_c(col).cast(_DEC)).cast("double")
-
-
 def epoch_us(col):
     """Microseconds since epoch for TIMESTAMP *or* TIMESTAMP_NTZ columns.
 
@@ -111,7 +106,8 @@ def floor_div(a, b):
 
 
 def dsum_r(col, nd: int = 2):
-    """`dsum` rounded to ``nd`` places — the oracle-alignment form."""
+    """Exact (order-independent) sum of a double expression, rounded to
+    ``nd`` places — the oracle-alignment form."""
     return F.round(F.sum(_c(col).cast(_DEC)), nd).cast("double")
 
 
@@ -2042,7 +2038,6 @@ def streaming_session_agg(spark, sf_dir):
     Pins the no-end-of-stream-flush semantic (reference test
     src/lib.rs:1316-1345): sessions not closed by the final watermark
     (max(ts) - delay) never emit — the oracle filters to exactly those."""
-    prep_session(spark)
     sdf = _events_stream(spark, sf_dir)
     agg = (
         sdf.groupBy(F.session_window(F.col("ts"), "30 minutes"), F.col("user_id"))
@@ -2255,7 +2250,6 @@ def streaming_tumbling_agg(spark, sf_dir):
     """Streaming tumbling-window aggregation with watermark-gated append
     emission — windows not closed by the final watermark never emit (same
     no-end-of-stream-flush contract as the session variant)."""
-    prep_session(spark)
     sdf = _events_stream(spark, sf_dir)
     agg = (
         sdf.groupBy(F.window(F.col("ts"), "1 hour"), F.col("event_type"))
@@ -2287,18 +2281,20 @@ def _events_stream(spark, sf_dir, watermark: str | None = "10 minutes"):
     time-epoch replication) and must apply the single allowed
     ``withWatermark`` themselves.
 
-    Adapts to the fixture's physical type: TIMESTAMP(NANOS) parquet is read
-    as long (``nanosAsLong``) and truncated ns→µs like DuckDB does;
-    TIMESTAMP(MICROS) parquet arrives as TIMESTAMP_NTZ and is cast to LTZ
-    (a value identity under the UTC session timezone) so window bounds and
-    emitted schemas are stable either way."""
+    Adapts to the fixture's physical type with :func:`load_table`'s rule:
+    TIMESTAMP(NANOS) parquet is read as long (``nanosAsLong``) and
+    truncated ns→µs like DuckDB does; TIMESTAMP(MICROS) parquet arrives as
+    TIMESTAMP_NTZ and is cast to LTZ (a value identity under the UTC
+    session timezone) so window bounds and emitted schemas are stable
+    either way."""
     path = _events_path(sf_dir)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ns_cols = ts_ns_columns(path)
+    if ns_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = spark.read.parquet(path).schema
-    raw_ts = {f.name: f.dataType.simpleString() for f in raw_schema.fields}["ts"]
     ts_fix = (
         F.timestamp_micros(F.expr("ts div 1000"))
-        if raw_ts == "bigint"
+        if "ts" in ns_cols
         else F.col("ts").cast("timestamp_ltz")
     )
     sdf = (
@@ -2353,7 +2349,6 @@ def streaming_stream_join(spark, sf_dir):
     buffered view can be evicted once the click-side watermark passes its
     2-hour relevance window.  At 100 TB the state store holds only the
     watermark-live horizon, not the full history."""
-    prep_session(spark)
     clicks = (
         _events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "click")
@@ -2396,7 +2391,6 @@ def streaming_dedup(spark, sf_dir):
     is one entry per distinct key; with a watermark column included, Spark
     evicts state for expired keys (``dropDuplicatesWithinWatermark`` is the
     bounded-state variant at 100 TB)."""
-    prep_session(spark)
     dedup = (
         _events_stream(spark, sf_dir)
         .select("user_id", "event_type", "ts")
@@ -2467,7 +2461,6 @@ def streaming_dedup_minhash(spark, sf_dir):
         minhash_dedup_streaming,
     )
 
-    prep_session(spark)
     path = os.path.join(sf_dir, "documents.parquet")
     schema = spark.read.parquet(path).schema
     sdf = (
@@ -2550,7 +2543,6 @@ def streaming_dedup_minhash_sig(spark, sf_dir):
         minhash_dedup_streaming,
     )
 
-    prep_session(spark)
     path = os.path.join(sf_dir, "documents.parquet")
     schema = spark.read.parquet(path).schema
     sdf = (

@@ -31,7 +31,6 @@ from functools import reduce
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from tamar_spark.env import prep_session
 from tamar_spark.queries import (
     query,
     _SESSION_ORACLE,
@@ -254,7 +253,6 @@ def streaming_dedup_bounded(spark, sf_dir):
     exceeds the event-time span (~30 d), so no entry expires mid-run and
     the output equals exact DISTINCT regardless of micro-batch boundaries —
     which is what makes the oracle deterministic."""
-    prep_session(spark)
     dedup = (
         _events_stream(spark, sf_dir, watermark="40 days")
         .select("user_id", "event_type", "ts")
@@ -1052,7 +1050,6 @@ def streaming_cep_funnel(spark, sf_dir):
     from tamar_spark.stream import DataStream
     from tamar_spark.streaming.cep import funnel_match_streaming
 
-    prep_session(spark)
     sdf = (
         _events_stream(spark, sf_dir)
         .where(F.col("event_type").isin("view", "click", "purchase"))
@@ -1116,7 +1113,6 @@ def streaming_cep_funnel4(spark, sf_dir):
     from tamar_spark.stream import DataStream
     from tamar_spark.streaming.cep import funnel_match_streaming
 
-    prep_session(spark)
     sdf = (
         _events_stream(spark, sf_dir)
         .where(F.col("event_type").isin("signup", "view", "click", "purchase"))
@@ -1246,7 +1242,6 @@ def streaming_cep_runs(spark, sf_dir):
     from tamar_spark.stream import DataStream
     from tamar_spark.streaming.cep import type_runs_streaming
 
-    prep_session(spark)
     sdf = _events_stream(spark, sf_dir).select(
         "user_id", "event_id", "event_type", "ts"
     )
@@ -1454,7 +1449,6 @@ def k_anonymity(spark, sf_dir):
     table never shuffles, so the operator is one scan + map-side joins at
     any corpus size.  All-integer arithmetic; bucket boundary floor(x/2000)
     divides exactly in IEEE for the 2-decimal fixture balances."""
-    prep_session(spark)
     k = _KANON_K
     q = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
@@ -1603,7 +1597,6 @@ def bucketed_join_agg(spark, sf_dir):
     then every orderkey-equi join/agg in the workload is map-side.  The
     oracle runs the identical join on the plain parquet views — results
     are layout-independent, the PLAN is what bucketing buys."""
-    prep_session(spark)
     spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
     # propagate the per-bucket sort order out of the scan (off by default
     # since SPARK-28595 because multi-file buckets are only per-file

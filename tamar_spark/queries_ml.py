@@ -27,7 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from tamar_spark.env import prep_session
 from tamar_spark.operators import clustering as C
 from tamar_spark.operators import dedup as D
 from tamar_spark.queries import query, _events_path, _events_stream, _run_to_memory
@@ -656,7 +655,6 @@ def streaming_heavy_hitters(spark, sf_dir):
     table equals the batch sketch exactly and the whole query shares the
     batch oracle.  The probe/rank side (exact counts for the true top-20
     and the one-sided-error pin) reads the same fixture in batch."""
-    prep_session(spark)
     e_s = _events_stream(spark, sf_dir).select(
         F.col("user_id").cast("string").alias("u")
     )

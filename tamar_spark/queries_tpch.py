@@ -22,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from tamar_spark.env import prep_session
 from tamar_spark.queries import query, dsum_r, round_ieee, _DEC, epoch_us, floor_div
 from tamar_spark.queries import _events_path, _events_stream, _run_to_memory
 from tamar_spark.sources import load_table
@@ -802,7 +801,6 @@ def streaming_sliding_agg(spark, sf_dir):
     """Streaming sliding (hopping) windows, 1 h / 30 min, append mode: only
     windows closed by the final watermark emit (run-to-completion semantics
     as streaming_session_agg; the oracle filters to exactly those)."""
-    prep_session(spark)
     sdf = _events_stream(spark, sf_dir)
     agg = (
         sdf.groupBy(F.window(F.col("ts"), "1 hour", "30 minutes"))
@@ -1261,7 +1259,6 @@ def streaming_complete_counts(spark, sf_dir):
     """Complete-output-mode streaming aggregation: the sink holds the full
     current aggregate after every micro-batch (vs append's finalized-only
     rows) — after run-to-completion it equals the batch group-by."""
-    prep_session(spark)
     sdf = _events_stream(spark, sf_dir)
     agg = sdf.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     return _run_to_memory(agg, mode="complete", sized_by=_events_path(sf_dir))
@@ -1524,7 +1521,6 @@ def streaming_session_process(spark, sf_dir):
     from tamar_spark.stream import DataStream
     from tamar_spark.streaming.sessions import session_process_streaming
 
-    prep_session(spark)
     schema = (
         "user_id long, window_start timestamp, window_end timestamp, "
         "n_events long, span_sec long, min_value double, max_value double"
@@ -1751,7 +1747,6 @@ def streaming_static_join(spark, sf_dir):
     dimension (broadcast — no stream-side state at all, unlike
     stream-stream joins) then aggregated in complete mode.  The canonical
     'enrich events with a dim table' pattern at any scale."""
-    prep_session(spark)
     dim = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     sdf = _events_stream(spark, sf_dir).select("user_id")
     joined = sdf.join(F.broadcast(dim), sdf.user_id == dim.c_custkey)
@@ -1799,7 +1794,6 @@ def streaming_asof_dim(spark, sf_dir):
     match — identical semantics in both engines.  Price rounds via
     round_ieee (floor(x·100+0.5)/100) so the hash is engine-stable on
     .5-boundary cells."""
-    prep_session(spark)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     dim = (
         load_table(spark, sf_dir, "orders")
@@ -2828,7 +2822,6 @@ def streaming_stream_outer_join(spark, sf_dir):
     invariants (matched set == batch inner join; every emitted NULL row
     genuinely unmatched) stay pinned by
     ``test_stream_outer_join_invariants``."""
-    prep_session(spark)
     clicks = (
         _events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "click")
@@ -3052,7 +3045,6 @@ def streaming_global_state(spark, sf_dir):
     from tamar_spark.stream import DataStream
     from tamar_spark.streaming.stateful import global_process_state_streaming
 
-    prep_session(spark)
     schema = (
         "event_id long, global_seq long, purchases_so_far long,"
         " max_value_so_far double"
@@ -3152,7 +3144,6 @@ def streaming_stream_full_outer_join(spark, sf_dir):
     margin that keeps the kept set strictly inside the eviction bound
     under either boundary convention.  The oracle is inner join ∪
     closed left anti ∪ closed right anti."""
-    prep_session(spark)
     clicks = (
         _events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "click")
@@ -3263,7 +3254,6 @@ def streaming_ewma_anomaly(spark, sf_dir):
     from tamar_spark.stream import DataStream
     from tamar_spark.streaming.stateful import process_state_streaming
 
-    prep_session(spark)
     sdf = _events_stream(spark, sf_dir).select(
         "event_id", "user_id", "ts", "value"
     )
@@ -3352,7 +3342,6 @@ def streaming_attribution(spark, sf_dir):
     from tamar_spark.stream import DataStream
     from tamar_spark.streaming.stateful import process_state_streaming
 
-    prep_session(spark)
     sdf = _events_stream(spark, sf_dir).select(
         "event_id", "user_id", "ts", "event_type", "value"
     )

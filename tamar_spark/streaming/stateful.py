@@ -5,35 +5,14 @@
 event, in per-key arrival order, call a user function with (key, event,
 per-key state, global state) and emit 0..n outputs.
 
-Spark mapping (SURVEY §2.4):
-
-- **Batch mode** (:func:`process_state`): ``groupBy(keys).applyInPandas`` —
-  each key group arrives as one pandas DataFrame sorted by event time, and
-  the user function walks it sequentially with a mutable state object.
-  Semantically identical to the reference's per-key HashMap state
-  (src/lib.rs:340-353), because the reference too processes each key's
-  events in arrival order within a single task.  Scale: one shuffle on the
-  key; each group must fit in executor memory (same constraint class as the
-  reference's unbounded in-memory state, but per-key and spillable via
-  Arrow batching).
-
-- **Streaming mode** (:func:`process_state_streaming`):
-  ``applyInPandasWithState`` with a pickled per-key state blob —
-  init-on-first-use replicates the reference's ``key_state_fn`` lazy
-  initialization (src/lib.rs:347-349).  This is the ONLY default backend:
-  the newer ``transformWithStateInPandas`` path
-  (:class:`StatefulProcessor`) is an explicit opt-in (``use_tws=True``)
-  escape hatch, NOT an availability-dispatched default — its state server
-  needs the python ``protobuf`` package, absent from this CI image, so
-  the branch has never executed here and a silently-selected untested
-  default is where a wrong answer could hide (r6 VERDICT task 1).  Opting
-  in without protobuf raises a clear ImportError at construction.
-
-- **Global state** (reference ``GST``, a process-wide ``Arc<Mutex<_>>``):
-  fundamentally single-writer — we expose it in batch mode by keying
-  everything to one group (``lit(1)``), and document the scale hazard
-  (SURVEY §4.3.2): a global accumulator at 100 TB is a design smell; prefer
-  re-expressing as an aggregation.
+- :func:`process_state` (batch): ``groupBy(keys).applyInPandas``; each key
+  group arrives as one pandas DataFrame sorted by event time.  Each group
+  must fit in executor memory.
+- :func:`process_state_streaming`: ``applyInPandasWithState`` with a
+  pickled per-key state blob, initialised on first use like the
+  reference's ``key_state_fn`` (src/lib.rs:347-349).
+- :func:`global_process_state_streaming`: the reference's global state
+  (``GST``), keyed to one synthetic group, so one task sees every row.
 """
 
 from __future__ import annotations
@@ -42,7 +21,7 @@ import pickle
 from typing import Any, Callable, Optional
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import functions as F
 
 from tamar_spark.sources import pin_session_width
 
@@ -50,8 +29,6 @@ __all__ = [
     "process_state",
     "process_state_streaming",
     "global_process_state_streaming",
-    "StatefulProcessor",
-    "active_stateful_backend",
 ]
 
 
@@ -72,7 +49,6 @@ def process_state(
     from tamar_spark.stream import DataStream
 
     ts = keyed.event_time
-    key_names = [keyed.df.select(k).columns[0] for k in keyed.keys]
 
     def apply(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if ts is not None and ts in pdf.columns:
@@ -89,80 +65,12 @@ def process_state(
     return DataStream(out, env=keyed.env, event_time=ts)
 
 
-class StatefulProcessor:
-    """Adapter exposing the reference's (key, event, key_state) loop on
-    Spark 4's ``transformWithStateInPandas`` StatefulProcessor API."""
-
-    def __init__(self, fn, init_state, out_schema):
-        self.fn = fn
-        self.init_state = init_state
-        self.out_schema = out_schema
-
-    def build(self):
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor as _SP,
-        )
-        from pyspark.sql.types import BinaryType, StructField, StructType
-
-        fn, init_state = self.fn, self.init_state
-
-        class _Proc(_SP):
-            def init(self, handle):
-                self.handle = handle
-                self.state = handle.getValueState(
-                    "tamar_state", StructType([StructField("blob", BinaryType())])
-                )
-
-            def handleInputRows(self, key, rows, timerValues):
-                if self.state.exists():
-                    st = pickle.loads(self.state.get()[0])
-                else:
-                    st = init_state(key) if init_state is not None else None
-                out = []
-                for pdf in rows:
-                    res = fn(key, pdf, st)
-                    if res is not None and len(res):
-                        out.append(res)
-                self.state.update((pickle.dumps(st),))
-                return iter(out)
-
-            def close(self):
-                pass
-
-        return _Proc()
-
-
-def _tws_available() -> bool:
-    """transformWithStateInPandas needs the python protobuf package for its
-    state-server protocol; absent → fall back to applyInPandasWithState."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def active_stateful_backend() -> str:
-    """The DEFAULT streaming-state backend — a constant, not an
-    environment probe.  r5 VERDICT task 5 made the dispatch observable;
-    r6 VERDICT task 1 went further and removed availability-based
-    dispatch entirely: ``transformWithStateInPandas`` is opt-in only
-    (``use_tws=True``), because a default that silently flips on
-    protobuf's presence would select a branch no CI environment has ever
-    executed.  tests/test_operators.py pins that the default stays fixed
-    regardless of protobuf."""
-    return "applyInPandasWithState"
-
-
 def process_state_streaming(
     keyed,
     fn: Callable[[tuple, pd.DataFrame, Any], pd.DataFrame],
     schema,
     init_state: Optional[Callable[[tuple], Any]] = None,
     output_mode: str = "append",
-    time_mode: str = "None",
-    use_tws: bool = False,
 ):
     """Streaming per-key stateful processing.
 
@@ -171,34 +79,10 @@ def process_state_streaming(
     init-on-first-use like the reference's ``key_state_fn``
     (src/lib.rs:347-349).  Each micro-batch's rows for a key arrive in one
     call, source-ordered within the batch.
-
-    Backend: ``applyInPandasWithState``, always, unless ``use_tws=True``
-    explicitly opts into ``transformWithStateInPandas`` — an escape hatch
-    that is UNTESTED in protobuf-less environments (this CI image
-    included; the parametrized backend tests skip it and say so).  Same
-    user-function contract either way.
     """
-    from tamar_spark.stream import DataStream
-
-    if use_tws:
-        if not _tws_available():
-            # fail at construction with the actual cause — the state
-            # server's own error (protobuf import deep inside a worker)
-            # is cryptic and only surfaces mid-query
-            raise ImportError(
-                "use_tws=True but transformWithStateInPandas needs the "
-                "python 'protobuf' package, which is not importable"
-            )
-        proc = StatefulProcessor(fn, init_state, schema).build()
-        out = keyed.df.groupBy(*keyed.keys).transformWithStateInPandas(
-            statefulProcessor=proc,
-            outputStructType=schema,
-            outputMode=output_mode,
-            timeMode=time_mode,
-        )
-        return DataStream(out, env=keyed.env, event_time=keyed.event_time)
-
     from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from tamar_spark.stream import DataStream
 
     def wrapped(key, pdfs, gstate):
         if gstate.exists:

@@ -9,9 +9,7 @@ SF_DIR = os.environ.get("TAMAR_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from tamar_spark.env import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    spark = get_spark(app_name="tamar-tests", shuffle_partitions=cpus)
-    yield spark
+    yield get_spark(app_name="tamar-tests")
 
 
 @pytest.fixture(scope="session")

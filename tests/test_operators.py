@@ -338,69 +338,12 @@ def test_process_state_batch(spark):
     )
 
 
-def test_stateful_backend_dispatch_is_pinned():
-    """Pin the streaming-state backend CONTRACT (r6 VERDICT task 1): the
-    default is applyInPandasWithState unconditionally — never an
-    availability-dispatched transformWithStateInPandas, which no CI
-    environment of this repo has ever executed (protobuf absent) and so
-    must not be silently selectable as a default.  TWS remains reachable
-    only through the explicit use_tws=True escape hatch, whose protobuf
-    gate test_forcing_tws_without_protobuf_fails_loudly covers."""
-    import inspect
-
-    from tamar_spark.streaming.stateful import (
-        active_stateful_backend,
-        process_state_streaming,
-    )
-
-    assert active_stateful_backend() == "applyInPandasWithState"
-    # the default must be opt-out-of-nothing: use_tws defaults to False,
-    # not to an environment probe
-    sig = inspect.signature(process_state_streaming)
-    assert sig.parameters["use_tws"].default is False
-
-
-def test_forcing_tws_without_protobuf_fails_loudly(spark):
-    """use_tws=True in a protobuf-less env must raise a clear ImportError
-    at construction, not a cryptic state-server failure mid-query."""
-    from tamar_spark import Environment
-    from tamar_spark.streaming.stateful import (
-        _tws_available,
-        process_state_streaming,
-    )
-    from tamar_spark.stream import KeyedDataStream
-
-    if _tws_available():
-        pytest.skip("protobuf present: the forced path is the real path")
-    sdf = spark.readStream.format("rate").load()
-    keyed = KeyedDataStream(sdf, keys=[F.col("value")], env=Environment(spark))
-    with pytest.raises(ImportError, match="protobuf"):
-        process_state_streaming(
-            keyed, lambda k, p, s: p, schema="value long", use_tws=True
-        )
-
-
-@pytest.mark.parametrize("backend", ["default", "tws"])
-def test_process_state_streaming(spark, tmp_path, backend):
+def test_process_state_streaming(spark, tmp_path):
     """Per-key running count over a stream (reference keyed process_state,
-    src/lib.rs:323-361): 'default' runs the unconditional
-    applyInPandasWithState backend; 'tws' opts into the
-    transformWithStateInPandas escape hatch and skips where its protobuf
-    dependency is absent — the skip line in the report records that the
-    hatch is untested in this environment (r6 VERDICT task 1: an
-    explicitly-untested opt-in, never a silently-untested default)."""
+    src/lib.rs:323-361) through applyInPandasWithState."""
     from tamar_spark import Environment
-    from tamar_spark.streaming.stateful import (
-        _tws_available,
-        process_state_streaming,
-    )
+    from tamar_spark.streaming.stateful import process_state_streaming
     from tamar_spark.stream import KeyedDataStream
-
-    use_tws = False
-    if backend == "tws":
-        if not _tws_available():
-            pytest.skip("protobuf absent: transformWithStateInPandas unavailable")
-        use_tws = True
 
     src = str(tmp_path / "stream_src")
     spark.createDataFrame(
@@ -420,51 +363,27 @@ def test_process_state_streaming(spark, tmp_path, backend):
 
     out = process_state_streaming(
         keyed, counting, schema="k long, v long, seen_before long",
-        init_state=lambda k: {"n": 0}, use_tws=use_tws,
+        init_state=lambda k: {"n": 0},
     )
     q = (
         out.to_df()
         .writeStream.outputMode("append")
         .format("memory")
-        .queryName(f"tws_out_{backend}")
+        .queryName("process_state_out")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    rows = spark.table(f"tws_out_{backend}").collect()
+    rows = spark.table("process_state_out").collect()
     assert len(rows) == 6
     # each key saw 3 events; within one batch seen_before is the pre-batch count
     assert all(r.seen_before == 0 for r in rows)
 
 
-@pytest.mark.parametrize("mode", ["fake", "real"])
-def test_multimodal_decode(spark, mode):
-    """Decode is auto-codec: real PIL when importable (skip otherwise),
-    deterministic fake for codec-less CI; without PIL, non-fake fails
-    loudly rather than silently faking."""
+def test_multimodal_decode(spark):
+    """attach_media_meta derives the metadata struct with expressions;
+    decode_image_pixels fails loudly on a payload it cannot decode."""
     from tamar_spark.functions import multimodal as M
-
-    if mode == "real":
-        pytest.importorskip("PIL")
-        import io
-
-        from PIL import Image
-
-        def png(w, h):
-            buf = io.BytesIO()
-            Image.new("RGB", (w, h), (10, 20, 30)).save(buf, format="PNG")
-            return bytearray(buf.getvalue())
-
-        df = spark.createDataFrame(
-            [Row(id=1, payload=png(10, 20)), Row(id=2, payload=png(32, 16))]
-        )
-        got = {r.id: (r.width, r.height, r.n_channels) for r in M.decode_image(df).collect()}
-        assert got == {1: (10, 20, 3), 2: (32, 16, 3)}
-        resized = M.resize_images(df, 8, 4).collect()
-        for r in resized:
-            img = Image.open(io.BytesIO(bytes(r.payload)))
-            assert img.size == (8, 4) and img.format == "PNG"
-        return
 
     df = spark.createDataFrame(
         [Row(id=1, payload=bytearray(b"abc")), Row(id=2, payload=bytearray(b"defgh"))]
@@ -472,17 +391,8 @@ def test_multimodal_decode(spark, mode):
     meta = M.attach_media_meta(df)
     m = meta.select("meta.n_bytes", "meta.sha256").orderBy("n_bytes").collect()
     assert m[0].n_bytes == 3 and len(m[0].sha256) == 64
-    decoded = M.decode_image(df, fake=True).collect()
-    assert len(decoded) == 2
-    assert all(64 <= r.width < 2000 and r.n_channels == 3 for r in decoded)
-    feats = M.extract_image_features(M.decode_image(df, fake=True)).collect()
-    assert all(r.orientation in ("landscape", "portrait") for r in feats)
-    frames = M.sample_frames(df, fake=True).collect()
-    assert len(frames) >= 2
-    if not M.HAS_PIL:
-        # non-fake decode must fail loudly, not silently fake
-        with pytest.raises(Exception):
-            M.decode_image(df, fake=False).collect()
+    with pytest.raises(Exception, match="NotImplementedError"):
+        M.decode_image_pixels(df).collect()
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
@@ -493,6 +403,57 @@ def test_filter_pushdown_reaches_scan(spark, sf_dir):
     df = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [" in plan and "event_type" in plan.split("PushedFilters")[1][:200]
+
+
+def test_ns_timestamps_read_truncated_like_duckdb(spark, tmp_path):
+    """TIMESTAMP(NANOS) parquet: load_table and the events stream both read
+    ``ts`` truncated to µs, equal to what DuckDB reads (toward zero, also
+    before the epoch)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tamar_spark.queries import _events_stream, _run_to_memory, epoch_us
+    from tamar_spark.sources import load_table, ts_ns_columns
+
+    path = str(tmp_path / "events.parquet")
+    ns = [1_700_000_000_123_456_789, 1_700_000_000_123_456_001, -1_000_000_001_999, 999]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(len(ns)), pa.int64()),
+            "ts": pa.array(ns, pa.timestamp("ns")),
+        }),
+        path,
+    )
+    assert ts_ns_columns(path) == ("ts",)
+    want = dict(
+        duckdb.connect()
+        .execute(f"SELECT event_id, epoch_us(ts) FROM read_parquet('{path}')")
+        .fetchall()
+    )
+    assert want[0] == 1_700_000_000_123_456 and want[2] == -1_000_000_001
+
+    def read(df):
+        return {r[0]: r[1] for r in df.select("event_id", epoch_us("ts")).collect()}
+
+    assert read(load_table(spark, str(tmp_path), "events")) == want
+    stream = _events_stream(spark, str(tmp_path), watermark=None)
+    assert read(_run_to_memory(stream)) == want
+
+    # a TIMESTAMP(MICROS) file leaves the shared session conf alone
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    us_dir = tmp_path / "us"
+    us_dir.mkdir()
+    pq.write_table(
+        pa.table({"event_id": [0], "ts": pa.array([0], pa.timestamp("us"))}),
+        str(us_dir / "events.parquet"),
+    )
+    spark.conf.unset(conf)
+    try:
+        _events_stream(spark, str(us_dir))
+        assert spark.conf.get(conf, None) is None
+    finally:
+        spark.conf.set(conf, "true")
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -895,22 +856,6 @@ def test_embedding_neardup_blocked_equals_expr(spark):
     blocked = embedding_neardup_pairs(df, threshold=0.3, method="blocked", n_blocks=4)
     expr = embedding_neardup_pairs(df, threshold=0.3, method="expr")
     assert sorted(map(tuple, blocked.collect())) == sorted(map(tuple, expr.collect()))
-
-
-def test_multimodal_resize_plumbing(spark):
-    from tamar_spark.functions import multimodal as M
-
-    df = spark.createDataFrame(
-        [(1, bytearray(b"x" * 500)), (2, bytearray(b"y" * 10))], "id long, payload binary"
-    )
-    out = M.resize_images(df, 640, 480, fake=True).collect()
-    assert {r.id for r in out} == {1, 2}
-    assert all(r.width == 640 and r.height == 480 for r in out)
-    assert all(len(r.payload) == (640 * 480) // 1024 for r in out)
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        M.resize_images(df, 64, 48, fake=False).collect()
 
 
 def test_approx_distinct_within_bounds(spark, sf_dir):
@@ -1644,9 +1589,6 @@ def test_wav_decode_real_and_adversarial(spark):
         bad = spark.createDataFrame([Row(id=9, payload=bytearray(payload))])
         with pytest.raises(Exception, match="not supported"):
             M.decode_audio(bad).collect()
-    # fake path still runs the plumbing on unparseable bytes
-    bad = spark.createDataFrame([Row(id=9, payload=bytearray(b"xx"))])
-    assert M.decode_audio(bad, fake=True).count() == 1
 
 
 def test_mjpeg_restart_stream_composition(spark):
@@ -2366,31 +2308,27 @@ def test_decode_image_pixels_png_on_spark(spark):
 
 
 def test_decode_image_corrupt_png_is_data_error_not_codec_gap(spark):
-    """Without PIL, a payload whose PNG magic is recognized but whose
-    body is corrupt must surface the parser's ValueError (bad DATA), not
-    the 'codec not available' NotImplementedError — misdiagnosing
-    corruption as a missing dependency sends the operator hunting for
-    the wrong fix."""
-    import pytest as _pytest
-
+    """A payload whose PNG magic is recognized but whose body is corrupt
+    must surface the parser's ValueError (bad DATA), not the
+    unsupported-format NotImplementedError — misdiagnosing corruption as
+    a missing codec sends the operator hunting for the wrong fix."""
     from tamar_spark.functions import multimodal as M
 
-    if M.HAS_PIL:
-        _pytest.skip("PIL present: the no-PIL dispatch path is inert")
     corrupt = bytearray(M.make_png(bytes(range(99)), width=11))
     corrupt[-5] ^= 0xFF  # break the IEND CRC
     df = spark.createDataFrame([Row(id=1, payload=bytes(corrupt))])
-    with _pytest.raises(Exception) as e:
-        M.decode_image(df, fake=False).collect()
+    with pytest.raises(Exception) as e:
+        M.decode_image_pixels(df).collect()
     msg = str(e.value)
-    assert "CRC mismatch" in msg
-    assert "codec (Pillow) not available" not in msg
+    assert "ValueError" in msg and "CRC mismatch" in msg
+    assert "NotImplementedError" not in msg
 
 
 def test_decode_image_real_path_without_pil_on_bmp(spark):
-    """Without PIL, decode_image's non-fake path must decode BMP/PPM for
-    REAL (header fields from the actual container) and still fail loudly
-    on codec-bearing payloads."""
+    """decode_image_pixels must decode BMP and binary PPM for REAL: dims
+    from the actual container headers, pixels from the raster."""
+    import hashlib as _h
+
     from tamar_spark.functions import multimodal as M
 
     bmp = M.make_bmp(bytes(range(90)), width=15)  # 15×2
@@ -2399,18 +2337,13 @@ def test_decode_image_real_path_without_pil_on_bmp(spark):
         [Row(id=1, payload=bytearray(bmp)), Row(id=2, payload=bytearray(ppm))]
     )
     got = {
-        r.id: (r.width, r.height, r.n_channels)
-        for r in M.decode_image(df, fake=False).collect()
+        r.id: (r.width, r.height, r.n_channels, r.pixel_sha)
+        for r in M.decode_image_pixels(df).collect()
     }
-    if M.HAS_PIL:  # PIL path reads BMP/PPM too — same headers
-        assert got[1] == (15, 2, 3)
-    else:
-        assert got == {1: (15, 2, 3), 2: (8, 4, 3)}
-    px = {r.id: r.pixel_sha for r in M.decode_image_pixels(df).collect()}
-    import hashlib as _h
-
-    assert px[1] == _h.sha256(bytes(range(90))).hexdigest()
-    assert px[2] == _h.sha256(bytes(96)).hexdigest()
+    assert got == {
+        1: (15, 2, 3, _h.sha256(bytes(range(90))).hexdigest()),
+        2: (8, 4, 3, _h.sha256(bytes(96)).hexdigest()),
+    }
 
 
 def test_jpeg_codec_roundtrip_and_bounds():
