@@ -120,6 +120,11 @@ _CHANGED_IN_ROUND = {
     # property-tested on ≥1k-paragraph docs).
     "crawl_normalize": 15,
     "paragraph_filter": 15,
+    # r17: min-label propagation deleted; both queries now run the
+    # large-star/small-star connected components that dedup_clusters_star
+    # ran — the engine rewrite carries a fresh attestation.
+    "dedup_clusters": 17,
+    "dedup_keep_best": 17,
 }
 # One entry per query name, enforced: a duplicate key in this literal is
 # silently last-wins in Python, and a LOWER-round duplicate added later

@@ -43,7 +43,19 @@ import glob
 import json
 import os
 import re
+import subprocess
 import time
+
+
+def git_sha(path: str) -> str | None:
+    """``git rev-parse HEAD`` of the checkout at ``path``; None outside one."""
+    try:
+        out = subprocess.run(
+            ["git", "rev-parse", "HEAD"], cwd=path, capture_output=True, text=True, timeout=10
+        )
+    except (OSError, subprocess.SubprocessError):
+        return None
+    return out.stdout.strip() or None
 
 
 def bench_round() -> int:
@@ -526,10 +538,19 @@ def main() -> None:
     # VERDICT task 3).  Persist the COMPLETE artifact (plus the raw
     # per-pass samples the stdout line never carried) next to this file,
     # overwritten per run and committed, so the full timing record
-    # survives independent of the stdout cap.
+    # survives independent of the stdout cap.  Only a 32-core run writes
+    # BENCH_local.json; any other width writes BENCH_local_c{cpus}.json,
+    # so a scaling run never overwrites the default-width record.
     here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "BENCH_local.json"), "w") as f:
-        json.dump({**result, "samples": samples}, f, indent=1, sort_keys=True)
+    cpus = spark.sparkContext.defaultParallelism
+    name = "BENCH_local.json" if cpus == 32 else f"BENCH_local_c{cpus}.json"
+    with open(os.path.join(here, name), "w") as f:
+        json.dump(
+            {**result, "samples": samples, "cpus": cpus, "git_sha": git_sha(here)},
+            f,
+            indent=1,
+            sort_keys=True,
+        )
     print(json.dumps(result))
 
 

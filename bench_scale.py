@@ -962,8 +962,8 @@ def main() -> None:
 
     # Connected components (dedup cluster resolution): k×100k-node corpora
     # of 5-node duplicate clusters, edges as star pairs (rep, member) plus
-    # one chain edge per cluster so min-label needs a real propagation
-    # round.  Cluster DIAMETER is constant as the corpus grows — real
+    # one chain edge per cluster, so the input is not already a star
+    # forest.  Cluster DIAMETER is constant as the corpus grows — real
     # near-dup clusters are near-cliques — so the round count must stay
     # fixed and wall-clock must track edge volume only.
     def cc_scale(k):
@@ -993,14 +993,14 @@ def main() -> None:
     # rounds (measured log₂(n)+1; the rounds row records the actual
     # count so the O(log² n) claim is pinned by data, not prose).
     def cc_chain(k):
-        from tamar_spark.operators.graph import connected_components_star
+        from tamar_spark.operators.graph import connected_components
 
         n = k * 100_000
         chain = spark.range(n - 1).select(
             F.col("id").alias("doc_id_1"), (F.col("id") + 1).alias("doc_id_2")
         )
         stats: dict = {}
-        df = connected_components_star(chain, max_iter=40, stats=stats)
+        df = connected_components(chain, stats=stats)
         return df, stats
 
     results["cc_chain"] = []

@@ -80,22 +80,20 @@ def prep_session(spark: SparkSession) -> SparkSession:
 
     Used when a harness hands us its own SparkSession: we can only set
     runtime-mutable SQL confs here (timezone matters for parquet timestamp
-    comparisons against naive-timestamp oracles like DuckDB).
+    comparisons against naive-timestamp oracles like DuckDB).  A conf the
+    session rejects raises.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        # the harness session defaults to 200 shuffle partitions — far too
-        # many for local test scale factors; AQE coalesces down from this
-        spark.conf.set("spark.sql.shuffle.partitions", str(_default_parallelism()))
-        # split generated code into smaller JIT-friendly methods: wide
-        # aggregates (the 128-permutation MinHash) otherwise emit one huge
-        # method whose janino compile dominates small-SF wall clock and
-        # risks JIT bailout (>8KB bytecode) at any scale; whole-stage
-        # codegen itself stays ON
-        spark.conf.set("spark.sql.codegen.methodSplitThreshold", "128")
-    except Exception:
-        pass
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    # the harness session defaults to 200 shuffle partitions — far too
+    # many for local test scale factors; AQE coalesces down from this
+    spark.conf.set("spark.sql.shuffle.partitions", str(_default_parallelism()))
+    # split generated code into smaller JIT-friendly methods: wide
+    # aggregates (the 128-permutation MinHash) otherwise emit one huge
+    # method whose janino compile dominates small-SF wall clock and
+    # risks JIT bailout (>8KB bytecode) at any scale; whole-stage
+    # codegen itself stays ON
+    spark.conf.set("spark.sql.codegen.methodSplitThreshold", "128")
     return spark
 
 

@@ -42,7 +42,6 @@ __all__ = [
     "simhash_fingerprints",
     "simhash_pairs",
     "edit_distance_pairs",
-    "embedding_neardup_pairs",
 ]
 
 
@@ -974,69 +973,4 @@ def edit_distance_pairs(
     sim = F.floor(raw * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
     return scored.select(
         "doc_id_1", "doc_id_2", "edit_dist", sim.alias("edit_sim")
-    )
-
-
-def embedding_neardup_pairs(
-    df: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_blocks: int = 8,
-    method: str = "blocked",
-    dim: Optional[int] = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: ``(src_id, dup_id, score)`` for
-    every unordered pair with cosine ≥ ``threshold``.
-
-    Three implementations:
-
-    - ``method="lsh"`` (the 100 TB path): sign-LSH candidate buckets + exact
-      in-bucket GEMM verify (:func:`dedup_embedding.lsh_cosine_pairs`) —
-      scored pairs drop from O(n²) to Σ bucket²; requires ``dim``.
-      Deterministic; ``n_tables`` auto-sized from the threshold so a pair
-      AT the threshold is missed with probability ≤ 1e-4 (see
-      ``dedup_embedding.lsh_tables_for`` — recall depends on each pair's
-      actual cosine, and the boundary pair is the worst case).
-    - ``method="blocked"`` (default, exact): block-pair fan-out + one dense
-      numpy GEMM per tile inside ``applyInPandas`` (see
-      :mod:`tamar_spark.operators.dedup_embedding`).  ~20× faster than the
-      expression path at 5k vectors; replication factor ``n_blocks``, no
-      broadcast, no driver collect — but O(n²) scored pairs by definition.
-    - ``method="expr"``: pure-JVM self-join with a ``zip_with``/``aggregate``
-      fold per pair — zero Python, used as the independent cross-check.
-    """
-    if method == "lsh":
-        from tamar_spark.operators.dedup_embedding import lsh_cosine_pairs
-
-        if dim is None:
-            raise ValueError('method="lsh" requires dim')
-        return lsh_cosine_pairs(
-            df, threshold, dim=dim, id_col=id_col, vec_col=vec_col
-        )
-    if method == "blocked":
-        from tamar_spark.operators.dedup_embedding import blocked_cosine_pairs
-
-        return blocked_cosine_pairs(
-            df, threshold, id_col=id_col, vec_col=vec_col, n_blocks=n_blocks
-        )
-
-    from tamar_spark.operators.similarity import dot, l2_norm
-
-    v = F.col(vec_col).cast("array<double>")
-    base = df.select(F.col(id_col).alias("_id"), v.alias("_v")).withColumn(
-        "_n", l2_norm(F.col("_v"))
-    )
-    a = base.select(
-        F.col("_id").alias("src_id"), F.col("_v").alias("_va"), F.col("_n").alias("_na")
-    )
-    b = base.select(
-        F.col("_id").alias("dup_id"), F.col("_v").alias("_vb"), F.col("_n").alias("_nb")
-    )
-    score = dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
-    return (
-        a.join(b, F.col("src_id") < F.col("dup_id"))
-        .withColumn("_s", score)
-        .filter(F.col("_s") >= threshold)
-        .select("src_id", "dup_id", F.round("_s", 6).alias("score"))
     )

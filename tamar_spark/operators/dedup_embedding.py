@@ -59,7 +59,9 @@ def blocked_cosine_pairs(
     vec_col: str = "embedding",
     n_blocks: int = 8,
 ) -> DataFrame:
-    """All unordered pairs with cosine ≥ threshold, via block-pair GEMM."""
+    """All unordered pairs with cosine ≥ threshold, via block-pair GEMM:
+    ``(src_id, dup_id, score)`` with ``src_id < dup_id`` and the score
+    rounded to 6 places.  ``n_blocks`` is the replication factor."""
     import pandas as pd
 
     spark = df.sparkSession

@@ -1,21 +1,19 @@
-"""Connected components — duplicate-cluster resolution for dedup pipelines.
+"""Graph operators over undirected edge lists: connected components,
+k-cores and per-node triangle counts.
 
 Near-dup detection (`operators.dedup`) emits PAIRS; deduplication needs
 CLUSTERS (every document mapped to one canonical representative, even when
-A~B and B~C but A!~C). That closure step is connected components.
+A~B and B~C but A!~C).  :func:`connected_components` is that closure step:
+large-star/small-star (Kiveris et al., "Connected Components in MapReduce
+and Beyond", SoCC 2014), O(log² n) rounds on any graph shape, every round
+pure DataFrame ops with one driver-side count.
 
-Implementation: iterative min-label propagation as pure DataFrame ops —
-each node starts labeled with itself; every round each node takes the
-minimum label among itself and its neighbors; converged when no label
-changes. The driver only orchestrates rounds (checks one count per round);
-all data stays distributed. Rounds needed = graph diameter, which for
-near-dup clusters is tiny (dup groups are near-cliques, typically 1-3
-rounds). For web-scale graphs with long chains, swap the body for the
-large-star/small-star algorithm (Kiveris et al.) — same interface.
-
-The per-round plan: one shuffle to aggregate min neighbor label, one
-broadcast-or-shuffle join back to labels. Labels are (node, long) pairs —
-the working set is |V|, never |V|×|E|.
+Contract: ``(node, component)`` for every node of a non-self pair, with
+``component`` the smallest node id in its component.  Self-pairs
+(``src == dst``) are dropped, so a node seen only in a self-pair gets no
+row; the dedup callers never emit one (``jaccard_pairs`` returns
+``doc_id_1 < doc_id_2``).  A graph that is not a star forest after
+``MAX_ROUNDS`` rounds raises ``RuntimeError``, never a partial labelling.
 """
 
 from __future__ import annotations
@@ -27,138 +25,40 @@ from tamar_spark.operators.cache import CacheLease as _CacheLease, attach_lease
 __all__ = [
     "attach_lease",
     "connected_components",
-    "connected_components_star",
     "kcore",
     "triangles_per_node",
 ]
+
+# Round budget of connected_components: a 400k-node chain, the
+# diameter-growing worst case, converges in 19 rounds.
+MAX_ROUNDS = 40
 
 
 def connected_components(
     pairs: DataFrame,
     src: str = "doc_id_1",
     dst: str = "doc_id_2",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Map every node in ``pairs`` to its component's minimum node id.
-
-    Returns ``(node, component)``. Deterministic: the representative is the
-    smallest id in the component.
-    """
-    edges = (
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(pairs.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-    )
-    # localCheckpoint (not persist): each round's plan builds on the last —
-    # persist caches DATA but the logical plan still nests one level per
-    # round, and Catalyst re-analysis over a 40-deep self-referencing plan
-    # OOMs the driver long before the data does. Checkpointing truncates
-    # lineage so every round starts from a flat scan.
-    edges = edges.localCheckpoint()
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint()
-    )
-
-    for _ in range(max_iter):
-        # min label among each node's neighbors
-        neighbor_min = (
-            edges.join(labels, edges.b == labels.node)
-            .groupBy("a")
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        # Lazy checkpoint fused with the convergence probe (r15
-        # optimization, the connected_components_star pattern): the eager
-        # checkpoint ran one job per round and the changed-count a
-        # second; letting the count materialize the checkpoint halves
-        # the per-round job count — pure fixed-cost machinery on a
-        # converged tail (measured: each extra job costs ~0.2-0.4 s of
-        # scheduler/AQE overhead at fixture scale regardless of data).
-        # The count is full (no limit(1)): it scans every partition, so
-        # the checkpoint is always completely materialized before the
-        # next round builds on it.
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.a, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select("node", "component")
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    src: str = "doc_id_1",
-    dst: str = "doc_id_2",
-    max_iter: int = 25,
     stats: dict | None = None,
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the web-scale path: O(log² n) rounds on ANY graph shape, vs min-label
-    propagation's O(diameter) rounds (pathological on long chains).
-
-    Each round is two star ops over the edge list; per star the physical
-    plan is ONE window aggregate + ONE distinct (r8 VERDICT task 5 — the
-    previous form paid a grouped aggregate, a join back, and two
-    distincts per star):
+    """Map every node of ``pairs`` to its component's minimum node id:
+    ``(node, component)``, by alternating large-star / small-star rounds
+    (module docstring for the contract, self-pairs and the round budget).
 
     - large-star: every node links its LARGER neighbors to its smallest
       known neighbor-or-self;
     - small-star: every node links its smaller-or-equal neighbors to that
       minimum.
 
-    Four constant-factor choices, all state-preserving (the per-round
-    edge SETS are identical to the textbook formulation, so round counts
-    and the fixpoint cannot move):
+    Edges shrink toward one star per component, centered on its minimum;
+    the loop stops when the edge set is a star forest.  Per star the plan
+    is one window aggregate (``min(v) OVER (PARTITION BY u)``) and one
+    distinct over the canonical ``u < v`` edge set; both orientations are
+    derived by one explode, not a union, so the per-round plan references
+    its child once.  Each round's checkpoint is lazy and the star-forest
+    count materializes it: one job per round.
 
-    - the per-node minimum comes from ``min(v) OVER (PARTITION BY u)``
-      carried on the edge rows — the groupBy+self-join of the previous
-      form collapses into one window stage;
-    - the round state is stored CANONICALLY (one row per pair, u < v) and
-      both orientations are derived narrowly inside the star, so the
-      dedup shuffle moves |E| rows instead of 2|E| and cross-orientation
-      duplicates die in the same pass;
-    - the round's checkpoint is lazy and the star-forest convergence
-      count materializes it — one job per round (the kcore fused
-      checkpoint+count pattern);
-    - every two-branch union (symmetrization, the star's keep/self
-      emissions) is a single EXPLODE over a per-row candidate array
-      (r9 VERDICT task 5): a union references its child subtree twice,
-      so the fused double-star plan duplicated the inner star ~4× and
-      per-round DRIVER-SIDE analysis (~2 s) outweighed the ~0.8 s
-      Spark job; the explode emits the identical row multiset from ONE
-      child reference.  Same rows, same sets, ~15% off the wall.
-
-    Measured on the cc_chain adversary: 100k-node chain 57 → 41 s (r9),
-    400k 135 → 73 → 53 s (r10, explode rewrite; same-session
-    side-by-side 62.7 → 53.2), round counts unchanged (17 / 19).
-
-    Edges monotonically shrink toward a star centered on each component's
-    minimum; converged when the edge set is a star forest.  Returns
-    ``(node, component)`` with component = the minimum node id.
-
-    ``stats`` (optional dict) receives ``{"rounds": r}`` — the number of
-    large+small rounds until convergence, the observable the O(log² n)
-    claim is pinned on (bench_scale's cc_chain probe and
-    test_star_cc_round_count_is_logarithmic_on_chains assert round counts
-    grow ~log on diameter-growing chain graphs, where min-label needs
-    diameter rounds).
+    ``stats`` (optional dict) receives ``{"rounds": r}``, the number of
+    large+small rounds until convergence (~log₂ n on an n-node chain).
     """
     from pyspark.sql.window import Window as W
 
@@ -212,19 +112,16 @@ def connected_components_star(
             F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
         ).distinct()
 
-    rounds = 0
-    for _ in range(max_iter):
+    for rounds in range(1, MAX_ROUNDS + 1):
         new_edges = star(star(edges, large=True), large=False).localCheckpoint(
             eager=False
         )
         # Stop when the edge set is a STAR FOREST — every node is either a
         # center (all neighbors larger) or a leaf (its single neighbor is
-        # smaller).  This is exact, not probabilistic: star forests are
-        # precisely the algorithm's fixed points, both star ops preserve
-        # component membership, and the final labeling below is correct on
-        # any star forest — so stopping here can never change the answer.
-        # The count is the round's ONLY job: it materializes the lazy
-        # checkpoint as a side effect.
+        # smaller).  Star forests are exactly the algorithm's fixed points,
+        # both star ops preserve component membership, and the labeling
+        # below is correct on any star forest.  The count is the round's
+        # only job: it materializes the lazy checkpoint.
         not_star = (
             sym_view(new_edges)
             .groupBy("u")
@@ -234,9 +131,12 @@ def connected_components_star(
             .count()
         )
         edges = new_edges
-        rounds += 1
         if not_star == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components: not a star forest after {MAX_ROUNDS} rounds"
+        )
     if stats is not None:
         stats["rounds"] = rounds
 

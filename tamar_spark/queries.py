@@ -1052,10 +1052,11 @@ def dedup_keep_best(spark, sf_dir):
     BEST copy in each duplicate cluster, not the minimum id — e.g. the
     un-truncated, well-punctuated variant of a page crawled five times.
     Composition of three existing operators (the point of a DataFrame
-    engine): exact-Jaccard pairs → connected components → argmax of the
-    quality heuristic per component via one ``max(struct)`` aggregate
-    (quality desc, then min doc_id — deterministic on ties; no window
-    sort, one shuffle past the CC labels).  The oracle recomputes the
+    engine): exact-Jaccard pairs → connected components (`operators.graph`,
+    large-star/small-star) → argmax of the quality heuristic per component
+    via one ``max(struct)`` aggregate (quality desc, then min doc_id —
+    deterministic on ties; no window sort, one shuffle past the CC
+    labels).  The oracle recomputes the
     clusters as a recursive-CTE closure and the pick as a window rank."""
     from tamar_spark.operators.graph import connected_components
 

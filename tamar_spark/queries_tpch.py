@@ -26,6 +26,7 @@ from tamar_spark.queries import query, dsum_r, round_ieee, _DEC, epoch_us, floor
 from tamar_spark.queries import _events_path, _events_stream, _run_to_memory
 from tamar_spark.sources import load_table
 from tamar_spark.operators import dedup as D
+from tamar_spark.operators.dedup_embedding import blocked_cosine_pairs, lsh_cosine_pairs
 
 
 def _ts(s: str):
@@ -636,7 +637,7 @@ def dedup_embedding(spark, sf_dir):
     oracle matches bit-for-bit; `dedup_embedding_lsh` below is the composed
     100 TB path (LSH candidates + the same GEMM verify kernel)."""
     e = load_table(spark, sf_dir, "embeddings")
-    return D.embedding_neardup_pairs(e, threshold=0.4)
+    return blocked_cosine_pairs(e, threshold=0.4)
 
 
 def _augmented_embeddings(spark, sf_dir):
@@ -694,7 +695,7 @@ def dedup_embedding_lsh(spark, sf_dir):
     over the identical augmented corpus) pins recall 1.0 — deterministic
     projections make that exactness stable, not probabilistic."""
     corpus = _augmented_embeddings(spark, sf_dir)
-    return D.embedding_neardup_pairs(corpus, threshold=0.9, method="lsh", dim=64)
+    return lsh_cosine_pairs(corpus, threshold=0.9, dim=64)
 
 
 # ---------------------------------------------------------------------------
@@ -2679,9 +2680,7 @@ def stratified_cap(spark, sf_dir):
     )
 
 
-@query(
-    "dedup_clusters",
-    """
+_DEDUP_CLUSTERS_SQL = """
 WITH words AS (
   SELECT doc_id, string_split_regex(text, '\\s+') AS w FROM documents
 ), sh AS (
@@ -2709,14 +2708,16 @@ inter AS (
 )
 SELECT a AS node, least(a, min(b)) AS component
 FROM closure GROUP BY a
-""",
-)
-def dedup_clusters(spark, sf_dir):
+"""
+
+
+def _dedup_clusters(spark, sf_dir):
     """Duplicate-cluster resolution: exact-Jaccard near-dup pairs (>= 0.5)
-    closed into connected components — every clustered document mapped to
-    its component's minimum id (the canonical copy to keep).  Iterative
-    min-label propagation, all-distributed; the oracle is a recursive-CTE
-    transitive closure, an independent formulation of the same clusters."""
+    closed into connected components (`operators.graph`, large-star/
+    small-star) — every clustered document mapped to its component's
+    minimum id (the canonical copy to keep).  The oracle is a
+    recursive-CTE transitive closure, an independent formulation of the
+    same clusters."""
     from tamar_spark.operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2724,50 +2725,10 @@ def dedup_clusters(spark, sf_dir):
     return connected_components(pairs)
 
 
-@query(
-    "dedup_clusters_star",
-    """
-WITH words AS (
-  SELECT doc_id, string_split_regex(text, '\\s+') AS w FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-  FROM words, LATERAL (SELECT unnest(generate_series(1, len(w)-2)) AS i) t
-), sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-inter AS (
-  SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2, count(*) AS n_inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), edges AS (
-  SELECT doc_id_1, doc_id_2
-  FROM inter JOIN sizes sa ON sa.doc_id = inter.doc_id_1
-             JOIN sizes sb ON sb.doc_id = inter.doc_id_2
-  WHERE round(n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter), 4) >= 0.5
-), sym AS (
-  SELECT doc_id_1 AS a, doc_id_2 AS b FROM edges
-  UNION SELECT doc_id_2, doc_id_1 FROM edges
-), closure AS (
-  WITH RECURSIVE r(a, b) AS (
-    SELECT a, b FROM sym
-    UNION
-    SELECT r.a, s.b FROM r JOIN sym s ON r.b = s.a
-  ) SELECT * FROM r
-)
-SELECT a AS node, least(a, min(b)) AS component
-FROM closure GROUP BY a
-""",
-)
-def dedup_clusters_star(spark, sf_dir):
-    """Same duplicate clusters as ``dedup_clusters``, computed with the
-    large-star/small-star algorithm (Kiveris et al.) instead of min-label
-    propagation — O(log^2 n) rounds regardless of graph diameter, the
-    variant to run at web scale where dup chains can be long.  Checked
-    against the identical recursive-CTE oracle: both algorithms must land
-    on the same canonical representative per cluster."""
-    from tamar_spark.operators.graph import connected_components_star
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = D.jaccard_pairs(docs, threshold=0.5, max_doc_freq=32)
-    return connected_components_star(pairs)
+# `dedup_clusters_star` is the same builder and oracle, registered under its
+# own name because the driver contract and the correctness ledger carry it.
+dedup_clusters = query("dedup_clusters", _DEDUP_CLUSTERS_SQL)(_dedup_clusters)
+dedup_clusters_star = query("dedup_clusters_star", _DEDUP_CLUSTERS_SQL)(_dedup_clusters)
 
 
 @query(

@@ -773,14 +773,14 @@ def test_embedding_neardup_finds_planted_dup(spark):
     """A planted near-identical vector pair must surface above threshold."""
     import random
 
-    from tamar_spark.operators.dedup import embedding_neardup_pairs
+    from tamar_spark.operators.dedup_embedding import blocked_cosine_pairs
 
     rng = random.Random(11)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(30)]
     dup = [v * 1.001 for v in rows[5][1]]
     rows.append((99, dup))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = embedding_neardup_pairs(df, threshold=0.99)
+    out = blocked_cosine_pairs(df, threshold=0.99)
     pairs = {(r.src_id, r.dup_id) for r in out.collect()}
     assert (5, 99) in pairs
 
@@ -843,18 +843,42 @@ def test_foreach_batch_batch_mode_degenerates(spark):
     assert seen == [(0, 5)]
 
 
+def _expr_cosine_pairs(df, threshold, id_col="vec_id", vec_col="embedding"):
+    """Reference for the GEMM kernels: pure-JVM self-join with a
+    ``zip_with``/``aggregate`` fold per pair — zero Python."""
+    from tamar_spark.operators.similarity import dot, l2_norm
+
+    v = F.col(vec_col).cast("array<double>")
+    base = df.select(F.col(id_col).alias("_id"), v.alias("_v")).withColumn(
+        "_n", l2_norm(F.col("_v"))
+    )
+    a = base.select(
+        F.col("_id").alias("src_id"), F.col("_v").alias("_va"), F.col("_n").alias("_na")
+    )
+    b = base.select(
+        F.col("_id").alias("dup_id"), F.col("_v").alias("_vb"), F.col("_n").alias("_nb")
+    )
+    score = dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
+    return (
+        a.join(b, F.col("src_id") < F.col("dup_id"))
+        .withColumn("_s", score)
+        .filter(F.col("_s") >= threshold)
+        .select("src_id", "dup_id", F.round("_s", 6).alias("score"))
+    )
+
+
 def test_embedding_neardup_blocked_equals_expr(spark):
     """The GEMM-blocked path and the pure-JVM expression path must agree
     exactly (both are exact algorithms)."""
     import random
 
-    from tamar_spark.operators.dedup import embedding_neardup_pairs
+    from tamar_spark.operators.dedup_embedding import blocked_cosine_pairs
 
     rng = random.Random(3)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(120)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    blocked = embedding_neardup_pairs(df, threshold=0.3, method="blocked", n_blocks=4)
-    expr = embedding_neardup_pairs(df, threshold=0.3, method="expr")
+    blocked = blocked_cosine_pairs(df, threshold=0.3, n_blocks=4)
+    expr = _expr_cosine_pairs(df, threshold=0.3)
     assert sorted(map(tuple, blocked.collect())) == sorted(map(tuple, expr.collect()))
 
 
@@ -1196,26 +1220,60 @@ def test_connected_components_chain_and_clique(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
-def test_star_components_match_label_propagation(spark):
-    """large-star/small-star must produce identical components to min-label
-    propagation on random graphs (including a long chain — the star
-    algorithm's advantage case)."""
+def test_connected_components_match_union_find(spark):
+    """Components must equal a pure-Python union-find's on a random graph
+    that includes a long chain (the diameter-growing case)."""
     import random
 
-    from tamar_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    from tamar_spark.operators.graph import connected_components
 
     rng = random.Random(23)
     edges = [(i, i + 1) for i in range(40)]  # one 41-node chain
     nodes = list(range(100, 140))
     edges += [(rng.choice(nodes), rng.choice(nodes)) for _ in range(30)]
     edges = [(a, b) for a, b in edges if a != b]
+
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # the root stays the minimum id
+    want = sorted((n, find(n)) for n in parent)
+
     df = spark.createDataFrame(edges, "doc_id_1 long, doc_id_2 long")
-    a = sorted(map(tuple, connected_components(df, max_iter=50).collect()))
-    b = sorted(map(tuple, connected_components_star(df).collect()))
-    assert a == b
+    assert sorted(map(tuple, connected_components(df).collect())) == want
+
+
+def test_connected_components_labels_long_chain_at_default_budget(spark):
+    """A 31-node chain needs 30 rounds of min-label propagation; the
+    default budget must still label every node with the component
+    minimum, never return a partial labelling."""
+    from tamar_spark.operators.graph import connected_components
+
+    chain = spark.range(30).select(
+        F.col("id").alias("doc_id_1"), (F.col("id") + 1).alias("doc_id_2")
+    )
+    got = {r.node: r.component for r in connected_components(chain).collect()}
+    assert got == {n: 0 for n in range(31)}
+
+
+def test_connected_components_raises_when_round_budget_runs_out(spark, monkeypatch):
+    """Not a star forest when the budget is spent: a loud RuntimeError
+    naming the round count, not whatever labels the last round left."""
+    from tamar_spark.operators import graph
+
+    monkeypatch.setattr(graph, "MAX_ROUNDS", 1)
+    chain = spark.range(63).select(
+        F.col("id").alias("doc_id_1"), (F.col("id") + 1).alias("doc_id_2")
+    )
+    with pytest.raises(RuntimeError, match="after 1 rounds"):
+        graph.connected_components(chain)
 
 
 def test_star_cc_round_count_is_logarithmic_on_chains(spark):
@@ -1229,7 +1287,7 @@ def test_star_cc_round_count_is_logarithmic_on_chains(spark):
 
     from pyspark.sql import functions as F
 
-    from tamar_spark.operators.graph import connected_components_star
+    from tamar_spark.operators.graph import connected_components
 
     rounds = {}
     for n in [64, 256, 1024]:
@@ -1237,7 +1295,7 @@ def test_star_cc_round_count_is_logarithmic_on_chains(spark):
             F.col("id").alias("doc_id_1"), (F.col("id") + 1).alias("doc_id_2")
         )
         stats: dict = {}
-        out = connected_components_star(chain, max_iter=40, stats=stats)
+        out = connected_components(chain, stats=stats)
         assert out.filter(F.col("component") != 0).count() == 0
         assert out.count() == n
         rounds[n] = stats["rounds"]

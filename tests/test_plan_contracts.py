@@ -373,12 +373,15 @@ def test_dedup_embedding_lsh_matches_exact_pairs(spark, sf_dir):
     """Recall/precision 1.0 on the planted corpus: LSH-composed pairs ==
     exact blocked-GEMM all-pairs at the same threshold (deterministic
     projections make this stable, not probabilistic)."""
-    from tamar_spark.operators.dedup import embedding_neardup_pairs
+    from tamar_spark.operators.dedup_embedding import (
+        blocked_cosine_pairs,
+        lsh_cosine_pairs,
+    )
     from tamar_spark.queries_tpch import _augmented_embeddings
 
     corpus = _augmented_embeddings(spark, sf_dir)
-    lsh = embedding_neardup_pairs(corpus, threshold=0.9, method="lsh", dim=64)
-    exact = embedding_neardup_pairs(corpus, threshold=0.9, method="blocked")
+    lsh = lsh_cosine_pairs(corpus, threshold=0.9, dim=64)
+    exact = blocked_cosine_pairs(corpus, threshold=0.9)
     got = sorted((r.src_id, r.dup_id, r.score) for r in lsh.collect())
     want = sorted((r.src_id, r.dup_id, r.score) for r in exact.collect())
     assert got == want and len(got) > 0
