@@ -125,6 +125,12 @@ _CHANGED_IN_ROUND = {
     # ran — the engine rewrite carries a fresh attestation.
     "dedup_clusters": 17,
     "dedup_keep_best": 17,
+    # r17: the as-of kernel drops right rows with a NULL time and never
+    # matches a left row with a NULL time (SQL ``rt <= t`` semantics).
+    "asof_join_latest_order": 17,
+    "asof_join_next_order": 17,
+    "attribution_last_touch": 17,
+    "conversion_lag_stats": 17,
 }
 # One entry per query name, enforced: a duplicate key in this literal is
 # silently last-wins in Python, and a LOWER-round duplicate added later

@@ -77,19 +77,12 @@ def normalize_ws(text: Column) -> Column:
     return F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
 
 
-def fingerprint(text: Column, nfc: bool = False) -> Column:
-    """Deterministic document fingerprint: md5 of the normalized text.
-
-    md5 is available in Spark and DuckDB with identical hex output, so the
-    fingerprint is oracle-checkable (unlike xxhash64, which is Spark-only).
-
-    ``nfc=True`` (r15) prepends :func:`unicode_normalize` so composed and
-    decomposed spellings of one document land on ONE key — the opt-in
-    first stage for real crawl corpora (adds the one Arrow stage; the
-    default stays pure codegen and byte-identical to r14, which is what
-    the registered fingerprint queries attest)."""
-    src = unicode_normalize(text) if nfc else text
-    return F.md5(normalize_ws(src))
+def fingerprint(text: Column) -> Column:
+    """Deterministic document fingerprint: hex md5 of
+    :func:`normalize_ws` of the text (identical in Spark and DuckDB).
+    Compose :func:`unicode_normalize` first when spellings should
+    collapse."""
+    return F.md5(normalize_ws(text))
 
 
 def lang_score(text: Column, markers: Sequence[str]) -> Column:
@@ -541,7 +534,7 @@ def warc_parse(data: Column) -> Column:
     )(data)
 
 
-def http_response_split(data: Column, dechunk: bool = False) -> Column:
+def http_response_split(data: Column) -> Column:
     """Split an HTTP/1.x RESPONSE message (RFC 9112 framing — the
     payload of a WARC ``response`` record) into a struct ``(status,
     content_type, body, ok)``; one Arrow stage.
@@ -551,62 +544,16 @@ def http_response_split(data: Column, dechunk: bool = False) -> Column:
       ``request`` record carries) → full-null ``ok=false``;
     - headers to the first blank CRLF line, first-``:`` split,
       case-insensitive names, latin-1 header scan (total);
-    - ``body`` is everything after the blank line; when a digit
-      ``Content-Length`` is present and disagrees with the actual
-      body size, ``ok=false`` with the body kept (at-rest WARC
-      payloads are already de-chunked by the crawler, so a mismatch
-      is evidence of truncation, not an encoding to undo);
-    - with ``dechunk=True``, a message whose ``Transfer-Encoding``
-      is exactly ``chunked`` has its body DECODED per RFC 9112 §7.1
-      (hex chunk-size lines with optional extensions, per-chunk CRLF
-      framing, the ``0`` last-chunk, trailer fields skipped) —
-      Transfer-Encoding takes precedence over Content-Length per the
-      RFC, so the CL check is skipped on that path.  Malformed chunk
-      framing (bad size line, truncated chunk, missing CRLF) →
-      ``ok=false`` with the RAW body kept; bytes after a COMPLETE
-      terminator → ``ok=false`` with the DECODED body kept (the
-      :func:`decompress_payload` prefix convention); any OTHER
-      transfer coding (``gzip, chunked``) → ``ok=false`` with the
-      raw body (flagged, not guessed).  The default stays
-      ``dechunk=False``: at-rest WARC payloads are de-chunked by the
-      crawler, so the knob is for raw-capture corpora.
+    - ``body`` is everything after the blank line, never decoded:
+      at-rest WARC payloads are already de-chunked by the crawler, so
+      ``Transfer-Encoding`` is ignored; when a digit ``Content-Length``
+      disagrees with the body size, ``ok=false`` with the body kept.
 
-    Stated scope: no ``Content-Encoding`` handling here —
-    compression is :func:`decompress_payload`'s job, composed
-    explicitly on the returned body.
-
-    Scale: one Arrow stage, no shuffle, cost ∝ message bytes."""
+    No ``Content-Encoding`` handling: compression is
+    :func:`decompress_payload`'s job, composed on the returned body."""
     from pyspark.sql.functions import pandas_udf
 
     _null = {"status": None, "content_type": None, "body": None, "ok": False}
-
-    def _dechunk(raw):
-        """(decoded, ok) per RFC 9112 §7.1; (None, False) = malformed."""
-        out = bytearray()
-        pos = 0
-        while True:
-            nl = raw.find(b"\r\n", pos)
-            if nl < 0:
-                return None, False  # truncated size line
-            size_tok = raw[pos:nl].split(b";", 1)[0].strip()
-            try:
-                size = int(size_tok, 16)
-            except ValueError:
-                return None, False
-            pos = nl + 2
-            if size == 0:
-                # trailer section: zero or more fields, then CRLF
-                while True:
-                    if raw[pos : pos + 2] == b"\r\n":
-                        return bytes(out), pos + 2 == len(raw)
-                    tnl = raw.find(b"\r\n", pos)
-                    if tnl < 0:
-                        return bytes(out), False  # truncated trailer
-                    pos = tnl + 2
-            if raw[pos + size : pos + size + 2] != b"\r\n":
-                return None, False  # truncated chunk / lost framing
-            out += raw[pos : pos + size]
-            pos = pos + size + 2
 
     def _one(b):
         if b is None:
@@ -628,19 +575,8 @@ def http_response_split(data: Column, dechunk: bool = False) -> Column:
             if c:
                 hdr.setdefault(k.strip().lower(), v.strip())
         body = b[sep + 4 :]
-        te = hdr.get("transfer-encoding", "").lower()
-        if dechunk and te:
-            if te == "chunked":
-                decoded, ok = _dechunk(body)
-                if decoded is not None:
-                    body = decoded
-                else:
-                    ok = False  # malformed framing: raw body kept
-            else:
-                ok = False  # some other transfer coding: flag, keep raw
-        else:
-            cl = hdr.get("content-length", "")
-            ok = not cl.isdigit() or int(cl) == len(body)
+        cl = hdr.get("content-length", "")
+        ok = not cl.isdigit() or int(cl) == len(body)
         return {
             "status": int(parts[1]),
             "content_type": hdr.get("content-type"),
@@ -687,51 +623,27 @@ _CHARSET_WHATWG_1252 = frozenset(
 # prescan convention (browsers scan the first 1024 bytes)
 _CHARSET_PRESCAN_BYTES = 1024
 
-_CHARSET_META_RE = None  # compiled lazily inside the UDF closure
 
+def decode_charset(data: Column) -> Column:
+    """Charset decode of crawl payload bytes into a struct ``(text,
+    encoding, n_replaced)``; one Arrow stage.
 
-def decode_charset(data: Column, default: str = "utf-8") -> Column:
-    """Charset decode for crawl ingestion (r15, r14 VERDICT task 3):
-    real pages are BYTES in windows-1252 / shift-jis / utf-16 with a
-    transport hint, not UTF-8 strings — html_main_text's string input
-    contract silently assumed this stage had already run.  Returns a
-    struct ``(text, encoding, n_replaced)``; one Arrow-batched stage
-    over a ``binary`` column (the multimodal convention).
+    The encoding is the first hint that resolves:
 
-    Deterministic hint resolution, in priority order:
+    1. a BOM: ``EF BB BF`` → UTF-8, ``FF FE`` / ``FE FF`` → UTF-16
+       LE/BE (BOM stripped); a BOM beats any ``<meta>``;
+    2. the first ``<meta ... charset=LABEL`` in the first 1024 bytes,
+       resolved through the Python codec registry with the WHATWG
+       latin-1/ascii → windows-1252 remap; an unknown label falls
+       through;
+    3. UTF-8.
 
-    1. **BOM**: ``EF BB BF`` → UTF-8 (BOM stripped); ``FF FE`` /
-       ``FE FF`` → UTF-16 LE/BE (BOM consumed).  A BOM always wins —
-       a ``<meta>`` that contradicts it is lying about bytes that are
-       already self-describing (pinned adversarially);
-    2. **meta prescan**: the first 1024 bytes (the WHATWG prescan
-       window), decoded as latin-1 for scanning only, searched for
-       the first ``<meta ... charset=LABEL`` (plain or http-equiv
-       form).  The label resolves through the Python codec registry,
-       with the WHATWG latin-1/ascii → windows-1252 remap (the one
-       alias family every browser applies); an UNKNOWN label falls
-       through to the default;
-    3. **default** (``utf-8`` unless overridden).
-
-    Undecodable byte runs are replaced with U+FFFD and COUNTED
-    exactly (``n_replaced`` — a custom error handler, so the audit
-    column is the true replacement count, not a count of U+FFFD
-    characters the source might legitimately contain).  ``encoding``
-    reports the canonical codec name actually used.
-
-    Stated scope: deterministic hints only — no chardet-style
-    statistical sniffing, no UTF-32 BOM detection (``FF FE 00 00``
-    is read as UTF-16-LE whose first character is NUL — documented,
-    not silently special-cased), no charset attribute inside
-    ``<?xml`` declarations.
-
-    Scale: one Arrow stage, no shuffle, cost ∝ bytes; the prescan
-    regex runs over at most 1 KiB per document."""
+    Undecodable byte runs become U+FFFD and ``n_replaced`` counts them
+    exactly; ``encoding`` is the canonical codec name used.  No
+    statistical sniffing, no UTF-32 BOM, no ``<?xml`` charset."""
     import re
 
     from pyspark.sql.functions import pandas_udf
-
-    default_name = __import__("codecs").lookup(default).name
 
     def _decode_batch(s):
         import codecs
@@ -779,7 +691,7 @@ def decode_charset(data: Column, default: str = "utf-8") -> Column:
                 if m:
                     enc = _resolve(m.group(1))
                 if enc is None:
-                    enc = default_name
+                    enc = "utf-8"
             count[0] = 0
             text = payload.decode(enc, errors="tamar_count_replace")
             return {

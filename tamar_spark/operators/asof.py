@@ -1,23 +1,8 @@
 """As-of (point-in-time) join — an operator Spark lacks natively.
 
-For each left row, pick the latest right row with
-``right_on <= left_on`` (direction="backward") within the same key.
-Deterministic tie-break on equal ``right_on``: the greatest value of
-``tiebreak`` wins (so results are stable under re-partitioning).
-
-Three physical strategies, chosen by ``strategy``:
-
-- ``"union"`` (default, the 100 TB path): tag both sides, union them, and
-  compute ``last(right_struct, ignoreNulls)`` over a per-key window ordered
-  by (time, side, tiebreak).  Entirely JVM-side (one shuffle + one sort, no
-  Python, no row blow-up) — the classic sort-merge as-of expressed as a
-  window function, so whole-stage codegen applies.
-- ``"merge"``: co-partition both sides via ``cogroup`` and run a vectorized
-  ``pandas.merge_asof`` per key group.  Kept for API parity with opaque
-  per-group logic; slower than ``union`` (Arrow + Python per group).
-- ``"filter"``: non-equi join + ``row_number`` pruning.  Materializes
-  |left| × |matching right| intermediate rows — only sane when the per-key
-  right side is tiny; kept as the oracle-shaped reference implementation.
+Both sides are tagged and unioned, and each left row takes
+``last(right_struct, ignoreNulls)`` over a per-key window ordered by
+(time, side, tiebreak): one shuffle and one sort, all in the JVM.
 """
 
 from __future__ import annotations
@@ -39,34 +24,24 @@ def asof_join(
     right_by: str,
     right_cols: Optional[Sequence[str]] = None,
     tiebreak: Optional[str] = None,
-    strategy: str = "union",
     direction: str = "backward",
 ) -> DataFrame:
     """Left as-of join: every left row, plus the matched right row's columns
     (NULL when no right row qualifies).
 
     ``direction="backward"`` (default) matches the latest right row with
-    ``right_on <= left_on``; ``"forward"`` the earliest right row with
-    ``right_on >= left_on`` (tie-break on equal ``right_on`` is the greatest
-    ``tiebreak`` in both directions).
+    ``right_on <= left_on`` within the same key; ``"forward"`` the earliest
+    right row with ``right_on >= left_on``.  On equal ``right_on`` the
+    greatest ``tiebreak`` wins in both directions.  A NULL time on either
+    side never matches, as in SQL ``rt <= t``.
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
     right_cols = list(right_cols or [c for c in right.columns if c not in (right_by,)])
-    if strategy == "filter":
-        return _asof_filter(left, right, left_on, right_on, left_by, right_by, right_cols, tiebreak, direction)
-    if strategy == "merge":
-        return _asof_merge(left, right, left_on, right_on, left_by, right_by, right_cols, tiebreak, direction)
-    return _asof_union(left, right, left_on, right_on, left_by, right_by, right_cols, tiebreak, direction)
-
-
-def _asof_union(left, right, left_on, right_on, left_by, right_by, right_cols, tiebreak, direction="backward"):
     left_cols = list(left.columns)
-    r_struct_fields = right.select(*right_cols).schema
-    # right rows: key aligned to left_by, event time aligned to left_on,
-    # payload packed in one struct (non-null marker for last(ignoreNulls) —
-    # individual right columns may legitimately be NULL)
-    r = right.select(
+    # right payload packed in one struct: a non-null marker for
+    # last(ignoreNulls) even when individual right columns are NULL
+    r = right.filter(F.col(right_on).isNotNull()).select(
         F.col(right_by).alias(left_by),
         F.col(right_on).alias("_t"),
         F.lit(0).alias("_side"),
@@ -82,9 +57,9 @@ def _asof_union(left, right, left_on, right_on, left_by, right_by, right_cols, t
         F.lit(None).cast(r.schema["_r"].dataType).alias("_r"),
         *[F.col(c) for c in left_cols if c != left_by],
     )
-    # order: time asc (backward) / desc (forward); at equal time right rows
-    # first (allow exact matches), among equal right times ascending tiebreak
-    # so last() == greatest
+    # time asc (backward) / desc (forward); at equal time right rows first
+    # (exact matches allowed), equal right times by ascending tiebreak so
+    # last() is the greatest
     t_order = F.col("_t").asc() if direction == "backward" else F.col("_t").desc()
     w = (
         Window.partitionBy(left_by)
@@ -93,99 +68,13 @@ def _asof_union(left, right, left_on, right_on, left_by, right_by, right_cols, t
     )
     matched = (
         r.unionByName(l)
-        .withColumn("_m", F.last("_r", ignorenulls=True).over(w))
+        .withColumn(
+            "_m",
+            F.when(F.col("_t").isNotNull(), F.last("_r", ignorenulls=True).over(w)),
+        )
         .filter(F.col("_side") == 1)
     )
     return matched.select(
         *[F.col(c) for c in left_cols],
         *[F.col("_m").getField(c).alias(c) for c in right_cols],
-    )
-
-
-def _needed_right_cols(right_on, right_cols, tiebreak):
-    """right_on/tiebreak must ride along even when not requested as outputs."""
-    extra = [c for c in (right_on, tiebreak) if c and c not in right_cols]
-    return right_cols + extra
-
-
-def _asof_filter(left, right, left_on, right_on, left_by, right_by, right_cols, tiebreak, direction="backward"):
-    # alias the right key so the join works when left_by == right_by
-    r = right.select(
-        F.col(right_by).alias("_asof_rby"),
-        *_needed_right_cols(right_on, right_cols, tiebreak),
-    )
-    time_cond = (
-        F.col(right_on) <= F.col(left_on)
-        if direction == "backward"
-        else F.col(right_on) >= F.col(left_on)
-    )
-    # unique left-row id: duplicate left rows must each survive (left-join
-    # cardinality contract) — partitioning the window by left.columns would
-    # collapse them to one output row
-    lid = left.withColumn("_lid", F.monotonically_increasing_id())
-    joined = lid.join(
-        r, (F.col(left_by) == F.col("_asof_rby")) & time_cond, "left"
-    )
-    order = [F.col(right_on).desc() if direction == "backward" else F.col(right_on).asc()]
-    if tiebreak:
-        order.append(F.col(tiebreak).desc())
-    w = Window.partitionBy("_lid").orderBy(*order)
-    drop_extra = [c for c in (right_on, tiebreak) if c and c not in right_cols]
-    return (
-        joined.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_lid", "_asof_rby", *drop_extra)
-    )
-
-
-def _asof_merge(left, right, left_on, right_on, left_by, right_by, right_cols, tiebreak, direction="backward"):
-    import pandas as pd
-
-    left_schema = left.schema
-    right_schema = right.select(*right_cols).schema
-    out_fields = [f for f in left_schema.fields] + [
-        type(f)(f.name, f.dataType, True) for f in right_schema.fields
-    ]
-    from pyspark.sql.types import StructType
-
-    out_schema = StructType(out_fields)
-    l_cols = list(left.columns)
-    sort_r = [right_on] + ([tiebreak] if tiebreak else [])
-
-    def merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        if l_pdf.empty:
-            return pd.DataFrame(columns=[f.name for f in out_fields])
-        l_sorted = l_pdf.sort_values(left_on)
-        if r_pdf.empty:
-            out = l_sorted.copy()
-            for c in right_cols:
-                out[c] = None
-            return out
-        # merge_asof keeps the LAST matching right row among equal keys in
-        # backward mode and the FIRST in forward mode → sort tiebreak
-        # ascending (backward) / descending (forward) so the greatest wins
-        tb_asc = direction == "backward"
-        r_sorted = r_pdf.sort_values(
-            sort_r, ascending=[True] + ([tb_asc] if tiebreak else [])
-        )[[right_on] + [c for c in right_cols if c != right_on]]
-        out = pd.merge_asof(
-            l_sorted,
-            r_sorted,
-            left_on=left_on,
-            right_on=right_on,
-            direction=direction,
-            allow_exact_matches=True,
-            suffixes=("", "_r"),
-        )
-        if right_on not in l_cols and right_on + "_r" in out.columns:
-            out = out.rename(columns={right_on + "_r": right_on})
-        return out[[f.name for f in out_fields]]
-
-    lg = left.groupBy(left_by)
-    rg = right.select(
-        right_by,
-        *[c for c in _needed_right_cols(right_on, right_cols, tiebreak) if c != right_by],
-    ).groupBy(right_by)
-    return lg.cogroup(rg).applyInPandas(
-        lambda l_pdf, r_pdf: merge(l_pdf, r_pdf), schema=out_schema
     )

@@ -60,35 +60,22 @@ def shingles(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    distinct: bool = True,
     carry_cols: Sequence[str] = (),
-    nfc: bool = False,
 ) -> DataFrame:
-    """Word n-gram shingle set per document: ``(id, shingle)`` rows.
+    """Distinct word n-gram shingles per document: ``(id, *carry_cols,
+    shingle)`` rows, from a whitespace split of ``text_col``.
 
-    Pure expression pipeline (split → sequence → transform → explode) — no
-    Python.  The tokenized array is projected ONCE per row before the
-    higher-order transform (inlining the split re-evaluates it per element —
-    ~6× slower), and per-gram assembly uses O(1) ``element_at`` lookups
-    rather than ``slice`` (which allocates a subarray per gram).
-
-    ``carry_cols`` threads additional per-document columns (e.g. a corpus
-    side tag) through the explode without a later join back.
-
-    ``nfc=True`` (r15) prepends Unicode NFC normalization so composed and
-    decomposed spellings shingle identically — the opt-in first stage for
-    real crawl corpora (one Arrow stage ahead of the expression pipeline;
-    default off keeps every registered dedup query byte-identical and
-    Python-free)."""
-    src = F.col(text_col)
-    if nfc:
-        from tamar_spark.functions.text import unicode_normalize
-
-        src = unicode_normalize(src)
+    Pure expression pipeline (split → sequence → transform → explode), no
+    Python.  ``carry_cols`` threads per-document columns through the
+    explode.  Compose :func:`tamar_spark.functions.text.unicode_normalize`
+    on the text first when spellings should collapse."""
+    # the split is projected once per row: inlined into the transform it
+    # re-evaluates per element (~6x slower); grams use O(1) element_at,
+    # not slice, which allocates a subarray per gram
     df = df.select(
         F.col(id_col),
         *[F.col(c) for c in carry_cols],
-        F.split(src, r"\s+").alias("_words"),
+        F.split(F.col(text_col), r"\s+").alias("_words"),
     )
     w = F.col("_words")
     count = F.size(w) - F.lit(n - 1)
@@ -99,9 +86,8 @@ def shingles(
         idx,
         lambda i: F.concat_ws(" ", *[F.element_at(w, i + k) for k in range(n)]),
     )
-    grams = F.array_distinct(grams) if distinct else grams
     return df.select(
-        F.col(id_col), *carry_cols, F.explode(grams).alias("shingle")
+        F.col(id_col), *carry_cols, F.explode(F.array_distinct(grams)).alias("shingle")
     )
 
 
@@ -112,46 +98,31 @@ def jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     max_doc_freq: Optional[int] = None,
-    candidates: Optional[DataFrame] = None,
-    sh: Optional[DataFrame] = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-duplicate pairs: ``(doc_id_1, doc_id_2, jaccard)``.
+    """Exact n-gram Jaccard near-duplicate pairs with ``jaccard >=
+    threshold``: ``(doc_id_1, doc_id_2, jaccard)``, ``doc_id_1 <
+    doc_id_2``, jaccard rounded to 4 places.
 
     Inverted-index self-join: |A∩B| via grouping on shared shingles, then
-    ``J = i / (|A| + |B| - i)``.  ``candidates`` restricts the pair space
-    (used by the LSH path so exact verification is candidate-bounded, not
-    quadratic).
-
-    ``max_doc_freq`` is the posting-list scale guard: the self-join cost is
-    Σ df² over shingles, so ONE boilerplate phrase shared by d documents
-    costs d² pairs — at 100 TB always set it.  The cap prunes CANDIDATE
-    GENERATION only; pairs are then verified exactly on their FULL shingle
-    sets via the candidate-bounded path (r2 VERDICT fix — the old code
-    computed intersections on the pruned postings, silently deflating J for
-    pairs containing a hot shingle).  Recall rule: a true pair is missed
-    only if every shared shingle is hot, so set the cap ≥ the largest
-    duplicate-group size you expect (a group of g near-identical docs
-    shares shingles of df ≈ g; unrelated boilerplate runs far hotter).
+    ``J = i / (|A| + |B| - i)``.  ``max_doc_freq`` caps the document
+    frequency of shingles used to GENERATE candidates (the self-join costs
+    Σ df² over shingles); candidates are then verified on their full
+    shingle sets, so every emitted value is exact.  A true pair is missed
+    only if every shingle it shares is above the cap.
     """
-    # the shingle set feeds three consumers (sizes, both join sides) — persist
-    # so the explode+distinct runs once; MEMORY_AND_DISK spills at scale.
-    # Every persist this call creates is lease-scoped AT CREATION
-    # (leased_persist): alive while a consumer holds a referencing frame,
-    # released when the last reference drops — including on exception
-    # paths between the persist and the return, so no session-lifetime
-    # cache residue either way.
+    # the shingle set feeds three consumers (sizes, both join sides) —
+    # persisted so the explode+distinct runs once; every persist here is
+    # lease-scoped at creation, released when the last referencing frame
+    # drops (exception paths included)
     from pyspark import StorageLevel
 
     from tamar_spark.operators.cache import leased_persist, scope_caches
 
-    own = []  # persists created by THIS call (a caller-passed sh is theirs)
-    if sh is None:
-        sh = leased_persist(
-            widen_shingles(shingles(df, text_col, id_col, n), id_col),
-            StorageLevel.MEMORY_AND_DISK,
-        )
-        own.append(sh)
-    if candidates is None and max_doc_freq is not None:
+    sh = leased_persist(
+        widen_shingles(shingles(df, text_col, id_col, n), id_col),
+        StorageLevel.MEMORY_AND_DISK,
+    )
+    if max_doc_freq is not None:
         cool = (
             sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df"))
@@ -239,16 +210,7 @@ def jaccard_pairs(
         out = _verify_pairs(sh, to_verify, id_col, threshold).unionByName(
             direct
         )
-        return scope_caches(out, *own, stats, scored)
-    if candidates is not None:
-        # verification is candidate-PAIR-bounded (not candidate-doc-bounded:
-        # in a hot-boilerplate corpus nearly every doc lands in SOME pair, so
-        # restricting the inverted-index self-join to candidate docs re-pays
-        # the full n² hot-shingle cost — measured 125 s vs 57 s uncapped at
-        # 32k docs before this fix).  Jaccard is still computed on the FULL
-        # shingle sets — max_doc_freq affects candidate generation only, so
-        # emitted values are exact.
-        return scope_caches(_verify_pairs(sh, candidates, id_col, threshold), *own)
+        return scope_caches(out, sh, stats, scored)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col(id_col).alias("doc_id_1"), "shingle")
     b = sh.select(F.col(id_col).alias("doc_id_2"), "shingle")
@@ -270,7 +232,7 @@ def jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_id_1", "doc_id_2", "jaccard")
     )
-    return scope_caches(out, *own)
+    return scope_caches(out, sh)
 
 
 def _verify_pairs(

@@ -22,6 +22,9 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+# rows per GEMM tile inside one LSH bucket: bounds peak worker memory
+_MAX_CHUNK = 8192
+
 
 def lsh_tables_for(
     threshold: float, n_bits: int, target_miss: float = 1e-4
@@ -133,62 +136,25 @@ def lsh_cosine_pairs(
     vec_col: str = "embedding",
     n_tables: int | None = None,
     n_bits: int = 4,
-    max_chunk: int = 8192,
-    target_miss: float = 1e-4,
 ) -> DataFrame:
-    """Near-dup pairs with cosine ≥ ``threshold`` via LSH candidates + exact
-    in-bucket GEMM verify — the composed scale path for embedding dedup.
+    """Near-dup pairs with cosine ≥ ``threshold``: ``(src_id, dup_id,
+    score)`` with ``src_id < dup_id`` and the exact cosine rounded to 6
+    places.
 
-    Plan shape:
-
-    1. signature stage (``mapInPandas``): ALL n_tables × n_bits sign
-       projections evaluated as ONE dense ``(batch × dim) @ (dim × T·B)``
-       numpy GEMM per Arrow batch — the same 48 dot products as Catalyst
-       ``zip_with``/``aggregate`` folds run interpreted per element and
-       measured ~6 s at sf0.1 vs milliseconds here; output adds one small
-       ``array<int>`` bucket column, vectors cross Arrow once;
-    2. JVM ``posexplode`` to (table, bucket) rows, then
-       ``groupBy(table, bucket)`` — ONE hash shuffle, keyed on 2^n_bits ×
-       n_tables buckets; skew is bounded by choosing n_bits so expected
-       bucket size ≈ corpus/2^n_bits stays executor-sized, and the kernel
-       chunks its GEMM at ``max_chunk`` rows so a hot bucket degrades to
-       streaming tiles instead of OOM;
-    3. inside each bucket: one dense numpy GEMM scores all intra-bucket
-       pairs, emits only those ≥ threshold with id_a < id_b;
-    4. ``dropDuplicates`` on the pair key (a true pair co-occurs in ~every
-       table).
-
-    Recall: a pair at cosine c collides per table with probability
-    (1 − arccos(c)/π)^n_bits and is missed entirely with probability
-    (1 − p_table)^n_tables — see :func:`lsh_tables_for` for worked numbers
-    (at threshold 0.9 the old 8-table default missed ~1.8% of boundary
-    pairs; r2 ADVICE fix).  When ``n_tables`` is None it is auto-sized so
-    a pair AT the threshold is missed with probability ≤ ``target_miss``
-    (default 1e-4); pairs above threshold are safer still.  Projections
-    are deterministic, so the outcome for a given corpus is fixed and
-    tests can pin exact-oracle equality.  Verified scores are exact
-    cosines, so precision is 1 by construction.
-
-    Cost scales linearly in n_tables (signature width, shuffle volume,
-    Σ bucket² GEMM work) — callers trading recall for speed at high
-    thresholds can pass an explicit smaller ``n_tables``.
-
-    Why n_bits=4 by default: at a fixed miss target, fewer bits per table
-    needs fewer tables (threshold 0.9: 12 tables at 4 bits vs 19 at
-    6 bits), and every per-table cost — signature columns, exploded
-    shuffle rows, per-bucket Python invocations — shrinks with the table
-    count, while the in-bucket GEMM (the cheapest stage per element:
-    one dense numpy multiply) absorbs the 4× bucket occupancy.  Measured
-    at sf0.1/d=64: 0.9 s (4 bits / 12 tables) vs 1.6 s (6 bits /
-    19 tables), identical output.  At corpus scale raise ``n_bits`` with
-    ``n`` so expected bucket size n/2^n_bits stays executor-sized (the
-    BASELINE.md sizing rule) — the auto-sizer recomputes the matching
-    table count.
+    Sign-random-projection LSH proposes candidates: ``n_tables`` tables of
+    ``n_bits`` projections each, evaluated as one numpy GEMM per Arrow
+    batch, then one ``groupBy(table, bucket)`` shuffle.  Each bucket is
+    scored exactly with a dense GEMM, in ``_MAX_CHUNK``-row tiles so a hot
+    bucket streams instead of running out of memory, and pairs found in
+    several tables are deduplicated.  Precision is 1 by construction.
+    When ``n_tables`` is None, :func:`lsh_tables_for` sizes it so a pair
+    at exactly ``threshold`` is missed with probability ≤ 1e-4.
+    Projections are seeded, so the output for a given corpus is fixed.
     """
     import pandas as pd
 
     if n_tables is None:
-        n_tables = lsh_tables_for(threshold, n_bits, target_miss)
+        n_tables = lsh_tables_for(threshold, n_bits)
 
     v = F.col(vec_col).cast("array<double>")
     base = df.select(F.col(id_col).alias("_id"), v.alias("_v"))
@@ -245,10 +211,10 @@ def lsh_cosine_pairs(
         nrm = np.linalg.norm(M, axis=1)
         outs = []
         # chunked upper-triangle GEMM: bounds peak memory on hot buckets
-        for i0 in range(0, n, max_chunk):
-            a = slice(i0, min(i0 + max_chunk, n))
-            for j0 in range(i0, n, max_chunk):
-                b = slice(j0, min(j0 + max_chunk, n))
+        for i0 in range(0, n, _MAX_CHUNK):
+            a = slice(i0, min(i0 + _MAX_CHUNK, n))
+            for j0 in range(i0, n, _MAX_CHUNK):
+                b = slice(j0, min(j0 + _MAX_CHUNK, n))
                 sims = (M[a] @ M[b].T) / np.outer(nrm[a], nrm[b])
                 ia, ib = np.nonzero(sims >= threshold)
                 ids_a, ids_b = ids[a][ia], ids[b][ib]

@@ -563,7 +563,6 @@ def pq_topk(
     n_sub: int = 4,
     n_codes: int = 16,
     dim: Optional[int] = None,
-    codebooks: Optional[DataFrame] = None,
     rerank: Optional[int] = None,
 ) -> DataFrame:
     """Approximate top-k via product quantization (PQ) with ADC scoring.
@@ -580,9 +579,7 @@ def pq_topk(
     As DataFrame ops:
     - codebooks: deterministic seed (the ``n_codes`` corpus rows with
       smallest ``md5(id)``, the IVF pattern) sliced into per-subspace
-      chunks — a ≤``n_sub·n_codes``-row broadcast table.  At 100 TB pass
-      ``codebooks=`` an offline-trained table ``(m, code, _ce)`` — plan
-      shape unchanged.
+      chunks — a ≤``n_sub·n_codes``-row broadcast table.
     - encode (one-off, amortized across queries): corpus chunks ⋈
       broadcast codebook, nearest code per (vector, subspace) by squared
       L2 — no shuffle of the corpus beyond the tiny per-key ``min_by``.
@@ -624,19 +621,18 @@ def pq_topk(
     def chunks(vec: Column) -> Column:
         return F.array(*[F.slice(vec, m * sub_dim + 1, sub_dim) for m in range(n_sub)])
 
-    if codebooks is None:
-        seed = (
-            c.withColumn("_h", F.md5(F.col("neighbor_id").cast("string")))
-            .orderBy("_h", "neighbor_id")
-            .limit(n_codes)
-        )
-        cents = seed.select(
-            (F.row_number().over(Window.orderBy("_h", "neighbor_id")) - 1).alias("code"),
-            F.col("_cv"),
-        )
-        codebooks = cents.select(
-            "code", F.posexplode(chunks(F.col("_cv"))).alias("m", "_ce")
-        )
+    seed = (
+        c.withColumn("_h", F.md5(F.col("neighbor_id").cast("string")))
+        .orderBy("_h", "neighbor_id")
+        .limit(n_codes)
+    )
+    cents = seed.select(
+        (F.row_number().over(Window.orderBy("_h", "neighbor_id")) - 1).alias("code"),
+        F.col("_cv"),
+    )
+    codebooks = cents.select(
+        "code", F.posexplode(chunks(F.col("_cv"))).alias("m", "_ce")
+    )
 
     d2 = (
         dot(F.col("_ch"), F.col("_ch")) - 2 * dot(F.col("_ch"), F.col("_ce"))

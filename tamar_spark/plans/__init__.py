@@ -1,27 +1,18 @@
-"""Plan inspection and scale utilities.
+"""Plan inspection helpers and the manual skew tool.
 
-The reference has no optimizer at all (SURVEY §4.1) — our engine's contract
-is that every operator records a declarative plan Catalyst can optimize.
-These helpers make that contract *testable*: tests assert that filters reach
-the parquet scan, that dimension joins broadcast, and that JVM-only
-operators ship no Python stages.
-
-Also home to skew tooling (:func:`salted_join`) — AQE's skew-join handles
-skewed *shuffle* partitions automatically, but a pathological hot key inside
-one partition still needs salting at 100 TB.
+The inspection helpers read a DataFrame's physical plan, so tests can
+assert that filters reach the parquet scan, that dimension joins
+broadcast and that JVM-only operators ship no Python stages.
+:func:`salted_join` spreads one hot join key over several tasks.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import List
 
-from pyspark.sql import Column, DataFrame, functions as F
-
-from tamar_spark.sources import session_width
+from pyspark.sql import DataFrame, functions as F
 
 __all__ = [
-    "auto_salt",
-    "auto_salted_join",
     "executed_plan",
     "pushed_filters",
     "has_python_stage",
@@ -61,6 +52,7 @@ def has_python_stage(df: DataFrame) -> bool:
 
 
 def broadcast_join_count(df: DataFrame) -> int:
+    """Number of BroadcastHashJoin operators in the executed plan."""
     return executed_plan(df).count("BroadcastHashJoin")
 
 
@@ -128,9 +120,9 @@ def shuffle_count(df: DataFrame) -> int:
 # produce nothing (inner/semi/anti) or nothing extra (left outer).  For
 # right/full outer the unmatched right replicas each emit a null-padded
 # row — salt× duplicates — so those joins are rejected loudly.  "cross"
-# is rejected too (r8 ADVICE): these helpers always join ON [key, salt],
+# is rejected too: salted_join always joins ON [key, salt],
 # so a how="cross" caller would silently get an inner equi-join rather
-# than a cartesian product — better to fail loudly than mislead.
+# than a cartesian product.
 _SALT_SAFE_HOWS = frozenset(
     {"inner", "left", "leftouter", "left_outer", "left_semi", "leftsemi",
      "semi", "left_anti", "leftanti", "anti"}
@@ -174,112 +166,3 @@ def salted_join(
     )
     out = l.join(r, [on, "_salt"], how)
     return out.drop("_salt")
-
-
-def auto_salt(
-    df: DataFrame,
-    key: str,
-    partitions: Optional[int] = None,
-    hot_task_ratio: float = 2.0,
-    max_salt: int = 64,
-) -> dict:
-    """Measure one key's skew and PICK the salt factor — or decline
-    (r7 VERDICT task 8: the profiler and the manual salting tools
-    existed; this wires the measurement into the decision).
-
-    Runs the same per-value count aggregate ``key_skew_profile`` records
-    (one scan, map-side combined to one row per distinct value, then a
-    1-row rollup — the documented pre-flight cost, paid once per
-    pipeline, not per query) and applies the straggler rule:
-
-    - A shuffle over ``partitions`` tasks puts ``n_rows / partitions``
-      rows in an average task; the hottest key forces ``max_rows`` into
-      ONE task however the hash falls.
-    - If ``max_rows ≤ hot_task_ratio × avg`` the key cannot produce a
-      straggler worth the replication cost → **decline** (salt 1): AQE's
-      skew-split covers residual imbalance, and salting uniform keys
-      just multiplies the build side.
-    - Otherwise salt so the hot key's shards land near the average task:
-      ``ceil(max_rows / avg)``, capped at ``max_salt`` (the build-side
-      replication factor — past ~64× replication beats the straggler it
-      removes) and at ``partitions`` (finer than one shard per task buys
-      nothing).
-
-    Returns the decision with its evidence: ``{salt, n_rows, n_distinct,
-    max_rows, top_share, avg_task_rows}`` — callers log it or feed it to
-    :func:`auto_salted_join`.  Deciding from MEASUREMENT rather than a
-    fixed factor is the point: the same pipeline code then neither
-    under-salts the power-law corpus nor taxes the uniform one."""
-    import math
-
-    if partitions is None:
-        partitions = session_width(df.sparkSession)
-    row = (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.sum("n").alias("n_rows"),
-            F.count(F.lit(1)).alias("n_distinct"),
-            F.max("n").alias("max_rows"),
-        )
-        .first()
-    )
-    n_rows = int(row["n_rows"] or 0)
-    n_distinct = int(row["n_distinct"] or 0)
-    max_rows = int(row["max_rows"] or 0)
-    avg_task = n_rows / max(1, partitions)
-    if n_rows == 0 or max_rows <= hot_task_ratio * avg_task:
-        salt = 1
-    else:
-        salt = min(max_salt, partitions, math.ceil(max_rows / avg_task))
-    return {
-        "salt": salt,
-        "n_rows": n_rows,
-        "n_distinct": n_distinct,
-        "max_rows": max_rows,
-        "top_share": (max_rows / n_rows) if n_rows else 0.0,
-        "avg_task_rows": avg_task,
-    }
-
-
-def auto_salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    how: str = "inner",
-    partitions: Optional[int] = None,
-    hot_task_ratio: float = 2.0,
-    max_salt: int = 64,
-    decision: Optional[dict] = None,
-) -> DataFrame:
-    """Equi-join that salts ITSELF from measured skew: profile the left
-    (fact) side's key with :func:`auto_salt`, then run either the plain
-    join (measured-uniform keys — no replication tax) or
-    :func:`salted_join` at the measured factor.  Output rows are
-    IDENTICAL either way (property-tested on skewed and uniform probe
-    corpora); only the physical distribution changes.  ``how`` is
-    restricted to left-preserving joins, same rule and same loud
-    ValueError as :func:`salted_join` — and the check fires here even
-    when the measurement declines to salt, so a right/full outer caller
-    fails deterministically rather than only on skewed data.  Pass
-    ``decision`` (a dict) to capture the measurement for telemetry."""
-    if how.lower().replace("_", "") not in {
-        h.replace("_", "") for h in _SALT_SAFE_HOWS
-    }:
-        raise ValueError(
-            f"auto_salted_join(how={how!r}) would duplicate unmatched "
-            "right rows when salting engages; only left-preserving joins "
-            "are supported"
-        )
-    d = auto_salt(
-        left,
-        on,
-        partitions=partitions,
-        hot_task_ratio=hot_task_ratio,
-        max_salt=max_salt,
-    )
-    if decision is not None:
-        decision.update(d)
-    if d["salt"] <= 1:
-        return left.join(right, on, how)
-    return salted_join(left, right, on=on, salt=d["salt"], how=how)

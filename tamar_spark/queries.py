@@ -769,9 +769,7 @@ SELECT event_id, user_id, ts, o_orderkey, o_totalprice FROM (
 )
 def asof_join_latest_order(spark, sf_dir):
     """As-of (point-in-time) join: each event matched to the customer's
-    latest order at event time.  Runs the union+window strategy (pure
-    JVM sort-merge as-of: one shuffle + one sort, no Python) — the 100 TB
-    path; the oracle is the row_number formulation."""
+    latest order at event time; the greatest orderkey wins a date tie."""
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_orderkey", "o_totalprice"
@@ -785,7 +783,6 @@ def asof_join_latest_order(spark, sf_dir):
         right_by="o_custkey",
         right_cols=["o_orderdate", "o_orderkey", "o_totalprice"],
         tiebreak="o_orderkey",
-        strategy="union",
     )
     return out.select("event_id", "user_id", "ts", "o_orderkey", "o_totalprice")
 

@@ -3123,7 +3123,7 @@ def corpus_e2e(spark, sf_dir):
     — measured 12.3 s single-task vs ~1 s spread over the cores.  At
     100 TB the input arrives in thousands of splits and the condition is
     false, so no shuffle is added (the same measured-condition pattern
-    as auto_salt / the kcore broadcast)."""
+    as the kcore broadcast)."""
     from tamar_spark.sources import spread
 
     return e2e_frame(spread(load_table(spark, sf_dir, "documents")))

@@ -2208,9 +2208,7 @@ SELECT event_id, user_id, ts, o_orderkey, o_totalprice FROM (
 )
 def asof_join_next_order(spark, sf_dir):
     """Forward as-of join: each event matched to the customer's NEXT order
-    at-or-after event time (direction='forward'; greatest orderkey wins a
-    date tie, matching the backward variant's tie convention).  Same pure
-    JVM union+window strategy — one shuffle + one sort."""
+    at-or-after event time; the greatest orderkey wins a date tie."""
     from tamar_spark.operators.asof import asof_join
 
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
@@ -2226,7 +2224,6 @@ def asof_join_next_order(spark, sf_dir):
         right_by="o_custkey",
         right_cols=["o_orderdate", "o_orderkey", "o_totalprice"],
         tiebreak="o_orderkey",
-        strategy="union",
         direction="forward",
     )
     return out.select("event_id", "user_id", "ts", "o_orderkey", "o_totalprice")
@@ -2255,26 +2252,11 @@ FROM m WHERE rn = 1 GROUP BY 1 ORDER BY 1
 """,
 )
 def attribution_last_touch(spark, sf_dir):
-    """Last-touch conversion attribution: each ``purchase`` event (the
-    conversion) is credited to the type of the same user's LATEST
-    non-purchase event at-or-before the purchase — the standard
-    single-touch marketing-attribution model, as one backward as-of join
-    (``operators.asof``, the same union + last(ignoreNulls) window plan
-    as asof_join_latest_order — one shuffle on the user key, one sort,
-    no range-join blowup) followed by a channel rollup.  Conversions
-    with no prior touch land in an explicit '(none)' bucket rather than
-    silently dropping — attribution reports that lose unattributed
-    conversions overstate every channel.
-
-    Tie on equal ts goes to the greatest event_id (the operator's
-    documented tie convention, mirrored by the oracle's ORDER BY).
-    Revenue accumulates in decimal (house rule).  First/multi-touch and
-    time-decay variants are the same plan with a different window/weight
-    choice.  Scale: both sides are one pass over events; the as-of is a
-    single user-key shuffle regardless of touches-per-user, so it
-    survives the 100 TB event log where the naive range join explodes.
-    Reference parity: extension family (funnel/attribution analytics,
-    alongside funnel_conversion and weekly_retention)."""
+    """Last-touch conversion attribution: each ``purchase`` event is
+    credited to the type of the same user's latest non-purchase event
+    at-or-before it (one backward as-of join, the greatest event_id wins
+    a ts tie), rolled up per channel.  Conversions with no prior touch
+    land in an explicit '(none)' bucket; revenue is summed in decimal."""
     from tamar_spark.operators.asof import asof_join
 
     ev = load_table(spark, sf_dir, "events")
@@ -2296,7 +2278,6 @@ def attribution_last_touch(spark, sf_dir):
         right_by="user_id",
         right_cols=["event_type", "event_id"],
         tiebreak="event_id",
-        strategy="union",
         direction="backward",
     )
     return (
@@ -2513,18 +2494,12 @@ FROM m WHERE rn = 1 GROUP BY 1 ORDER BY 1
 """,
 )
 def conversion_lag_stats(spark, sf_dir):
-    """Conversion-latency distribution per attributed channel: for every
-    purchase with a prior touch (the attribution_last_touch match), the
-    seconds from that last touch to the conversion — exact interpolated
-    p50/p90 per channel, the report marketers read next to the credit
-    split (how long each channel takes to convert).
-
-    Same backward as-of plan as attribution_last_touch (one user-key
-    shuffle, tie to greatest event_id), inner semantics — unattributed
-    conversions have no lag.  The lag is an exact µs integer pushed
-    through one double division, so percentile interpolation sees
-    identical inputs in both engines (percentile ↔ quantile_cont share
-    the linear-interpolation definition; see percentile_agg)."""
+    """Conversion latency per attributed channel: for every purchase
+    with a prior touch (the attribution_last_touch match), exact
+    interpolated p50/p90 of the seconds from that touch to the purchase.
+    Unattributed conversions are dropped.  The lag is an exact µs
+    integer through one double division, so both engines interpolate
+    identical inputs."""
     from tamar_spark.operators.asof import asof_join
 
     ev = load_table(spark, sf_dir, "events")
@@ -2545,7 +2520,6 @@ def conversion_lag_stats(spark, sf_dir):
         right_by="user_id",
         right_cols=["event_type", "event_id", "ts"],
         tiebreak="event_id",
-        strategy="union",
         direction="backward",
     ).filter(F.col("event_type").isNotNull())
     lag = (epoch_us("conv_ts") - epoch_us("ts")) / F.lit(1e6)

@@ -206,15 +206,15 @@ def spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def widen_shingles(sh: DataFrame, id_col: str, width: int = 8) -> DataFrame:
-    """Hash-repartition an exploded shingle frame to ``width`` on
-    ``id_col`` when its scan estimate is narrower than ``width``; else
-    return it unchanged.  Hashing on the document id lets the
+def widen_shingles(sh: DataFrame, id_col: str) -> DataFrame:
+    """Hash-repartition an exploded shingle frame to 8 partitions on
+    ``id_col`` when its scan estimate is narrower than 8; else return it
+    unchanged.  Hashing on the document id lets the
     per-document aggregates downstream (signatures, fingerprints,
     ``collect_list``) run without a further exchange."""
     est = scan_partition_estimate(sh)
-    if est is not None and est[0] < width:
-        return sh.repartition(width, F.col(id_col))
+    if est is not None and est[0] < 8:
+        return sh.repartition(8, F.col(id_col))
     return sh
 
 

@@ -236,8 +236,7 @@ def auto_salted_sessions(
     decision: Optional[dict] = None,
 ) -> DataFrame:
     """Sessionization that engages the time-bucket salt ONLY when the
-    key distribution measurably needs it (r8 VERDICT task 8 — the same
-    measured-condition pattern as ``plans.auto_salt``): one per-key
+    key distribution measurably needs it (r8 VERDICT task 8): one per-key
     count aggregate (the documented pre-flight cost, paid once per
     pipeline) decides between the plain native ``session_window`` plan
     and :func:`salted_sessions`.
@@ -245,7 +244,7 @@ def auto_salted_sessions(
     TWO conditions must both hold, because a straggler needs both a
     skewed share and an absolutely expensive hot task:
 
-    - **Relative share** (mirrors ``auto_salt``): the session shuffle
+    - **Relative share**: the session shuffle
       over ``partitions`` tasks puts ``n_rows / partitions`` events in
       an average task; the hottest key forces ``max_rows`` into ONE task
       however the hash falls (sessions shuffle on the key alone).

@@ -1,4 +1,4 @@
-"""Unit tests for operators: as-of strategies, dedup, similarity, stateful,
+"""Unit tests for operators: as-of join, dedup, similarity, stateful,
 multimodal plumbing, plan properties."""
 
 from datetime import datetime
@@ -42,8 +42,7 @@ EXPECTED_ASOF = [
 ]
 
 
-@pytest.mark.parametrize("strategy", ["union", "merge", "filter"])
-def test_asof_strategies_agree(spark, asof_data, strategy):
+def test_asof_backward_matches_expected(spark, asof_data):
     left, right = asof_data
     out = asof_join(
         left,
@@ -54,17 +53,14 @@ def test_asof_strategies_agree(spark, asof_data, strategy):
         right_by="k",
         right_cols=["rid", "price"],
         tiebreak="rid",
-        strategy=strategy,
     )
     got = sorted((r.eid, r.rid, r.price) for r in out.collect())
-    assert got == EXPECTED_ASOF, f"strategy={strategy}"
+    assert got == EXPECTED_ASOF
 
 
-@pytest.mark.parametrize("strategy", ["union", "merge", "filter"])
-def test_asof_duplicate_left_rows_preserved(spark, asof_data, strategy):
+def test_asof_duplicate_left_rows_preserved(spark, asof_data):
     """Left-join cardinality contract: duplicate left rows each produce an
-    output row (regression — the filter strategy used to collapse them by
-    partitioning its row_number window on all left columns)."""
+    output row."""
     left, right = asof_data
     dup_left = left.unionAll(left)  # every row exactly twice
     out = asof_join(
@@ -76,21 +72,53 @@ def test_asof_duplicate_left_rows_preserved(spark, asof_data, strategy):
         right_by="k",
         right_cols=["rid", "price"],
         tiebreak="rid",
-        strategy=strategy,
     )
     got = sorted((r.eid, r.rid, r.price) for r in out.collect())
-    assert got == sorted(EXPECTED_ASOF * 2), f"strategy={strategy}"
+    assert got == sorted(EXPECTED_ASOF * 2)
 
 
 def test_asof_union_plan_has_no_python(spark, asof_data):
     left, right = asof_data
     out = asof_join(
         left, right, left_on="t", right_on="rt", left_by="k", right_by="k",
-        right_cols=["rid", "price"], tiebreak="rid", strategy="union",
+        right_cols=["rid", "price"], tiebreak="rid",
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "FlatMapCoGroupsInPandas" not in plan
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward"])
+@pytest.mark.parametrize("right_rows", ["null_times", "empty"])
+def test_asof_null_times_never_match(spark, direction, right_rows):
+    """A NULL time on either side never matches (SQL ``rt <= t`` / ``rt >=
+    t`` semantics): right rows with a NULL time are ignored and a left row
+    with a NULL time gets NULL right columns, in both directions; an empty
+    right side gives every left row NULL right columns."""
+    left = spark.createDataFrame(
+        [
+            (1, 1, datetime(2024, 1, 1, 10, 0)),
+            (2, 1, None),
+            (3, 2, datetime(2024, 1, 1, 10, 0)),
+        ],
+        "eid int, k int, t timestamp",
+    )
+    rows = {
+        "null_times": [
+            (1, None, 10),
+            (1, datetime(2024, 1, 1, 12, 0), 11),
+            (2, None, 20),
+        ],
+        "empty": [],
+    }[right_rows]
+    right = spark.createDataFrame(rows, "k int, rt timestamp, rid int")
+    out = asof_join(
+        left, right, left_on="t", right_on="rt", left_by="k", right_by="k",
+        right_cols=["rid"], tiebreak="rid", direction=direction,
+    )
+    got = {r.eid: r.rid for r in out.collect()}
+    forward_hit = direction == "forward" and right_rows == "null_times"
+    assert got == {1: 11 if forward_hit else None, 2: None, 3: None}
 
 
 def test_exact_dedup_keeps_min_id(spark):
@@ -468,6 +496,19 @@ def test_salted_join_matches_plain_join(spark):
     salted = salted_join(left, right, on="k").select("id", "payload")
     assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
 
+    # right/full outer would emit salt x null-padded rows for right keys
+    # absent from the left, so they are rejected
+    for bad in ("right", "full", "full_outer"):
+        with pytest.raises(ValueError, match="left-preserving"):
+            salted_join(left, right, on="k", how=bad)
+    # left outer is supported: unmatched LEFT rows are not replicated
+    left4 = spark.range(0, 1000).withColumn("k", (F.col("id") % 4).cast("long"))
+    lo_plain = left4.join(right, "k", "left").select("id", "payload")
+    lo_salt = salted_join(left4, right, on="k", how="left").select("id", "payload")
+    assert sorted(map(tuple, lo_salt.collect()), key=str) == sorted(
+        map(tuple, lo_plain.collect()), key=str
+    )
+
 
 def test_spread_is_condition_gated(spark, tmp_path):
     """sources.spread must repartition a below-parallelism scan up to
@@ -653,69 +694,6 @@ def test_spread_declines_on_many_gz_csv_files(spark, tmp_path):
     assert len(files) >= par and all(f.endswith(".csv.gz") for f in files)
     out = spread(df)
     assert out is df, "spread() must decline on >=cores non-splittable files"
-
-
-def test_auto_salt_decides_from_measured_skew(spark):
-    """auto_salt (r7 VERDICT task 8) must SALT the power-law corpus and
-    DECLINE the uniform one — decided from the measured per-key counts,
-    not a fixed factor — and auto_salted_join's output must be row-
-    identical to the plain join on BOTH probe corpora (the salted-twin
-    checksum-identity pattern)."""
-    from tamar_spark.plans import auto_salt, auto_salted_join
-
-    # skewed probe: one hot key holds ~80% of rows
-    hot = spark.range(0, 8000).select(F.lit(0).cast("long").alias("k"), "id")
-    cold = spark.range(0, 2000).select(
-        (F.col("id") % 100 + 1).cast("long").alias("k"), "id"
-    )
-    skewed = hot.unionByName(cold)
-    uniform = spark.range(0, 10000).select(
-        (F.col("id") % 100).cast("long").alias("k"), "id"
-    )
-    dim = spark.range(0, 101).select(
-        F.col("id").alias("k"), (F.col("id") * 7).alias("payload")
-    )
-
-    d_skew = auto_salt(skewed, "k", partitions=32)
-    d_unif = auto_salt(uniform, "k", partitions=32)
-    # hot key: 8000 rows vs avg task 10000/32 = 312.5 → salt ceil(25.6)=26
-    assert d_skew["salt"] > 1 and d_skew["max_rows"] == 8000
-    assert d_skew["salt"] == min(64, 32, 26)
-    # uniform: max 100 ≤ 2 × 312.5 → decline
-    assert d_unif["salt"] == 1 and d_unif["max_rows"] == 100
-
-    for probe in (skewed, uniform):
-        plain = probe.join(dim, "k").select("id", "payload")
-        decision: dict = {}
-        auto = auto_salted_join(
-            probe, dim, on="k", partitions=32, decision=decision
-        ).select("id", "payload")
-        assert decision["n_rows"] == 10000
-        assert sorted(map(tuple, auto.collect())) == sorted(
-            map(tuple, plain.collect())
-        )
-
-    # right/full outer would emit salt x null-padded rows for right keys
-    # absent from the left — both entry points must reject them loudly,
-    # and auto_salted_join must reject even when measurement would
-    # decline (the error should not depend on the data's skew)
-    import pytest as _pytest
-
-    from tamar_spark.plans import salted_join
-
-    for bad in ("right", "full", "full_outer"):
-        with _pytest.raises(ValueError, match="left-preserving"):
-            salted_join(skewed, dim, on="k", how=bad)
-        with _pytest.raises(ValueError, match="left-preserving"):
-            auto_salted_join(uniform, dim, on="k", partitions=32, how=bad)
-    # left outer stays supported: unmatched LEFT rows are not replicated
-    lo_plain = skewed.join(dim, "k", "left").select("id", "payload")
-    lo_salt = salted_join(skewed, dim, on="k", how="left").select(
-        "id", "payload"
-    )
-    assert sorted(map(tuple, lo_salt.collect()), key=str) == sorted(
-        map(tuple, lo_plain.collect()), key=str
-    )
 
 
 def test_plan_helpers_detect_python_stage(spark):
@@ -1176,10 +1154,9 @@ def test_bloom_sketch_membership(spark, sf_dir):
             assert words[r.event_type][w] & (1 << b), (r.event_type, r.user_id, k)
 
 
-@pytest.mark.parametrize("strategy", ["union", "merge", "filter"])
-def test_asof_forward_strategies_agree(spark, asof_data, strategy):
-    """Forward as-of (earliest right with rt >= t) across all three
-    physical strategies, checked against a brute-force scan."""
+def test_asof_forward_matches_scan(spark, asof_data):
+    """Forward as-of (earliest right with rt >= t), checked against a
+    brute-force scan."""
     from tamar_spark.operators.asof import asof_join
 
     left, right = asof_data
@@ -1192,7 +1169,6 @@ def test_asof_forward_strategies_agree(spark, asof_data, strategy):
         right_by="k",
         right_cols=["rid"],
         tiebreak="rid",
-        strategy=strategy,
         direction="forward",
     ).collect()
     expect = {}
@@ -3669,30 +3645,13 @@ def test_decode_charset_adversarial(spark):
         assert got[i] == (t, e, n), (i, b, got[i], (t, e, n))
 
 
-def test_decode_charset_default_override(spark):
-    """The default= knob: hint-less cp1252 bytes decode cleanly when
-    the pipeline declares a cp1252 corpus default."""
+def test_fingerprint_of_nfc_text_collapses_spellings(spark):
+    """fingerprint(unicode_normalize(text)): composed and decomposed
+    spellings of one document produce ONE md5 key; without the
+    normalization they stay apart."""
     from pyspark.sql import Row
 
-    from tamar_spark.functions.text import decode_charset
-
-    df = spark.createDataFrame([Row(id=0, b=bytearray(b"\x93q\x94"))])
-    dec = decode_charset(F.col("b"), default="windows-1252")
-    r = df.select(
-        dec["text"].alias("t"), dec["encoding"].alias("e"),
-        dec["n_replaced"].alias("n"),
-    ).collect()[0]
-    assert (r.t, r.e, r.n) == ("“q”", "cp1252", 0)
-
-
-def test_fingerprint_nfc_knob_collapses_spellings(spark):
-    """fingerprint(nfc=True) (r15): composed and decomposed spellings
-    of one document produce ONE md5 key; the default path stays
-    byte-identical to the r14 expression (no Arrow stage), which the
-    registered fingerprint queries attest."""
-    from pyspark.sql import Row
-
-    from tamar_spark.functions.text import fingerprint
+    from tamar_spark.functions.text import fingerprint, unicode_normalize
 
     df = spark.createDataFrame(
         [
@@ -3702,22 +3661,23 @@ def test_fingerprint_nfc_knob_collapses_spellings(spark):
     )
     rows = df.select(
         "id",
-        fingerprint(F.col("t"), nfc=True).alias("k"),
+        fingerprint(unicode_normalize(F.col("t"))).alias("k"),
         fingerprint(F.col("t")).alias("k0"),
     ).collect()
     k = {r.id: r.k for r in rows}
     k0 = {r.id: r.k0 for r in rows}
-    assert k[0] == k[1]          # one key with the knob
-    assert k0[0] != k0[1]        # split keys without it (scope-stated)
+    assert k[0] == k[1]          # one key after NFC
+    assert k0[0] != k0[1]        # split keys without it
 
 
-def test_shingles_nfc_knob_collapses_spellings(spark):
-    """shingles(nfc=True) (r15): composed and decomposed spellings of
-    one document produce IDENTICAL shingle sets (so every MinHash/
-    SimHash signature downstream collapses too); the default path
-    keeps them distinct and stays Python-free."""
+def test_shingles_of_nfc_text_collapses_spellings(spark):
+    """shingles over unicode_normalize(text): composed and decomposed
+    spellings of one document produce IDENTICAL shingle sets (so every
+    MinHash/SimHash signature downstream collapses too); without the
+    normalization they stay distinct."""
     from pyspark.sql import Row
 
+    from tamar_spark.functions.text import unicode_normalize
     from tamar_spark.operators.dedup import shingles
 
     docs = spark.createDataFrame(
@@ -3726,7 +3686,8 @@ def test_shingles_nfc_knob_collapses_spellings(spark):
             Row(doc_id=1, text="drink cafe\u0301 au lait now"),
         ]
     )
-    with_nfc = shingles(docs, n=3, nfc=True).collect()
+    nfc_docs = docs.select("doc_id", unicode_normalize(F.col("text")).alias("text"))
+    with_nfc = shingles(nfc_docs, n=3).collect()
     sets = {}
     for r in with_nfc:
         sets.setdefault(r.doc_id, set()).add(r.shingle)
@@ -3813,53 +3774,6 @@ def test_decompress_payload_adversarial(spark):
     assert r3.n == 10_000_000
 
 
-def test_http_response_dechunk(spark):
-    """http_response_split(dechunk=True) (r15): RFC 9112 §7.1 chunked
-    bodies decode (hex sizes with extensions, trailer fields skipped,
-    exact-terminator consumption); the default leaves the framing
-    untouched (at-rest WARC is de-chunked by the crawler); malformed
-    framing — bad size line, truncated chunk — flags ok=false keeping
-    the RAW body, while trailing bytes AFTER a complete terminator
-    flag ok=false keeping the DECODED body (the decompress_payload
-    prefix convention); any other
-    transfer coding is flagged, never guessed; and a chunked message
-    IGNORES Content-Length (Transfer-Encoding precedence per the
-    RFC)."""
-    from pyspark.sql import Row
-
-    from tamar_spark.functions.text import http_response_split
-
-    def msg(body: bytes, te: str = "chunked", extra: str = "") -> bytes:
-        return (
-            f"HTTP/1.1 200 OK\r\nTransfer-Encoding: {te}\r\n{extra}\r\n"
-        ).encode("latin-1") + body
-
-    clean = b"4\r\nWiki\r\n5;ext=1\r\npedia\r\n0\r\n\r\n"
-    trailer = b"4\r\nWiki\r\n0\r\nX-Sum: 1\r\n\r\n"
-    badsize = b"ZZ\r\nWiki\r\n0\r\n\r\n"
-    short = b"8\r\nWiki\r\n0\r\n\r\n"
-    trailing = clean + b"JUNK"
-    cases = [
-        (msg(clean), True, (b"Wikipedia", True)),
-        (msg(trailer), True, (b"Wiki", True)),
-        (msg(badsize), True, (badsize, False)),
-        (msg(short), True, (short, False)),
-        (msg(trailing), True, (b"Wikipedia", False)),
-        (msg(clean, te="gzip, chunked"), True, (clean, False)),
-        # chunked beats a contradicting Content-Length (RFC 9112 §6.3)
-        (msg(clean, extra="Content-Length: 3\r\n"), True, (b"Wikipedia", True)),
-        # default: framing untouched, CL check governs
-        (msg(clean), False, (clean, True)),
-    ]
-    for i, (b, knob, want) in enumerate(cases):
-        df = spark.createDataFrame([Row(b=bytearray(b))])
-        h = http_response_split(F.col("b"), dechunk=knob)
-        r = df.select(
-            h["body"].alias("bd"), h["ok"].alias("o")
-        ).collect()[0]
-        assert (bytes(r.bd), r.o) == want, (i, bytes(r.bd), r.o, want)
-
-
 def _warc_record(
     payload: bytes,
     wtype: str = "response",
@@ -3937,8 +3851,9 @@ def test_http_response_split_adversarial(spark):
     with and without Content-Length; HTTP/1.0 accepted; a
     Content-Length that disagrees with the actual body size flags
     ok=false keeping the body (truncation evidence, not an encoding
-    to undo); the request form a WARC ``request`` record carries and
-    a non-digit status are REFUSED as full-null ok=false."""
+    to undo); a chunked body keeps its framing untouched; the request
+    form a WARC ``request`` record carries and a non-digit status are
+    REFUSED as full-null ok=false."""
     from pyspark.sql import Row
 
     from tamar_spark.functions.text import http_response_split
@@ -3956,6 +3871,11 @@ def test_http_response_split_adversarial(spark):
         (
             b"HTTP/1.1 200 OK\r\nContent-Length: 99\r\n\r\nshort",
             (200, None, b"short", False),
+        ),
+        (
+            b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\n"
+            b"4\r\nWiki\r\n5;ext=1\r\npedia\r\n0\r\n\r\n",
+            (200, None, b"4\r\nWiki\r\n5;ext=1\r\npedia\r\n0\r\n\r\n", True),
         ),
         (
             b"GET /doc/1 HTTP/1.1\r\nHost: e.com\r\n\r\n",

@@ -1,0 +1,140 @@
+"""Write one normalised formatted physical plan per registered query.
+
+Usage::
+
+    python tools/plan_snapshot.py OUT_DIR [--sf DIR] [--only a,b]
+
+Runs every query of ``tamar_spark.queries.QUERIES`` (or the ``--only``
+subset) in registration order on a vanilla ``local[$SPARK_GRAFT_CPUS]``
+session, against the scale-factor directory ``--sf`` (default
+``$SPARK_GRAFT_SF_DIR``).  ``OUT_DIR/<query>.txt`` holds:
+
+- for each stream the query starts, the formatted plan of its last
+  micro-batch (``DataStreamWriter.start`` is wrapped to capture the
+  query handle);
+- the formatted plan of the returned DataFrame after it has been
+  collected, i.e. the executed (final adaptive) plan.
+
+Ids and labels that change from run to run are replaced by fixed tokens
+(see :func:`normalise`), so the output of two commits can be compared
+with ``diff -r``.
+"""
+
+from __future__ import annotations
+
+import argparse
+import contextlib
+import os
+import re
+import sys
+
+_RULES = [
+    # expression ids: col#123, col#123L, sum#45.0 ...
+    (re.compile(r"#\d+L?"), "#N"),
+    # higher-order-function lambda variables (x_316) count per JVM
+    (re.compile(r"lambda ([a-z]+)_\d+\b"), r"lambda \1_N"),
+    # plan ids of ReusedExchange / Subquery references
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    # UUIDs (checkpoint dirs, state store ids, run ids)
+    (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"), "<uuid>"),
+    # RDD ids and their call-site labels
+    (re.compile(r"(\w+RDD)\[\d+\]"), r"\1[N]"),
+    (re.compile(r" at [^\s\]]+:\d+"), " at <callsite>"),
+    # memory sinks are named per run
+    (re.compile(r"tamar_stream_out_\d+"), "tamar_stream_out_N"),
+    # object hashes (Class@1a2b3c)
+    (re.compile(r"@[0-9a-f]{4,}\b"), "@<hash>"),
+    # streaming epochs / batch ids
+    (re.compile(r"\b(epoch|batchId|currentBatchId)([=: ]+)\d+"), r"\1\2N"),
+    # absolute paths
+    (re.compile(r"(?:file:)?/[^\s,\]\)]+"), "<path>"),
+]
+
+
+def normalise(text: str) -> str:
+    """Replace run-dependent ids, labels, names and paths with fixed tokens."""
+    for pat, repl in _RULES:
+        text = pat.sub(repl, text)
+    return text
+
+
+@contextlib.contextmanager
+def capture_streams():
+    """Yield a list that collects every StreamingQuery started inside."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    started = []
+    original = DataStreamWriter.start
+
+    def start(self, *args, **kwargs):
+        q = original(self, *args, **kwargs)
+        started.append(q)
+        return q
+
+    DataStreamWriter.start = start
+    try:
+        yield started
+    finally:
+        DataStreamWriter.start = original
+
+
+def _formatted(spark, query_execution) -> str:
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return query_execution.explainString(mode)
+
+
+def snapshot(spark, out_dir: str, sf_dir: str, only=None) -> list:
+    """Write ``out_dir/<name>.txt`` for each query; return the names written."""
+    from tamar_spark.queries import QUERIES
+
+    names = [n for n in QUERIES if only is None or n in only]
+    missing = sorted(set(only or ()) - set(QUERIES))
+    if missing:
+        raise KeyError(f"unknown queries: {missing}")
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        with capture_streams() as started:
+            df = QUERIES[name](spark, sf_dir)
+            df.collect()
+        parts = []
+        for i, q in enumerate(started):
+            q.awaitTermination()
+            last = q._jsq.streamingQuery().lastExecution()
+            parts.append(f"== stream {i} ==\n{_formatted(spark, last)}")
+        parts.append(f"== result ==\n{_formatted(spark, df._jdf.queryExecution())}")
+        with open(os.path.join(out_dir, f"{name}.txt"), "w", encoding="utf-8") as f:
+            f.write(normalise("\n".join(parts)))
+    return names
+
+
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("out_dir")
+    ap.add_argument(
+        "--sf",
+        default=os.environ.get("SPARK_GRAFT_SF_DIR"),
+        help="scale-factor directory the queries read",
+    )
+    ap.add_argument("--only", help="comma-separated query names")
+    args = ap.parse_args(argv)
+    if not args.sf:
+        ap.error("pass --sf or set $SPARK_GRAFT_SF_DIR")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+    from pyspark.sql import SparkSession
+
+    from tamar_spark.env import _default_parallelism
+
+    spark = SparkSession.builder.master(f"local[{_default_parallelism()}]").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    only = set(args.only.split(",")) if args.only else None
+    try:
+        for name in snapshot(spark, args.out_dir, args.sf, only):
+            print(name)
+    finally:
+        spark.stop()
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
