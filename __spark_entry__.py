@@ -103,15 +103,6 @@ _CHANGED_IN_ROUND = {
     # provably unchanged, but the kernel-rewrite convention applies to
     # every query riding the chain.
     "url_canonicalize": 15,
-    # r14: the shared streaming-dedup handler changed (timer-tick fix +
-    # store_shingles refactor through the same code path) — results
-    # provably unchanged at the fixture's second-granularity
-    # timestamps, but the bpe-family rule applies: EVERY query sharing
-    # a rewritten kernel carries a fresh attestation (r9 precedent
-    # pinned all five bpe-kernel queries; the sig sibling attests only
-    # the estimator verification branch, not the exact-shingle path
-    # this row's r13 attestation covered).
-    "streaming_dedup_minhash": 14,
     # r15: crawl_normalize rides the rewritten percent chain AND
     # changed semantics on its own — entity-encoded splice halves (the
     # r14 ADVICE fixture-purity item) plus the IDN/punycode fixture
@@ -131,6 +122,13 @@ _CHANGED_IN_ROUND = {
     "asof_join_next_order": 17,
     "attribution_last_touch": 17,
     "conversion_lag_stats": 17,
+    # r17: batch and stream MinHash share one per-document kernel (gram
+    # set → xxhash64 → Arrow/numpy permutation minimums) instead of the
+    # batch 64-column min aggregate over exploded shingles.
+    "dedup_minhash_lsh": 17,
+    "dedup_incremental": 17,
+    "streaming_dedup_minhash": 17,
+    "streaming_dedup_minhash_sig": 17,
 }
 # One entry per query name, enforced: a duplicate key in this literal is
 # silently last-wins in Python, and a LOWER-round duplicate added later

@@ -89,10 +89,10 @@ def prep_session(spark: SparkSession) -> SparkSession:
     # many for local test scale factors; AQE coalesces down from this
     spark.conf.set("spark.sql.shuffle.partitions", str(_default_parallelism()))
     # split generated code into smaller JIT-friendly methods: wide
-    # aggregates (the 128-permutation MinHash) otherwise emit one huge
-    # method whose janino compile dominates small-SF wall clock and
-    # risks JIT bailout (>8KB bytecode) at any scale; whole-stage
-    # codegen itself stays ON
+    # aggregates and projections (the 192-cell sketch, the 60-bit SimHash
+    # sums) otherwise emit one huge method whose janino compile dominates
+    # small-SF wall clock and risks JIT bailout (>8KB bytecode) at any
+    # scale; whole-stage codegen itself stays ON
     spark.conf.set("spark.sql.codegen.methodSplitThreshold", "128")
     return spark
 

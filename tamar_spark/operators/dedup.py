@@ -2,9 +2,10 @@
 
 Capability absent in the reference (its only dedup-adjacent tool is keyed
 state, reference src/lib.rs:323-361); required by the LLM-pipeline extension
-surface (SURVEY §2.7).  All operators are pure DataFrame compositions —
-no Python UDFs in the hot path — so Catalyst handles partial aggregation,
-and every wide step shuffles on a well-distributed key.
+surface (SURVEY §2.7).  All operators are DataFrame compositions, so
+Catalyst handles partial aggregation and every wide step shuffles on a
+well-distributed key; the one Python stage is the MinHash signature, an
+Arrow-batched numpy pass per document (:func:`minhash_udf`).
 
 Scale design (100 TB):
 - ``shingles`` explodes ~L tokens/doc into ≤L rows; the dominant cost is the
@@ -14,9 +15,10 @@ Scale design (100 TB):
   ``max_doc_freq`` caps hot shingles (standard posting-list pruning) — at
   100 TB always set it; the MinHash-LSH path below is the intended scale
   route, with exact Jaccard verification only on candidate pairs.
-- ``minhash_lsh_pairs``: signatures are 1 row/doc (128 longs); banding
-  explodes to B rows/doc; the band-bucket self-join only pairs docs sharing
-  a band — O(candidates), not O(n²).
+- ``minhash_lsh_pairs``: 1 row/doc carrying the shingle set and the
+  ``num_perm``-long signature; banding explodes to B rows/doc; the
+  band-bucket self-join only pairs docs sharing a band — O(candidates),
+  not O(n²).
 - ``simhash_pairs``: 1 row/doc 64-bit fingerprints; pigeonhole chunk join
   bounds candidates for hamming ≤ k.
 """
@@ -36,6 +38,7 @@ __all__ = [
     "shingles",
     "jaccard_pairs",
     "containment_pairs",
+    "minhash_udf",
     "minhash_signatures",
     "minhash_lsh_pairs",
     "minhash_lsh_join",
@@ -69,25 +72,33 @@ def shingles(
     Python.  ``carry_cols`` threads per-document columns through the
     explode.  Compose :func:`tamar_spark.functions.text.unicode_normalize`
     on the text first when spellings should collapse."""
-    # the split is projected once per row: inlined into the transform it
-    # re-evaluates per element (~6x slower); grams use O(1) element_at,
-    # not slice, which allocates a subarray per gram
-    df = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in carry_cols],
-        F.split(F.col(text_col), r"\s+").alias("_words"),
+    df = df.select(F.col(id_col), *[F.col(c) for c in carry_cols], _words(text_col))
+    return df.select(
+        F.col(id_col), *carry_cols, F.explode(_gram_set(n)).alias("shingle")
     )
+
+
+def _words(text_col: str):
+    """The whitespace token array ``_words`` that :func:`_gram_set` reads.
+    Project it before the gram set: inlined into the transform the split
+    re-evaluates per element (~6x slower)."""
+    return F.split(F.col(text_col), r"\s+").alias("_words")
+
+
+def _gram_set(n: int):
+    """Distinct word n-grams of the projected ``_words`` column, empty
+    below ``n`` tokens.  Grams use O(1) ``element_at``, not ``slice``,
+    which allocates a subarray per gram."""
     w = F.col("_words")
     count = F.size(w) - F.lit(n - 1)
     idx = F.when(count > 0, F.sequence(F.lit(1), count)).otherwise(
         F.array().cast("array<int>")
     )
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(" ", *[F.element_at(w, i + k) for k in range(n)]),
-    )
-    return df.select(
-        F.col(id_col), *carry_cols, F.explode(F.array_distinct(grams)).alias("shingle")
+    return F.array_distinct(
+        F.transform(
+            idx,
+            lambda i: F.concat_ws(" ", *[F.element_at(w, i + k) for k in range(n)]),
+        )
     )
 
 
@@ -238,16 +249,10 @@ def jaccard_pairs(
 def _verify_pairs(
     sh: DataFrame, candidates: DataFrame, id_col: str, threshold: float
 ) -> DataFrame:
-    """Exact-Jaccard verification bounded by candidate PAIRS.
-
-    Materializes each candidate doc's shingle SET as one array row and
-    verifies pairs with ``array_intersect`` — two joins on the candidate
-    set instead of re-running the inverted-index self-join.  A doc's
-    shingle set is per-row data (bounded by doc length), so this holds at
-    corpus scale; AQE broadcasts ``doc_sets`` when the candidate
-    population is small and shuffle-joins otherwise (100 TB safety).
-    Cost is O(|candidates| · avg shingle-set size), independent of any
-    shingle's corpus-wide document frequency.
+    """Exact-Jaccard verification bounded by candidate PAIRS: each
+    candidate doc's shingle rows are collected into one set row, then
+    :func:`_verify_sets`.  Cost is O(|candidates| · avg shingle-set
+    size), independent of any shingle's corpus-wide document frequency.
     """
     cand_docs = (
         candidates.select(F.col("doc_id_1").alias(id_col))
@@ -259,6 +264,16 @@ def _verify_pairs(
         .groupBy(id_col)
         .agg(F.collect_list("shingle").alias("sh_set"))
     )
+    return _verify_sets(doc_sets, candidates, id_col, threshold)
+
+
+def _verify_sets(
+    doc_sets: DataFrame, candidates: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """``(doc_id_1, doc_id_2, jaccard)`` for the ``candidates`` pairs whose
+    exact Jaccard over the distinct shingle sets ``(id_col, sh_set)`` is
+    at least ``threshold``, rounded to 4 places.  AQE broadcasts
+    ``doc_sets`` when it is small and shuffle-joins otherwise."""
     a = doc_sets.select(
         F.col(id_col).alias("doc_id_1"), F.col("sh_set").alias("set_a")
     )
@@ -416,9 +431,8 @@ def containment_pairs(
 
 def minhash_coeffs(num_perm: int):
     """The shared deterministic universal-hash family: ``(p, [(a_i, b_i)])``
-    with ``p = 2³¹-1`` and constants from a fixed-seed PRNG, so batch
-    signatures (:func:`minhash_signatures`) and the streaming per-row fold
-    (streaming/dedup.py) agree bit-for-bit across runs, engines, and
+    with ``p = 2³¹-1`` and constants from a fixed-seed PRNG, so batch and
+    streaming signatures agree bit-for-bit across runs, engines, and
     cluster sizes.  The first k pairs are a prefix of the first k' > k
     pairs, so different ``num_perm`` choices share their leading hashes."""
     import random
@@ -430,46 +444,66 @@ def minhash_coeffs(num_perm: int):
     ]
 
 
+def minhash_udf(num_perm: int):
+    """Arrow-batched pandas UDF ``array<long> → array<long>``: the
+    ``num_perm`` permutation minimums of a document's shingle hashes,
+    permutation *i* being ``(a_i·(x mod p) + b_i) mod p`` over the
+    :func:`minhash_coeffs` family.  Exact in int64: operands stay < 2⁶².
+    The input array must be nonempty."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    p, coeffs = minhash_coeffs(num_perm)
+    a = np.array([c[0] for c in coeffs], dtype=np.int64)
+    b = np.array([c[1] for c in coeffs], dtype=np.int64)
+
+    def perm_mins(hashes):
+        # numpy's % is a floor modulo, i.e. the JVM's pmod for p > 0
+        return pd.Series(
+            [
+                ((np.asarray(x, dtype=np.int64)[:, None] % p * a + b) % p).min(axis=0)
+                for x in hashes
+            ]
+        )
+
+    # nondeterministic only to the optimizer: it then cannot push the
+    # stage through a union into one Python stage per input
+    return pandas_udf(perm_mins, "array<long>").asNondeterministic()
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
     num_perm: int = 128,
-    sh: Optional[DataFrame] = None,
-    group_extra: Sequence[str] = (),
+    carry_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Per-document MinHash signature: ``num_perm`` minimums over universal
-    hash permutations.  ``group_extra`` keeps additional per-document
-    columns (carried through ``sh``) in the grouping — they must be
-    functionally dependent on ``id_col``.
-
-    Each shingle is hashed ONCE (``xxhash64``), then permutation *i* is the
-    classic universal hash ``(a_i·x + b_i) mod p`` with ``p = 2³¹-1`` — one
-    string hash plus cheap integer arithmetic per permutation instead of
-    ``num_perm`` string hashes (~8× faster at 128 perms).  Constants come
-    from a fixed-seed PRNG, so signatures are deterministic across runs and
-    clusters.  Operands stay < 2⁶² — safe under ANSI overflow checking.
-    One shuffle on ``id_col``; map-side partial ``min`` per permutation.
-    """
-    p, coeffs = minhash_coeffs(num_perm)
-    if sh is None:
-        sh = shingles(df, text_col, id_col, n)
-    sh = sh.withColumn("x", F.pmod(F.xxhash64(F.col("shingle")), F.lit(p)))
-    aggs = [
-        F.min(F.pmod(F.col("x") * F.lit(a) + F.lit(b), F.lit(p))).alias(f"h{i}")
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    return sh.groupBy(id_col, *group_extra).agg(*aggs)
+    """Per-document MinHash frame ``(id, *carry_cols, sh_set, sig)``: one
+    row per input row whose text has at least ``n`` tokens, so
+    ``id_col`` must be a key of ``df``.  ``sh_set`` is the distinct word
+    n-gram set :func:`shingles` explodes; ``sig`` is :func:`minhash_udf`
+    over the ``xxhash64`` of each gram — one Arrow pass, no shuffle."""
+    docs = (
+        df.select(F.col(id_col), *[F.col(c) for c in carry_cols], _words(text_col))
+        .filter(F.size("_words") >= n)
+        .select(F.col(id_col), *carry_cols, _gram_set(n).alias("sh_set"))
+    )
+    sig = minhash_udf(num_perm)(F.transform("sh_set", lambda g: F.xxhash64(g)))
+    return docs.withColumn("sig", sig)
 
 
-def _band_keys(rows: int, bands: int):
-    """One xxhash64 bucket key per band over ``rows`` signature columns —
-    shared by the self-join and cross-corpus LSH paths so both sides of
-    any band join bucket identically."""
+def _band_keys(sig, rows: int, bands: int):
+    """One ``xxhash64(band, sig[band·rows], …)`` bucket key per band of
+    the signature array column ``sig`` — shared by the self-join, the
+    cross-corpus join and the stream, so any two of them bucket
+    identically."""
     return F.array(
         *[
-            F.xxhash64(F.lit(b), *[F.col(f"h{b * rows + r}") for r in range(rows)])
+            F.xxhash64(
+                F.lit(b), *[F.element_at(sig, b * rows + r + 1) for r in range(rows)]
+            )
             for b in range(bands)
         ]
     )
@@ -485,35 +519,31 @@ def minhash_lsh_pairs(
     bands: int = 16,
     verify: bool = True,
 ) -> DataFrame:
-    """MinHash + LSH banding near-dup candidates, exact-Jaccard verified.
+    """MinHash + LSH banding near-dup pairs ``(doc_id_1, doc_id_2,
+    jaccard)``, ``doc_id_1 < doc_id_2``, over the per-document frame of
+    :func:`minhash_signatures` (``id_col`` is a key of ``df``).
 
     ``bands`` bands of ``num_perm // bands`` rows; docs sharing any band
-    bucket become candidates (P[detect] = 1-(1-J^r)^b ≈ 1 for J ≥ 0.9 at
-    128/16).  With ``verify=True`` candidates are confirmed with exact
-    Jaccard restricted to the candidate set — the 100 TB-safe route: LSH
-    prunes the pair space, exact verification touches only survivors.
+    bucket are candidates (P[detect] = 1-(1-J^r)^b).  With ``verify``
+    candidates are kept at exact string Jaccard ≥ ``threshold`` (4dp);
+    without it the candidate pairs alone are returned.  Documents under
+    ``n`` tokens have no shingles and never pair.
     """
     from pyspark import StorageLevel
 
     from tamar_spark.operators.cache import leased_persist, scope_caches
 
-    rows = num_perm // bands
-    # one persisted shingle set feeds both the signature aggregation and the
-    # exact-Jaccard verification — without this the explode+distinct runs twice
-    sh = leased_persist(
-        widen_shingles(shingles(df, text_col, id_col, n), id_col),
+    # persisted: the band join and both verification sides read it, and
+    # the cache keeps the gram transform from re-running per consumer
+    docs = leased_persist(
+        minhash_signatures(df, text_col, id_col, n, num_perm),
         StorageLevel.MEMORY_AND_DISK,
     )
-    # both sides of the band self-join derive from the signature table; persist
-    # it (1 row/doc — tiny next to the corpus) so the 128-permutation
-    # aggregation runs once, not once per join side
-    sig = leased_persist(
-        minhash_signatures(df, text_col, id_col, n, num_perm, sh=sh),
-        StorageLevel.MEMORY_AND_DISK,
-    )
-    banded = sig.select(
+    banded = docs.select(
         F.col(id_col),
-        F.posexplode(_band_keys(rows, bands)).alias("band", "bucket"),
+        F.posexplode(_band_keys(F.col("sig"), num_perm // bands, bands)).alias(
+            "band", "bucket"
+        ),
     )
     a = banded.select(F.col(id_col).alias("doc_id_1"), "band", "bucket")
     b = banded.select(F.col(id_col).alias("doc_id_2"), "band", "bucket")
@@ -523,12 +553,9 @@ def minhash_lsh_pairs(
         .select("doc_id_1", "doc_id_2")
         .distinct()
     )
-    if not verify:
-        return scope_caches(cand, sh, sig)
-    # candidate-pair-bounded exact verification (shared with the capped
-    # jaccard_pairs path — see _verify_pairs for the scale rationale)
-    cand = leased_persist(cand, StorageLevel.MEMORY_AND_DISK)
-    return scope_caches(_verify_pairs(sh, cand, id_col, threshold), sh, sig, cand)
+    if verify:
+        cand = _verify_sets(docs, cand, id_col, threshold)
+    return scope_caches(cand, docs)
 
 
 def minhash_lsh_join(
@@ -542,55 +569,33 @@ def minhash_lsh_join(
     bands: int = 16,
     verify: bool = True,
 ) -> DataFrame:
-    """Incremental (cross-corpus) near-dup join: match NEW documents
-    against an EXISTING corpus — the "dedup this crawl against everything
-    already ingested" operation, which self-join dedup cannot express
-    without re-pairing the old corpus against itself.
-
-    Same deterministic MinHash family and banding as
-    :func:`minhash_lsh_pairs`; the band join is new×old instead of
-    self×self, so cost is O(new-side candidates) — the old corpus
-    contributes only its (1 row/doc) signature table.  At 100 TB the old
-    side's signatures/band buckets are the persisted INDEX (write them
-    once per ingest, bucketed by band key); an incremental batch computes
-    its own signatures and equi-joins the index — nothing about the old
-    corpus is rescanned.  Ids must be disjoint across the two frames.
-
-    Returns ``(doc_id_1 = new id, doc_id_2 = old id, jaccard)``, exact-
-    Jaccard verified at ``threshold`` when ``verify`` (pair-bounded, as
-    everywhere in this module).
-
-    Both corpora run through ONE tagged shingle/signature pass: the wide
-    ``num_perm``-column aggregate is the dominant whole-stage-codegen
-    cost, and two separate passes would compile (and scan) it twice for
-    an identical plan shape (measured: single-pass halved the cold run).
+    """Cross-corpus near-dup join: pairs ``(doc_id_1 = new id, doc_id_2 =
+    old id, jaccard)`` of NEW documents against an EXISTING corpus, with
+    the hash family, banding and verification of
+    :func:`minhash_lsh_pairs`.  The band join is new×old, so the old
+    corpus is never paired against itself, and its band rows can be a
+    persisted index bucketed by ``(band, bucket)``.  ``id_col`` is a key
+    of each frame and the ids are disjoint across the two.
     """
     from pyspark import StorageLevel
 
     from tamar_spark.operators.cache import leased_persist, scope_caches
 
-    rows = num_perm // bands
     both = new_df.select(
         F.col(id_col), F.col(text_col), F.lit(True).alias("_is_new")
     ).unionByName(
         old_df.select(F.col(id_col), F.col(text_col), F.lit(False).alias("_is_new"))
     )
-    sh = leased_persist(
-        widen_shingles(
-            shingles(both, text_col, id_col, n, carry_cols=("_is_new",)), id_col
-        ),
+    docs = leased_persist(
+        minhash_signatures(both, text_col, id_col, n, num_perm, ("_is_new",)),
         StorageLevel.MEMORY_AND_DISK,
     )
-    sig = leased_persist(
-        minhash_signatures(
-            both, text_col, id_col, n, num_perm, sh=sh, group_extra=("_is_new",)
-        ),
-        StorageLevel.MEMORY_AND_DISK,
-    )
-    banded = sig.select(
+    banded = docs.select(
         F.col(id_col),
         "_is_new",
-        F.posexplode(_band_keys(rows, bands)).alias("band", "bucket"),
+        F.posexplode(_band_keys(F.col("sig"), num_perm // bands, bands)).alias(
+            "band", "bucket"
+        ),
     )
     a = banded.filter(F.col("_is_new")).select(
         F.col(id_col).alias("doc_id_1"), "band", "bucket"
@@ -598,20 +603,10 @@ def minhash_lsh_join(
     b = banded.filter(~F.col("_is_new")).select(
         F.col(id_col).alias("doc_id_2"), "band", "bucket"
     )
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .select("doc_id_1", "doc_id_2")
-        .distinct()
-    )
-    if not verify:
-        return scope_caches(cand, sh, sig)
-    cand = leased_persist(cand, StorageLevel.MEMORY_AND_DISK)
-    return scope_caches(
-        _verify_pairs(sh.select(id_col, "shingle"), cand, id_col, threshold),
-        sh,
-        sig,
-        cand,
-    )
+    cand = a.join(b, ["band", "bucket"]).select("doc_id_1", "doc_id_2").distinct()
+    if verify:
+        cand = _verify_sets(docs, cand, id_col, threshold)
+    return scope_caches(cand, docs)
 
 
 def simhash_fingerprints(

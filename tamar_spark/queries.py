@@ -844,15 +844,9 @@ def dedup_ngram_jaccard(spark, sf_dir):
 
 @query("dedup_minhash_lsh", _SHINGLE_SQL)
 def dedup_minhash_lsh(spark, sf_dir):
-    """MinHash(64) + LSH(16 bands × 4 rows) near-dup candidates with
-    exact-Jaccard verification at 0.5.  16×4 strictly dominates the earlier
-    16×8 banding: per-band hit probability J⁴ > J⁸ with the same band
-    count, so recall is higher at every J (≈1-2e-4 even at J=0.8) while the
-    signature aggregate is half as wide — the whole-stage-codegen compile
-    of the width-128 aggregate was ~40% of this query's wall-clock.
-    Candidate precision stays near-perfect here (259 candidates for 256
-    true pairs at sf0.1).  The hash family is deterministic, so the
-    verified output equals the exact-Jaccard oracle."""
+    """MinHash(64) + LSH(16 bands × 4 rows) near-dup pairs, verified at
+    exact word-3-gram Jaccard ≥ 0.5.  The hash family is deterministic,
+    so the output equals the exact-Jaccard oracle."""
     docs = load_table(spark, sf_dir, "documents")
     return D.minhash_lsh_pairs(docs, threshold=0.5, num_perm=64, bands=16)
 
@@ -881,14 +875,10 @@ WHERE n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter) >= 0.5
 """,
 )
 def dedup_incremental(spark, sf_dir):
-    """Incremental ingestion dedup: match a NEW batch (odd doc ids stand in
-    for today's crawl) against the EXISTING corpus (even ids) via the
-    cross-corpus MinHash-LSH join — the operation a running pipeline
-    performs on every ingest, where self-join dedup would re-pair the
-    whole old corpus against itself.  The old side contributes only its
-    1-row/doc signature table (at 100 TB: a persisted band-bucket index,
-    nothing rescanned); verification is exact and pair-bounded, so the
-    output hash equals the exact cross-Jaccard oracle."""
+    """Incremental ingestion dedup: a NEW batch (odd doc ids stand in for
+    today's crawl) matched against the EXISTING corpus (even ids) by the
+    cross-corpus MinHash-LSH join, verified at exact Jaccard ≥ 0.5, so
+    the output equals the exact cross-Jaccard oracle."""
     docs = load_table(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 2 == 1)
     old = docs.filter(F.col("doc_id") % 2 == 0)

@@ -619,7 +619,7 @@ WITH ex AS (
            substr(text, 1, CAST(floor(length(text) / 2) AS BIGINT))
            || ' caf\u00e9 latte &#65; ok ' ||
            substr(text, CAST(floor(length(text) / 2) AS BIGINT) + 1),
-           '\s+', ' ', 'g')) AS expected
+           '\\s+', ' ', 'g')) AS expected
   FROM documents
 )
 SELECT doc_id,

@@ -210,7 +210,7 @@ def widen_shingles(sh: DataFrame, id_col: str) -> DataFrame:
     """Hash-repartition an exploded shingle frame to 8 partitions on
     ``id_col`` when its scan estimate is narrower than 8; else return it
     unchanged.  Hashing on the document id lets the
-    per-document aggregates downstream (signatures, fingerprints,
+    per-document aggregates downstream (fingerprints, set sizes,
     ``collect_list``) run without a further exchange."""
     est = scan_partition_estimate(sh)
     if est is not None and est[0] < 8:

@@ -13,9 +13,8 @@ Architecture (the 100 TB contract):
 
 - **State is keyed by LSH band bucket, not by document.**  The stream
   carries, per document, its hashed shingle set and the full array of
-  band bucket keys (JVM ``xxhash64`` per shingle + one vectorized
-  numpy fold for the permutation mins — same deterministic hash family
-  as the batch path in ``operators/dedup.py``, pinned by test).
+  band bucket keys (the batch per-document MinHash kernel of
+  ``operators/dedup.py``, bit-identical, pinned by test).
   Exploding to ``(band, bucket)`` rows
   routes every document to the 16 groups where a collision could
   occur, so candidate generation is an equi-shuffle on bounded keys —
@@ -94,102 +93,36 @@ def attach_minhash_bands(
     bands: int = 16,
     keep_signature: bool = False,
 ) -> DataFrame:
-    """Add ``shingles`` (distinct word n-gram set as int64 ``xxhash64``
+    """Add ``shingles`` (the distinct word n-gram set as int64 ``xxhash64``
     values) and ``bands`` (one LSH bucket key per band) columns to a
-    streaming DataFrame — no shuffle, no groupBy, streaming-safe.
+    streaming DataFrame, dropping rows under ``n`` tokens — no shuffle,
+    no groupBy, streaming-safe.  ``keep_signature`` also keeps the
+    ``num_perm``-long ``sig``.
 
-    Same deterministic construction as the batch path: word n-grams
-    from ``split(text, '\\s+')`` assembled with O(1) ``element_at``
-    lookups, each shingle hashed ONCE with JVM ``xxhash64``, permuted by
-    the shared universal-hash family (:func:`operators.dedup.
-    minhash_coeffs` — fixed seed, so stream and batch signatures agree
-    bit-for-bit, pinned by test), band keys via the same
-    ``xxhash64(band, h...)`` as :func:`operators.dedup._band_keys`.
-
-    The ``num_perm`` permutation MINIMUMS run in one Arrow-batched
-    pandas UDF as a vectorized numpy broadcast (shingles × perms int64
-    matrix, exact — operands stay < 2⁶², the batch path's documented
-    bound).  Two measured plan hazards shape the layout (sf0.1, 5k
-    docs × ~250 shingles):
-
-    - Catalyst evaluates higher-order lambdas INTERPRETED per element —
-      the first cut's 64-field ``aggregate`` struct fold (80M lambda
-      evals) measured 25 s; the numpy broadcast does the identical
-      arithmetic in well under a second.
-    - CollapseProject inlines the gram-assembly ``transform`` into every
-      consumer (filter + UDF input + carry = 4 evaluations ≈ 30 s
-      measured, ~9 s each).  The gram expression is therefore consumed
-      EXACTLY ONCE — as the pandas UDF's input projection — and the UDF
-      echoes the hashed shingle array back in its output struct next to
-      the signature, so downstream reads are attribute references, and
-      the pre-UDF filter tests the raw token count (cheap codegen)
-      rather than the gram array.
+    The construction is the batch one of
+    :func:`operators.dedup.minhash_signatures` — the same gram set, the
+    same :func:`operators.dedup.minhash_udf` and
+    :func:`operators.dedup._band_keys` — so stream and batch band keys
+    agree bit-for-bit (pinned by test).
 
     Downstream state carries the int64 shingle hashes, not the strings:
     Jaccard over the hashed sets equals string Jaccard up to 64-bit
     collisions inside one document pair (probability ≈ |set|²/2⁶⁵ ≈
     10⁻¹², and deterministic either way), and the explode-by-16-bands
     shuffle moves 8-byte values instead of 20-byte grams."""
-    from pyspark.sql.functions import pandas_udf
-
-    from tamar_spark.operators.dedup import minhash_coeffs
+    from tamar_spark.operators.dedup import _band_keys, _gram_set, _words, minhash_udf
 
     if num_perm % bands:
         raise ValueError("num_perm must divide evenly into bands")
-    rows = num_perm // bands
-    p, coeffs = minhash_coeffs(num_perm)
-
-    w = F.split(F.col(text_col), r"\s+")
-    sdf = sdf.filter(F.size(w) >= n)  # grams nonempty ⇔ tokens ≥ n
-    idx = F.sequence(F.lit(1), F.size(w) - F.lit(n - 1))
-    gram_hashes = F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.xxhash64(
-                F.concat_ws(" ", *[F.element_at(w, i + k) for k in range(n)])
-            ),
-        )
+    cols = sdf.columns
+    out = (
+        sdf.select(*cols, _words(text_col))
+        .filter(F.size("_words") >= n)
+        .select(*cols, F.transform(_gram_set(n), lambda g: F.xxhash64(g)).alias("shingles"))
     )
-
-    a_vec = [a for a, _ in coeffs]
-    b_vec = [b for _, b in coeffs]
-
-    def _sig(cols):
-        import numpy as np
-
-        A = np.array(a_vec, dtype=np.int64)
-        B = np.array(b_vec, dtype=np.int64)
-        sh_out, sig_out = [], []
-        for arr in cols:
-            x = np.asarray(arr, dtype=np.int64)
-            xp = ((x % p) + p) % p  # JVM pmod semantics
-            hm = (xp[:, None] * A[None, :] + B[None, :]) % p
-            sh_out.append(x)
-            sig_out.append(hm.min(axis=0))
-        return pd.DataFrame({"sh": sh_out, "sig": sig_out})
-
-    sig_udf = pandas_udf(_sig, "struct<sh: array<long>, sig: array<long>>")
-    sdf = sdf.withColumn("_mh", sig_udf(gram_hashes))
-    band_arr = F.array(
-        *[
-            F.xxhash64(
-                F.lit(b),
-                *[
-                    F.element_at(F.col("_mh.sig"), b * rows + r + 1)
-                    for r in range(rows)
-                ],
-            )
-            for b in range(bands)
-        ]
-    )
-    out = sdf.withColumn("shingles", F.col("_mh.sh")).withColumn(
-        "bands", band_arr
-    )
-    if keep_signature:
-        # the store_shingles=False state variant verifies by signature
-        # instead of shingle sets — expose the permutation minimums
-        out = out.withColumn("sig", F.col("_mh.sig"))
-    return out.drop("_mh")
+    out = out.withColumn("sig", minhash_udf(num_perm)(F.col("shingles")))
+    out = out.withColumn("bands", _band_keys(F.col("sig"), num_perm // bands, bands))
+    return out if keep_signature else out.drop("sig")
 
 
 def minhash_dedup_streaming(

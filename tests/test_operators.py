@@ -2086,6 +2086,37 @@ def test_operators_tolerate_null_and_empty_text(spark):
     assert row3.n is None and row3.fp is None
 
 
+def test_minhash_skips_docs_without_shingles(spark):
+    """NULL, empty, whitespace-only and sub-n-token docs have no shingle,
+    so they must not reach the band join: a signature over an empty set
+    would put every such doc in one shared bucket per band.  Neither the
+    self-join nor the cross-corpus join may pair them, also when the
+    whole corpus is short."""
+    long_text = "the quick brown fox jumps over the lazy dog"
+    short = [(3, None), (4, ""), (5, "   "), (6, "one"), (7, "two words")]
+    docs = spark.createDataFrame(
+        [(1, long_text), (2, long_text)] + short, "doc_id long, text string"
+    )
+    assert sorted(
+        r.doc_id for r in D.minhash_signatures(docs, num_perm=64).collect()
+    ) == [1, 2]
+    mh = D.minhash_lsh_pairs(docs, 0.5, num_perm=64, bands=16, verify=False)
+    assert [tuple(r) for r in mh.collect()] == [(1, 2)]
+    shorts = spark.createDataFrame(
+        short + [(8, "x y"), (9, None), (10, "one")], "doc_id long, text string"
+    )
+    assert D.minhash_signatures(shorts, num_perm=64).count() == 0
+    for verify in (True, False):
+        assert D.minhash_lsh_pairs(shorts, 0.5, num_perm=64, verify=verify).count() == 0
+        new = shorts.filter(F.col("doc_id") % 2 == 1)
+        old = shorts.filter(F.col("doc_id") % 2 == 0)
+        assert D.minhash_lsh_join(new, old, 0.5, num_perm=64, verify=verify).count() == 0
+    new = docs.filter(F.col("doc_id") != 2)
+    old = docs.filter(F.col("doc_id") == 2).unionByName(shorts.filter(F.col("doc_id") > 8))
+    got = D.minhash_lsh_join(new, old, 0.5, num_perm=64, bands=16).collect()
+    assert [tuple(r) for r in got] == [(1, 2, 1.0)]
+
+
 def test_bigram_kernel_tolerates_degenerate_docs(spark):
     """Fixture corpora carry no NULL/empty text, so the oracle gate never
     exercises those rows in the bigram LM path — pin it here: NULL, empty,
@@ -2740,13 +2771,11 @@ def test_ivfpq_trained_centroids_recall_and_probe_contract(spark):
 
 
 def test_streaming_minhash_bands_match_batch_family(spark, sf_dir):
-    """The streaming per-row signature fold (one aggregate expression, no
-    groupBy — streaming-safe) must produce EXACTLY the batch pipeline's
-    band bucket keys (shingles → xxhash64 → shared universal-hash family
-    → per-band xxhash64): stream and batch signatures come from the same
-    minhash_coeffs constants, so an index built by either side is usable
-    by the other.  Also pins that the carried shingle sets equal the
-    batch shingle table per doc."""
+    """The streaming per-row signature (no groupBy — streaming-safe) must
+    produce EXACTLY the batch pipeline's band bucket keys (shingles →
+    xxhash64 → shared universal-hash family → per-band xxhash64), so an
+    index built by either side is usable by the other.  Also pins that
+    the carried shingle sets equal the batch shingle table per doc."""
     from tamar_spark.operators import dedup as D
     from tamar_spark.operators.dedup import _band_keys
     from tamar_spark.streaming.dedup import attach_minhash_bands
@@ -2759,13 +2788,18 @@ def test_streaming_minhash_bands_match_batch_family(spark, sf_dir):
     sig = D.minhash_signatures(docs, num_perm=64)
     batch = {
         r.doc_id: list(r.bands)
-        for r in sig.select("doc_id", _band_keys(4, 16).alias("bands")).collect()
+        for r in sig.select("doc_id", _band_keys(F.col("sig"), 4, 16).alias("bands")).collect()
     }
     stream_expr = {
         r.doc_id: list(r.bands)
         for r in attach_minhash_bands(docs).select("doc_id", "bands").collect()
     }
     assert stream_expr == batch
+    # the numpy kernel against the same arithmetic in Python integers
+    p, coeffs = D.minhash_coeffs(64)
+    hashed = F.transform("sh_set", lambda g: F.xxhash64(g)).alias("h")
+    for r in sig.select("sig", hashed).collect():
+        assert list(r.sig) == [min((a * (h % p) + b) % p for h in r.h) for a, b in coeffs]
 
     batch_sh = {
         r.doc_id: frozenset(x[0] for x in r.sh)

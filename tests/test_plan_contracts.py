@@ -63,7 +63,6 @@ CONTRACTS = [
     ("dedup_substring_spans", 4, 2),  # gram agg + count-back + doc rollup
     ("data_mixture", 2, 2),  # counts + per-lang rank; quotas broadcast
     ("embed_pq_topk", 3, 5),  # codebook/LUT broadcast; encode + ADC rollup
-    ("dedup_incremental", 4, 7),  # one tagged signature pass + band join
     ("embed_hard_negatives", 1, 0),  # broadcast-anchor scan + top-k window
     ("dedup_span_rewrite", 3, 2),  # gram mark + drop anti-join + reassembly
     # per-doc repetition stats are array folds in the projection (no
@@ -187,6 +186,47 @@ def test_extended_plan_contract(spark, sf_dir, name, max_shuffles, min_bcast):
     assert got <= max_shuffles, f"{name}: {got} shuffles > {max_shuffles}"
     got_b = broadcast_join_count(df)
     assert got_b >= min_bcast, f"{name}: {got_b} broadcast joins < {min_bcast}"
+
+
+def _python_nodes(df) -> list:
+    """Python-stage node names in ``df``'s executed plan, each persisted
+    subtree counted once however many scans read it."""
+    markers = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas")
+    found, seen = [], set()
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(node.initialPlan())
+            continue
+        if cls == "InMemoryTableScanExec":
+            cached = node.relation().cachedPlan()
+            if cached.toString() not in seen:
+                seen.add(cached.toString())
+                stack.append(cached)
+            continue
+        if node.nodeName() in markers:
+            found.append(node.nodeName())
+        for i in range(node.children().size()):
+            stack.append(node.children().apply(i))
+    return found
+
+
+@pytest.mark.parametrize(
+    "name,max_shuffles",
+    # measured on this plan: the candidate distinct is the one shuffle;
+    # the band join and both verification joins broadcast at fixture SF
+    [("dedup_minhash_lsh", 1), ("dedup_incremental", 1)],
+)
+def test_minhash_plan_has_one_arrow_stage(spark, sf_dir, name, max_shuffles):
+    """The MinHash queries sign every document in exactly one
+    Arrow-batched stage, inside the persisted per-document frame; the
+    rest of the plan is JVM-only."""
+    df = QUERIES[name](spark, sf_dir)
+    assert _python_nodes(df) == ["ArrowEvalPython"], name
+    got = shuffle_count(df)
+    assert got <= max_shuffles, f"{name}: {got} shuffles > {max_shuffles}"
 
 
 def test_q6_pushdown_and_pruning(spark, sf_dir):

@@ -167,7 +167,7 @@ def test_incremental_dedup_index_is_bucketed(spark, sf_dir, tmp_path_factory):
 
     old_banded = D.minhash_signatures(old, num_perm=num_perm).select(
         F.col("doc_id").alias("doc_id_2"),
-        F.posexplode(_band_keys(rows, bands)).alias("band", "bucket"),
+        F.posexplode(_band_keys(F.col("sig"), rows, bands)).alias("band", "bucket"),
     )
     (
         old_banded.write.bucketBy(8, "band", "bucket")
@@ -179,7 +179,7 @@ def test_incremental_dedup_index_is_bucketed(spark, sf_dir, tmp_path_factory):
 
     new_banded = D.minhash_signatures(new, num_perm=num_perm).select(
         F.col("doc_id").alias("doc_id_1"),
-        F.posexplode(_band_keys(rows, bands)).alias("band_n", "bucket_n"),
+        F.posexplode(_band_keys(F.col("sig"), rows, bands)).alias("band_n", "bucket_n"),
     )
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:

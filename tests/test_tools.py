@@ -34,3 +34,28 @@ def test_code_lines_and_plan_snapshot_run(spark, sf_dir, tmp_path):
         assert not re.search(r"#\d+", text), name
     assert "== stream 0 ==" in (tmp_path / "streaming_dedup.txt").read_text()
     assert "== stream 0 ==" not in (tmp_path / "session_agg.txt").read_text()
+
+
+def test_plan_snapshot_masks_aqe_numbering():
+    """Two runs of one commit number AQE nodes, codegen stages and query
+    stages differently; the normalised text must not, and must keep the
+    tree and every other argument."""
+    snap = _load_tool("plan_snapshot")
+
+    def plan(node, scan, codegen, stage):
+        return (
+            f"+- ShuffleQueryStage ({node}), Statistics(sizeInBytes=1.0 KiB)\n"
+            f"   +- Scan parquet  ({scan})\n\n"
+            f"({scan}) Scan parquet \nOutput [1]: [a#{scan}L]\n\n"
+            f"({codegen}) Filter [codegen id : {codegen}]\nCondition : (a#1L > 5)\n\n"
+            f"({node}) ShuffleQueryStage\nOutput [1]: [a#1L]\nArguments: {stage}\n\n"
+            f"({node + 1}) CollectLimit\nArguments: 10\n\n"
+            f"({node + 2}) ReusedExchange [Reuses operator id: {scan}]\n"
+        )
+
+    one = snap.normalise(plan(12, 3, 4, 7))
+    assert one == snap.normalise(plan(15, 2, 9, 11))
+    assert "Arguments: 10" in one and "(a#N > 5)" in one
+    assert "+- ShuffleQueryStage (N), Statistics" in one
+    assert "+- Scan parquet  (N)" in one
+    assert not re.search(r"\(\d+\) |codegen id : \d|operator id: \d|Arguments: [0-9]\b", one)

@@ -51,9 +51,25 @@ _RULES = [
 ]
 
 
+# AQE numbers plan nodes, codegen stages and query stages in the order
+# stages complete, so these differ between two runs of one commit; the
+# tree and each node's details stay in place, so masking them keeps two
+# plans comparable line by line
+_AQE_RULES = [
+    # node ordinals: "(12) Project" headers, "+- Project (12)" tree lines
+    (re.compile(r"^\(\d+\) ", re.M), "(N) "),
+    (re.compile(r"(?<=\w)( +)\(\d+\)"), r"\1(N)"),
+    (re.compile(r"(Reuses operator id|Hosting operator id)([:=] )\d+"), r"\1\2N"),
+    (re.compile(r"\[codegen id : \d+\]"), "[codegen id : N]"),
+    # a query stage's only argument is its stage id
+    (re.compile(r"^(\(N\) \w*QueryStage\n(?:(?!\(N\) ).*\n)*?Arguments: )\d+$", re.M), r"\1N"),
+]
+
+
 def normalise(text: str) -> str:
-    """Replace run-dependent ids, labels, names and paths with fixed tokens."""
-    for pat, repl in _RULES:
+    """Replace run-dependent ids, labels, names, paths and AQE numbering
+    with fixed tokens."""
+    for pat, repl in _RULES + _AQE_RULES:
         text = pat.sub(repl, text)
     return text
 
