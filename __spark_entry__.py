@@ -86,10 +86,6 @@ _CHANGED_IN_ROUND = {
     # geometry via scalar subqueries.
     "embed_ivf_topk": 10,
     "embed_abtt_ivf_topk": 10,
-    # r10 (supersedes the r9 window+canonical-pair entry): star-CC's
-    # two-branch unions rewritten as single-reference explodes (r9
-    # task 5) — identical row multisets per round, re-attested.
-    "dedup_clusters_star": 10,
     # r11: IVFPQ residual-PQ config raised 4×16 → 8×16 codes (r10 VERDICT
     # task 6: with the size-derived coarse geometry the PQ ceiling binds;
     # 8 subquantizers lift recall@5 past the rerank window at ~2 bytes/vec
@@ -129,6 +125,12 @@ _CHANGED_IN_ROUND = {
     "dedup_incremental": 17,
     "streaming_dedup_minhash": 17,
     "streaming_dedup_minhash_sig": 17,
+    # r17: jaccard_pairs and containment_pairs run one inverted-index
+    # kernel, and every tier keeps a pair on its unrounded score
+    # (supersedes the r10 star-CC entry).
+    "dedup_ngram_jaccard": 17,
+    "dedup_containment": 17,
+    "dedup_clusters_star": 17,
 }
 # One entry per query name, enforced: a duplicate key in this literal is
 # silently last-wins in Python, and a LOWER-round duplicate added later

@@ -1,26 +1,25 @@
 """Deduplication operators for large-scale text corpora.
 
-Capability absent in the reference (its only dedup-adjacent tool is keyed
-state, reference src/lib.rs:323-361); required by the LLM-pipeline extension
-surface (SURVEY §2.7).  All operators are DataFrame compositions, so
-Catalyst handles partial aggregation and every wide step shuffles on a
-well-distributed key; the one Python stage is the MinHash signature, an
-Arrow-batched numpy pass per document (:func:`minhash_udf`).
+All operators are DataFrame compositions, so Catalyst handles partial
+aggregation and every wide step shuffles on a well-distributed key; the one
+Python stage is the MinHash signature, an Arrow-batched numpy pass per
+document (:func:`minhash_udf`).
 
-Scale design (100 TB):
-- ``shingles`` explodes ~L tokens/doc into ≤L rows; the dominant cost is the
-  shuffle on ``shingle`` for the inverted index.  Shingle keys are
-  high-cardinality (vocabulary^n) → good hash distribution.
-- ``jaccard_pairs`` (exact) is quadratic in per-shingle document frequency;
-  ``max_doc_freq`` caps hot shingles (standard posting-list pruning) — at
-  100 TB always set it; the MinHash-LSH path below is the intended scale
-  route, with exact Jaccard verification only on candidate pairs.
-- ``minhash_lsh_pairs``: 1 row/doc carrying the shingle set and the
-  ``num_perm``-long signature; banding explodes to B rows/doc; the
-  band-bucket self-join only pairs docs sharing a band — O(candidates),
-  not O(n²).
-- ``simhash_pairs``: 1 row/doc 64-bit fingerprints; pigeonhole chunk join
-  bounds candidates for hamming ≤ k.
+- ``shingles`` explodes the distinct word n-grams of each document; the
+  dominant cost is the shuffle on ``shingle`` for the inverted index.
+- ``jaccard_pairs`` and ``containment_pairs`` are one inverted-index
+  kernel (:func:`_shared_shingle_pairs`) with two scores.  Its self-join
+  costs Σ df² over shingles, so ``max_doc_freq`` caps the hot shingles at
+  corpus scale.
+- ``minhash_lsh_pairs`` and ``minhash_lsh_join``: one row per document
+  carrying the shingle set and the signature; the band-bucket join pairs
+  only documents sharing a band, O(candidates) rather than O(n²).
+- ``simhash_pairs``: one 60-bit fingerprint row per document; a
+  pigeonhole chunk join bounds candidates for hamming ≤ k.
+
+One threshold rule holds for every shingle-set score: a pair is kept when
+its unrounded score is at least the threshold, and the score is then
+reported rounded to 4 places, as in the DuckDB oracles and the stream.
 """
 
 from __future__ import annotations
@@ -102,6 +101,18 @@ def _gram_set(n: int):
     )
 
 
+def _jaccard(i, n_a, n_b):
+    """Broder's resemblance of two sets of sizes ``n_a``, ``n_b`` that
+    share ``i`` elements."""
+    return i / (n_a + n_b - i)
+
+
+def _containment(i, n_a, n_b):
+    """Max-containment of two sets of sizes ``n_a``, ``n_b`` that share
+    ``i`` elements."""
+    return i / F.least(n_a, n_b)
+
+
 def jaccard_pairs(
     df: DataFrame,
     threshold: float,
@@ -110,184 +121,14 @@ def jaccard_pairs(
     n: int = 3,
     max_doc_freq: Optional[int] = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-duplicate pairs with ``jaccard >=
-    threshold``: ``(doc_id_1, doc_id_2, jaccard)``, ``doc_id_1 <
-    doc_id_2``, jaccard rounded to 4 places.
-
-    Inverted-index self-join: |A∩B| via grouping on shared shingles, then
-    ``J = i / (|A| + |B| - i)``.  ``max_doc_freq`` caps the document
-    frequency of shingles used to GENERATE candidates (the self-join costs
-    Σ df² over shingles); candidates are then verified on their full
-    shingle sets, so every emitted value is exact.  A true pair is missed
-    only if every shingle it shares is above the cap.
-    """
-    # the shingle set feeds three consumers (sizes, both join sides) —
-    # persisted so the explode+distinct runs once; every persist here is
-    # lease-scoped at creation, released when the last referencing frame
-    # drops (exception paths included)
-    from pyspark import StorageLevel
-
-    from tamar_spark.operators.cache import leased_persist, scope_caches
-
-    sh = leased_persist(
-        widen_shingles(shingles(df, text_col, id_col, n), id_col),
-        StorageLevel.MEMORY_AND_DISK,
-    )
-    if max_doc_freq is not None:
-        cool = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_doc_freq)
-            .select("shingle")
-        )
-        pruned = sh.join(cool, "shingle")
-        pa = pruned.select(F.col(id_col).alias("doc_id_1"), "shingle")
-        pb = pruned.select(F.col(id_col).alias("doc_id_2"), "shingle")
-        # Upper-bound prefilter before exact verification: with i_p shared
-        # COOL shingles counted and h_x hot (pruned) shingles per doc, the
-        # true intersection is ≤ i_p + min(h_a, h_b) and the true union is
-        # ≥ n_a + n_b − i_p − min(h_a, h_b), so
-        #   J ≤ (i_p + min(h)) / (n_a + n_b − i_p − min(h))
-        # Pairs whose bound misses the threshold provably can't pass — most
-        # incidental 1-2-shingle collisions die here, so the exact
-        # array_intersect verify only runs on near-threshold survivors
-        # (measured 8.0 s → ~4 s at sf0.1 with identical output).  Per-doc
-        # stats joins are left to AQE: one row per doc, so it broadcasts at
-        # bench scale but must shuffle-join at corpus scale.  Persisted:
-        # the one-row-per-doc frame feeds both join sides (sa/sb) — without
-        # the cache the full-shingle + pruned-shingle groupBy subtree
-        # executes twice.
-        stats = (
-            sh.groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n_sh"))
-            .join(
-                pruned.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_cool")),
-                id_col,
-                "left",
-            )
-            .select(
-                F.col(id_col),
-                F.col("n_sh"),
-                (F.col("n_sh") - F.coalesce(F.col("n_cool"), F.lit(0))).alias("h"),
-            )
-        )
-        stats = leased_persist(stats, StorageLevel.MEMORY_AND_DISK)
-        sa = stats.select(
-            F.col(id_col).alias("doc_id_1"),
-            F.col("n_sh").alias("n_a"),
-            F.col("h").alias("h_a"),
-        )
-        sb = stats.select(
-            F.col(id_col).alias("doc_id_2"),
-            F.col("n_sh").alias("n_b"),
-            F.col("h").alias("h_b"),
-        )
-        i_p = (
-            pa.join(pb, "shingle")
-            .filter(F.col("doc_id_1") < F.col("doc_id_2"))
-            .groupBy("doc_id_1", "doc_id_2")
-            .agg(F.count(F.lit(1)).alias("i_p"))
-        )
-        slack = F.least(F.col("h_a"), F.col("h_b"))
-        j_ub = (F.col("i_p") + slack) / (
-            F.col("n_b") + F.col("n_a") - F.col("i_p") - slack
-        )
-        # persisted: the surviving candidate set feeds the direct/verify
-        # split below (and the verify branch reads it three times) —
-        # without the cache the pruned self-join subtree re-executes
-        scored = leased_persist(
-            i_p.join(sa, "doc_id_1").join(sb, "doc_id_2").filter(j_ub >= threshold),
-            StorageLevel.MEMORY_AND_DISK,
-        )
-        # Exact direct-emit tier: when min(h_a, h_b) == 0, one doc has no
-        # hot (pruned) shingles at all, so every SHARED shingle is cool and
-        # the pruned intersection i_p IS the full intersection — the exact
-        # Jaccard is i_p / (n_a + n_b − i_p), no set materialization or
-        # verify join needed.  In a capped corpus only boilerplate-bearing
-        # docs have hot shingles, so most candidate pairs take this tier;
-        # only hot×hot pairs pay the array_intersect verify.  Provably
-        # lossless: the emitted value is exact, and pairs in the verify
-        # tier are handled exactly as before.
-        j_exact = F.round(
-            F.col("i_p") / (F.col("n_a") + F.col("n_b") - F.col("i_p")), 4
-        )
-        direct = (
-            scored.filter(slack == 0)
-            .withColumn("jaccard", j_exact)
-            .filter(F.col("jaccard") >= threshold)
-            .select("doc_id_1", "doc_id_2", "jaccard")
-        )
-        to_verify = scored.filter(slack > 0).select("doc_id_1", "doc_id_2")
-        out = _verify_pairs(sh, to_verify, id_col, threshold).unionByName(
-            direct
-        )
-        return scope_caches(out, sh, stats, scored)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("doc_id_1"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_id_2"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_id_1") < F.col("doc_id_2"))
-        .groupBy("doc_id_1", "doc_id_2")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_id_1"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_id_2"), F.col("n_sh").alias("n_b"))
-    out = (
-        inter.join(sa, "doc_id_1")
-        .join(sb, "doc_id_2")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 4),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id_1", "doc_id_2", "jaccard")
-    )
-    return scope_caches(out, sh)
-
-
-def _verify_pairs(
-    sh: DataFrame, candidates: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
-    """Exact-Jaccard verification bounded by candidate PAIRS: each
-    candidate doc's shingle rows are collected into one set row, then
-    :func:`_verify_sets`.  Cost is O(|candidates| · avg shingle-set
-    size), independent of any shingle's corpus-wide document frequency.
-    """
-    cand_docs = (
-        candidates.select(F.col("doc_id_1").alias(id_col))
-        .union(candidates.select(F.col("doc_id_2").alias(id_col)))
-        .distinct()
-    )
-    doc_sets = (
-        sh.join(cand_docs, id_col, "left_semi")
-        .groupBy(id_col)
-        .agg(F.collect_list("shingle").alias("sh_set"))
-    )
-    return _verify_sets(doc_sets, candidates, id_col, threshold)
-
-
-def _verify_sets(
-    doc_sets: DataFrame, candidates: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
-    """``(doc_id_1, doc_id_2, jaccard)`` for the ``candidates`` pairs whose
-    exact Jaccard over the distinct shingle sets ``(id_col, sh_set)`` is
-    at least ``threshold``, rounded to 4 places.  AQE broadcasts
-    ``doc_sets`` when it is small and shuffle-joins otherwise."""
-    a = doc_sets.select(
-        F.col(id_col).alias("doc_id_1"), F.col("sh_set").alias("set_a")
-    )
-    b = doc_sets.select(
-        F.col(id_col).alias("doc_id_2"), F.col("sh_set").alias("set_b")
-    )
-    inter = F.size(F.array_intersect(F.col("set_a"), F.col("set_b")))
-    union_sz = F.size(F.col("set_a")) + F.size(F.col("set_b")) - inter
-    return (
-        candidates.join(a, "doc_id_1")
-        .join(b, "doc_id_2")
-        .withColumn("jaccard", F.round(inter / union_sz, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id_1", "doc_id_2", "jaccard")
+    """Exact word n-gram Jaccard near-duplicate pairs ``(doc_id_1,
+    doc_id_2, jaccard)``, ``doc_id_1 < doc_id_2``: pairs whose Jaccard
+    ``|A∩B| / |A∪B|`` is at least ``threshold``, reported rounded to 4
+    places.  ``max_doc_freq`` caps the document frequency of the shingles
+    that generate candidates; a pair is missed only if every shingle it
+    shares is above the cap, and every reported value is exact."""
+    return _shared_shingle_pairs(
+        df, threshold, "jaccard", _jaccard, text_col, id_col, n, max_doc_freq
     )
 
 
@@ -299,66 +140,62 @@ def containment_pairs(
     n: int = 3,
     max_doc_freq: Optional[int] = None,
 ) -> DataFrame:
-    """Max-containment near-dup pairs: ``C = |A∩B| / min(|A|, |B|)``.
+    """Max-containment near-duplicate pairs ``(doc_id_1, doc_id_2,
+    containment)``: as :func:`jaccard_pairs`, scored by ``|A∩B| /
+    min(|A|, |B|)``, so a document embedded in a much longer one still
+    pairs with it.  A contained document shares all its shingles with its
+    container, so set ``max_doc_freq`` at least the largest duplicate
+    group."""
+    return _shared_shingle_pairs(
+        df, threshold, "containment", _containment, text_col, id_col, n, max_doc_freq
+    )
 
-    Detects near-SUBSET duplication that symmetric Jaccard misses: a doc
-    fully embedded in one 10× longer has J ≈ 0.1 but C = 1.0 — the
-    common quote/aggregator/boilerplate-wrapper case in web corpora
-    (Broder's containment measure).
 
-    Mirrors :func:`jaccard_pairs`' capped three-tier structure (the
-    measured-fast shape — the first cut used a DISTINCT candidate
-    self-join + unconditional array verify and benched 8.1 s at sf0.1 vs
-    ~1 s for the tiered path): count shared COOL shingles ``i_p`` per
-    pair, discard pairs whose provable upper bound
-    ``(i_p + min(h_a, h_b)) / min(n_a, n_b)`` misses the threshold, emit
-    ``i_p / min(n_a, n_b)`` directly when one doc has no hot shingles
-    (every shared shingle is then cool, so ``i_p`` IS the intersection —
-    the cool filter is per-shingle, so a shingle of an all-cool doc is
-    cool in BOTH postings), and array-verify only hot×hot survivors.
-    ``max_doc_freq`` recall rule matches :func:`jaccard_pairs`: a true
-    pair is missed only if EVERY shared shingle exceeds the cap, and a
-    contained doc shares all its shingles with its container, so set the
-    cap ≥ the largest duplicate-group size.
-    """
+def _shared_shingle_pairs(
+    df: DataFrame,
+    threshold: float,
+    out_col: str,
+    score,
+    text_col: str,
+    id_col: str,
+    n: int,
+    max_doc_freq: Optional[int],
+) -> DataFrame:
+    """Inverted-index pair kernel: ``(doc_id_1, doc_id_2, out_col)`` for
+    the pairs whose ``score(|A∩B|, |A|, |B|)`` is at least ``threshold``,
+    rounded to 4 places.  ``score`` must be nondecreasing in the
+    intersection size.
+
+    Shingles above ``max_doc_freq`` documents are hot; a pair is a
+    candidate when it shares a cool one.  With ``i_p`` shared cool
+    shingles and ``h`` hot shingles per document, the intersection is at
+    most ``i_p + min(h_a, h_b)``, so candidates whose score at that bound
+    misses the threshold are dropped.  When ``min(h_a, h_b) == 0`` every
+    shared shingle is cool, ``i_p`` is the intersection and the bound is
+    the exact score; the remaining hot×hot pairs are verified on their
+    full shingle sets.  Uncapped, no shingle is hot and every pair takes
+    the exact tier."""
     from pyspark import StorageLevel
 
     from tamar_spark.operators.cache import leased_persist, scope_caches
 
+    # the shingle frame feeds the cap, the stats, both join sides and the
+    # verify tier: persisted so the explode runs once
     sh = leased_persist(
         widen_shingles(shingles(df, text_col, id_col, n), id_col),
         StorageLevel.MEMORY_AND_DISK,
     )
-    if max_doc_freq is None:
-        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-        inter = (
-            sh.select(F.col(id_col).alias("doc_id_1"), "shingle")
-            .join(sh.select(F.col(id_col).alias("doc_id_2"), "shingle"), "shingle")
-            .filter(F.col("doc_id_1") < F.col("doc_id_2"))
-            .groupBy("doc_id_1", "doc_id_2")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
+    pruned = sh
+    if max_doc_freq is not None:
+        cool = (
+            sh.groupBy("shingle")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") <= max_doc_freq)
+            .select("shingle")
         )
-        sa = sizes.select(F.col(id_col).alias("doc_id_1"), F.col("n_sh").alias("n_a"))
-        sb = sizes.select(F.col(id_col).alias("doc_id_2"), F.col("n_sh").alias("n_b"))
-        out = (
-            inter.join(sa, "doc_id_1")
-            .join(sb, "doc_id_2")
-            .withColumn(
-                "containment",
-                F.round(F.col("n_inter") / F.least("n_a", "n_b"), 4),
-            )
-            .filter(F.col("containment") >= threshold)
-            .select("doc_id_1", "doc_id_2", "containment")
-        )
-        return scope_caches(out, sh)
-    cool = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= max_doc_freq)
-        .select("shingle")
-    )
-    pruned = sh.join(cool, "shingle")
-    stats = (
+        pruned = sh.join(cool, "shingle")
+    # one row per document, read by both join sides
+    stats = leased_persist(
         sh.groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_sh"))
         .join(
@@ -370,9 +207,9 @@ def containment_pairs(
             F.col(id_col),
             F.col("n_sh"),
             (F.col("n_sh") - F.coalesce(F.col("n_cool"), F.lit(0))).alias("h"),
-        )
+        ),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    stats = leased_persist(stats, StorageLevel.MEMORY_AND_DISK)
     i_p = (
         pruned.select(F.col(id_col).alias("doc_id_1"), "shingle")
         .join(pruned.select(F.col(id_col).alias("doc_id_2"), "shingle"), "shingle")
@@ -391,23 +228,40 @@ def containment_pairs(
         F.col("h").alias("h_b"),
     )
     slack = F.least(F.col("h_a"), F.col("h_b"))
-    denom = F.least(F.col("n_a"), F.col("n_b"))
+    n_a, n_b = F.col("n_a"), F.col("n_b")
+    # persisted: both tiers read the surviving candidates
     scored = leased_persist(
         i_p.join(sa, "doc_id_1")
         .join(sb, "doc_id_2")
-        .filter((F.col("i_p") + slack) / denom >= threshold),
+        .filter(score(F.col("i_p") + slack, n_a, n_b) >= threshold),
         StorageLevel.MEMORY_AND_DISK,
     )
-    direct = (
-        scored.filter(slack == 0)
-        .withColumn("containment", F.round(F.col("i_p") / denom, 4))
-        .filter(F.col("containment") >= threshold)
-        .select("doc_id_1", "doc_id_2", "containment")
+    # with no slack the bound filter above already compared the exact score
+    direct = scored.filter(slack == 0).select(
+        "doc_id_1", "doc_id_2", F.round(score(F.col("i_p"), n_a, n_b), 4).alias(out_col)
     )
     to_verify = scored.filter(slack > 0).select("doc_id_1", "doc_id_2")
+    out = _verify_pairs(
+        sh, to_verify, id_col, threshold, out_col, score
+    ).unionByName(direct)
+    return scope_caches(out, sh, stats, scored)
+
+
+def _verify_pairs(
+    sh: DataFrame,
+    candidates: DataFrame,
+    id_col: str,
+    threshold: float,
+    out_col: str,
+    score,
+) -> DataFrame:
+    """:func:`_verify_sets` over the shingle rows ``(id_col, shingle)`` of
+    the candidate documents, each collected into one set row.  Cost is
+    O(|candidates| · avg shingle-set size), independent of any shingle's
+    document frequency."""
     cand_docs = (
-        to_verify.select(F.col("doc_id_1").alias(id_col))
-        .union(to_verify.select(F.col("doc_id_2").alias(id_col)))
+        candidates.select(F.col("doc_id_1").alias(id_col))
+        .union(candidates.select(F.col("doc_id_2").alias(id_col)))
         .distinct()
     )
     doc_sets = (
@@ -415,18 +269,38 @@ def containment_pairs(
         .groupBy(id_col)
         .agg(F.collect_list("shingle").alias("sh_set"))
     )
-    a = doc_sets.select(F.col(id_col).alias("doc_id_1"), F.col("sh_set").alias("set_a"))
-    b = doc_sets.select(F.col(id_col).alias("doc_id_2"), F.col("sh_set").alias("set_b"))
-    v_inter = F.size(F.array_intersect(F.col("set_a"), F.col("set_b")))
-    v_denom = F.least(F.size("set_a"), F.size("set_b"))
-    verified = (
-        to_verify.join(a, "doc_id_1")
-        .join(b, "doc_id_2")
-        .withColumn("containment", F.round(v_inter / v_denom, 4))
-        .filter(F.col("containment") >= threshold)
-        .select("doc_id_1", "doc_id_2", "containment")
+    return _verify_sets(doc_sets, candidates, id_col, threshold, out_col, score)
+
+
+def _verify_sets(
+    doc_sets: DataFrame,
+    candidates: DataFrame,
+    id_col: str,
+    threshold: float,
+    out_col: str,
+    score,
+) -> DataFrame:
+    """``(doc_id_1, doc_id_2, out_col)`` for the ``candidates`` pairs whose
+    ``score`` over the distinct shingle sets ``(id_col, sh_set)`` is at
+    least ``threshold``, rounded to 4 places.  AQE broadcasts ``doc_sets``
+    when it is small and shuffle-joins otherwise."""
+    a = doc_sets.select(
+        F.col(id_col).alias("doc_id_1"), F.col("sh_set").alias("set_a")
     )
-    return scope_caches(verified.unionByName(direct), sh, stats, scored)
+    b = doc_sets.select(
+        F.col(id_col).alias("doc_id_2"), F.col("sh_set").alias("set_b")
+    )
+    s = score(
+        F.size(F.array_intersect(F.col("set_a"), F.col("set_b"))),
+        F.size(F.col("set_a")),
+        F.size(F.col("set_b")),
+    )
+    return (
+        candidates.join(a, "doc_id_1")
+        .join(b, "doc_id_2")
+        .filter(s >= threshold)
+        .select("doc_id_1", "doc_id_2", F.round(s, 4).alias(out_col))
+    )
 
 
 def minhash_coeffs(num_perm: int):
@@ -525,8 +399,9 @@ def minhash_lsh_pairs(
 
     ``bands`` bands of ``num_perm // bands`` rows; docs sharing any band
     bucket are candidates (P[detect] = 1-(1-J^r)^b).  With ``verify``
-    candidates are kept at exact string Jaccard ≥ ``threshold`` (4dp);
-    without it the candidate pairs alone are returned.  Documents under
+    candidates are kept when their exact Jaccard is at least
+    ``threshold`` and reported rounded to 4 places; without it the
+    candidate pairs alone are returned.  Documents under
     ``n`` tokens have no shingles and never pair.
     """
     from pyspark import StorageLevel
@@ -554,7 +429,7 @@ def minhash_lsh_pairs(
         .distinct()
     )
     if verify:
-        cand = _verify_sets(docs, cand, id_col, threshold)
+        cand = _verify_sets(docs, cand, id_col, threshold, "jaccard", _jaccard)
     return scope_caches(cand, docs)
 
 
@@ -605,7 +480,7 @@ def minhash_lsh_join(
     )
     cand = a.join(b, ["band", "bucket"]).select("doc_id_1", "doc_id_2").distinct()
     if verify:
-        cand = _verify_sets(docs, cand, id_col, threshold)
+        cand = _verify_sets(docs, cand, id_col, threshold, "jaccard", _jaccard)
     return scope_caches(cand, docs)
 
 

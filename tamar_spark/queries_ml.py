@@ -30,6 +30,7 @@ from pyspark.sql import Window, functions as F
 from tamar_spark.operators import clustering as C
 from tamar_spark.operators import dedup as D
 from tamar_spark.queries import query, _events_path, _events_stream, _run_to_memory
+from tamar_spark.queries import _SHINGLE_CTE
 from tamar_spark.sources import load_table, pin_session_width, spread
 from tamar_spark.functions import text as T
 
@@ -105,13 +106,7 @@ def tfidf_top_terms(spark, sf_dir):
 
 @query(
     "dedup_containment",
-    """
-WITH words AS (
-  SELECT doc_id, string_split_regex(text, '\\s+') AS w FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-  FROM words, LATERAL (SELECT unnest(generate_series(1, len(w)-2)) AS i) t
-), sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
+    _SHINGLE_CTE + """, sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
 inter AS (
   SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2, count(*) AS n_inter
   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id

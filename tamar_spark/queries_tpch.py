@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from tamar_spark.queries import query, dsum_r, round_ieee, _DEC, epoch_us, floor_div
-from tamar_spark.queries import _events_path, _events_stream, _run_to_memory
+from tamar_spark.queries import _SHINGLE_CTE, _events_path, _events_stream, _run_to_memory
 from tamar_spark.sources import load_table
 from tamar_spark.operators import dedup as D
 from tamar_spark.operators.dedup_embedding import blocked_cosine_pairs, lsh_cosine_pairs
@@ -2654,13 +2654,7 @@ def stratified_cap(spark, sf_dir):
     )
 
 
-_DEDUP_CLUSTERS_SQL = """
-WITH words AS (
-  SELECT doc_id, string_split_regex(text, '\\s+') AS w FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-  FROM words, LATERAL (SELECT unnest(generate_series(1, len(w)-2)) AS i) t
-), sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
+_DEDUP_CLUSTERS_SQL = _SHINGLE_CTE + """, sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
 inter AS (
   SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2, count(*) AS n_inter
   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id

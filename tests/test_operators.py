@@ -171,6 +171,49 @@ def test_jaccard_cap_keeps_exact_values(spark):
     assert capped == uncapped  # cap ≥ dup-group size ⇒ identical output
 
 
+# Docs 1 and 2 score exactly 2/3: below 0.66667, though 0.6667 rounded.
+# Each pair stands alone and with two padding docs that make three of its
+# words hot at cap 2, which sends the pair to the hot×hot verify tier.
+_JACCARD_2_3 = (
+    ["x y", "x y z"],
+    ["s1 s2 s3 s4 u", "s1 s2 s3 s4 v", "s1 u v a3 b3 c3", "s1 u v a4 b4 c4"],
+)
+_CONTAINMENT_2_3 = (
+    ["a b c", "a b d e"],
+    ["s1 s2 s3 s4 u w", "s1 s2 s3 s4 v y z", "s1 u v a3 b3 c3", "s1 u v a4 b4 c4"],
+)
+# docs 1 and 2 score exactly 1.0 under both measures; "s1" is hot at cap 2
+_EXACT_1 = ["s1 s2", "s1 s2", "s1 a3", "s1 a4"]
+
+
+@pytest.mark.parametrize(
+    "op", ["jaccard_pairs", "containment_pairs", "minhash_lsh_pairs", "minhash_lsh_join"]
+)
+def test_pair_threshold_compares_unrounded_score(spark, op):
+    """A pair is kept when its unrounded score reaches the threshold, in
+    every tier and under every cap: 2/3 misses 0.66667 and 1.0 meets 1.0.
+    The join pairs odd ids (new) against even ids (old)."""
+
+    def pairs(texts, threshold, cap):
+        df = spark.createDataFrame(list(enumerate(texts, 1)), "doc_id long, text string")
+        if op == "minhash_lsh_join":
+            odd = F.col("doc_id") % 2 == 1
+            out = D.minhash_lsh_join(
+                df.filter(odd), df.filter(~odd), threshold, n=1, num_perm=64, bands=64
+            )
+        elif op == "minhash_lsh_pairs":
+            out = D.minhash_lsh_pairs(df, threshold, n=1, num_perm=64, bands=64)
+        else:
+            out = getattr(D, op)(df, threshold, n=1, max_doc_freq=cap)
+        return sorted(map(tuple, out.collect()))
+
+    boundary = _CONTAINMENT_2_3 if op == "containment_pairs" else _JACCARD_2_3
+    for cap in (None,) if op.startswith("minhash") else (None, 2, 5):
+        for texts in boundary:
+            assert pairs(texts, 0.66667, cap) == [], (texts, cap)
+        assert pairs(_EXACT_1, 1.0, cap) == [(1, 2, 1.0)], cap
+
+
 def test_minhash_finds_exact_dupes(spark):
     df = spark.createDataFrame(
         [Row(doc_id=1, text="x y z w v u t s"), Row(doc_id=2, text="x y z w v u t s"),
@@ -2091,7 +2134,8 @@ def test_minhash_skips_docs_without_shingles(spark):
     so they must not reach the band join: a signature over an empty set
     would put every such doc in one shared bucket per band.  Neither the
     self-join nor the cross-corpus join may pair them, also when the
-    whole corpus is short."""
+    whole corpus is short; nor may the inverted-index pairs, capped or
+    not."""
     long_text = "the quick brown fox jumps over the lazy dog"
     short = [(3, None), (4, ""), (5, "   "), (6, "one"), (7, "two words")]
     docs = spark.createDataFrame(
@@ -2115,6 +2159,11 @@ def test_minhash_skips_docs_without_shingles(spark):
     old = docs.filter(F.col("doc_id") == 2).unionByName(shorts.filter(F.col("doc_id") > 8))
     got = D.minhash_lsh_join(new, old, 0.5, num_perm=64, bands=16).collect()
     assert [tuple(r) for r in got] == [(1, 2, 1.0)]
+    for exact in (D.jaccard_pairs, D.containment_pairs):
+        for cap in (None, 5):
+            got = exact(docs, 0.5, max_doc_freq=cap).collect()
+            assert [tuple(r) for r in got] == [(1, 2, 1.0)]
+            assert exact(shorts, 0.5, max_doc_freq=cap).count() == 0
 
 
 def test_bigram_kernel_tolerates_degenerate_docs(spark):

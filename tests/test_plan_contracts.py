@@ -52,6 +52,9 @@ CONTRACTS = [
     ("embed_kmeans", 4, 1),  # 2 iterations: assign is broadcast-k, no shuffle
     ("pagerank_nations", 8, 4),  # 3 iterations, edges built once, dims bcast
     ("dedup_containment", 8, 5),  # tiered: prefilter + direct-emit + verify
+    # the same kernel as dedup_containment; measured on its plan, whose
+    # text repeats each persisted subtree once per scan of it
+    ("dedup_ngram_jaccard", 4, 56),
     ("heavy_hitters_cms", 4, 2),  # 192-cell sketch agg + broadcast probe
     ("ewma_user_value", 1, 0),  # one user_id shuffle, in-frame lags
     # second-wave round-5 family: all pure-JVM expression plans
