@@ -131,6 +131,16 @@ _CHANGED_IN_ROUND = {
     "dedup_ngram_jaccard": 17,
     "dedup_containment": 17,
     "dedup_clusters_star": 17,
+    # r17: every Python stateful stream runs on one keyed-state runner;
+    # the CEP timers now fire on the tick that seals a match, and keyed
+    # process_state calls its function once per key and micro-batch.
+    "streaming_ewma_anomaly": 17,
+    "streaming_attribution": 17,
+    "streaming_global_state": 17,
+    "streaming_session_process": 17,
+    "streaming_cep_funnel": 17,
+    "streaming_cep_funnel4": 17,
+    "streaming_cep_runs": 17,
 }
 # One entry per query name, enforced: a duplicate key in this literal is
 # silently last-wins in Python, and a LOWER-round duplicate added later

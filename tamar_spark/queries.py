@@ -978,7 +978,7 @@ inter AS (
   SELECT doc_id_1, doc_id_2
   FROM inter JOIN sizes sa ON sa.doc_id = inter.doc_id_1
              JOIN sizes sb ON sb.doc_id = inter.doc_id_2
-  WHERE round(n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter), 4) >= 0.5
+  WHERE n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter) >= 0.5
 ), sym AS (
   SELECT doc_id_1 AS a, doc_id_2 AS b FROM edges
   UNION SELECT doc_id_2, doc_id_1 FROM edges
@@ -2394,36 +2394,14 @@ WHERE n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter) >= 0.5
 """,
 )
 def streaming_dedup_minhash(spark, sf_dir):
-    """Streaming NEAR-dup dedup (r13 — the one dedup-family member that
-    had no live variant): the MinHash/LSH signature store as streaming
-    state on ``applyInPandasWithState``, keyed by LSH band bucket
-    (streaming/dedup.py; the reference's keyed process_state substrate,
-    src/lib.rs:323-361).  Documents stream in with a synthetic event
-    time (epoch 2024-01-01 + doc_id seconds — the fixture has no
-    ingest timestamp), signatures and band keys are computed per-row in
-    pure codegen (one aggregate fold, no groupBy — streaming-safe), and
-    each band-bucket group buffers in-window documents, emits exact-
-    Jaccard-verified pairs once the watermark seals the later document,
-    and deduplicates across bands via the canonical (first-colliding)
-    band — exactly-once with a single stateful operator.
-
-    The eviction contract makes state WINDOW-bounded, not corpus-
-    bounded: documents pair only within 3600 s of each other, so each
-    bucket retains ≈ window × per-bucket rate.  At sf0.1 the window
-    genuinely excludes 18 of 256 true pairs (ids > 3600 apart) and the
-    10-minute-equivalent finality trims the tail — both conditions
-    reproduced in the oracle as pure doc_id arithmetic (ts is an
-    id-affine function), on top of the batch family's exact-Jaccard
-    all-pairs SQL at threshold 0.5.  The 64-perm/16-band family is the
-    measured-recall-1.0 operating point of dedup_minhash_lsh on this
-    corpus, and verification is exact, so LSH recall is the only
-    approximation and it is measured, not hoped.
-
-    Scale: candidate generation is an equi-shuffle on (band, bucket);
-    state per bucket is window-bounded; quiet buckets flush via
-    event-time timers and self-clean at window expiry (the
-    sessions/CEP mechanism).  Stream-batch signature parity is pinned
-    by test (same hash family via minhash_coeffs)."""
+    """Streaming near-dup dedup: the MinHash/LSH signature store as
+    keyed streaming state (``streaming.dedup``), keyed by LSH band bucket.
+    Documents stream in with a synthetic event time (2024-01-01 +
+    ``doc_id`` seconds; the fixture has no ingest time) and pair only
+    within 3600 s of each other; a pair emits once the watermark seals the
+    later document, verified by exact Jaccard at 0.5.  The oracle is the
+    batch all-pairs Jaccard SQL with the same window and finality filters
+    as ``doc_id`` arithmetic."""
     from tamar_spark.streaming.dedup import (
         attach_minhash_bands,
         minhash_dedup_streaming,

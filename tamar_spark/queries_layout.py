@@ -1032,21 +1032,13 @@ ORDER BY user_id, purchase_id
 """,
 )
 def streaming_cep_funnel(spark, sf_dir):
-    """The funnel pattern LIVE: cep_funnel_sequence's strictly-consecutive
-    view→click→purchase match running as a streaming query on the keyed
-    stateful API (streaming/cep.py — the reference's keyed process_state,
-    src/lib.rs:323-361, is Flink-CEP's substrate, and this is that
-    construction on applyInPandasWithState).  A match only emits once the
-    watermark strictly passes its purchase timestamp — before that an
-    admissible late event could still break the run's consecutiveness —
-    which makes the output independent of micro-batch slicing and equal to
-    the BATCH funnel restricted to purchases sealed by the final
-    watermark.  The shared oracle is therefore cep_funnel_sequence's SQL
-    plus that finality filter (watermark = ms-floored max event time −
-    10 min, exactly Spark's arithmetic); matches still unsealed at
-    end-of-stream never emit (the reference's no-flush,
-    src/lib.rs:1316-1345).  Scale: per-key state is the unsealed horizon
-    plus two rows — the Flink-CEP buffer bound; see streaming/cep.py."""
+    """cep_funnel_sequence's strictly-consecutive view→click→purchase
+    match as a live stream (``streaming.cep.funnel_match_streaming``).  A
+    match emits once the watermark is strictly past its purchase, so the
+    output does not depend on micro-batch slicing.  The oracle is
+    cep_funnel_sequence's SQL plus that finality filter (watermark =
+    ms-floored max event time − 10 min, Spark's arithmetic); matches still
+    unsealed at end of stream never emit (no-flush, src/lib.rs:1316-1345)."""
     from tamar_spark.stream import DataStream
     from tamar_spark.streaming.cep import funnel_match_streaming
 

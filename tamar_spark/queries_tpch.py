@@ -1507,16 +1507,13 @@ FROM (
 """,
 )
 def streaming_session_process(spark, sf_dir):
-    """The reference's hardest operator as a live streaming query
-    (``WindowedDataStream::process_state``, src/lib.rs:771-834): every FIRED
-    session's complete event batch is handed to arbitrary Python with per-key
-    state; sessions still open at end-of-stream never emit (no-flush,
-    src/lib.rs:1316-1345).  Implementation:
-    ``streaming.sessions.session_process_streaming`` (gap-merge store +
-    watermark firing + event-time timers on applyInPandasWithState).
-    Sessions close only when the watermark STRICTLY exceeds last+gap
-    (boundary events at exactly last+gap are on-time and must merge), so
-    the oracle's final-watermark filter is strict too."""
+    """The reference's windowed ``process_state`` as a live stream
+    (``WindowedDataStream::process_state``, src/lib.rs:771-834): each fired
+    session's events go to Python with per-key state
+    (``streaming.sessions.session_process_streaming``).  A session closes
+    once the watermark is strictly past last + gap, so the oracle's
+    final-watermark filter is strict too; sessions still open at end of
+    stream never emit (no-flush, src/lib.rs:1316-1345)."""
     import pandas as pd
 
     from tamar_spark.stream import DataStream
@@ -2663,7 +2660,7 @@ inter AS (
   SELECT doc_id_1, doc_id_2
   FROM inter JOIN sizes sa ON sa.doc_id = inter.doc_id_1
              JOIN sizes sb ON sb.doc_id = inter.doc_id_2
-  WHERE round(n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter), 4) >= 0.5
+  WHERE n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter) >= 0.5
 ), sym AS (
   SELECT doc_id_1 AS a, doc_id_2 AS b FROM edges
   UNION SELECT doc_id_2, doc_id_1 FROM edges

@@ -1,42 +1,47 @@
-"""Streaming complex-event-processing: watermark-final pattern matching.
+"""Streaming complex-event processing with watermark-final matches.
 
-The reference is a Flink-shaped stream processor whose keyed
-``process_state`` (reference src/lib.rs:323-361) is exactly the substrate
-Flink-CEP builds on; the batch CEP family (queries_layout: lag-chain
-funnel, gaps-and-islands runs) expresses the same patterns declaratively
-but only over a finished table.  This module runs the n-step
-pattern LIVE on ``applyInPandasWithState``, with the event-time watermark
-deciding when a match is FINAL — the streaming-correctness problem batch
-CEP never faces:
+Both operators keep per key the events a future match can still use, in
+the (ts, id) total order, and emit a match only once the watermark makes
+it final:
 
-- **A match is provisional until the watermark passes its last event.**
-  "Strictly consecutive" is a property of the final event order; an event
-  arriving later with an earlier timestamp can break a run that looked
-  consecutive.  Spark admits rows with event time ≥ watermark, so a match
-  whose last element's timestamp is strictly below the watermark can
-  never be broken — that is the emission condition, and it makes the
-  emitted set independent of micro-batch slicing.
-- **State is watermark-bounded.** Once rows are sealed (ts < watermark),
-  only the trailing ``len(pattern) - 1`` of them can ever prefix a future
-  match; everything older is dropped.  Retained bytes per key ≈ unsealed
-  horizon + 2 rows, the Flink-CEP NFA-buffer bound.
-- **Quiet keys flush via event-time timers.** Spark only invokes keys
-  present in a micro-batch; a key holding a complete-but-unsealed match
-  registers a timer just past the match's last timestamp so the
-  final no-data batch (watermark advance) fires it —
-  the same mechanism streaming/sessions.py uses for session close.
-  Matches still unsealed at end-of-stream never emit (the reference's
-  no-flush semantic, src/lib.rs:1316-1345).
+- a match is final once every row that could change it is sealed
+  (ts < watermark; Spark admits only rows with ts ≥ watermark), so the
+  emitted set does not depend on micro-batch slicing;
+- sealed rows no future match can use leave the state;
+- a key holding an unsealed match asks for a timer, so the final no-data
+  batch emits it; matches still unsealed at end of stream never emit (the
+  reference's no-flush semantic, src/lib.rs:1316-1345).
 """
 
 from __future__ import annotations
 
-import pickle
 from typing import Optional
 
+import numpy as np
 import pandas as pd
 
+from tamar_spark.streaming.stateful import _run_keyed_state
+
 __all__ = ["funnel_match_streaming", "type_runs_streaming"]
+
+
+def _sorted_events(held, rows, id_col, type_col, ts):
+    """The held ``(ids, types, ts_us)`` arrays plus the batch's ``rows``,
+    in the (ts, id) total order; None when there are none."""
+    parts = [] if held is None else [held]
+    if rows is not None:
+        parts.append(
+            (
+                rows[id_col].to_numpy(dtype="int64"),
+                rows[type_col].to_numpy(),
+                rows[ts].to_numpy().astype("datetime64[us]").astype("int64"),
+            )
+        )
+    if not parts:
+        return None
+    ids, typ, ts_us = parts[0] if len(parts) == 1 else map(np.concatenate, zip(*parts))
+    order = np.lexsort((ids, ts_us))
+    return ids[order], typ[order], ts_us[order]
 
 
 def funnel_match_streaming(
@@ -48,23 +53,15 @@ def funnel_match_streaming(
     ts_col: Optional[str] = None,
     id_names: Optional[tuple] = None,
 ):
-    """Streaming strictly-consecutive n-step pattern match per key
-    (r6 VERDICT task 3 generalized the fixed-length-3 kernel: the buffer
-    walk, watermark-finality rule, and retention bound were already
-    pattern-length-agnostic — only the match scan and output shape were
-    hardcoded).
+    """Streaming strictly-consecutive n-step pattern match per key.
 
-    Mirrors the batch kernel ``queries_layout.funnel_matches`` (same
-    pattern tuple, same ``within_us`` bound, same (ts, id) total order,
-    same output columns) so the two can share one oracle up to the
-    watermark-finality filter.  ``id_names`` names the per-step id output
-    columns (default ``step1_id..stepN_id``); the output schema is
-    ``user_id, *id_names, elapsed_sec``.  ``keyed`` must wrap a streaming
-    DataFrame with ``withWatermark`` applied and already filtered to the
-    pattern's event types.
+    The streaming twin of ``queries_layout.funnel_matches``: the same
+    pattern, ``within_us`` bound, (ts, id) order and output columns,
+    restricted to matches whose last event is sealed.  ``id_names`` names
+    the per-step id columns (default ``step1_id..stepN_id``); the output is
+    ``user_id, *id_names, elapsed_sec``.  ``keyed`` must carry a watermark
+    and hold only the pattern's event types.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from tamar_spark.stream import DataStream
 
     n = len(pattern)
@@ -78,110 +75,50 @@ def funnel_match_streaming(
     if ts is None:
         raise ValueError("funnel_match_streaming requires an event_time column")
 
-    def handle(key, pdfs, gstate):
-        # Per-key hot path in plain numpy (r15 optimization, guide §4.2):
-        # this function runs once per key per micro-batch, so at 10k keys
-        # the constant factor IS the query cost.  The previous
-        # pandas-Series form (sort_values + astype chain + n-1 .shift()
-        # comparisons) measured 1.27 ms/key; the lexsort + sliced-array
-        # scan below computes the identical match set in ~25 µs/key, and
-        # the state blob stores the three column ARRAYS (ts already as
-        # int64 µs, so the per-call datetime64 astype chain is gone)
-        # instead of a pickled DataFrame (34→11 µs to dump, 67→6 µs to
-        # load).  Same total order, same match/seal/fresh predicates,
-        # same retention arithmetic — fixture-pinned by the CEP
-        # reference-scenario tests.
-        import numpy as np
-
-        if gstate.exists:
-            blob = pickle.loads(bytes(gstate.get[0]))
-            st, prev_wm_us = blob["events"], blob["wm_us"]
-        else:
-            st, prev_wm_us = None, -1
-
-        parts = ([st] if st is not None else []) + [
-            (
-                pdf[id_col].to_numpy(dtype="int64"),
-                pdf[type_col].to_numpy(),
-                pdf[ts].to_numpy().astype("datetime64[us]").astype("int64"),
-            )
-            for pdf in pdfs
-            if len(pdf)
-        ]
-
-        wm_us = gstate.getCurrentWatermarkMs() * 1000
-        remaining, next_candidate_us = None, None
-        if parts:
-            if len(parts) == 1:
-                ids, typ, ts_us = parts[0]
-            else:
-                ids = np.concatenate([p[0] for p in parts])
-                typ = np.concatenate([p[1] for p in parts])
-                ts_us = np.concatenate([p[2] for p in parts])
-            order = np.lexsort((ids, ts_us))
-            ids, typ, ts_us = ids[order], typ[order], ts_us[order]
-            m = len(ids)
-            # consecutive n-tuple match over the total order: slice k of
-            # the window (k = 0..n-1) is typ[k : m-n+1+k]; row i (full
-            # index) is a match's LAST step iff every slice carries its
-            # pattern step and the window spans <= within_us
-            if m >= n:
-                is_match = typ[n - 1 :] == pattern[-1]
-                for j in range(1, n):
-                    is_match = is_match & (
-                        typ[n - 1 - j : m - j] == pattern[n - 1 - j]
-                    )
-                is_match = is_match & (ts_us[n - 1 :] - ts_us[: m - n + 1] <= within_us)
-                end_ts = ts_us[n - 1 :]
-                # final (sealed) now and not emitted by an earlier watermark
-                sealed = end_ts < wm_us
-                fresh_match = is_match & sealed & (end_ts >= prev_wm_us)
-                if fresh_match.any():
-                    idx = np.flatnonzero(fresh_match) + (n - 1)
-                    out = {
-                        "user_id": np.full(len(idx), key[0], dtype="int64")
-                    }
-                    for i, name in enumerate(id_names):
-                        out[name] = ids[idx - (n - 1 - i)]
-                    out["elapsed_sec"] = (
-                        ts_us[idx] - ts_us[idx - (n - 1)]
-                    ) // 1_000_000
-                    yield pd.DataFrame(out)
-                # candidate matches still awaiting their seal drive the timer
-                pending = is_match & ~sealed
-                if pending.any():
-                    next_candidate_us = int(end_ts[pending].min())
-            # retention: unsealed suffix + the trailing len(pattern)-1
-            # sealed rows (the only sealed rows a future match can use)
-            n_sealed = int((ts_us < wm_us).sum())
-            lo = max(0, n_sealed - (n - 1))
-            remaining = (ids[lo:], typ[lo:], ts_us[lo:])
-
-        gstate.update(
-            (
-                pickle.dumps(
-                    {
-                        "events": remaining
-                        if remaining is not None and len(remaining[0])
-                        else None,
-                        "wm_us": max(prev_wm_us, wm_us),
-                    }
-                ),
-            )
-        )
-        if next_candidate_us is not None:
-            # fire once the watermark strictly passes the match's last event
-            gstate.setTimeoutTimestamp(
-                max(next_candidate_us // 1000 + 1, gstate.getCurrentWatermarkMs() + 1)
-            )
+    def step(key, rows, state, wm_us):
+        held, prev_wm_us = state
+        events = _sorted_events(held, rows, id_col, type_col, ts)
+        if events is None:
+            return None, (None, max(prev_wm_us, wm_us)), None
+        ids, typ, ts_us = events
+        m = len(ids)
+        out, seal_us = None, None
+        # row i is a match's last step iff the n rows ending at i carry the
+        # pattern and span <= within_us; slice k of the window is
+        # typ[k : m-n+1+k]
+        if m >= n:
+            is_match = typ[n - 1 :] == pattern[-1]
+            for j in range(1, n):
+                is_match &= typ[n - 1 - j : m - j] == pattern[n - 1 - j]
+            is_match &= ts_us[n - 1 :] - ts_us[: m - n + 1] <= within_us
+            end_ts = ts_us[n - 1 :]
+            sealed = end_ts < wm_us
+            # sealed now, and not by a watermark that already emitted it
+            fresh = is_match & sealed & (end_ts >= prev_wm_us)
+            if fresh.any():
+                idx = np.flatnonzero(fresh) + (n - 1)
+                cols = {"user_id": np.full(len(idx), key[0], dtype="int64")}
+                for i, name in enumerate(id_names):
+                    cols[name] = ids[idx - (n - 1 - i)]
+                cols["elapsed_sec"] = (ts_us[idx] - ts_us[idx - (n - 1)]) // 1_000_000
+                out = pd.DataFrame(cols)
+            pending = is_match & ~sealed
+            if pending.any():
+                seal_us = int(end_ts[pending].min())
+        # keep the unsealed rows and the last n-1 sealed rows, the only
+        # sealed rows a future match can start with
+        lo = max(0, int((ts_us < wm_us).sum()) - (n - 1))
+        held = (ids[lo:], typ[lo:], ts_us[lo:]) if lo < m else None
+        return out, (held, max(prev_wm_us, wm_us)), seal_us
 
     id_fields = ", ".join(f"{name} long" for name in id_names)
-    out = keyed.df.groupBy(*keyed.keys).applyInPandasWithState(
-        handle,
-        outputStructType=f"user_id long, {id_fields}, elapsed_sec long",
-        stateStructType="blob binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    out = _run_keyed_state(
+        keyed.df,
+        keyed.keys,
+        step,
+        f"user_id long, {id_fields}, elapsed_sec long",
+        init=lambda key: (None, -1),
+        timers=True,
     )
     return DataStream(out, env=keyed.env, event_time=None)
 
@@ -193,129 +130,52 @@ def type_runs_streaming(
     type_col: str = "event_type",
     ts_col: Optional[str] = None,
 ):
-    """Streaming variable-length CEP (the A+ pattern): maximal same-type
-    runs of length ≥ ``min_len`` per key, live.
+    """Streaming maximal same-type runs of length ≥ ``min_len`` per key
+    (the A+ pattern).
 
-    Mirrors the batch kernel ``queries_layout.type_runs`` (same total
-    (ts, id) order, same output columns) up to watermark finality.  The
-    streaming-correctness rule differs from the fixed-length funnel's:
-    a run is MAXIMAL only relative to the final event order, and a
-    same-type event arriving later can EXTEND a run that merely looks
-    finished — so a run may emit only once its TERMINATOR (the
-    different-type event immediately following it; maximality guarantees
-    one exists for every non-trailing run) is sealed (ts < watermark).
-    No admitted future row can then insert at or before the terminator,
-    so the run's span and length are final.  Emitted groups leave the
-    buffer — emission and eviction are atomic, so no cross-batch dedup
-    bookkeeping is needed; only the trailing groups from the first
-    unsealed terminator onward are retained (per-key state ≈ the
-    unsealed horizon).  The trailing run at end-of-stream has no sealed
-    terminator and never emits — the no-flush semantic
-    (reference src/lib.rs:1316-1345), matching the batch oracle under
-    its finality filter.
+    The streaming twin of ``queries_layout.type_runs`` (same (ts, id) order
+    and output columns).  A later same-type row can still extend a run, so
+    a run emits only once its terminator (the next, different-type row) is
+    sealed; emitted runs leave the state.  A key's trailing run has no
+    terminator and never emits.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from tamar_spark.stream import DataStream
 
     ts = ts_col or keyed.event_time
     if ts is None:
         raise ValueError("type_runs_streaming requires an event_time column")
 
-    def handle(key, pdfs, gstate):
-        # numpy hot path — same rationale and state-blob shape as the
-        # funnel handle above (r15, guide §4.2): lexsort + array group
-        # detection replaces the per-key pandas sort/shift/cumsum chain;
-        # the per-GROUP python loop stays (groups per key are few and the
-        # unsealed-terminator break is inherently sequential)
-        import numpy as np
-
-        st = (
-            pickle.loads(bytes(gstate.get[0]))["events"]
-            if gstate.exists
+    def step(key, rows, held, wm_us):
+        events = _sorted_events(held, rows, id_col, type_col, ts)
+        if events is None:
+            return None, None, None
+        ids, typ, ts_us = events
+        # each run's first row is also the previous run's terminator
+        first = np.flatnonzero(np.concatenate(([True], typ[1:] != typ[:-1]))).tolist()
+        runs, evict, seal_us = [], 0, None
+        for start, end in zip(first[:-1], first[1:]):
+            term_ts = int(ts_us[end])
+            if term_ts >= wm_us:
+                # an unsealed terminator: this run and every later one can
+                # still change
+                seal_us = term_ts
+                break
+            if end - start >= min_len:
+                runs.append((key[0], typ[start], int(ids[start]), end - start))
+            evict = end
+        out = (
+            pd.DataFrame(runs, columns=["user_id", "event_type", "run_start_id", "run_len"])
+            if runs
             else None
         )
-        parts = ([st] if st is not None else []) + [
-            (
-                pdf[id_col].to_numpy(dtype="int64"),
-                pdf[type_col].to_numpy(),
-                pdf[ts].to_numpy().astype("datetime64[us]").astype("int64"),
-            )
-            for pdf in pdfs
-            if len(pdf)
-        ]
+        return out, (ids[evict:], typ[evict:], ts_us[evict:]), seal_us
 
-        wm_us = gstate.getCurrentWatermarkMs() * 1000
-        remaining, next_seal_us = None, None
-        if parts:
-            if len(parts) == 1:
-                ids, typ, ts_us = parts[0]
-            else:
-                ids = np.concatenate([p[0] for p in parts])
-                typ = np.concatenate([p[1] for p in parts])
-                ts_us = np.concatenate([p[2] for p in parts])
-            order = np.lexsort((ids, ts_us))
-            ids, typ, ts_us = ids[order], typ[order], ts_us[order]
-            m = len(ids)
-            # group id increments at every type change (gaps-and-islands
-            # over the per-key total order); first_idx marks each group's
-            # first row — which doubles as the PREVIOUS group's terminator
-            first_idx = np.flatnonzero(
-                np.concatenate(([True], typ[1:] != typ[:-1]))
-            )
-            n_groups = len(first_idx)
-            emit_rows = []
-            evict_before = 0  # buffer rows strictly before this index leave
-            for g in range(n_groups - 1):  # the trailing group never emits
-                term_ts = int(ts_us[first_idx[g + 1]])
-                if term_ts < wm_us:
-                    start, end = int(first_idx[g]), int(first_idx[g + 1])
-                    run_len = end - start
-                    if run_len >= min_len:
-                        emit_rows.append(
-                            (key[0], typ[start], int(ids[start]), run_len)
-                        )
-                    evict_before = end
-                else:
-                    # terminator unsealed: a late same-type event can still
-                    # extend this or any later run — stop here and fire a
-                    # timer for when the watermark passes this terminator
-                    next_seal_us = term_ts
-                    break
-            if emit_rows:
-                yield pd.DataFrame(
-                    emit_rows,
-                    columns=["user_id", "event_type", "run_start_id", "run_len"],
-                )
-            remaining = (
-                ids[evict_before:],
-                typ[evict_before:],
-                ts_us[evict_before:],
-            )
-
-        gstate.update(
-            (
-                pickle.dumps(
-                    {
-                        "events": remaining
-                        if remaining is not None and len(remaining[0])
-                        else None
-                    }
-                ),
-            )
-        )
-        if next_seal_us is not None:
-            gstate.setTimeoutTimestamp(
-                max(next_seal_us // 1000 + 1, gstate.getCurrentWatermarkMs() + 1)
-            )
-
-    out = keyed.df.groupBy(*keyed.keys).applyInPandasWithState(
-        handle,
-        outputStructType=(
-            "user_id long, event_type string, run_start_id long, run_len long"
-        ),
-        stateStructType="blob binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    out = _run_keyed_state(
+        keyed.df,
+        keyed.keys,
+        step,
+        "user_id long, event_type string, run_start_id long, run_len long",
+        init=lambda key: None,
+        timers=True,
     )
     return DataStream(out, env=keyed.env, event_time=None)

@@ -1,72 +1,31 @@
-"""Streaming MinHash/LSH near-duplicate detection: the signature store
-as watermark-bounded streaming state.
+"""Streaming MinHash/LSH near-duplicate detection with the signature store
+as watermark-bounded keyed state.
 
-Every dedup-family member so far was batch-shaped — even
-``dedup_incremental`` (operators/dedup.py) matches a finished NEW batch
-against a finished OLD corpus.  Production ingest wants the other shape:
-documents arrive continuously and each must be checked against what was
-ALREADY ingested, live.  The reference's keyed ``process_state``
-(reference src/lib.rs:323-361) is exactly this substrate; this module
-runs the MinHash/LSH construction on ``applyInPandasWithState``.
-
-Architecture (the 100 TB contract):
-
-- **State is keyed by LSH band bucket, not by document.**  The stream
-  carries, per document, its hashed shingle set and the full array of
-  band bucket keys (the batch per-document MinHash kernel of
-  ``operators/dedup.py``, bit-identical, pinned by test).
-  Exploding to ``(band, bucket)`` rows
-  routes every document to the 16 groups where a collision could
-  occur, so candidate generation is an equi-shuffle on bounded keys —
-  never an all-pairs comparison.
-- **State is bounded by the pairing window, not corpus size.**  The
-  eviction contract: two documents pair only if their event times lie
-  within ``window`` of each other, so a bucket's buffer keeps only
-  documents with ``ts >= watermark - window`` — retained bytes per
-  bucket ≈ window × per-bucket ingest rate (× the 16-band routing
-  fan-out).  ``store_shingles=False`` (r14, the production-constant
-  knob) keeps only the 64-long signature instead of the shingle set
-  and verifies by the standard MinHash estimator — the per-doc payload
-  becomes LENGTH-INDEPENDENT (measured: 113.5 → 50.4 MB live state at
-  sf0.1, 2.25× on this short-doc corpus; the ratio grows with document
-  length, ~|shingles|/num_perm on real crawl docs) at the cost of
-  estimation error around the threshold (measured on the registered
-  fixture: the estimator-selected pair set EQUALS the exact set,
-  pinned by test).  Without a
-  window the signature store grows with the corpus — that variant is
-  the batch ``minhash_lsh_join`` against a persisted index, not a
-  streaming state store.
-- **Emission is watermark-final** (the streaming/cep.py rule): a pair
-  emits only once the watermark passes the LATER document's timestamp.
-  A sealed pair is immutable, so the emitted set is independent of
-  micro-batch slicing, and the reference's no-end-of-stream-flush
-  semantic holds (src/lib.rs:1316-1345): pairs whose later document
-  lies inside the final watermark horizon never emit.
-- **Exactly-once across bands without a second stateful operator:**
-  two documents sharing k band buckets would emit k copies.  Each
-  row carries the full band-key array, so every bucket group can
-  compute the pair's CANONICAL band — the smallest band index where
-  the two signatures collide — and only that group emits.  No
-  post-dedup pass, no second state store.
-- **Quiet buckets flush via event-time timers** (the sessions/CEP
-  mechanism): a bucket holding an unsealed candidate registers a timer
-  just past that document's timestamp, so the final no-data batch
-  (watermark advance under Trigger.AvailableNow) fires the emission.
-
-Verification inside the handler is EXACT Jaccard over the carried
-shingle sets (candidate-pair-bounded, as everywhere in the dedup
-family), so the emitted set equals the batch all-pairs oracle under the
-window + finality filters — a full value-hash DuckDB twin, no
-rows-only check.
+- **Keyed by LSH band bucket.** Each document carries its hashed shingle
+  set and its band keys (the batch MinHash kernel of ``operators/dedup.py``,
+  bit-identical); exploding to ``(band, bucket)`` rows routes it to the
+  groups where a collision can occur.
+- **Bounded by the pairing window.** Two documents pair only if their event
+  times lie within ``window`` of each other, so a bucket keeps only
+  documents with ``ts >= watermark - window`` and drops its state entry
+  when none are left.
+- **Watermark-final.** A pair emits once the watermark passes the later
+  document's timestamp, so the emitted set does not depend on micro-batch
+  slicing; pairs still unsealed at end of stream never emit (the
+  reference's no-flush semantic, src/lib.rs:1316-1345).
+- **Exactly once across bands.** Only the pair's canonical band, the
+  smallest band where the two documents' keys collide, emits it.
+- **Verified.** Candidates are checked by exact Jaccard over the carried
+  shingle sets, or by the MinHash estimator over stored signatures.
 """
 
 from __future__ import annotations
 
-import pickle
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
+
+from tamar_spark.streaming.stateful import _run_keyed_state
 
 __all__ = ["attach_minhash_bands", "minhash_dedup_streaming"]
 
@@ -139,150 +98,90 @@ def minhash_dedup_streaming(
     doc_id_2``, 4dp HALF_UP rounded like the batch family.
 
     ``store_shingles=True`` (default) buffers each document's hashed
-    shingle set and verifies candidates by EXACT Jaccard.  With
+    shingle set and verifies candidates by exact Jaccard.  With
     ``store_shingles=False`` the state keeps only the ``num_perm``-long
     signature (requires :func:`attach_minhash_bands`'s
-    ``keep_signature=True``) and verifies by the standard MinHash
-    estimator — the matching-component fraction, an unbiased estimate
-    of Jaccard (Broder 1997) computed in deterministic integer
-    arithmetic, so the emitted set is exactly reproducible; ``jaccard``
-    then carries the ESTIMATE.  State shrinks toward
-    ~|shingles|/num_perm (length-independent payload; measured 2.25×
-    live at sf0.1, where docs are deliberately short) — the production
-    constant for high-rate ingest where the doc store lives elsewhere.
+    ``keep_signature=True``) and verifies by the MinHash estimator, the
+    matching-component fraction; ``jaccard`` then carries the estimate.
+    The per-document state no longer grows with document length.
 
     See the module docstring for the state/eviction/finality contract.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     payload_col = "shingles" if store_shingles else "sig"
+    as_payload = frozenset if store_shingles else tuple
 
-    def handle(key, pdfs, gstate):
+    def step(key, rows, state, wm_us):
         band_idx = int(key[0])
-        if gstate.exists:
-            blob = pickle.loads(bytes(gstate.get[0]))
-            docs, prev_wm_us = blob["docs"], blob["wm_us"]
-        else:
-            docs, prev_wm_us = {}, -1
-
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            ts_us = pdf[ts_col].astype("datetime64[us]").astype("int64")
+        docs, prev_wm_us = state
+        if rows is not None:
+            ts_us = rows[ts_col].astype("datetime64[us]").astype("int64")
             for rid, tus, payload, bd in zip(
-                pdf[id_col], ts_us, pdf[payload_col], pdf["bands"]
+                rows[id_col], ts_us, rows[payload_col], rows["bands"]
             ):
                 rid = int(rid)
                 if rid not in docs:  # idempotent on source replays
-                    docs[rid] = (
-                        int(tus),
-                        frozenset(payload)
-                        if store_shingles
-                        else tuple(int(x) for x in payload),
-                        tuple(int(x) for x in bd),
-                    )
+                    # Python ints: a pickled numpy int64 costs ~30x more
+                    docs[rid] = (int(tus), as_payload(map(int, payload)), tuple(map(int, bd)))
 
-        wm_us = gstate.getCurrentWatermarkMs() * 1000
         out_rows = []
-        next_seal_us = None
-        if docs:
-            order = sorted(docs.items(), key=lambda kv: (kv[1][0], kv[0]))
-            for j in range(len(order)):
-                idj, (tj, shj, bdj) = order[j]
-                if tj >= wm_us:
-                    # unsealed: drives a timer if an in-window earlier
-                    # partner exists, so the pair emits on watermark
-                    # advance even if this bucket sees no more data.
-                    # The buffer is ts-sorted, so the immediate
-                    # predecessor has the smallest gap — one O(1) probe,
-                    # not a buffer scan (r13 review finding)
-                    if j > 0 and tj - order[j - 1][1][0] <= window_us:
-                        if next_seal_us is None or tj < next_seal_us:
-                            next_seal_us = tj
+        seal_us = None
+        order = sorted(docs.items(), key=lambda kv: (kv[1][0], kv[0]))
+        for j in range(len(order)):
+            idj, (tj, shj, bdj) = order[j]
+            if tj >= wm_us:
+                # unsealed: its pair with the nearest earlier doc (the
+                # buffer is ts-sorted) asks for a timer if in the window
+                if j > 0 and tj - order[j - 1][1][0] <= window_us:
+                    if seal_us is None or tj < seal_us:
+                        seal_us = tj
+                continue
+            if tj < prev_wm_us:
+                continue  # this doc's pairs emitted in an earlier batch
+            # walk earlier docs newest-first and stop at the window edge
+            for i in range(j - 1, -1, -1):
+                idi, (ti, shi, bdi) = order[i]
+                if tj - ti > window_us:
+                    break
+                # canonical band: exactly one bucket group emits a pair
+                first = next(
+                    (b for b in range(len(bdi)) if bdi[b] == bdj[b]),
+                    None,
+                )
+                if first != band_idx:
                     continue
-                if tj < prev_wm_us:
-                    continue  # this doc's pairs emitted in an earlier batch
-                # walk earlier docs newest-first and STOP at the window
-                # edge (the buffer is ts-sorted): pair work per doc is
-                # bounded by the in-window neighborhood even when one
-                # micro-batch delivers far more than a window's worth
-                for i in range(j - 1, -1, -1):
-                    idi, (ti, shi, bdi) = order[i]
-                    if tj - ti > window_us:
-                        break
-                    # canonical band: exactly one bucket group emits a pair
-                    first = next(
-                        (b for b in range(len(bdi)) if bdi[b] == bdj[b]),
-                        None,
-                    )
-                    if first != band_idx:
+                if store_shingles:
+                    inter = len(shi & shj)
+                    if not inter:
                         continue
-                    if store_shingles:
-                        inter = len(shi & shj)
-                        if not inter:
-                            continue
-                        union = len(shi) + len(shj) - inter
-                        jac = inter / union
-                    else:
-                        # MinHash estimator: matching-component fraction
-                        # over the stored signatures — deterministic
-                        # integer counting, 4dp-exact under HALF_UP
-                        matches = sum(
-                            1 for a, b in zip(shi, shj) if a == b
-                        )
-                        if not matches:
-                            continue
-                        jac = matches / len(shi)
-                    if jac >= threshold:
-                        a, b = (idi, idj) if idi < idj else (idj, idi)
-                        out_rows.append((a, b, _round_half_up(jac)))
-            # eviction contract: a doc older than (watermark - window)
-            # can never pair with an admissible future row (future event
-            # times are >= watermark, so the gap would exceed the window)
-            docs = {
-                rid: v for rid, v in docs.items() if v[0] >= wm_us - window_us
-            }
-
+                    union = len(shi) + len(shj) - inter
+                    jac = inter / union
+                else:
+                    # MinHash estimator: matching-component fraction
+                    matches = sum(1 for a, b in zip(shi, shj) if a == b)
+                    if not matches:
+                        continue
+                    jac = matches / len(shi)
+                if jac >= threshold:
+                    a, b = (idi, idj) if idi < idj else (idj, idi)
+                    out_rows.append((a, b, _round_half_up(jac)))
+        # a doc older than (watermark - window) can never pair with an
+        # admissible future row, whose event time is >= watermark
+        docs = {rid: v for rid, v in docs.items() if v[0] >= wm_us - window_us}
+        out = (
+            pd.DataFrame(out_rows, columns=["doc_id_1", "doc_id_2", "jaccard"])
+            if out_rows
+            else None
+        )
         if not docs:
-            # window expiry emptied the bucket: drop the state entry
-            # entirely rather than keeping a tombstone forever
-            if gstate.exists:
-                gstate.remove()
-        else:
-            gstate.update(
-                (pickle.dumps({"docs": docs, "wm_us": max(prev_wm_us, wm_us)}),)
-            )
-            # wake at the earlier of: the next candidate pair sealing, or
-            # the newest doc expiring from the window (state self-cleans
-            # in a continuous deployment, not just under AvailableNow)
-            cleanup_us = max(v[0] for v in docs.values()) + window_us
-            t_us = (
-                min(next_seal_us, cleanup_us)
-                if next_seal_us is not None
-                else cleanup_us
-            )
-            # Spark fires an event-time timer on timeoutTimestamp <
-            # watermark (STRICT), and a doc at t_us seals at the first
-            # ms watermark wm with wm*1000 > t_us, i.e. floor(t_us/1000)
-            # + 1 — so the timer must sit at floor(t_us/1000) to fire in
-            # that same batch.  The old floor+1 was one watermark tick
-            # late: a final watermark landing exactly on the sealing
-            # tick (reachable with sub-ms event times; r13 ADVICE)
-            # sealed the doc but never fired the timer, dropping a pair
-            # under AvailableNow.  Firing EARLY is safe — the handler
-            # finds the doc unsealed and just re-registers.  Residual
-            # (unavoidable: setTimeoutTimestamp requires a value past
-            # the current watermark): if registration happens with the
-            # watermark already inside t_us's own millisecond, the clamp
-            # forces the sealing tick itself and the fire is one tick
-            # late again — second-or-coarser event times never hit this.
-            gstate.setTimeoutTimestamp(
-                max(t_us // 1000, gstate.getCurrentWatermarkMs() + 1)
-            )
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows, columns=["doc_id_1", "doc_id_2", "jaccard"]
-            )
+            return out, None, None
+        # wake for the next pair to seal, or at the latest when the newest
+        # doc leaves the window, so the bucket's state cleans itself up
+        cleanup_us = max(v[0] for v in docs.values()) + window_us
+        return (
+            out,
+            (docs, max(prev_wm_us, wm_us)),
+            cleanup_us if seal_us is None else min(seal_us, cleanup_us),
+        )
 
     # route ONLY the verification payload through the 16-band explode:
     # in signature mode the shingle sets never leave the projection —
@@ -294,10 +193,11 @@ def minhash_dedup_streaming(
         "bands",
         F.posexplode("bands").alias("band", "bucket"),
     )
-    return exploded.groupBy("band", "bucket").applyInPandasWithState(
-        handle,
-        outputStructType="doc_id_1 long, doc_id_2 long, jaccard double",
-        stateStructType="blob binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _run_keyed_state(
+        exploded,
+        ["band", "bucket"],
+        step,
+        "doc_id_1 long, doc_id_2 long, jaccard double",
+        init=lambda key: ({}, -1),
+        timers=True,
     )

@@ -1,43 +1,21 @@
-"""Streaming session windows with full-window event batches + user state.
+"""Streaming session windows that hand each fired session's events to user
+code with per-key state (``WindowedDataStream::process_state``, reference
+src/lib.rs:771-834).
 
-This is the reference's hardest operator (SURVEY §4.3.1):
-``WindowedDataStream::process_state`` (reference src/lib.rs:771-834) hands
-the user function the COMPLETE event batch of every fired session plus
-per-key state — something no single Spark built-in provides
-(``session_window`` aggregates; it doesn't expose raw per-window batches to
-arbitrary code with state).
-
-Implementation: ``applyInPandasWithState`` with a per-key state blob
-containing the open sessions (buffered events, exactly the reference's
-``EventTimeWindowMemoryStore`` events/windows maps, src/lib.rs:439-447).
-Per micro-batch and key:
-
-1. append the batch's events to the buffer;
-2. gap-merge sessions (the store's add_event cases, src/lib.rs:458-558);
-3. read the current event-time watermark (``GroupState.getCurrentWatermarkMs``
-   — Spark's global watermark replaces the reference's per-event watermark
-   field, same fixed-offset semantics per src/lib.rs:560-563);
-4. fire every session whose ``last_event + gap < watermark`` (the store's
-   ``trigger``, src/lib.rs:564-612): call ``fn(key, events_df, user_state)``
-   and emit its rows;
-5. keep later sessions buffered — sessions still open at end-of-stream never
-   emit (the reference's no-flush semantic, src/lib.rs:1316-1345).
-
-Scale: state is per-key and watermark-bounded — fired sessions leave the
-buffer, so retained bytes ≈ (open sessions) × (events within gap horizon).
-Heavier than the aggregate path (which keeps only accumulators), exactly as
-in the reference where ``process`` buffers and ``aggregate`` compacts
-(src/lib.rs:673-693).  Use :mod:`tamar_spark.windows` aggregation when the
-logic is expressible as aggregates; this operator is for genuinely
-batch-needing logic.
+Per key, the state holds the buffered events of the open sessions and the
+user state.  A session closes once the watermark is strictly past its last
+event plus the gap; sessions still open at end of stream never emit (the
+reference's no-flush semantic, src/lib.rs:1316-1345).
 """
 
 from __future__ import annotations
 
-import pickle
 from typing import Any, Callable, Optional
 
+import numpy as np
 import pandas as pd
+
+from tamar_spark.streaming.stateful import _run_keyed_state
 
 __all__ = ["session_process_streaming"]
 
@@ -57,7 +35,6 @@ def session_process_streaming(
     must wrap a streaming DataFrame with ``withWatermark`` already applied
     (the gap firing condition reads the watermark).
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
     from tamar_spark.stream import DataStream
 
     ts = ts_col or keyed.event_time
@@ -65,76 +42,47 @@ def session_process_streaming(
         raise ValueError("session_process_streaming requires an event_time column")
     gap_us = int(gap_seconds * 1_000_000)
 
-    def handle(key, pdfs, gstate):
-        if gstate.exists:
-            blob = pickle.loads(bytes(gstate.get[0]))
-            buffered, user_state = blob["events"], blob["state"]
-        else:
-            buffered = None
-            user_state = init_state(key) if init_state is not None else None
-
-        batches = [pdf for pdf in pdfs if len(pdf)]
-        if batches:
-            fresh = pd.concat(batches, ignore_index=True)
+    def step(key, rows, state, wm_us):
+        buffered = state["events"]
+        if rows is not None:
             buffered = (
-                fresh
-                if buffered is None
-                else pd.concat([buffered, fresh], ignore_index=True)
+                rows if buffered is None
+                else pd.concat([buffered, rows], ignore_index=True)
             )
-
-        remaining = None
-        if buffered is not None and len(buffered):
-            buffered = buffered.sort_values(ts, kind="mergesort").reset_index(drop=True)
-            ts_us = buffered[ts].astype("datetime64[us]").astype("int64")
-            # gap-merge: new session only where the gap to the previous event
-            # is strictly > gap — an event exactly ``gap`` after its
-            # predecessor MERGES, matching Spark's session_window and the
-            # reference's inclusive candidate range (src/lib.rs:463-465)
-            new_session = (ts_us.diff().fillna(gap_us + 1) > gap_us).cumsum()
-
-            watermark_us = gstate.getCurrentWatermarkMs() * 1000
-            keep_mask = pd.Series(True, index=buffered.index)
-            for _, idx in new_session.groupby(new_session).groups.items():
-                last_us = int(ts_us.loc[idx[-1]])
-                # strict >: an event with ts == last+gap == watermark is NOT
-                # late (Spark keeps event_time >= watermark) and would merge
-                # into this session, so the session may only close once the
-                # watermark strictly exceeds last+gap (r2 ADVICE fix — the
-                # inclusive check could split a session at the exact boundary)
-                if last_us + gap_us < watermark_us:
-                    session_pdf = buffered.loc[idx]
-                    out = fn(key, session_pdf, user_state)
-                    keep_mask.loc[idx] = False
-                    if out is not None and len(out):
-                        yield out
-            remaining = buffered[keep_mask].reset_index(drop=True)
-
-        gstate.update(
-            (
-                pickle.dumps(
-                    {
-                        "events": remaining if remaining is not None and len(remaining) else None,
-                        "state": user_state,
-                    }
-                ),
-            )
+        if buffered is None:
+            return None, state, None
+        buffered = buffered.sort_values(ts, kind="mergesort").reset_index(drop=True)
+        ts_us = buffered[ts].astype("datetime64[us]").astype("int64").to_numpy()
+        # a session starts where the gap to the previous event is strictly
+        # > gap: an event exactly gap after its predecessor merges, as in
+        # Spark's session_window (reference src/lib.rs:463-465)
+        starts = np.flatnonzero(np.diff(ts_us, prepend=ts_us[0] - gap_us - 1) > gap_us)
+        ends = np.append(starts[1:], len(ts_us))
+        outs, seal_us = [], None
+        for lo, hi in zip(starts, ends):
+            close_us = int(ts_us[hi - 1]) + gap_us
+            # strict: an event at exactly last + gap is on time and merges;
+            # later sessions close later, so the first open one ends the walk
+            if close_us >= wm_us:
+                kept, seal_us = lo, close_us
+                break
+            out = fn(key, buffered.iloc[lo:hi], state["state"])
+            if out is not None and len(out):
+                outs.append(out)
+        state["events"] = (
+            None if seal_us is None else buffered.iloc[kept:].reset_index(drop=True)
         )
-        if remaining is not None and len(remaining):
-            # schedule a watermark-driven callback for the earliest session
-            # close — the reference triggers ALL keys on every event
-            # (src/lib.rs:800-826); Spark only calls keys present in the
-            # batch, so quiet keys fire via event-time timeout instead
-            rem_us = remaining[ts].astype("datetime64[us]").astype("int64")
-            rem_sessions = (rem_us.diff().fillna(gap_us + 1) > gap_us).cumsum()
-            next_close_us = int(rem_us.groupby(rem_sessions).max().min()) + gap_us
-            wm_ms = gstate.getCurrentWatermarkMs()
-            gstate.setTimeoutTimestamp(max(next_close_us // 1000, wm_ms + 1))
+        return (pd.concat(outs, ignore_index=True) if outs else None), state, seal_us
 
-    out = keyed.df.groupBy(*keyed.keys).applyInPandasWithState(
-        handle,
-        outputStructType=schema,
-        stateStructType="blob binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    out = _run_keyed_state(
+        keyed.df,
+        keyed.keys,
+        step,
+        schema,
+        init=lambda key: {
+            "events": None,
+            "state": init_state(key) if init_state is not None else None,
+        },
+        timers=True,
     )
     return DataStream(out, env=keyed.env, event_time=ts)

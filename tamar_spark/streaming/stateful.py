@@ -1,18 +1,17 @@
-"""Stateful processing: the reference's universal operator on Spark.
+"""Stateful processing: tamar's ``process_state`` on Spark.
 
-``process_state`` is the primitive every reference operator lowers to
-(reference src/lib.rs:176-199 un-keyed, src/lib.rs:323-361 keyed): for each
-event, in per-key arrival order, call a user function with (key, event,
-per-key state, global state) and emit 0..n outputs.
+``process_state`` calls a user function per key, in event-time order, with
+the key's per-key state (reference src/lib.rs:176-199 un-keyed,
+src/lib.rs:323-361 keyed).
 
 - :func:`process_state` (batch): ``groupBy(keys).applyInPandas``; each key
-  group arrives as one pandas DataFrame sorted by event time.  Each group
-  must fit in executor memory.
-- :func:`process_state_streaming`: ``applyInPandasWithState`` with a
-  pickled per-key state blob, initialised on first use like the
-  reference's ``key_state_fn`` (src/lib.rs:347-349).
-- :func:`global_process_state_streaming`: the reference's global state
-  (``GST``), keyed to one synthetic group, so one task sees every row.
+  group arrives as one pandas DataFrame sorted by event time.
+- :func:`process_state_streaming`: the same call once per key and
+  micro-batch, with the state carried across micro-batches.
+- :func:`global_process_state_streaming`: the reference's global state, one
+  state object over every row.
+
+Every Python stateful stream in the library runs on :func:`_run_keyed_state`.
 """
 
 from __future__ import annotations
@@ -30,6 +29,58 @@ __all__ = [
     "process_state_streaming",
     "global_process_state_streaming",
 ]
+
+
+def _run_keyed_state(df, keys, step, schema, init, timers: bool):
+    """Run ``step`` once per key and micro-batch with pickled per-key state.
+
+    ``step(key, rows, state, wm_us) -> (out, new_state, seal_us)``:
+
+    - ``rows`` is the key's whole micro-batch as one DataFrame, or None on
+      a timer call; ``state`` is the stored value, or ``init(key)`` for a
+      key with none; ``wm_us`` is the event-time watermark in µs (None
+      without ``timers``).
+    - ``out`` (or None) is emitted; a ``new_state`` of None removes the
+      key's entry; ``seal_us`` (or None) asks for one more call once the
+      watermark is strictly past it.
+
+    ``timers`` selects event-time timeouts, which need a watermark on
+    ``df``.
+    """
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def handle(key, pdfs, gstate):
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        rows = (
+            None if not chunks
+            else chunks[0] if len(chunks) == 1
+            else pd.concat(chunks, ignore_index=True)
+        )
+        state = pickle.loads(gstate.get[0]) if gstate.exists else init(key)
+        wm_ms = gstate.getCurrentWatermarkMs() if timers else None
+        out, state, seal_us = step(
+            key, rows, state, None if wm_ms is None else wm_ms * 1000
+        )
+        if state is not None:
+            gstate.update((pickle.dumps(state),))
+            if seal_us is not None:
+                # Spark fires a timer once timeout < watermark; a row at
+                # seal_us is sealed by the first ms watermark > seal_us // 1000
+                gstate.setTimeoutTimestamp(max(seal_us // 1000, wm_ms + 1))
+        elif gstate.exists:
+            gstate.remove()
+        if out is not None and len(out):
+            yield out
+
+    return df.groupBy(*keys).applyInPandasWithState(
+        handle,
+        outputStructType=schema,
+        stateStructType="blob binary",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout
+        if timers
+        else GroupStateTimeout.NoTimeout,
+    )
 
 
 def process_state(
@@ -70,37 +121,28 @@ def process_state_streaming(
     fn: Callable[[tuple, pd.DataFrame, Any], pd.DataFrame],
     schema,
     init_state: Optional[Callable[[tuple], Any]] = None,
-    output_mode: str = "append",
 ):
     """Streaming per-key stateful processing.
 
-    Key state is pickled into a per-key binary blob (RocksDB-backed at
-    scale, evicted with the state store's usual mechanisms) —
-    init-on-first-use like the reference's ``key_state_fn``
-    (src/lib.rs:347-349).  Each micro-batch's rows for a key arrive in one
-    call, source-ordered within the batch.
+    ``fn(key, pdf, state) -> pdf_out`` is called once per key and
+    micro-batch with all of the key's rows in that batch, in source order.
+    ``state`` starts as ``init_state(key)`` (the reference's
+    ``key_state_fn``, src/lib.rs:347-349) and is kept across micro-batches;
+    ``fn`` mutates it in place.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from tamar_spark.stream import DataStream
 
-    def wrapped(key, pdfs, gstate):
-        if gstate.exists:
-            st = pickle.loads(bytes(gstate.get[0]))
-        else:
-            st = init_state(key) if init_state is not None else None
-        for pdf in pdfs:
-            res = fn(key, pdf, st)
-            if res is not None and len(res):
-                yield res
-        gstate.update((pickle.dumps(st),))
+    # without timers every call carries rows
+    def step(key, rows, state, _wm_us):
+        return fn(key, rows, state), state, None
 
-    out = keyed.df.groupBy(*keyed.keys).applyInPandasWithState(
-        wrapped,
-        outputStructType=schema,
-        stateStructType="blob binary",
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    out = _run_keyed_state(
+        keyed.df,
+        keyed.keys,
+        step,
+        schema,
+        init=lambda key: init_state(key) if init_state is not None else None,
+        timers=False,
     )
     return DataStream(out, env=keyed.env, event_time=keyed.event_time)
 
@@ -110,54 +152,26 @@ def global_process_state_streaming(
     fn: Callable[[pd.DataFrame, Any], pd.DataFrame],
     schema,
     init_state: Optional[Callable[[], Any]] = None,
-    output_mode: str = "append",
 ):
-    """Streaming analog of the reference's GLOBAL state (``GST`` in un-keyed
-    ``process_state``, src/lib.rs:176-199): one state object shared by every
-    event, maintained across micro-batches.
+    """Streaming global state (the reference's ``GST`` in un-keyed
+    ``process_state``, src/lib.rs:176-199).
 
-    The reference's global state is a process-wide ``Arc<Mutex<_>>`` —
-    fundamentally single-writer.  The honest Spark mapping is a
-    keyed-singleton: every row is keyed to one synthetic group, so ALL rows
-    flow through a single stateful task whose pickled blob persists in the
-    state store across micro-batches.  ``fn(pdf, state) -> pdf_out`` sees
-    each micro-batch's full row set (source order within the batch) and
-    mutates ``state`` in place.
-
-    **Scale hazard (SURVEY §4.3.2, documented on purpose):** a global
-    accumulator serializes the whole stream through one task — a design
-    smell at 100 TB.  Prefer re-expressing as an aggregation (Spark's
-    complete/update-mode ``groupBy().agg()`` keeps partial aggregation
-    map-side); reach for this only when the logic is genuinely
-    order-dependent, single-writer, and the stream is modest.
+    ``fn(pdf, state) -> pdf_out`` is called once per micro-batch with all
+    of its rows, in source order, and mutates ``state`` in place.  Every
+    row goes through one task, so use this only for order-dependent
+    logic that no aggregation can express.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from tamar_spark.stream import DataStream
 
-    df = stream.df.withColumn("_gk", F.lit(1))
+    def step(_key, rows, state, _wm_us):
+        return fn(rows.drop(columns=["_gk"]), state), state, None
 
-    def handle(_key, pdfs, gstate):
-        if gstate.exists:
-            st = pickle.loads(bytes(gstate.get[0]))
-        else:
-            st = init_state() if init_state is not None else None
-        # concatenate the Arrow chunks: fn's contract is one call per
-        # micro-batch with the batch's FULL row set (so it can impose a
-        # deterministic order before walking)
-        batches = [pdf.drop(columns=["_gk"]) for pdf in pdfs if len(pdf)]
-        if batches:
-            whole = batches[0] if len(batches) == 1 else pd.concat(batches, ignore_index=True)
-            res = fn(whole, st)
-            if res is not None and len(res):
-                yield res
-        gstate.update((pickle.dumps(st),))
-
-    out = df.groupBy("_gk").applyInPandasWithState(
-        handle,
-        outputStructType=schema,
-        stateStructType="blob binary",
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    out = _run_keyed_state(
+        stream.df.withColumn("_gk", F.lit(1)),
+        ["_gk"],
+        step,
+        schema,
+        init=lambda _key: init_state() if init_state is not None else None,
+        timers=False,
     )
     return DataStream(out, env=stream.env, event_time=stream.event_time)

@@ -411,7 +411,8 @@ def test_process_state_batch(spark):
 
 def test_process_state_streaming(spark, tmp_path):
     """Per-key running count over a stream (reference keyed process_state,
-    src/lib.rs:323-361) through applyInPandasWithState."""
+    src/lib.rs:323-361): one call per key and micro-batch, even when Arrow
+    splits the key's rows into several record batches."""
     from tamar_spark import Environment
     from tamar_spark.streaming.stateful import process_state_streaming
     from tamar_spark.stream import KeyedDataStream
@@ -436,15 +437,21 @@ def test_process_state_streaming(spark, tmp_path):
         keyed, counting, schema="k long, v long, seen_before long",
         init_state=lambda k: {"n": 0},
     )
-    q = (
-        out.to_df()
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("process_state_out")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        q = (
+            out.to_df()
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName("process_state_out")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        spark.conf.set(conf, prior)
     rows = spark.table("process_state_out").collect()
     assert len(rows) == 6
     # each key saw 3 events; within one batch seen_before is the pre-batch count

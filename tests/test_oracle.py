@@ -195,3 +195,38 @@ def test_contention_report_separates_uniform_from_concentrated():
     r = bench.contention_report(spiked)
     assert r["verdict"] == "concentrated-regression"
     assert r["regressions_adjusted"] == ["dedup_minhash_lsh"]
+
+
+@pytest.mark.parametrize("shared, want_edge", [(9_999, False), (10_000, True)])
+@pytest.mark.parametrize("name", ["dedup_clusters", "dedup_keep_best"])
+def test_cluster_oracles_keep_edges_on_unrounded_jaccard(spark, tmp_path, name, shared, want_edge):
+    """Two documents with 15,000 and 5,000 + ``shared`` word 3-gram
+    shingles, ``shared`` of them in common: J = shared / 20,000.  At
+    J = 0.49995 (0.5 once rounded to 4 places) neither Spark nor the
+    DuckDB oracle may draw an edge; at J = 0.5 both must."""
+    import duckdb
+
+    a = [f"a{i}" for i in range(15_002)]
+    b = a[: shared + 2] + [f"b{i}" for i in range(5_000)]
+    texts = [" ".join(a), " ".join(b)]
+    pd.DataFrame(
+        {
+            "doc_id": [1, 2],
+            "text": texts,
+            "lang": ["en", "en"],
+            "source": ["web", "web"],
+            "n_chars": [len(t) for t in texts],
+        }
+    ).to_parquet(tmp_path / "documents.parquet")
+    spdf = QUERIES[name](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
+    )
+    opdf = con.execute(ORACLES[name]).df()
+    con.close()
+    assert len(opdf) == len(spdf) == (2 if name == "dedup_clusters" else 1) * want_edge
+    if want_edge:
+        pd.testing.assert_frame_equal(
+            _normalize(spdf), _normalize(opdf), check_dtype=False, check_exact=True
+        )

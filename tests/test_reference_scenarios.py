@@ -438,6 +438,131 @@ def test_streaming_checkpoint_recovery(spark, tmp_path):
     assert final.select(F.countDistinct("id")).first()[0] == 150  # exactly once
 
 
+def _restart_case(op, sdf):
+    """One stateful stream per operator on the events of
+    ``test_stateful_stream_restart_from_checkpoint``."""
+    from tamar_spark.stream import DataStream
+    from tamar_spark.streaming.cep import funnel_match_streaming, type_runs_streaming
+    from tamar_spark.streaming.dedup import attach_minhash_bands, minhash_dedup_streaming
+    from tamar_spark.streaming.sessions import session_process_streaming
+    from tamar_spark.streaming.stateful import (
+        global_process_state_streaming,
+        process_state_streaming,
+    )
+
+    keyed = DataStream(sdf, event_time="ts").key_by("user_id")
+
+    def numbered(pdf, state):
+        pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
+        seq = state["n"] + pd.Series(range(len(pdf)), dtype="int64")
+        state["n"] += len(pdf)
+        return pd.DataFrame({"event_id": pdf["event_id"], "seq": seq})
+
+    if op == "process_state":
+        return process_state_streaming(
+            keyed, lambda key, pdf, state: numbered(pdf, state),
+            "event_id long, seq long", init_state=lambda k: {"n": 0},
+        ).to_df()
+    if op == "global_process_state":
+        return global_process_state_streaming(
+            DataStream(sdf, event_time="ts"), numbered,
+            "event_id long, seq long", init_state=lambda: {"n": 0},
+        ).to_df()
+    if op == "session_process":
+        def per_session(key, pdf, state):
+            return pd.DataFrame(
+                {"user_id": [key[0]], "start": [pdf["ts"].min()], "n": [len(pdf)]}
+            )
+
+        return session_process_streaming(
+            keyed, 15 * 60, per_session, "user_id long, start timestamp, n long"
+        ).to_df()
+    if op == "funnel":
+        return funnel_match_streaming(
+            keyed, ("view", "click", "purchase"), within_us=3600 * 1_000_000
+        ).to_df()
+    if op == "runs":
+        return type_runs_streaming(keyed, min_len=2).to_df()
+    return minhash_dedup_streaming(
+        attach_minhash_bands(sdf), threshold=0.5,
+        window_us=30 * 60 * 1_000_000, id_col="event_id",
+    )
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["process_state", "global_process_state", "session_process", "funnel",
+     "runs", "minhash_dedup"],
+)
+def test_stateful_stream_restart_from_checkpoint(spark, tmp_path, op):
+    """Every stream on the keyed-state runner resumes from its checkpoint:
+    one run over two files emits the same rows as a run over the first
+    file followed by a restart on the same checkpoint after the second
+    file lands (rows 55 and 57 arrive late, in the second file)."""
+    import time as _time
+
+    base = pd.Timestamp("2024-01-01 12:00:00")
+    cycle = ("view", "click", "purchase", "click", "click")
+    texts = (
+        "alpha beta gamma delta epsilon",
+        "one two three four five",
+        "red green blue yellow purple",
+        "dog cat bird fish mouse",
+    )
+    k = pd.RangeIndex(120)
+    events = pd.DataFrame(
+        {
+            "user_id": k % 3,
+            "event_id": k,
+            "event_type": [cycle[(i // 3) % 5] for i in k],
+            # a 20-minute gap every 30 events closes each user's session
+            "ts": [base + pd.Timedelta(minutes=i + 20 * (i // 30)) for i in k],
+            "text": [texts[(i // 3) % 4] for i in k],
+        }
+    )
+    late = events["event_id"].isin([55, 57])
+    first = events[(events["event_id"] < 60) & ~late]
+    second = events[(events["event_id"] >= 60) | late]
+
+    dirs = {run: tmp_path / f"src_{run}" for run in "AB"}
+    for d in dirs.values():
+        d.mkdir()
+        first.to_parquet(d / "1.parquet", coerce_timestamps="us")
+    _time.sleep(1.1)  # distinct mtimes → deterministic batch order
+    second.to_parquet(dirs["A"] / "2.parquet", coerce_timestamps="us")
+
+    def run(name):
+        src = dirs[name[0]]
+        sdf = (
+            spark.readStream.schema(spark.read.parquet(str(src)).schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+            .withColumn("ts", F.col("ts").cast("timestamp"))
+            .withWatermark("ts", "10 minutes")
+        )
+        (
+            _restart_case(op, sdf)
+            .writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", str(tmp_path / f"out_{name[0]}"))
+            .option("checkpointLocation", str(tmp_path / f"chk_{name[0]}"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+
+    def rows(name):
+        return sorted(tuple(r) for r in spark.read.parquet(str(tmp_path / f"out_{name}")).collect())
+
+    run("A")
+    run("B1")
+    second.to_parquet(dirs["B"] / "2.parquet", coerce_timestamps="us")
+    run("B2")
+    want = rows("A")
+    assert want, "no rows: the comparison is vacuous"
+    assert rows("B") == want
+
+
 def test_stream_outer_join_invariants(spark, sf_dir):
     """Stream-stream left-outer join invariants (its query entry is
     rows-only because outer-row flush timing is engine-internal):
@@ -931,6 +1056,73 @@ def test_streaming_cep_funnel_nstep_random_soup_matches_batch(spark, tmp_path):
         )
         assert got == want, f"seed {seed}: {got} != {want}"
         assert len(want) >= 3, "planted funnels missing: comparison is vacuous"
+
+
+@pytest.mark.parametrize("kind", ["funnel", "runs"])
+def test_cep_timer_fires_on_sealing_tick(spark, tmp_path, kind):
+    """A match whose last row (the run's terminator, for runs) is at
+    12:00:02.0005 is sealed by a final watermark of exactly 12:00:02.001,
+    which a sentinel on another key sets; the key's timer must fire in that
+    last no-data batch."""
+    import time as _time
+
+    from tamar_spark.stream import DataStream
+    from tamar_spark.streaming.cep import funnel_match_streaming, type_runs_streaming
+
+    base = pd.Timestamp("2024-01-01 12:00:00")
+    end = base + pd.Timedelta(microseconds=2_000_500)
+    types = ("view", "click", "purchase") if kind == "funnel" else ("A", "A", "B")
+    match = pd.DataFrame(
+        {
+            "user_id": [1, 1, 1],
+            "event_id": [1, 2, 3],
+            "event_type": list(types),
+            "ts": [base, base + pd.Timedelta(seconds=1), end],
+        }
+    )
+    # final watermark = floor(end to ms) + 1 ms: the first tick that seals end
+    sentinel = pd.DataFrame(
+        {
+            "user_id": [9],
+            "event_id": [99],
+            "event_type": [types[0]],
+            "ts": [end.floor("ms") + pd.Timedelta(milliseconds=1, minutes=30)],
+        }
+    )
+    src = tmp_path / "src"
+    src.mkdir()
+    for name, pdf in (("a", match), ("b", sentinel)):
+        pdf.to_parquet(src / f"{name}.parquet", coerce_timestamps="us")
+        _time.sleep(1.1)  # distinct mtimes → deterministic batch order
+
+    schema = spark.read.parquet(str(src)).schema
+    sdf = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .withWatermark("ts", "30 minutes")
+    )
+    keyed = DataStream(sdf, event_time="ts").key_by("user_id")
+    if kind == "funnel":
+        out = funnel_match_streaming(keyed, types, within_us=60 * 1_000_000)
+        want = [(1, 1, 2, 3, 2)]
+    else:
+        out = type_runs_streaming(keyed, min_len=2)
+        want = [(1, "A", 1, 2)]
+    name = f"cep_tick_{kind}"
+    q = (
+        out.to_df()
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", str(tmp_path / "chk"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = sorted(tuple(r) for r in spark.table(name).collect())
+    assert got == want, got
 
 
 def test_streaming_minhash_dedup_multibatch_semantics(spark, tmp_path):
