@@ -47,8 +47,6 @@ _CHANGED_IN_ROUND = {
     # r6: CDC pair reworked per ADVICE (spent once a green r6+ row exists).
     "cdc_incremental_agg": 6,
     "cdc_upsert": 6,
-    # r6: PQ rerank depth tuned 20 -> 50 (spent by the green r6 row).
-    "embed_pq_topk": 6,
     # r7: edit_sim recomputed with the cross-engine round_ieee form in both
     # engines (r6 ADVICE medium) — the r6 row attests the old rounding.
     "dedup_edit_distance": 7,
@@ -80,17 +78,6 @@ _CHANGED_IN_ROUND = {
     # column dropped from the cached frame (r9 task 4) — results provably
     # unchanged, plan rewrite carries a fresh attestation.
     "graph_triangles": 10,
-    # r10: IVF geometry is size-derived in-plan (r9 task 3) — nlist =
-    # ceil(sqrt(n)), probe nlist/4; results CHANGE (finer lists, higher
-    # recall at the same scan fraction), oracle derives the identical
-    # geometry via scalar subqueries.
-    "embed_ivf_topk": 10,
-    "embed_abtt_ivf_topk": 10,
-    # r11: IVFPQ residual-PQ config raised 4×16 → 8×16 codes (r10 VERDICT
-    # task 6: with the size-derived coarse geometry the PQ ceiling binds;
-    # 8 subquantizers lift recall@5 past the rerank window at ~2 bytes/vec
-    # extra).  Results CHANGE; the oracle unrolls the same 8-term ADC sum.
-    "embed_ivfpq_topk": 11,
     # r14: canonical_url grew percent-encoding normalization,
     # dot-segment resolution, and userinfo handling (spent by the
     # green r14 row); r15: percent_normalize grew the leading bare-'%'
@@ -141,6 +128,28 @@ _CHANGED_IN_ROUND = {
     "streaming_cep_funnel": 17,
     "streaming_cep_funnel4": 17,
     "streaming_cep_runs": 17,
+    # r17: the six top-k operators share one candidate → exact-cosine
+    # scorer, the LSH buckets are one SQL expression, and the embedding
+    # near-dup kernels share one GEMM tile scorer (supersedes the r6 PQ,
+    # r10 IVF and r11 IVFPQ entries).
+    "embed_cosine_topk": 17,
+    "embed_filtered_topk": 17,
+    "embed_lsh_topk": 17,
+    "embed_ivf_topk": 17,
+    "embed_ivf_trained_topk": 17,
+    "embed_pq_topk": 17,
+    "embed_ivfpq_topk": 17,
+    "embed_ivfpq_trained_topk": 17,
+    "embed_mmr_topk": 17,
+    "embed_hard_negatives": 17,
+    "embed_abtt_topk": 17,
+    "embed_abtt_ivf_topk": 17,
+    "hybrid_rrf_topk": 17,
+    "retrieval_ndcg": 17,
+    "dedup_embedding": 17,
+    "dedup_embedding_lsh": 17,
+    "dedup_semantic": 17,
+    "dedup_semantic_prod": 17,
 }
 # One entry per query name, enforced: a duplicate key in this literal is
 # silently last-wins in Python, and a LOWER-round duplicate added later

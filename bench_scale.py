@@ -1518,9 +1518,7 @@ def ivf_recall_probe() -> None:
     cexact5.count()
     for n_sub in (4, 8):
         t0 = _t.perf_counter()
-        ann = ivfpq_topk(
-            clustered, cq, k=5, n_sub=n_sub, n_codes=16, dim=64, rerank=50
-        )
+        ann = ivfpq_topk(clustered, cq, k=5, n_sub=n_sub, n_codes=16, dim=64)
         ann.count()
         results[f"ivfpq_clustered_{n_sub}x16"] = {
             "recall@5": recall_at(ann, cexact5),

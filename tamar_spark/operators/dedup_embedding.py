@@ -1,6 +1,7 @@
 """Vectorized embedding near-dup kernels.
 
-Two entry points sharing one dense-GEMM scoring style:
+Two entry points; each proposes blocks of vectors and scores them with
+one dense-GEMM tile scorer, :func:`_score_tile`:
 
 - :func:`blocked_cosine_pairs` — EXACT all-pairs, organized as the standard
   blocked similarity join so (a) the inner loop is one dense GEMM per block
@@ -10,10 +11,10 @@ Two entry points sharing one dense-GEMM scoring style:
   independently inside ``applyInPandas``.  Still O(n²) scored pairs — the
   verification tier, not the 100 TB entry point.
 - :func:`lsh_cosine_pairs` — the 100 TB path: sign-random-projection LSH
-  bucketing first (``similarity.sign_lsh_buckets``), then the same dense
-  GEMM kernel applied ONLY inside each (table, bucket) group.  Scored pairs
-  drop from O(n²) to Σ bucket²; everything before the kernel is JVM
-  expression code and one hash-partitioned ``groupBy``.
+  buckets from a numpy GEMM over the projections of
+  ``similarity._projection``, then the tile scorer applied only inside
+  each (table, bucket) group.  Scored pairs drop from O(n²) to
+  Σ bucket².
 """
 
 from __future__ import annotations
@@ -24,6 +25,40 @@ from pyspark.sql import DataFrame, functions as F
 
 # rows per GEMM tile inside one LSH bucket: bounds peak worker memory
 _MAX_CHUNK = 8192
+
+_PAIRS_SCHEMA = "src_id long, dup_id long, score double"
+
+
+def _empty_pairs():
+    import pandas as pd
+
+    return pd.DataFrame({"src_id": [], "dup_id": [], "score": []}).astype(
+        {"src_id": "int64", "dup_id": "int64", "score": "float64"}
+    )
+
+
+def _score_tile(ids_a, ma, na, ids_b, mb, nb, threshold, same_side):
+    """``(src_id, dup_id, score)`` for every pair of the tile with cosine
+    ≥ ``threshold``: ``src_id < dup_id`` and the score rounded to 6
+    places.  ``ma``/``mb`` hold one vector per row and ``na``/``nb`` their
+    norms.  When ``same_side``, a pair can appear in both orders (the two
+    sides share vectors), so only ``ids_a < ids_b`` is kept."""
+    import numpy as np
+    import pandas as pd
+
+    sims = (ma @ mb.T) / np.outer(na, nb)
+    ia, ib = np.nonzero(sims >= threshold)
+    ids_a, ids_b, scores = ids_a[ia], ids_b[ib], sims[ia, ib]
+    if same_side:
+        keep = ids_a < ids_b
+        ids_a, ids_b, scores = ids_a[keep], ids_b[keep], scores[keep]
+    return pd.DataFrame(
+        {
+            "src_id": np.minimum(ids_a, ids_b),
+            "dup_id": np.maximum(ids_a, ids_b),
+            "score": np.round(scores, 6),
+        }
+    )
 
 
 def lsh_tables_for(
@@ -88,42 +123,29 @@ def blocked_cosine_pairs(
         .withColumn("_side_b", F.col("_blk") == F.col("_bj"))
     )
 
-    out_schema = "src_id long, dup_id long, score double"
-
     def score_tile(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         a = pdf[pdf["_side_a"]]
         b = pdf[pdf["_side_b"]]
         if len(a) == 0 or len(b) == 0:
-            return pd.DataFrame({"src_id": [], "dup_id": [], "score": []}).astype(
-                {"src_id": "int64", "dup_id": "int64", "score": "float64"}
-            )
+            return _empty_pairs()
         ma = np.stack(a["_v"].to_numpy())
         mb = np.stack(b["_v"].to_numpy())
-        na = np.linalg.norm(ma, axis=1)
-        nb = np.linalg.norm(mb, axis=1)
-        sims = (ma @ mb.T) / np.outer(na, nb)
-        ia, ib = np.nonzero(sims >= threshold)
-        ids_a = a["_id"].to_numpy()[ia]
-        ids_b = b["_id"].to_numpy()[ib]
-        scores = sims[ia, ib]
-        if pdf["_bi"].iat[0] == pdf["_bj"].iat[0]:
-            # diagonal tile: both sides are the same vector set, every pair
-            # shows up in both orders (plus self-pairs) — keep one order
-            keep = ids_a < ids_b
-            ids_a, ids_b, scores = ids_a[keep], ids_b[keep], scores[keep]
-        return pd.DataFrame(
-            {
-                "src_id": np.minimum(ids_a, ids_b),
-                "dup_id": np.maximum(ids_a, ids_b),
-                "score": np.round(scores, 6),
-            }
+        return _score_tile(
+            a["_id"].to_numpy(),
+            ma,
+            np.linalg.norm(ma, axis=1),
+            b["_id"].to_numpy(),
+            mb,
+            np.linalg.norm(mb, axis=1),
+            threshold,
+            pdf["_bi"].iat[0] == pdf["_bj"].iat[0],
         )
 
     return (
         tagged.groupBy("_bi", "_bj")
-        .applyInPandas(score_tile, schema=out_schema)
+        .applyInPandas(score_tile, schema=_PAIRS_SCHEMA)
         .select("src_id", "dup_id", "score")
     )
 
@@ -164,7 +186,7 @@ def lsh_cosine_pairs(
 
         from tamar_spark.operators.similarity import _projection
 
-        # identical projections to the JVM expression path (same seeds), as
+        # the projections of similarity.sign_lsh_buckets (same seeds), as
         # one dim × (T·B) matrix built once per task
         P = np.array(
             [
@@ -192,17 +214,12 @@ def lsh_cosine_pairs(
         "_id", "_v", F.posexplode("_buckets").alias("_table", "_bucket")
     )
 
-    out_schema = "src_id long, dup_id long, score double"
-
     def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         n = len(pdf)
-        empty = pd.DataFrame({"src_id": [], "dup_id": [], "score": []}).astype(
-            {"src_id": "int64", "dup_id": "int64", "score": "float64"}
-        )
         if n < 2:
-            return empty
+            return _empty_pairs()
         # sort by id: off-diagonal chunk pairs then always have
         # ids_a < ids_b, so the keep-mask never drops a cross-chunk pair
         pdf = pdf.sort_values("_id")
@@ -215,24 +232,16 @@ def lsh_cosine_pairs(
             a = slice(i0, min(i0 + _MAX_CHUNK, n))
             for j0 in range(i0, n, _MAX_CHUNK):
                 b = slice(j0, min(j0 + _MAX_CHUNK, n))
-                sims = (M[a] @ M[b].T) / np.outer(nrm[a], nrm[b])
-                ia, ib = np.nonzero(sims >= threshold)
-                ids_a, ids_b = ids[a][ia], ids[b][ib]
-                keep = ids_a < ids_b
-                if keep.any():
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "src_id": ids_a[keep],
-                                "dup_id": ids_b[keep],
-                                "score": np.round(sims[ia, ib][keep], 6),
-                            }
-                        )
-                    )
-        return pd.concat(outs, ignore_index=True) if outs else empty
+                tile = _score_tile(
+                    ids[a], M[a], nrm[a], ids[b], M[b], nrm[b], threshold,
+                    same_side=True,
+                )
+                if len(tile):
+                    outs.append(tile)
+        return pd.concat(outs, ignore_index=True) if outs else _empty_pairs()
 
     return (
         bucketed.groupBy("_table", "_bucket")
-        .applyInPandas(score_bucket, schema=out_schema)
+        .applyInPandas(score_bucket, schema=_PAIRS_SCHEMA)
         .dropDuplicates(["src_id", "dup_id"])
     )

@@ -1,24 +1,34 @@
 """Similarity search over embedding columns (``array<float>``).
 
-LLM-pipeline extension surface (SURVEY §2.7) — absent in the reference.
+Six top-k operators.  Each index only proposes ``(query, neighbor)``
+candidates; one exact scorer ranks them:
 
-Two tiers:
-- :func:`cosine_topk` — exact brute force.  All math is JVM-side expression
-  code (``zip_with`` + ``aggregate`` fold), no Python in the hot path.  The
-  query side is broadcast; the corpus side streams through — at 100 TB this
-  is one scan, no shuffle until the per-query top-k aggregation, which is
-  tiny (k rows per query).
-- :func:`lsh_topk` — sign-random-projection LSH bucketing with exact rerank
-  inside buckets (multi-probe across ``n_tables`` independent tables).  The
-  scale path: candidate generation is an equi-join on bucket keys instead of
-  a full cross product.  Projections are derived deterministically from
-  ``xxhash64`` so results are reproducible across runs and clusters with no
-  shipped model state.
+- :func:`cosine_topk` — brute force: every corpus row is a candidate of
+  every (broadcast) query.
+- :func:`lsh_topk` — sign-random-projection LSH: the corpus rows sharing
+  a bucket with the query in at least one of ``n_tables`` tables.
+- :func:`ivf_topk` — IVF: the corpus rows in the query's ``n_probe``
+  nearest coarse lists.
+- :func:`pq_topk` — product quantization: the ADC top ``_RERANK`` of a
+  compressed scan of the whole corpus.
+- :func:`ivfpq_topk` — IVF + residual PQ: the ADC top ``_RERANK`` inside
+  the probed lists.
+- :func:`mmr_topk` — the exact top ``n_candidates`` feed one greedy
+  diversification stage.
+
+The scorer is :func:`_exact_rank`: the exact cosine ``⟨q,c⟩/(‖q‖·‖c‖)``
+as a JVM ``zip_with``/``aggregate`` fold, then a per-query
+``row_number`` over (score DESC, neighbor id ASC).  Every float chain is
+an IEEE fold in a fixed order, so the DuckDB oracles replay scores bit
+for bit.  Building a plan runs no Spark job, except the corpus or
+centroid count that sizes a default IVF geometry.
 """
 
 from __future__ import annotations
 
 import math
+from functools import reduce
+from operator import add
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -37,6 +47,10 @@ __all__ = [
     "sign_lsh_buckets",
 ]
 
+# ADC candidates per query that pq_topk and ivfpq_topk pass to the exact
+# scorer: rerank depth, not codebook size, sets their recall
+_RERANK = 50
+
 
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two array columns (JVM fold — no UDF)."""
@@ -51,8 +65,87 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def _as_double(c: Column) -> Column:
-    return c.cast("array<double>")
+def _cosine(a: str, na: str, b: str, nb: str) -> Column:
+    """Exact cosine of array columns ``a`` and ``b`` with norms ``na``, ``nb``."""
+    return dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb))
+
+
+def _side(
+    df: DataFrame, id_col: str, vec_col: str, key: str, tag: str, *carry
+) -> DataFrame:
+    """``(key, *carry, _<tag>v, _<tag>n)``: the id, the ``carry`` columns,
+    the vector as ``array<double>`` and its L2 norm.  ``tag`` is ``c``
+    for the corpus and ``q`` for the queries."""
+    v = f"_{tag}v"
+    return df.select(
+        F.col(id_col).alias(key), *carry, F.col(vec_col).cast("array<double>").alias(v)
+    ).withColumn(f"_{tag}n", l2_norm(F.col(v)))
+
+
+def _dim(
+    corpus: DataFrame, vec_col: str, dim: Optional[int], who: str, n_sub: int = 1
+) -> int:
+    """``dim``, else the ``{"dim": N}`` metadata of the vector field; a
+    plan never infers it, because that would scan the corpus."""
+    if dim is None:
+        dim = corpus.schema[vec_col].metadata.get("dim")
+    if dim is None:
+        raise ValueError(
+            f"{who} needs the embedding dimension: pass dim= or attach "
+            f'{{"dim": N}} metadata to the {vec_col!r} schema field '
+            "(inferring it would run an eager corpus scan at plan time)"
+        )
+    if dim % n_sub:
+        raise ValueError(f"dim {dim} not divisible into {n_sub} subspaces")
+    return dim
+
+
+def _ranked(
+    df: DataFrame, n: int, part: str, score: str, key: str, rank: str
+) -> DataFrame:
+    """The rows numbered 1..``n`` in column ``rank`` by ``row_number``
+    over (``score`` DESC, ``key`` ASC) within each ``part``."""
+    w = Window.partitionBy(part).orderBy(F.col(score).desc(), F.col(key).asc())
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= n)
+
+
+def _exact_rank(
+    pairs: DataFrame,
+    n: int,
+    query_id_col: str,
+    key: str = "neighbor_id",
+    score: str = "score",
+    rank: str = "rank",
+) -> DataFrame:
+    """The scorer: each query's top ``n`` candidate rows by exact cosine.
+    ``pairs`` carries both vectors and norms (``_qv, _qn, _cv, _cn``)."""
+    scored = pairs.withColumn(score, _cosine("_qv", "_qn", "_cv", "_cn"))
+    return _ranked(scored, n, query_id_col, score, key, rank)
+
+
+def _exact_topk(pairs: DataFrame, k: int, query_id_col: str, *extra) -> DataFrame:
+    """``(query_id, neighbor_id, *extra, score, rank)``: :func:`_exact_rank`
+    with the score rounded to 6 places and an int rank."""
+    return _exact_rank(pairs, k, query_id_col).select(
+        query_id_col,
+        "neighbor_id",
+        *extra,
+        F.round("score", 6).alias("score"),
+        F.col("rank").cast("int").alias("rank"),
+    )
+
+
+def _all_pairs(
+    c: DataFrame,
+    q: DataFrame,
+    query_id_col: str,
+    key: str = "neighbor_id",
+    cond: Optional[Column] = None,
+) -> DataFrame:
+    """Brute-force candidates: every corpus row against every broadcast
+    query except itself, narrowed by ``cond``."""
+    on = F.col(key) != F.col(query_id_col)
+    return c.join(F.broadcast(q), on if cond is None else on & cond)
 
 
 def cosine_topk(
@@ -63,36 +156,16 @@ def cosine_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+    """Exact top-k cosine neighbors for each query vector:
+    ``(query_id, neighbor_id, score, rank)``.
 
     ``queries`` is broadcast (it must be small — the query set); the corpus
-    scan is embarrassingly parallel; ranking is a per-query window over at
-    most |corpus| rows, reduced early by Spark's TakeOrdered when possible.
+    scan is embarrassingly parallel; ranking is a per-query window.
     Deterministic tie-break: (score DESC, neighbor id ASC).
     """
-    q = queries.select(
-        F.col(id_col).alias(query_id_col), _as_double(F.col(vec_col)).alias("_qv")
-    ).withColumn("_qn", l2_norm(F.col("_qv")))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("_cv")
-    ).withColumn("_cn", l2_norm(F.col("_cv")))
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col(query_id_col))
-        .withColumn("score", dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            "neighbor_id",
-            F.round("score", 6).alias("score"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    c = _side(corpus, id_col, vec_col, "neighbor_id", "c")
+    q = _side(queries, id_col, vec_col, query_id_col, "q")
+    return _exact_topk(_all_pairs(c, q, query_id_col), k, query_id_col)
 
 
 def mmr_topk(
@@ -108,23 +181,17 @@ def mmr_topk(
 ) -> DataFrame:
     """Maximal-marginal-relevance diversified top-k (Carbonell & Goldstein):
     greedily pick ``k`` results maximizing ``lam·rel(q,d) −
-    mu·max_{s∈selected} sim(d,s)`` — the diversified-retrieval /
-    representative-sampling primitive (pick k EXAMPLES that cover a
-    neighborhood, not k near-copies of the single best hit).
+    mu·max_{s∈selected} sim(d,s)``.
 
     Two stages:
-    1. Candidate generation — exact cosine top-``n_candidates`` per query
-       (broadcast query side, one corpus scan, per-query window).  At
-       100 TB this is the only stage that touches the corpus.
-    2. Greedy selection — ONE cogrouped-pandas stage over the candidate
-       set and its pair sims, both bounded at ``n_queries ×
-       n_candidates`` rows (``× n_candidates`` for pairs), NEVER
-       corpus-sized; the per-query greedy walk is inherently sequential
-       in ``k``, so it runs inside the stage instead of as ``k``
-       unrolled plan rounds (r16 — the rounds were pure plan machinery:
-       43 stages → 10, −57% wall).
+    1. Candidates — the exact cosine top-``n_candidates`` per query
+       (broadcast query side, one corpus scan, per-query window).  This
+       is the only stage that touches the corpus.
+    2. Greedy selection — one cogrouped-pandas stage over the candidates
+       and their pair sims, at most ``n_queries × n_candidates`` rows
+       (``× n_candidates`` for pairs), never corpus-sized.
 
-    ``lam`` and ``mu`` are passed separately (NOT ``1 − lam``) so both
+    ``lam`` and ``mu`` are passed separately (not ``1 − lam``) so both
     engines parse the same decimal literal — ``1 − 0.7`` in IEEE double is
     0.30000000000000004, which would diverge from SQL's ``0.3``.
     Deterministic: argmax ties break on candidate id; float chains are
@@ -133,32 +200,19 @@ def mmr_topk(
     ``pick`` = 1-based selection order; ``pick`` 1 is the raw top-1 (its
     mmr_score = relevance; no penalty term yet).  Raises ``ValueError``
     (inside the selection stage) when a query's candidate ids repeat."""
-    q = queries.select(
-        F.col(id_col).alias(query_id_col),
-        _as_double(F.col(vec_col)).alias("_qv"),
-    ).withColumn("_qn", l2_norm(F.col("_qv")))
-    c = corpus.select(
-        F.col(id_col).alias("cand"), _as_double(F.col(vec_col)).alias("_cv")
-    ).withColumn("_cn", l2_norm(F.col("_cv")))
-    scored = c.join(
-        F.broadcast(q), F.col("cand") != F.col(query_id_col)
-    ).withColumn(
-        "rel", dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    )
-    w_rel = Window.partitionBy(query_id_col).orderBy(
-        F.col("rel").desc(), F.col("cand").asc()
-    )
-    # localCheckpoint: cands and pairs are re-referenced by every greedy
-    # round; without truncation Catalyst re-derives the corpus scan per
-    # round branch.  All checkpoints in this kernel are LAZY (eager=False,
-    # r15): the greedy loop is pure plan construction, and the one action
-    # that consumes the final selection materializes the whole checkpoint
-    # chain inside a single job — the eager form ran one fixed-cost job
-    # per round (k+1 jobs of scheduler/AQE machinery for candidate-bounded
-    # data that never exceeds n_queries × n_candidates rows).
+    q = _side(queries, id_col, vec_col, query_id_col, "q")
+    c = _side(corpus, id_col, vec_col, "cand", "c")
+    # lazy checkpoints: the selection reads cands twice (slim and pairs),
+    # and the one action that consumes it materializes both in one job
     cands = (
-        scored.withColumn("_rnk", F.row_number().over(w_rel))
-        .filter(F.col("_rnk") <= n_candidates)
+        _exact_rank(
+            _all_pairs(c, q, query_id_col, "cand"),
+            n_candidates,
+            query_id_col,
+            key="cand",
+            score="rel",
+            rank="_rnk",
+        )
         .select(query_id_col, "cand", "rel", "_cv", "_cn")
         .localCheckpoint(eager=False)
     )
@@ -179,32 +233,15 @@ def mmr_topk(
             b,
             (F.col(query_id_col) == F.col("_qb")) & (F.col("ca") != F.col("cb")),
         )
-        .withColumn(
-            "sim",
-            dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")),
-        )
+        .withColumn("sim", _cosine("_va", "_na", "_vb", "_nb"))
         .select(query_id_col, "ca", "cb", "sim")
         .localCheckpoint(eager=False)
     )
     slim = cands.select(query_id_col, "cand", "rel")
-    # Greedy selection in ONE cogrouped stage (r16).  The k unrolled
-    # DataFrame rounds were pure fixed cost: each round an anti-join, a
-    # pair join + aggregate and a per-query window over a candidate set
-    # bounded at n_queries × n_candidates rows — ~8 plan operators per
-    # round and a lazy-checkpoint chain, dominating wall-clock at any SF
-    # (scaling ratio 0.37: FASTER at 8 cores than 32).  The selection is
-    # inherently sequential in k, so instead of k plan rounds it runs as
-    # one `cogroup().applyInPandas` over (candidates, pair sims) per
-    # query — the shuffled data is the same candidate-bounded set, the
-    # plan is one exchange per side plus one Python stage.
-    #
-    # Float identity with the unrolled form (the declared oracle pins
-    # results to 1e-6 but we keep exact bit parity): rel and sim stay
-    # Spark-computed upstream (same zip_with/aggregate fold), and the
-    # only arithmetic here — lam·rel − mu·maxsim — is the same two IEEE
-    # multiplies and subtract.  Comparison semantics mirror Spark
-    # ordering: DESC ranks NaN above everything, F.max treats NaN as
-    # largest, ties break on candidate id ascending.
+    # rel and sim are Spark-computed upstream; the only arithmetic in the
+    # stage is lam·rel − mu·maxsim (two IEEE multiplies and a subtract).
+    # Comparisons mirror Spark ordering: DESC ranks NaN above everything,
+    # F.max treats NaN as largest, ties break on candidate id ascending.
     import pandas as pd  # noqa: F401  (applyInPandas contract)
     from pyspark.sql.types import (
         DoubleType,
@@ -257,7 +294,7 @@ def mmr_topk(
                     if c in sel:
                         continue
                     sims = [sim[(c, s)] for s in sel if (c, s) in sim]
-                    if not sims:  # inner-join semantics of the unrolled form
+                    if not sims:  # a candidate with no pair sim is skipped
                         continue
                     maxsim = sims[0]
                     for v in sims[1:]:
@@ -309,23 +346,26 @@ def _projection(dim: int, table: int, bit: int) -> list:
 
 
 def sign_lsh_buckets(vec: Column, dim: int, n_tables: int, n_bits: int) -> Column:
-    """``array<int>`` of one sign-random-projection bucket id per table.
+    """``array<int>`` of one sign-random-projection bucket id per table:
+    bit ``b`` of table ``t`` is set when ``⟨vec, _projection(dim, t, b)⟩
+    ≥ 0``.  Projections are seeded by (table, bit), so bucket ids are
+    reproducible across runs and clusters with no shipped model state.
 
-    Pure JVM expression (literal projection vectors + ``zip_with`` folds) —
-    shared by :func:`lsh_topk` (ANN search) and
-    :func:`tamar_spark.operators.dedup_embedding.lsh_cosine_pairs`
-    (near-dup candidate generation).  Projections are derived
-    deterministically from hashed (table, bit) seeds, so bucket ids are
-    reproducible across runs and clusters with no shipped model state."""
-    keys = []
-    for t in range(n_tables):
-        bit_terms = None
-        for b in range(n_bits):
-            proj = F.array(*[F.lit(x) for x in _projection(dim, t, b)])
-            sgn = F.when(dot(vec, proj) >= 0, F.lit(1 << b)).otherwise(F.lit(0))
-            bit_terms = sgn if bit_terms is None else bit_terms + sgn
-        keys.append(bit_terms)
-    return F.array(*keys)
+    One ``F.expr`` over one SQL string: ``vec`` enters by its SQL text,
+    each projection as ``repr(x)D`` double literals, and each dot product
+    is :func:`dot`'s left-to-right ``aggregate(zip_with(...))`` fold, which
+    ``queries._lsh_topk_oracle`` replays."""
+    v = vec._jc.toString()
+
+    def bit(t: int, b: int) -> str:
+        proj = ", ".join(f"{x!r}D" for x in _projection(dim, t, b))
+        return (
+            f"CASE WHEN aggregate(zip_with({v}, array({proj}), (x, y) -> x * y), "
+            f"0.0D, (x, y) -> x + y) >= 0 THEN {1 << b} ELSE 0 END"
+        )
+
+    tables = (" + ".join(bit(t, b) for b in range(n_bits)) for t in range(n_tables))
+    return F.expr(f"array({', '.join(tables)})")
 
 
 def lsh_topk(
@@ -344,75 +384,114 @@ def lsh_topk(
     Each table hashes a vector to an ``n_bits`` sign bucket; a query only
     compares against corpus vectors sharing a bucket in at least one table.
     Recall improves with ``n_tables``; cost scales with bucket occupancy
-    (~n / 2^n_bits per table).  Rerank inside candidates is exact cosine
+    (~n / 2^n_bits per table).  Candidates are ranked by the exact cosine
     with the same deterministic tie-break as :func:`cosine_topk`.
 
     ``dim`` is required unless the ``vec_col`` schema field carries a
-    ``{"dim": N}`` metadata entry — plan construction never runs a Spark
-    job (an eager ``first()`` here would full-scan at 100 TB scale).
+    ``{"dim": N}`` metadata entry.
     """
-    if dim is None:
-        dim = corpus.schema[vec_col].metadata.get("dim")
-    if dim is None:
-        raise ValueError(
-            "lsh_topk needs the embedding dimension: pass dim= or attach "
-            f'{{"dim": N}} metadata to the {vec_col!r} schema field '
-            "(inferring it would run an eager corpus scan at plan time)"
-        )
+    dim = _dim(corpus, vec_col, dim, "lsh_topk")
+    c = _side(corpus, id_col, vec_col, "neighbor_id", "c")
+    q = _side(queries, id_col, vec_col, query_id_col, "q")
 
-    def bucket_expr(vec: Column) -> Column:
-        return sign_lsh_buckets(vec, dim, n_tables, n_bits)
+    def bucketed(side: DataFrame, vec: str) -> DataFrame:
+        buckets = sign_lsh_buckets(F.col(vec), dim, n_tables, n_bits)
+        return side.select("*", F.posexplode(buckets).alias("table", "bucket"))
 
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("_cv")
-    ).withColumn("_cn", l2_norm(F.col("_cv")))
-    q = queries.select(
-        F.col(id_col).alias(query_id_col), _as_double(F.col(vec_col)).alias("_qv")
-    ).withColumn("_qn", l2_norm(F.col("_qv")))
-
-    c_b = c.select(
-        "*", F.posexplode(bucket_expr(F.col("_cv"))).alias("table", "bucket")
-    )
-    q_b = q.select(
-        "*", F.posexplode(bucket_expr(F.col("_qv"))).alias("table", "bucket")
-    )
     cand = (
-        c_b.join(F.broadcast(q_b), ["table", "bucket"])
+        bucketed(c, "_cv")
+        .join(F.broadcast(bucketed(q, "_qv")), ["table", "bucket"])
         .filter(F.col("neighbor_id") != F.col(query_id_col))
         .select(query_id_col, "neighbor_id", "_qv", "_qn", "_cv", "_cn")
         .dropDuplicates([query_id_col, "neighbor_id"])
     )
-    scored = cand.withColumn(
-        "score", dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            "neighbor_id",
-            F.round("score", 6).alias("score"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _exact_topk(cand, k, query_id_col)
 
 
 def ivf_geometry(n: int) -> tuple:
-    """Size-derived IVF geometry (r9 VERDICT task 3): ``nlist = ⌈√n⌉``
-    (the standard IVF sizing rule — list length ~√n balances the
-    centroid-compare cost against the probed-list scan) and
-    ``nprobe = ⌈nlist/4⌉`` (a fixed 1/4 scan fraction, the operating
-    point BASELINE.md's recall curve records: with the order-stable
-    md5-sampled centroids, finer geometry at the SAME scan fraction
-    strictly improves recall@5 — 0.465 → 0.57 raw at sf0.1 — because
-    more random lists average out assignment noise).  At 100 TB swap in
-    k-means-trained ``centroids=`` and lower the probe fraction; the
-    derivation is only the untrained default."""
+    """Size-derived IVF geometry: ``nlist = ⌈√n⌉`` (list length ~√n
+    balances the centroid compare against the probed-list scan) and
+    ``nprobe = ⌈nlist/4⌉``, a fixed 1/4 scan fraction.  This is only the
+    untrained default; at scale pass k-means-trained centroids and a
+    lower probe fraction."""
     nlist = max(1, math.ceil(math.sqrt(max(0, n))))
     return nlist, max(1, math.ceil(nlist / 4))
+
+
+def _md5_seed(c: DataFrame, n: int, prefix: str = "") -> DataFrame:
+    """The ``n`` corpus rows with the smallest ``md5(prefix || id)`` hex
+    digest, kept as ``_h``: an order-stable sample that DuckDB picks
+    identically.  Compiles to one TakeOrderedAndProject."""
+    key = F.col("neighbor_id").cast("string")
+    if prefix:
+        key = F.concat(F.lit(prefix), key)
+    return c.withColumn("_h", F.md5(key)).orderBy("_h", "neighbor_id").limit(n)
+
+
+def _ordinal(name: str) -> Column:
+    """0-based position of a :func:`_md5_seed` row in (``_h``, id) order;
+    the window runs over at most ``n`` rows."""
+    return (F.row_number().over(Window.orderBy("_h", "neighbor_id")) - 1).alias(name)
+
+
+def _coarse(
+    corpus: DataFrame,
+    c: DataFrame,
+    n_centroids: Optional[int],
+    n_probe: Optional[int],
+    centroids: Optional[DataFrame],
+) -> tuple:
+    """``(cents, n_probe)``: the coarse centroid table
+    ``(list_id, _cent, _cent_n)`` and the probe count.
+
+    A trained ``centroids`` table is used as given, and the default
+    ``n_probe`` is ``⌈centroids.count()/4⌉``: the 1/4 scan fraction of
+    the trained list count, and the corpus is never counted.  Otherwise
+    the centroids are the ``n_centroids`` md5-seed rows of ``c``, and
+    a missing ``n_centroids`` or ``n_probe`` comes from
+    :func:`ivf_geometry` over one corpus count."""
+    if centroids is not None:
+        if n_probe is None:
+            n_probe = max(1, math.ceil(centroids.count() / 4))
+        return centroids, n_probe
+    if n_centroids is None or n_probe is None:
+        d_nlist, d_nprobe = ivf_geometry(corpus.count())
+        n_centroids = d_nlist if n_centroids is None else n_centroids
+        n_probe = d_nprobe if n_probe is None else n_probe
+    cents = _md5_seed(c, n_centroids).select(
+        _ordinal("list_id"),
+        F.col("_cv").alias("_cent"),
+        F.col("_cn").alias("_cent_n"),
+    )
+    return cents, n_probe
+
+
+def _to_centroids(rows: DataFrame, cents: DataFrame, tag: str) -> DataFrame:
+    """Each row against every broadcast centroid, with the cosine of its
+    ``_<tag>v`` vector to the centroid as ``_s``."""
+    return rows.join(F.broadcast(cents)).withColumn(
+        "_s", _cosine(f"_{tag}v", f"_{tag}n", "_cent", "_cent_n")
+    )
+
+
+def _probe(
+    q: DataFrame,
+    cents: DataFrame,
+    n_probe: int,
+    query_id_col: str,
+    rank: str,
+    *keep,
+    **extra,
+) -> DataFrame:
+    """``(query_id, list_id, *keep)`` for each query's ``n_probe`` nearest
+    lists (ties on the lower list id); ``extra`` columns are computed on
+    the (query, centroid) rows before ranking."""
+    lists = _to_centroids(q, cents, "q")
+    for name, col in extra.items():
+        lists = lists.withColumn(name, col)
+    return _ranked(lists, n_probe, query_id_col, "_s", "list_id", rank).select(
+        query_id_col, "list_id", *keep
+    )
 
 
 def ivf_topk(
@@ -428,129 +507,125 @@ def ivf_topk(
 ) -> DataFrame:
     """Approximate top-k via IVF (inverted-file) coarse quantization.
 
-    Structure: assign every corpus vector to its nearest of ``n_centroids``
-    coarse centroids (the inverted lists); a query probes only its
-    ``n_probe`` nearest lists and reranks those candidates exactly.  Probing
-    ``n_probe/n_centroids`` of the corpus cuts scored pairs ~proportionally —
-    the classic FAISS-style IVF trade-off, here as pure DataFrame ops:
+    Every corpus vector is assigned to its nearest coarse centroid (a
+    per-row ``min_by`` over the broadcast centroid table, no corpus
+    shuffle); a query probes its ``n_probe`` nearest lists, and the rows
+    of those lists (an equi-join on ``list_id``) are its candidates.
 
-    - centroid assignment: broadcast the (tiny) centroid table, per-row
-      ``min_by`` over the scored cross product — no shuffle of the corpus;
-    - the inverted "lists" are just a ``list_id`` column; the candidate
-      generation is an equi-join on it (hash-shuffled at scale, or broadcast
-      when the probed query set is small);
-    - rerank: exact cosine, deterministic (score DESC, id ASC) tie-break.
-
-    Default centroid seed: the ``n_centroids`` corpus rows with the
-    smallest ``md5(id)`` hex digest — an order-stable deterministic sample
-    (r2 ADVICE fix: the previous ``filter().limit()`` pick was
-    partition-layout-dependent, as was ``monotonically_increasing_id`` for
-    ``list_id``).  md5 rather than xxhash64 so the DuckDB oracle can
-    reproduce the identical pick (both engines agree on md5 hex of the
-    same string).  ``orderBy(hash).limit(n)`` compiles to
-    TakeOrderedAndProject — a per-partition top-n heap + single merge, NOT
-    a full sort shuffle — and the hash ordering spreads picks across the
-    id space.  ``list_id`` is a ``row_number`` over the ≤n_centroids-row
-    seed, so assignments are reproducible across partition layouts and
-    AQE decisions.  Lazy: no Spark job runs at plan-construction time
-    with explicit geometry; the size-derived default costs exactly one
-    corpus-count pre-flight (pinned in the laziness contract test).
-    At 100 TB pass ``centroids=`` an offline-trained k-means table (e.g.
-    ``pyspark.ml.clustering.KMeans`` on a sample) with columns
-    ``(list_id, _cent, _cent_n)`` — the plan shape and everything
-    downstream of the centroid table is unchanged.
-
-    ``n_centroids`` / ``n_probe`` default to the SIZE-DERIVED geometry
-    (:func:`ivf_geometry` — one corpus count as the pre-flight, the
-    same measured-condition pattern as the k-core broadcast pick and
-    SemDeDup's in-plan ``k``); pass explicit values to pin a geometry.
-    With a trained ``centroids=`` table the default ``n_probe`` is
-    ``⌈centroids.count()/4⌉`` — the trained table's OWN list count, so
-    the 1/4 scan-fraction contract holds whatever nlist was trained —
-    and the corpus is never counted (r10 ADVICE).
+    Centroids are the :func:`_coarse` table: by default the
+    ``n_centroids`` corpus rows with the smallest ``md5(id)`` (an
+    order-stable sample DuckDB reproduces), numbered by ``row_number``,
+    so assignments do not depend on partition layout.  ``n_centroids``
+    and ``n_probe`` default to :func:`ivf_geometry` over one corpus
+    count; explicit values make plan construction run no job.  At scale
+    pass ``centroids=`` an offline-trained table with columns
+    ``(list_id, _cent, _cent_n)``; the default ``n_probe`` then follows
+    its own row count.
     """
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("_cv")
-    ).withColumn("_cn", l2_norm(F.col("_cv")))
-    q = queries.select(
-        F.col(id_col).alias(query_id_col), _as_double(F.col(vec_col)).alias("_qv")
-    ).withColumn("_qn", l2_norm(F.col("_qv")))
-    if centroids is not None:
-        # Trained-centroid path (r10 ADVICE): the list count is the
-        # CENTROID table's row count, not ⌈√corpus⌉ — deriving nprobe
-        # from the corpus would silently break the documented 1/4-of-
-        # nlist scan fraction whenever the trained nlist differs (and
-        # pay a corpus-count pre-flight whose nlist is then unused).
-        # The centroid table is broadcast-small by contract, so this
-        # count is a cheap pre-flight; pass explicit n_probe to skip it.
-        if n_probe is None:
-            n_probe = max(1, math.ceil(centroids.count() / 4))
-    elif n_centroids is None or n_probe is None:
-        d_nlist, d_nprobe = ivf_geometry(corpus.count())
-        n_centroids = d_nlist if n_centroids is None else n_centroids
-        n_probe = d_nprobe if n_probe is None else n_probe
-
-    if centroids is not None:
-        cents = centroids
-    else:
-        seed = (
-            c.withColumn("_h", F.md5(F.col("neighbor_id").cast("string")))
-            .orderBy("_h", "neighbor_id")
-            .limit(n_centroids)
-        )
-        # the seed is ≤ n_centroids rows, so the unpartitioned window is a
-        # single tiny task, not a data funnel
-        cents = seed.select(
-            (
-                F.row_number().over(Window.orderBy("_h", "neighbor_id")) - 1
-            ).alias("list_id"),
-            F.col("_cv").alias("_cent"),
-            F.col("_cn").alias("_cent_n"),
-        )
-    sim_to_cent = dot(F.col("_cv"), F.col("_cent")) / (F.col("_cn") * F.col("_cent_n"))
+    c = _side(corpus, id_col, vec_col, "neighbor_id", "c")
+    q = _side(queries, id_col, vec_col, query_id_col, "q")
+    cents, n_probe = _coarse(corpus, c, n_centroids, n_probe, centroids)
     assigned = (
-        c.join(F.broadcast(cents))
-        .withColumn("_s", sim_to_cent)
+        _to_centroids(c, cents, "c")
         .groupBy("neighbor_id")
         .agg(
-            F.min_by("list_id", F.struct((-F.col("_s")).alias("s"), "list_id")).alias("list_id"),
+            F.min_by(
+                "list_id", F.struct((-F.col("_s")).alias("s"), "list_id")
+            ).alias("list_id"),
             F.first("_cv").alias("_cv"),
             F.first("_cn").alias("_cn"),
         )
     )
-    q_sim = dot(F.col("_qv"), F.col("_cent")) / (F.col("_qn") * F.col("_cent_n"))
-    q_lists = (
-        q.join(F.broadcast(cents))
-        .withColumn("_s", q_sim)
-        .withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy(query_id_col).orderBy(F.col("_s").desc(), "list_id")
-            ),
-        )
-        .filter(F.col("_rk") <= n_probe)
-        .select(query_id_col, "list_id", "_qv", "_qn")
+    q_lists = _probe(q, cents, n_probe, query_id_col, "_rk", "_qv", "_qn")
+    cand = assigned.join(q_lists, "list_id").filter(
+        F.col("neighbor_id") != F.col(query_id_col)
     )
-    cand = (
-        assigned.join(q_lists, "list_id")
-        .filter(F.col("neighbor_id") != F.col(query_id_col))
+    return _exact_topk(cand, k, query_id_col)
+
+
+def _chunks(vec: Column, n_sub: int, sub_dim: int) -> Column:
+    return F.array(*[F.slice(vec, m * sub_dim + 1, sub_dim) for m in range(n_sub)])
+
+
+def _codebook(seed: DataFrame, vec: str, n_sub: int, sub_dim: int) -> DataFrame:
+    """``(code, m, _ce)``: subvector ``m`` of seed row ``code``'s ``vec``."""
+    return seed.select(_ordinal("code"), F.col(vec)).select(
+        "code", F.posexplode(_chunks(F.col(vec), n_sub, sub_dim)).alias("m", "_ce")
     )
-    scored = cand.withColumn(
-        "score", dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
+
+
+def _encode(
+    rows: DataFrame,
+    cbook: DataFrame,
+    vec: str,
+    chunk: str,
+    n_sub: int,
+    sub_dim: int,
+    *carry,
+) -> DataFrame:
+    """``(neighbor_id, m, code, *carry)``: the nearest code word of each
+    subvector by ``d² = (⟨x,x⟩ − 2⟨x,ce⟩) + ⟨ce,ce⟩``, ties on the lower
+    code."""
+    x, ce = F.col(chunk), F.col("_ce")
+    d2 = (dot(x, x) - 2 * dot(x, ce)) + dot(ce, ce)
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
+        rows.select(
             "neighbor_id",
-            F.round("score", 6).alias("score"),
-            F.col("rank").cast("int").alias("rank"),
+            *carry,
+            F.posexplode(_chunks(F.col(vec), n_sub, sub_dim)).alias("m", chunk),
+        )
+        .join(F.broadcast(cbook), "m")
+        .withColumn("_d2", d2)
+        .groupBy("neighbor_id", "m")
+        .agg(
+            F.min_by("code", F.struct("_d2", "code")).alias("code"),
+            *[F.first(col).alias(col) for col in carry],
         )
     )
+
+
+def _lut(
+    q: DataFrame, cbook: DataFrame, query_id_col: str, n_sub: int, sub_dim: int
+) -> DataFrame:
+    """``(query_id, m, code, _p)``: the ADC lookup table, ``⟨q_m, ce⟩`` for
+    every query subvector and code word."""
+    return (
+        q.select(
+            query_id_col,
+            F.posexplode(_chunks(F.col("_qv"), n_sub, sub_dim)).alias("m", "_qh"),
+        )
+        .join(F.broadcast(cbook), "m")
+        .select(query_id_col, "m", "code", dot(F.col("_qh"), F.col("_ce")).alias("_p"))
+    )
+
+
+def _adc(
+    parts: DataFrame, query_id_col: str, n_sub: int, *first, start: Optional[str] = None
+) -> tuple:
+    """``(pivot, ip)``: one row per (query, neighbor) with the ``first``
+    columns and the partials ``_p0..``, and the ADC inner product that
+    adds them in subspace order after ``start`` (never a ``sum()`` whose
+    order the engine picks)."""
+    pivot = parts.groupBy(query_id_col, "neighbor_id").agg(
+        *[F.first(col).alias(col) for col in first],
+        *[
+            F.sum(F.when(F.col("m") == j, F.col("_p"))).alias(f"_p{j}")
+            for j in range(n_sub)
+        ],
+    )
+    terms = [F.col(f"_p{j}") for j in range(n_sub)]
+    return pivot, reduce(add, [F.col(start)] + terms if start else terms)
+
+
+def _rerank(
+    adc: DataFrame, c: DataFrame, q: DataFrame, k: int, query_id_col: str
+) -> DataFrame:
+    """The exact top-k of each query's ADC top-``_RERANK`` candidates."""
+    cand = _ranked(adc, _RERANK, query_id_col, "score", "neighbor_id", "_rk").select(
+        query_id_col, "neighbor_id"
+    )
+    pairs = cand.join(c, "neighbor_id").join(F.broadcast(q), query_id_col)
+    return _exact_topk(pairs, k, query_id_col)
 
 
 def pq_topk(
@@ -563,144 +638,40 @@ def pq_topk(
     n_sub: int = 4,
     n_codes: int = 16,
     dim: Optional[int] = None,
-    rerank: Optional[int] = None,
 ) -> DataFrame:
-    """Approximate top-k via product quantization (PQ) with ADC scoring.
+    """Approximate top-k via product quantization (PQ) with ADC pruning.
 
-    The memory-bound tier of the ANN family: each vector is compressed to
-    ``n_sub`` codebook indices (here 4×4 bits = 2 bytes vs 256 bytes of
-    floats — a 128× compression), and query-to-vector inner products are
-    approximated **asymmetrically** (ADC, Jégou et al. 2011): the exact
-    query chunk is dotted against each subspace codebook once, producing a
-    per-query lookup table of ``n_sub × n_codes`` partial scores; scoring a
-    compressed vector is then ``n_sub`` table lookups + adds, no float
-    vector ever touched.
+    Each vector is compressed to ``n_sub`` codebook indices, and the
+    query-to-vector inner product is approximated asymmetrically (ADC,
+    Jégou et al. 2011): each query subvector is dotted against its
+    subspace's codebook once, and a compressed vector scores as ``n_sub``
+    table lookups added in subspace order.
 
-    As DataFrame ops:
-    - codebooks: deterministic seed (the ``n_codes`` corpus rows with
-      smallest ``md5(id)``, the IVF pattern) sliced into per-subspace
-      chunks — a ≤``n_sub·n_codes``-row broadcast table.
-    - encode (one-off, amortized across queries): corpus chunks ⋈
-      broadcast codebook, nearest code per (vector, subspace) by squared
-      L2 — no shuffle of the corpus beyond the tiny per-key ``min_by``.
-    - ADC scan: the code table ⋈ broadcast LUT is a map-side join; the
-      only shuffle is the per-(query, neighbor) 4-row rollup and the
-      per-query top-k — both on well-distributed keys.
-    - rerank (default ``4·k``, ``rerank=0`` for pure ADC): the ADC scan
-      PRUNES to the top-``rerank`` candidates, which are then scored by
-      exact cosine — the standard PQ+rerank pipeline.  Compression this
-      coarse (n_codes^n_sub cells) collapses ultra-close neighbors onto
-      one code word, so pure ADC cannot order within a tight cluster;
-      rerank touches only R float vectors per query and restores exact
-      ordering among survivors.
+    - codebooks: the ``n_codes`` corpus rows with the smallest
+      ``md5(id)`` (the IVF seed), sliced into ``n_sub`` subvectors — a
+      broadcast table of at most ``n_sub·n_codes`` rows;
+    - encode: each corpus subvector takes its nearest code word by
+      squared L2;
+    - ADC scan: the code table joins the broadcast lookup table map-side;
+      the per-(query, neighbor) rollup and the prune are the shuffles;
+    - the ADC top ``_RERANK`` per query are ranked by exact cosine.
+      Coarse codes collapse near neighbors onto one code word, so ADC
+      prunes and the exact scorer orders.
 
-    Determinism: every float op is an exactly-rounded IEEE double op in a
-    FIXED order — ``d² = (⟨x,x⟩ − 2⟨x,c⟩) + ⟨c,c⟩`` left-to-right, the ADC
-    sum added in subspace order (never a ``sum()`` whose order the engine
-    chooses) — so the DuckDB twin replays scores bitwise and ties break on
-    (score DESC, id).
+    Every float op is an exactly-rounded IEEE double op in a fixed order,
+    so the DuckDB twin replays scores bitwise.
     """
-    if dim is None:
-        dim = corpus.schema[vec_col].metadata.get("dim")
-    if dim is None:
-        raise ValueError(
-            "pq_topk needs the embedding dimension: pass dim= or attach "
-            f'{{"dim": N}} metadata to the {vec_col!r} schema field'
-        )
-    if dim % n_sub:
-        raise ValueError(f"dim {dim} not divisible into {n_sub} subspaces")
-    sub_dim = dim // n_sub
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("_cv")
-    )
-    q = queries.select(
-        F.col(id_col).alias(query_id_col), _as_double(F.col(vec_col)).alias("_qv")
-    )
-
-    def chunks(vec: Column) -> Column:
-        return F.array(*[F.slice(vec, m * sub_dim + 1, sub_dim) for m in range(n_sub)])
-
-    seed = (
-        c.withColumn("_h", F.md5(F.col("neighbor_id").cast("string")))
-        .orderBy("_h", "neighbor_id")
-        .limit(n_codes)
-    )
-    cents = seed.select(
-        (F.row_number().over(Window.orderBy("_h", "neighbor_id")) - 1).alias("code"),
-        F.col("_cv"),
-    )
-    codebooks = cents.select(
-        "code", F.posexplode(chunks(F.col("_cv"))).alias("m", "_ce")
-    )
-
-    d2 = (
-        dot(F.col("_ch"), F.col("_ch")) - 2 * dot(F.col("_ch"), F.col("_ce"))
-    ) + dot(F.col("_ce"), F.col("_ce"))
-    c_chunks = c.select(
-        "neighbor_id", F.posexplode(chunks(F.col("_cv"))).alias("m", "_ch")
-    )
-    codes = (
-        c_chunks.join(F.broadcast(codebooks), "m")
-        .withColumn("_d2", d2)
-        .groupBy("neighbor_id", "m")
-        .agg(F.min_by("code", F.struct("_d2", "code")).alias("code"))
-    )
-
-    q_chunks = q.select(
-        query_id_col, F.posexplode(chunks(F.col("_qv"))).alias("m", "_qh")
-    )
-    lut = q_chunks.join(F.broadcast(codebooks), "m").select(
-        query_id_col, "m", "code", dot(F.col("_qh"), F.col("_ce")).alias("_p")
-    )
+    sub_dim = _dim(corpus, vec_col, dim, "pq_topk", n_sub) // n_sub
+    c = _side(corpus, id_col, vec_col, "neighbor_id", "c")
+    q = _side(queries, id_col, vec_col, query_id_col, "q")
+    cbook = _codebook(_md5_seed(c, n_codes), "_cv", n_sub, sub_dim)
+    codes = _encode(c, cbook, "_cv", "_ch", n_sub, sub_dim)
+    lut = _lut(q, cbook, query_id_col, n_sub, sub_dim)
     parts = codes.join(F.broadcast(lut), ["m", "code"]).filter(
         F.col("neighbor_id") != F.col(query_id_col)
     )
-    pivot = parts.groupBy(query_id_col, "neighbor_id").agg(
-        *[
-            F.sum(F.when(F.col("m") == j, F.col("_p"))).alias(f"_p{j}")
-            for j in range(n_sub)
-        ]
-    )
-    score = F.col("_p0")
-    for j in range(1, n_sub):
-        score = score + F.col(f"_p{j}")
-    scored = pivot.withColumn("score", score)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    if rerank is None:
-        rerank = 4 * k
-    if rerank:
-        # PQ's resolution is n_codes^n_sub cells: ultra-close neighbors
-        # collapse to one code word and tie under ADC, so the compressed
-        # scan is a PRUNER, not a ranker.  Keep the ADC top-``rerank`` and
-        # rank those exactly — only R float vectors per query are touched.
-        cand = (
-            scored.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= rerank)
-            .select(query_id_col, "neighbor_id")
-        )
-        cw = c.withColumn("_cn", l2_norm(F.col("_cv")))
-        qw = q.withColumn("_qn", l2_norm(F.col("_qv")))
-        scored = (
-            cand.join(cw, "neighbor_id")
-            .join(F.broadcast(qw), query_id_col)
-            .withColumn(
-                "score",
-                dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")),
-            )
-        )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            "neighbor_id",
-            F.round("score", 6).alias("score"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    pivot, ip = _adc(parts, query_id_col, n_sub)
+    return _rerank(pivot.withColumn("score", ip), c, q, k, query_id_col)
 
 
 def ivfpq_topk(
@@ -715,125 +686,38 @@ def ivfpq_topk(
     n_sub: int = 4,
     n_codes: int = 16,
     dim: Optional[int] = None,
-    rerank: int = 50,
     centroids: Optional[DataFrame] = None,
 ) -> DataFrame:
-    """IVF+PQ composed (Jégou et al. 2011, the FAISS ``IVFPQ`` shape) —
-    the production ANN tier at 100 TB, where neither standalone path
-    suffices: IVF alone still stores and scans full float vectors inside
-    probed lists; PQ alone still ADC-scans the ENTIRE corpus.  Composed:
+    """IVF+PQ composed (Jégou et al. 2011, the FAISS ``IVFPQ`` shape):
 
-    - **coarse prune (IVF)**: assign every vector to its nearest of
-      ``n_centroids`` coarse centroids; a query touches only its
-      ``n_probe`` nearest lists — candidate volume ~``n_probe/n_centroids``
-      of the corpus;
-    - **residual PQ encode**: compress ``v − centroid(list)`` (the
-      residual — much lower variance than raw vectors, so the same
-      codebook budget quantizes finer) to ``n_sub`` codebook indices;
-      codebooks are SHARED across lists (the classic memory/accuracy
-      trade; per-list codebooks are the other knob);
-    - **ADC scan inside probed lists**: ``⟨q,v⟩ = ⟨q,c_list⟩ +
-      ⟨q, v−c_list⟩`` — the first term is already computed when probing,
-      the second is ``n_sub`` lookup-table adds against the per-query LUT
-      ``⟨q_m, codebook_entry⟩`` (no corpus float vector touched); the
-      approximate cosine divides by the STORED exact vector norm (one
-      float per vector — standard practice; the per-query ``‖q‖`` is a
-      constant factor and drops out of the ranking);
-    - **exact rerank** of the ADC top-``rerank`` (the measured-r6 quality
-      knob: rerank depth, not codebook size, dominates recall).
+    - coarse prune: the :func:`ivf_topk` lists, centroids and probe;
+    - residual PQ encode: ``v − centroid(list)`` is compressed to
+      ``n_sub`` codes with codebooks shared across lists;
+    - ADC inside the probed lists: ``⟨q,v⟩ = ⟨q,c_list⟩ + ⟨q, v−c_list⟩``,
+      the first term from the probe and the second from the lookup table,
+      divided by the stored exact ``‖v‖`` (``‖q‖`` is constant per query);
+    - the ADC top ``_RERANK`` per query are ranked by exact cosine.
 
-    Determinism (full oracle-hash checkability): coarse centroids seed
-    from the ``n_centroids`` smallest ``md5(id)`` rows (the IVF pattern);
-    residual codebooks seed from the ``n_codes`` smallest
-    ``md5('r' || id)`` rows — a DIFFERENT hash stream, because the
-    coarse-seed rows are their own centroids and their residuals are the
-    zero vector (a degenerate codebook).  Every float op is an
-    exactly-rounded IEEE double in a pinned order: residual subtraction
-    per component, ``d² = (⟨r,r⟩ − 2⟨r,ce⟩) + ⟨ce,ce⟩``, the ADC sum as
-    ``(((⟨q,c⟩ + p₀) + p₁) + p₂) + p₃``.  Ties break (score DESC, id).
-
-    Scale: centroid and codebook tables broadcast (KBs); the corpus-side
-    plan is one assignment pass (broadcast argmax), one encode pass
-    (broadcast argmin per subspace), then an equi-join on ``list_id``
-    with the probed query lists; per-vector storage afterward is
-    ``n_sub`` codes + one norm + one list id.
-
-    Coarse geometry (``n_centroids``/``n_probe``) defaults to the same
-    SIZE-DERIVED rule as :func:`ivf_topk` (:func:`ivf_geometry`, one
-    corpus-count pre-flight); the PQ compression config
-    (``n_sub``/``n_codes``) stays an explicit knob — it sets bytes per
-    vector, a capacity decision, not an index-shape one.
-
-    ``centroids=`` accepts the same offline-TRAINED coarse-quantizer
-    table as :func:`ivf_topk` (``(list_id, _cent, _cent_n)``, e.g. from
-    ``clustering.kmeans_centroids``) — the production IVFPQ shape at
-    100 TB, where the quantizer is trained once on a sample and every
-    index build reuses it.  Under the same contract: the default
-    ``n_probe`` follows the TRAINED table's own row count
-    (``⌈centroids.count()/4⌉`` — the 1/4 scan fraction holds whatever
-    nlist was trained) and the corpus is never counted.  The residual
-    codebooks still seed from the corpus's own ``md5('r'||id)`` stream:
-    with trained centroids no corpus row is exactly its own centroid, so
-    every seed residual is informative (strictly better-conditioned than
-    the untrained case the separate hash stream exists to protect).
+    Coarse centroids seed from the smallest ``md5(id)`` rows, residual
+    codebooks from the smallest ``md5('r' || id)`` rows: a different hash
+    stream, because a coarse-seed row is its own centroid and its
+    residual is the zero vector.  With trained ``centroids=`` the
+    residual codebooks still seed from that stream.  Float ops run in a
+    fixed order: residuals per component, ``d² = (⟨r,r⟩ − 2⟨r,ce⟩) +
+    ⟨ce,ce⟩``, the ADC sum as ``(((⟨q,c⟩ + p₀) + p₁) + …)``.  Ties break
+    (score DESC, id).  ``n_centroids``/``n_probe`` default as in
+    :func:`ivf_topk`; ``n_sub``/``n_codes`` set the bytes per vector.
     """
-    if dim is None:
-        dim = corpus.schema[vec_col].metadata.get("dim")
-    if dim is None:
-        raise ValueError(
-            "ivfpq_topk needs the embedding dimension: pass dim= or attach "
-            f'{{"dim": N}} metadata to the {vec_col!r} schema field'
-        )
-    if dim % n_sub:
-        raise ValueError(f"dim {dim} not divisible into {n_sub} subspaces")
-    sub_dim = dim // n_sub
-    if centroids is not None:
-        # trained-quantizer path: the scan-fraction contract follows the
-        # CENTROID table's own row count, never the corpus (the r10
-        # ADVICE rule ivf_topk pins; same rationale here)
-        if n_probe is None:
-            n_probe = max(1, math.ceil(centroids.count() / 4))
-    elif n_centroids is None or n_probe is None:
-        d_nlist, d_nprobe = ivf_geometry(corpus.count())
-        n_centroids = d_nlist if n_centroids is None else n_centroids
-        n_probe = d_nprobe if n_probe is None else n_probe
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("_cv")
-    ).withColumn("_cn", l2_norm(F.col("_cv")))
-    q = queries.select(
-        F.col(id_col).alias(query_id_col), _as_double(F.col(vec_col)).alias("_qv")
-    ).withColumn("_qn", l2_norm(F.col("_qv")))
-
-    if centroids is not None:
-        cents = centroids
-    else:
-        seed = (
-            c.withColumn("_h", F.md5(F.col("neighbor_id").cast("string")))
-            .orderBy("_h", "neighbor_id")
-            .limit(n_centroids)
-        )
-        cents = seed.select(
-            (F.row_number().over(Window.orderBy("_h", "neighbor_id")) - 1).alias(
-                "list_id"
-            ),
-            F.col("_cv").alias("_cent"),
-            F.col("_cn").alias("_cent_n"),
-        )
-
-    sim = dot(F.col("_cv"), F.col("_cent")) / (F.col("_cn") * F.col("_cent_n"))
+    sub_dim = _dim(corpus, vec_col, dim, "ivfpq_topk", n_sub) // n_sub
+    c = _side(corpus, id_col, vec_col, "neighbor_id", "c")
+    q = _side(queries, id_col, vec_col, query_id_col, "q")
+    cents, n_probe = _coarse(corpus, c, n_centroids, n_probe, centroids)
 
     def assign_residual(rows: DataFrame, *carry: str) -> DataFrame:
-        # Nearest-centroid assignment + residual as a partial-aggregating
-        # min_by over the broadcast cross product (the ivf_topk shape) —
-        # NOT a per-vector sort window: the hash aggregate combines
-        # map-side, needs no sort, and shuffles one row per vector.
-        # min_by on struct(-_s, list_id) ≡ row_number over
-        # (_s DESC, list_id ASC): negation is exact on doubles and the
-        # struct comparison is lexicographic, so the winner is identical.
+        # min_by on struct(-_s, list_id) picks the row_number-first list
+        # of (_s DESC, list_id ASC): negation is exact on doubles
         return (
-            rows.join(F.broadcast(cents))
-            .withColumn("_s", sim)
+            _to_centroids(rows, cents, "c")
             .groupBy("neighbor_id")
             .agg(
                 F.min_by(
@@ -846,122 +730,24 @@ def ivfpq_topk(
             .select(
                 "neighbor_id",
                 F.col("_win.list_id").alias("list_id"),
-                F.zip_with(
-                    "_cv", F.col("_win._cent"), lambda x, y: x - y
-                ).alias("_rv"),
+                F.zip_with("_cv", F.col("_win._cent"), lambda x, y: x - y).alias("_rv"),
                 *carry,
             )
         )
 
-    def chunks(vec: Column) -> Column:
-        return F.array(
-            *[F.slice(vec, m * sub_dim + 1, sub_dim) for m in range(n_sub)]
-        )
-
+    # the codebook seed is a function of the id alone, so only its
+    # n_codes rows pay the centroid assignment
+    cb_seed = assign_residual(_md5_seed(c, n_codes, "r"), "_h")
+    cbook = _codebook(cb_seed, "_rv", n_sub, sub_dim)
     assigned = assign_residual(c, "_cn")
-    # The codebook seed is hash-picked by md5('r' || id) — a pure function
-    # of the id, so the ≤n_codes winners are selected from the RAW corpus
-    # first (one TakeOrdered over the scan) and only those rows pay the
-    # centroid assignment, instead of evaluating the full corpus-wide
-    # assignment subtree just to discard all but n_codes rows of it.
-    cb_seed = assign_residual(
-        c.withColumn(
-            "_h",
-            F.md5(F.concat(F.lit("r"), F.col("neighbor_id").cast("string"))),
-        )
-        .orderBy("_h", "neighbor_id")
-        .limit(n_codes),
-        "_h",
-    )
-    cbooks = cb_seed.select(
-        (F.row_number().over(Window.orderBy("_h", "neighbor_id")) - 1).alias(
-            "code"
-        ),
-        F.col("_rv"),
-    ).select("code", F.posexplode(chunks(F.col("_rv"))).alias("m", "_ce"))
-
-    d2 = (
-        dot(F.col("_rh"), F.col("_rh")) - 2 * dot(F.col("_rh"), F.col("_ce"))
-    ) + dot(F.col("_ce"), F.col("_ce"))
-    r_chunks = assigned.select(
-        "neighbor_id",
-        "list_id",
-        "_cn",
-        F.posexplode(chunks(F.col("_rv"))).alias("m", "_rh"),
-    )
-    codes = (
-        r_chunks.join(F.broadcast(cbooks), "m")
-        .withColumn("_d2", d2)
-        .groupBy("neighbor_id", "m")
-        .agg(
-            F.min_by("code", F.struct("_d2", "code")).alias("code"),
-            F.first("list_id").alias("list_id"),
-            F.first("_cn").alias("_cn"),
-        )
-    )
-
-    q_sim = dot(F.col("_qv"), F.col("_cent")) / (F.col("_qn") * F.col("_cent_n"))
-    w_probe = Window.partitionBy(query_id_col).orderBy(
-        F.col("_s").desc(), "list_id"
-    )
-    q_lists = (
-        q.join(F.broadcast(cents))
-        .withColumn("_s", q_sim)
-        .withColumn("_qc", dot(F.col("_qv"), F.col("_cent")))
-        .withColumn("_prk", F.row_number().over(w_probe))
-        .filter(F.col("_prk") <= n_probe)
-        .select(query_id_col, "list_id", "_qc")
-    )
-    q_chunks = q.select(
-        query_id_col, F.posexplode(chunks(F.col("_qv"))).alias("m", "_qh")
-    )
-    lut = q_chunks.join(F.broadcast(cbooks), "m").select(
-        query_id_col, "m", "code", dot(F.col("_qh"), F.col("_ce")).alias("_p")
-    )
-
+    codes = _encode(assigned, cbook, "_rv", "_rh", n_sub, sub_dim, "list_id", "_cn")
+    qc = dot(F.col("_qv"), F.col("_cent"))
+    q_lists = _probe(q, cents, n_probe, query_id_col, "_prk", "_qc", _qc=qc)
+    lut = _lut(q, cbook, query_id_col, n_sub, sub_dim)
     parts = (
         codes.join(F.broadcast(q_lists), "list_id")
         .filter(F.col("neighbor_id") != F.col(query_id_col))
         .join(F.broadcast(lut), [query_id_col, "m", "code"])
     )
-    pivot = parts.groupBy(query_id_col, "neighbor_id").agg(
-        F.first("_qc").alias("_qc"),
-        F.first("_cn").alias("_cn"),
-        *[
-            F.sum(F.when(F.col("m") == j, F.col("_p"))).alias(f"_p{j}")
-            for j in range(n_sub)
-        ],
-    )
-    ip = F.col("_qc")
-    for j in range(n_sub):
-        ip = ip + F.col(f"_p{j}")
-    # ranked by ip/‖v‖ — the per-query ‖q‖ factor is constant within a
-    # partition, so dividing by it cannot change any ADC ordering
-    scored = pivot.withColumn("score", ip / F.col("_cn"))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= rerank)
-        .select(query_id_col, "neighbor_id")
-    )
-    qw = q.select(query_id_col, "_qv", "_qn")
-    exact = (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(qw), query_id_col)
-        .withColumn(
-            "score",
-            dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")),
-        )
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            "neighbor_id",
-            F.round("score", 6).alias("score"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    pivot, ip = _adc(parts, query_id_col, n_sub, "_qc", "_cn", start="_qc")
+    return _rerank(pivot.withColumn("score", ip / F.col("_cn")), c, q, k, query_id_col)

@@ -52,8 +52,33 @@ def has_python_stage(df: DataFrame) -> bool:
 
 
 def broadcast_join_count(df: DataFrame) -> int:
-    """Number of BroadcastHashJoin operators in the executed plan."""
-    return executed_plan(df).count("BroadcastHashJoin")
+    """Number of BroadcastHashJoin operators in the physical plan.
+
+    Walks the tree like :func:`shuffle_count`, with AQE's initial plan,
+    and also walks subquery plans and each persisted subtree once: the
+    plan text repeats a persisted subtree under every scan of it."""
+    count = 0
+    seen: set = set()
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(node.initialPlan())
+            continue
+        if cls == "InMemoryTableScanExec":
+            cached = node.relation().cachedPlan()
+            key = cached.toString()
+            if key not in seen:
+                seen.add(key)
+                stack.append(cached)
+            continue
+        if node.nodeName().startswith("BroadcastHashJoin"):
+            count += 1
+        for seq in (node.children(), node.subqueries()):
+            for i in range(seq.size()):
+                stack.append(seq.apply(i))
+    return count
 
 
 def shuffle_count(df: DataFrame) -> int:

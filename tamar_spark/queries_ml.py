@@ -725,7 +725,7 @@ def _semdedup_pairs(spark, sf_dir, k: int, tau: float = 0.4):
     # the within-cluster cosine is CPU-bound per output pair over a
     # sub-MB shuffle: keep AQE from folding it into one task
     pv = pin_session_width(pv, "cluster")
-    from tamar_spark.operators.similarity import dot, l2_norm
+    from tamar_spark.operators.similarity import _cosine, l2_norm
 
     x = pv.select(
         F.col("vec_id").alias("src_id"), "cluster", F.col("_v").alias("_xv")
@@ -733,7 +733,7 @@ def _semdedup_pairs(spark, sf_dir, k: int, tau: float = 0.4):
     y = pv.select(
         F.col("vec_id").alias("dup_id"), "cluster", F.col("_v").alias("_yv")
     ).withColumn("_yn", l2_norm(F.col("_yv")))
-    score = dot(F.col("_xv"), F.col("_yv")) / (F.col("_xn") * F.col("_yn"))
+    score = _cosine("_xv", "_xn", "_yv", "_yn")
     out = (
         x.join(y, "cluster")
         .filter(F.col("src_id") < F.col("dup_id"))

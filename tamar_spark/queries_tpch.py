@@ -930,40 +930,16 @@ def embed_hard_negatives(spark, sf_dir):
     no shuffle until the per-anchor top-k; compose with the LSH/IVF/PQ
     candidate generators for sub-scan cost once the corpus outgrows a
     single pass."""
-    from tamar_spark.operators.similarity import dot, l2_norm
+    from tamar_spark.operators import similarity as S
 
     emb = load_table(spark, sf_dir, "embeddings")
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("n_label"),
-        F.col("embedding").cast("array<double>").alias("_cv"),
-    ).withColumn("_cn", l2_norm(F.col("_cv")))
-    q = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("q_label"),
-        F.col("embedding").cast("array<double>").alias("_qv"),
-    ).withColumn("_qn", l2_norm(F.col("_qv")))
-    scored = c.join(
-        F.broadcast(q),
-        (F.col("neighbor_id") != F.col("query_id"))
-        & (F.col("n_label") != F.col("q_label")),
-    ).withColumn(
-        "score", dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("n_label").cast("int").alias("neg_label"),
-            F.round("score", 6).alias("score"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    anchors = emb.filter(F.col("vec_id") % 50 == 0)
+    n_label, q_label = F.col("label").alias("n_label"), F.col("label").alias("q_label")
+    c = S._side(emb, "vec_id", "embedding", "neighbor_id", "c", n_label)
+    q = S._side(anchors, "vec_id", "embedding", "query_id", "q", q_label)
+    pairs = S._all_pairs(c, q, "query_id", cond=F.col("n_label") != F.col("q_label"))
+    neg_label = F.col("n_label").cast("int").alias("neg_label")
+    return S._exact_topk(pairs, 5, "query_id", neg_label)
 
 
 _PQ_TOPK_SQL = """
@@ -1024,25 +1000,23 @@ FROM ranked WHERE rank <= 5
 @query("embed_pq_topk", _PQ_TOPK_SQL)
 def embed_pq_topk(spark, sf_dir):
     """Approximate top-5 via product quantization with asymmetric-distance
-    (ADC) pruning + exact rerank — the memory-bound ANN tier completing
-    the family (brute force / LSH / IVF / PQ): vectors compress to 4
-    codebook indices, the ADC scan (4 lookup-table adds per vector, no
-    floats touched) keeps the top-20, and only those 20 float vectors per
-    query are scored exactly.  Codebook seeding uses the md5-order pick
-    both engines compute identically; every double op is exactly-rounded
-    IEEE in a pinned order (see ``similarity.pq_topk``), so the DuckDB
-    twin replays the encode → LUT → ADC → rerank pipeline bitwise and the
-    output is fully hash-checked.  Quality gate:
-    ``test_pq_recall_and_compression``; measured recall@5 vs exact is
-    recorded in BASELINE.md (r6): rerank depth is THE quality knob —
-    rerank=20 scored 0.455 on a 40-cluster corpus vs 0.855 at rerank=50
-    (1.0 with 8 subquantizers), so this query runs rerank=50; ADC still
-    prunes 2000→50, and the rerank cost is 50 float vectors per query."""
+    (ADC) pruning + exact rerank — the memory-bound ANN tier: vectors
+    compress to 4 codebook indices, the ADC scan (4 lookup-table adds per
+    vector, no floats touched) keeps the top 50 per query
+    (``similarity._RERANK``), and only those 50 float vectors are scored
+    exactly.  Codebook seeding uses the md5-order pick both engines
+    compute identically; every double op is exactly-rounded IEEE in a
+    pinned order (see ``similarity.pq_topk``), so the DuckDB twin replays
+    the encode → LUT → ADC → rerank pipeline bitwise and the output is
+    fully hash-checked.  Quality gate: ``test_pq_recall_and_compression``;
+    recall@5 vs exact is recorded in BASELINE.md: rerank depth is the
+    quality knob — depth 20 scored 0.455 on a 40-cluster corpus vs 0.855
+    at depth 50."""
     from tamar_spark.operators import similarity as S
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") % 50 == 0)
-    return S.pq_topk(emb, queries_df, k=5, dim=64, rerank=50)
+    return S.pq_topk(emb, queries_df, k=5, dim=64)
 
 
 _IVFPQ_TOPK_SQL = """

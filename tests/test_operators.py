@@ -2022,9 +2022,9 @@ def test_session_agg_auto_skew_engages_the_salted_plan(spark, sf_dir):
 def test_pq_recall_and_compression(spark):
     """PQ+rerank quality gate on the planted-cluster corpus (same regime as
     the LSH/IVF gate): the ADC scan collapses tight clusters onto one code
-    word, so pure ADC only PRUNES — the exact rerank stage must restore
-    neighbor ordering.  Also pins layout-independence: identical output
-    whatever the corpus partitioning (the codebook seed is order-stable)."""
+    word, so ADC only prunes — the exact rerank must restore neighbor
+    ordering.  Also pins layout-independence: identical output whatever
+    the corpus partitioning (the codebook seed is order-stable)."""
     import random
 
     from tamar_spark.operators.similarity import cosine_topk, pq_topk
@@ -2046,11 +2046,6 @@ def test_pq_recall_and_compression(spark):
     hits = sum(len(pq.get(q, set()) & nbrs) for q, nbrs in exact.items())
     total = sum(len(nbrs) for nbrs in exact.values())
     assert hits / total >= 0.8, f"PQ+rerank recall too low: {hits / total}"
-
-    # pure ADC must still emit k rows per query (it ranks, coarsely)
-    adc = pq_topk(emb, queries_df, k=5, dim=dim, rerank=0)
-    counts = {r.query_id for r in adc.groupBy("query_id").count().filter("count = 5").collect()}
-    assert len(counts) == 10
 
     # layout-independence: same result from a reshuffled corpus
     a = sorted(map(tuple, pq_topk(emb, queries_df, k=5, dim=dim).collect()))

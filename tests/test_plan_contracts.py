@@ -52,9 +52,9 @@ CONTRACTS = [
     ("embed_kmeans", 4, 1),  # 2 iterations: assign is broadcast-k, no shuffle
     ("pagerank_nations", 8, 4),  # 3 iterations, edges built once, dims bcast
     ("dedup_containment", 8, 5),  # tiered: prefilter + direct-emit + verify
-    # the same kernel as dedup_containment; measured on its plan, whose
-    # text repeats each persisted subtree once per scan of it
-    ("dedup_ngram_jaccard", 4, 56),
+    # the same kernel as dedup_containment; each persisted subtree's
+    # joins counted once
+    ("dedup_ngram_jaccard", 4, 9),
     ("heavy_hitters_cms", 4, 2),  # 192-cell sketch agg + broadcast probe
     ("ewma_user_value", 1, 0),  # one user_id shuffle, in-frame lags
     # second-wave round-5 family: all pure-JVM expression plans
@@ -317,6 +317,39 @@ def test_similarity_construction_runs_no_jobs(spark, sf_dir):
     # a per-row scan fan-out
     assert 1 <= len(jobs2) <= 2, f"derived geometry should cost one count: {jobs2}"
     assert df_auto.count() >= 0
+
+
+def test_lsh_topk_build_round_trip_budget(spark, sf_dir):
+    """Building the LSH plan sends each side's bucket expression as one SQL
+    string, not one py4j call per projection literal (2,048 literals per
+    side at 4 tables × 8 bits × 64 dims).  Counted are the calls the
+    building thread waits on; py4j's collector thread frees proxies
+    asynchronously, so its count depends on timing."""
+    import threading
+
+    from pyspark.sql import functions as F
+
+    from tamar_spark.operators.similarity import lsh_topk
+    from tamar_spark.sources import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries_df = emb.filter(F.col("vec_id") % 50 == 0)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+    builder = threading.get_ident()
+
+    def counting(*args, **kwargs):
+        if threading.get_ident() == builder:
+            calls.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        lsh_topk(emb, queries_df, k=5, dim=64)
+    finally:
+        del client.send_command
+    assert 0 < len(calls) < 1000, f"lsh_topk build made {len(calls)} py4j round trips"
 
 
 def test_ivfpq_trained_preflight_is_centroid_count_only(spark, sf_dir):
@@ -686,7 +719,7 @@ def test_triangles_adaptive_join_pins_both_regimes(spark, sf_dir):
         .select(F.col("x.s").alias("a"), F.col("y.s").alias("b"))
         .distinct()
     )
-    # (broadcast_join_count spans the whole plan text incl. the edge
+    # (broadcast_join_count walks the whole plan incl. the edge
     # build's own broadcasts, so the pin counts ShuffledHashJoin — the
     # adjacency joins are the only candidates for it in this DAG)
     small = triangles_per_node(edges)  # fixture adjacency fits → broadcast

@@ -59,3 +59,22 @@ def test_plan_snapshot_masks_aqe_numbering():
     assert "+- ShuffleQueryStage (N), Statistics" in one
     assert "+- Scan parquet  (N)" in one
     assert not re.search(r"\(\d+\) |codegen id : \d|operator id: \d|Arguments: [0-9]\b", one)
+
+
+def test_plan_snapshot_sorts_detail_blocks():
+    """AQE orders the detail blocks by stage completion; two texts that
+    differ only in that order normalise to the same output."""
+    snap = _load_tool("plan_snapshot")
+    tree = (
+        "== Physical Plan ==\n* Project (3)\n+- * Filter (2)\n"
+        "   +- Scan parquet  (1)\n\n\n"
+    )
+    scan = "(1) Scan parquet \nOutput [1]: [a#7L]"
+    filt = "(2) Filter [codegen id : 1]\nCondition : (a#7L > 5)"
+    proj = "(3) Project [codegen id : 1]\nOutput [1]: [a#7L]"
+    one = snap.normalise(tree + "\n\n".join([scan, filt, proj]) + "\n")
+    two = snap.normalise(tree + "\n\n".join([proj, scan, filt]) + "\n")
+    assert one == two
+    assert one.startswith(snap.normalise(tree)) and one.endswith("\n")
+    assert "Scan parquet  (N)\n\n\n(N) Filter" in one
+    assert one.index("(N) Filter") < one.index("(N) Project") < one.index("(N) Scan")

@@ -16,8 +16,8 @@ session, against the scale-factor directory ``--sf`` (default
   collected, i.e. the executed (final adaptive) plan.
 
 Ids and labels that change from run to run are replaced by fixed tokens
-(see :func:`normalise`), so the output of two commits can be compared
-with ``diff -r``.
+and the per-node detail blocks are sorted (see :func:`normalise`), so the
+output of two commits can be compared with ``diff -r``.
 """
 
 from __future__ import annotations
@@ -53,8 +53,8 @@ _RULES = [
 
 # AQE numbers plan nodes, codegen stages and query stages in the order
 # stages complete, so these differ between two runs of one commit; the
-# tree and each node's details stay in place, so masking them keeps two
-# plans comparable line by line
+# tree keeps its shape, so masking them keeps two plans comparable line
+# by line once the detail blocks are sorted
 _AQE_RULES = [
     # node ordinals: "(12) Project" headers, "+- Project (12)" tree lines
     (re.compile(r"^\(\d+\) ", re.M), "(N) "),
@@ -66,12 +66,35 @@ _AQE_RULES = [
 ]
 
 
+def _sort_blocks(text: str) -> str:
+    """Sort each run of adjacent ``(N) Name`` detail blocks by their text.
+
+    The formatted plan lists one detail block per node in ordinal order,
+    and AQE assigns ordinals as stages complete, so two runs of one plan
+    can list the same blocks in another order."""
+    body = text.rstrip("\n")
+    parts = re.split(r"(\n\n+)", body)
+    i = 0
+    while i < len(parts):
+        j = i
+        if parts[i].startswith("(N) "):
+            while (
+                j + 2 < len(parts)
+                and parts[j + 1] == "\n\n"
+                and parts[j + 2].startswith("(N) ")
+            ):
+                j += 2
+            parts[i : j + 1 : 2] = sorted(parts[i : j + 1 : 2])
+        i = j + 2
+    return "".join(parts) + text[len(body):]
+
+
 def normalise(text: str) -> str:
     """Replace run-dependent ids, labels, names, paths and AQE numbering
-    with fixed tokens."""
+    with fixed tokens, and put the detail blocks in a fixed order."""
     for pat, repl in _RULES + _AQE_RULES:
         text = pat.sub(repl, text)
-    return text
+    return _sort_blocks(text)
 
 
 @contextlib.contextmanager
