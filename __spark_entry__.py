@@ -65,14 +65,14 @@ _CHANGED_IN_ROUND = {
     # r8: oracle tiebreak aligned to max(struct)'s highest-shard rule and
     # shard cast to bigint on the Spark side (r7 ADVICE).
     "rendezvous_shards": 8,
-    # r9: bpe_learn grew the measured-vocab driver-local tier (r8 VERDICT
-    # task 2) — merges provably identical (two-tier property test), but
-    # every kernel-sharing query should carry a fresh attestation.
-    "bpe_merges": 9,
-    "bpe_encode": 9,
-    "bpe_fertility": 9,
-    "corpus_tokenize_pack": 9,
-    "corpus_e2e": 9,
+    # r17: the five BPE queries share one word split, one bracketed repr
+    # and one literal rule chain, and the learned rules stay a driver-side
+    # list (bpe_merges returns them as a local relation).
+    "bpe_merges": 17,
+    "bpe_encode": 17,
+    "bpe_fertility": 17,
+    "corpus_tokenize_pack": 17,
+    "corpus_e2e": 17,
     # r10 (supersedes the r9 broadcast-vs-shuffle-hash entry): triangles
     # persist scoped by a per-invocation cache lease and the dead kv
     # column dropped from the cached frame (r9 task 4) — results provably

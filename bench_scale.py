@@ -717,28 +717,15 @@ def main() -> None:
     # vocabulary-sized iteration work) — near-flat growth here proves the
     # vocabulary-bounded claim in bpe_merges' docstring
     def bpe_scale(k):
-        from tamar_spark.queries_pipeline import bpe_learn
+        from tamar_spark.queries_pipeline import _bpe_word_freqs, bpe_learn
 
         d = replicate(documents_sf, k, ["doc_id"])
-        words = (
-            d.select(
-                F.explode(
-                    F.split(
-                        F.lower(F.regexp_replace("text", "[^a-zA-Z ]", " ")),
-                        r"\s+",
-                    )
-                ).alias("word")
-            )
-            .where(F.col("word") != "")
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).alias("freq"))
-        )
-        return bpe_learn(words, steps=6)
+        return bpe_learn(_bpe_word_freqs(d), steps=6)
 
     results["bpe_learn"] = []
     for k in SCALES:
         t0 = time.perf_counter()
-        bpe_scale(k).count()
+        bpe_scale(k)
         results["bpe_learn"].append(round(time.perf_counter() - t0, 2))
         spark.catalog.clearCache()
         gc.collect()

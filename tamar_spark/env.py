@@ -75,14 +75,21 @@ def get_spark(
     return spark
 
 
+_PREPARED = "spark.tamar.sessionPrepared"
+
+
 def prep_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable conf to an externally-provided session.
+    """Apply runtime-settable conf to an externally-provided session, once.
 
     Used when a harness hands us its own SparkSession: we can only set
     runtime-mutable SQL confs here (timezone matters for parquet timestamp
     comparisons against naive-timestamp oracles like DuckDB).  A conf the
-    session rejects raises.
+    session rejects raises.  A session already prepared is returned as it
+    is, so a conf the caller sets afterwards (say, the shuffle width)
+    survives every later query call.
     """
+    if spark.conf.get(_PREPARED, None) == "true":
+        return spark
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     # the harness session defaults to 200 shuffle partitions — far too
@@ -94,6 +101,7 @@ def prep_session(spark: SparkSession) -> SparkSession:
     # small-SF wall clock and risks JIT bailout (>8KB bytecode) at any
     # scale; whole-stage codegen itself stays ON
     spark.conf.set("spark.sql.codegen.methodSplitThreshold", "128")
+    spark.conf.set(_PREPARED, "true")
     return spark
 
 

@@ -21,31 +21,56 @@ returns: while any consumer holds the frame the cache is registered (the
 multiple plan references that justified the persist genuinely share it
 during execution); when the last Python reference drops, the cache is
 unpersisted — deterministic under CPython refcounting, idempotent, safe
-after session stop.  Consumers that DERIVE a new frame and drop the
-operator's return value carry the lease forward with
-:func:`attach_lease` (or the cache is released early — still correct,
-the derived plan just recomputes uncached).
+after session stop — unless another live lease holds a plan with the
+same result, since Spark shares one cache entry between such plans.
+Consumers that DERIVE a new frame and drop the operator's return value
+carry the lease forward with :func:`attach_lease` (or the cache is
+released early — still correct, the derived plan just recomputes
+uncached).
 """
 
 from __future__ import annotations
+
+import threading
 
 from pyspark.sql import DataFrame
 
 __all__ = ["CacheLease", "attach_lease", "leased_persist", "scope_caches"]
 
+# Spark keeps ONE cache entry for all persisted plans that give the same
+# result, so a lease may unpersist only when no other live lease holds an
+# equal plan: live leases per analyzed-plan semantic hash.  Reentrant, as
+# a finalizer can run on a thread that already holds the lock.
+_HELD: dict = {}
+_HELD_LOCK = threading.RLock()
 
-def _release_cache(jdf) -> None:
-    """Unpersist a cached frame's JVM handle; safe after session stop."""
-    try:
-        jdf.unpersist(False)
-    except Exception:
-        pass
+
+def _hold(jdf) -> int:
+    key = jdf.queryExecution().analyzed().semanticHash()
+    with _HELD_LOCK:
+        _HELD[key] = _HELD.get(key, 0) + 1
+    return key
+
+
+def _release_cache(jdf, key: int) -> None:
+    """Drop one lease on ``jdf``'s plan and unpersist it when that was the
+    last; safe after session stop."""
+    with _HELD_LOCK:
+        _HELD[key] -= 1
+        if _HELD[key]:
+            return
+        del _HELD[key]
+        try:
+            jdf.unpersist(False)
+        except Exception:
+            pass
 
 
 class CacheLease:
     """Scopes one or more internal persists to the lifetime of the frames
     that carry this lease object: when the LAST frame holding it is
-    garbage collected, every cached frame is unpersisted.  ``children``
+    garbage collected, every cached frame is unpersisted unless another
+    live lease holds a plan with the same result.  ``children``
     keeps upstream leases (from operators this one composed) alive for
     exactly as long, so a composed plan releases its whole cache chain
     together.  ``release()`` drops everything eagerly."""
@@ -57,7 +82,7 @@ class CacheLease:
 
         self._children = list(children)
         self._finalizers = [
-            weakref.finalize(self, _release_cache, j) for j in jdfs
+            weakref.finalize(self, _release_cache, j, _hold(j)) for j in jdfs
         ]
 
     def release(self) -> None:

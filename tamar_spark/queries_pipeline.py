@@ -87,6 +87,7 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 from tamar_spark.queries import query, _DEC
@@ -2500,29 +2501,35 @@ def data_mixture_temperature(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# BPE merge learning (Sennrich et al. 2016) — distributed subword induction
+# BPE (Sennrich et al. 2016): learn merge rules, encode with them
 # ---------------------------------------------------------------------------
 
 _BPE_STEPS = 6
 
+_BPE_LOCAL_BELOW = 200_000
 
-def _bpe_oracle(steps: int = _BPE_STEPS, corpus: str = "documents") -> str:
-    """DuckDB twin of :func:`bpe_merges`: the identical word-frequency
-    table, bracketed-token representation, argmax pair selection, and
-    two-sided string-replace application, unrolled ``steps`` times (the
-    same unrolled-CTE technique as the k-means twin).  Every CTE is
-    MATERIALIZED: each w-step is referenced by four scalar subqueries and
-    the next step, so inlining re-expands the chain combinatorially (the
-    plain form did not finish at 6 steps; materialized it runs in 0.1 s).
-    ``corpus`` names the (doc_id, text, …) relation to learn from —
-    ``documents`` for the standalone queries, a selection CTE when the
-    chain is embedded in a larger pipeline twin (corpus_e2e)."""
+_BPE_MERGE_SCHEMA = (
+    "step INT, pair_left STRING, pair_right STRING, merged STRING, cnt BIGINT"
+)
+
+# the bracketed repr of a word, ``<h><i><_>`` with ``_`` the end-of-word
+# marker, as DuckDB builds it
+_BPE_REPR_SQL = """'<' || array_to_string(
+           list_transform(range(1, length(word) + 1), i -> word[i]), '><')
+         || '><_>'"""
+
+
+def _bpe_learn_sql(corpus: str = "documents") -> str:
+    """The learn CTEs ``w0``, then ``p{s}``/``b{s}``/``w{s}`` per step:
+    the word-frequency table of ``corpus`` in bracketed repr, each step's
+    weighted pair counts, its (count DESC, pair ASC) argmax ``b{s}`` and
+    the word table with that rule applied.  Every CTE is MATERIALIZED:
+    each ``w{s}`` is referenced by four scalar subqueries and the next
+    step, and inlining re-expands the chain combinatorially."""
     blocks = [
         f"""
 w0 AS MATERIALIZED (
-  SELECT '<' || array_to_string(
-           list_transform(range(1, length(word) + 1), i -> word[i]), '><')
-         || '><_>' AS repr,
+  SELECT {_BPE_REPR_SQL} AS repr,
          freq
   FROM (
     SELECT word, COUNT(*) AS freq FROM (
@@ -2534,7 +2541,7 @@ w0 AS MATERIALIZED (
   )
 )"""
     ]
-    for s in range(1, steps + 1):
+    for s in range(1, _BPE_STEPS + 1):
         blocks.append(f"""
 p{s} AS MATERIALIZED (
   SELECT t[i] AS a, t[i + 1] AS b, SUM(freq) AS cnt
@@ -2554,75 +2561,102 @@ w{s} AS MATERIALIZED (
          freq
   FROM w{s - 1}
 )""")
+    return ",".join(blocks)
+
+
+def _bpe_docw_sql(carry: str, corpus: str = "documents", extra: str = "") -> str:
+    """The ``docw`` CTE: ``carry`` columns, the ``extra`` select items and
+    the bracketed repr of every word of ``corpus``."""
+    return f"""docw AS MATERIALIZED (
+  SELECT {carry},{extra}
+         {_BPE_REPR_SQL} AS repr
+  FROM (
+    SELECT {carry}, unnest(string_split_regex(
+             lower(regexp_replace(text, '[^a-zA-Z ]', ' ', 'g')),
+             '\\s+')) AS word
+    FROM {corpus}
+  ) WHERE word != ''
+)"""
+
+
+def _bpe_chain_sql() -> str:
+    """``repr`` with the learned rules ``b1`` … ``b{_BPE_STEPS}`` applied in
+    order."""
+    repl = "repr"
+    for s in range(1, _BPE_STEPS + 1):
+        repl = (
+            f"replace({repl}, '<' || (SELECT a FROM b{s}) || '><'"
+            f" || (SELECT b FROM b{s}) || '>', '<' || (SELECT a FROM b{s})"
+            f" || (SELECT b FROM b{s}) || '>')"
+        )
+    return repl
+
+
+def _bpe_oracle() -> str:
     unions = "\nUNION ALL\n".join(
         f"SELECT {s} AS step, a AS pair_left, b AS pair_right,"
         f" a || b AS merged, CAST(cnt AS BIGINT) AS cnt FROM b{s}"
-        for s in range(1, steps + 1)
+        for s in range(1, _BPE_STEPS + 1)
     )
     return (
-        "WITH " + ",".join(blocks) + "\nSELECT * FROM (\n" + unions
+        "WITH " + _bpe_learn_sql() + "\nSELECT * FROM (\n" + unions
         + "\n) ORDER BY step"
     )
 
 
+def _bpe_words(docs: DataFrame, *carry: str) -> DataFrame:
+    """``(*carry, word)``: one row per lower-cased alphabetic word of each
+    document's ``text``."""
+    return docs.select(
+        *carry,
+        F.explode(
+            F.split(F.lower(F.regexp_replace("text", "[^a-zA-Z ]", " ")), r"\s+")
+        ).alias("word"),
+    ).where(F.col("word") != "")
+
+
+def _bpe_word_freqs(docs: DataFrame) -> DataFrame:
+    return _bpe_words(docs).groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
+
+
+def _bpe_repr():
+    """The bracketed repr of the ``word`` column, ``<h><i><_>``."""
+    chars = F.expr(
+        "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
+    )
+    return F.concat(F.lit("<"), F.concat_ws("><", chars), F.lit("><_>"))
+
+
+def _bpe_apply(col, rules: list):
+    """``col`` (a bracketed repr) with ``rules`` applied in order, one
+    literal ``replace`` of ``<a><b>`` by ``<ab>`` per rule."""
+    for _, a, b, *_ in rules:
+        col = F.replace(col, F.lit(f"<{a}><{b}>"), F.lit(f"<{a}{b}>"))
+    return col
+
+
 @query("bpe_merges", _bpe_oracle())
 def bpe_merges(spark, sf_dir):
-    """Distributed BPE subword induction (Sennrich et al. 2016): learn the
-    first 6 merge rules of a byte-pair-encoding vocabulary from the corpus
-    — the primitive behind every production tokenizer, completing the
-    token-counting family (token_counts estimates with a fixed heuristic;
-    this LEARNS the merges).  Per iteration: count adjacent-token pairs
-    over the word-frequency table (weighted by word count, overlapping
-    pairs included — the standard formulation), pick the most frequent
-    pair with a total (count DESC, pair ASC) tie-break, and merge every
-    occurrence.
+    """The first 6 BPE merge rules learned from the ``documents`` corpus
+    (:func:`bpe_learn`), as ``(step, pair_left, pair_right, merged, cnt)``.
 
-    Determinism & engine parity: words are represented as
-    individually-bracketed token strings (``<h><i><_>`` with ``_`` the
-    end-of-word marker), so applying a merge is a plain substring
-    replace of ``<a><b>`` with ``<ab>`` — matches cannot overlap (brackets
-    partition the string), back-to-back occurrences all merge in one
-    left-to-right pass exactly like reference BPE, and Spark's
-    ``replace`` and DuckDB's ``replace`` share those semantics, so the
-    oracle replays the identical induction.  All counting is exact
-    integer.
-
-    Scale: the iteration state is the WORD-frequency table (vocabulary,
-    not corpus — the corpus collapses into it in one aggregate), each
-    round is one explode + sum shuffle on it plus a broadcast 1-row merge
-    rule; this is how industrial BPE trainers distribute (word-count
-    sketch + iterative pair argmax).  The pair table is
-    vocabulary-bounded; the merge rule broadcast is 1 row per step."""
+    Words are individually bracketed token strings (``<h><i><_>``), so a
+    merge is a plain substring replace of ``<a><b>`` with ``<ab>``: the
+    brackets stop matches from overlapping, back-to-back occurrences merge
+    in one left-to-right pass as in reference BPE, and Spark's, DuckDB's
+    and Python's ``replace`` agree, so the oracle replays the induction.
+    All counting is exact integer.  The rules come back to the driver as
+    a list and are returned as a local relation, in step order."""
     docs = load_table(spark, sf_dir, "documents")
-    words = (
-        docs.select(
-            F.explode(
-                F.split(
-                    F.lower(F.regexp_replace("text", "[^a-zA-Z ]", " ")),
-                    r"\s+",
-                )
-            ).alias("word")
-        )
-        .where(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    return bpe_learn(words, steps=_BPE_STEPS)
-
-
-_BPE_LOCAL_BELOW = 200_000
-
-_BPE_MERGE_SCHEMA = (
-    "step INT, pair_left STRING, pair_right STRING, merged STRING, cnt BIGINT"
-)
+    rules = bpe_learn(_bpe_word_freqs(docs), steps=_BPE_STEPS)
+    cols = ("step", "pair_left", "pair_right", "merged", "cnt")
+    table = pa.table({c: [r[i] for r in rules] for i, c in enumerate(cols)})
+    return spark.createDataFrame(table, _BPE_MERGE_SCHEMA)
 
 
 def _bpe_learn_local(rows: list, steps: int) -> list:
     """Driver-local merge loop over a collected ``(repr, freq)`` word
-    table — the EXACT engine formulation (overlapping weighted pair
-    counts; (count DESC, pair ASC) tie-break; bracketed-string replace,
-    whose non-overlapping left-to-right semantics Python's
-    ``str.replace`` shares with Spark's and DuckDB's ``replace``)."""
+    table, with the distributed tier's counting, tie-break and replace."""
     from collections import Counter
 
     reprs = [r for r, _ in rows]
@@ -2645,87 +2679,31 @@ def _bpe_learn_local(rows: list, steps: int) -> list:
 
 def bpe_learn(
     words: DataFrame, steps: int, local_below: int = _BPE_LOCAL_BELOW
-) -> DataFrame:
-    """BPE induction kernel behind :func:`bpe_merges`: ``(word, freq)`` →
-    the first ``steps`` merge rules ``(step, pair_left, pair_right,
-    merged, cnt)``.  Property-tested against a direct Python BPE model
-    (tests/test_properties.py) ON BOTH TIERS, including merge-count ties
-    and words made entirely of one repeated character (where overlapping
-    pair counting and non-overlapping left-to-right application diverge
-    — both handled the standard way).
+) -> list:
+    """BPE induction: ``(word, freq)`` → the first ``steps`` merge rules
+    as a list of ``(step, pair_left, pair_right, merged, cnt)``, fewer when
+    no pair is left.  Each step counts adjacent-token pairs weighted by
+    word frequency (overlapping pairs included), picks the most frequent
+    pair with a (count DESC, pair ASC) tie-break and merges it.
 
-    Two tiers, picked from a MEASURED vocabulary size (r8 VERDICT task
-    2).  The corpus never reaches the merge loop — it collapses into the
-    ``(word, freq)`` aggregate in one distributed job; the loop's state
-    is vocabulary-bounded by construction.  When that table fits under
-    ``local_below`` rows (probed by the same single job via
-    ``limit(n+1).collect()`` — no extra pass on the common path), the
-    merge loop runs ON THE DRIVER: this is how production BPE trainers
-    distribute (HuggingFace/SentencePiece: distributed word counting,
-    local merge induction), and it removes the ~2×steps tiny Spark jobs
-    whose fixed scheduler/planning overhead dominated the step loop at
-    fixture scale (measured r9: the 31-row sf0.1 vocab spent ~2 s on
-    per-step job overhead, zero on data).  Above the cap — adversarial
-    vocabularies: web-scale typo/URL token tails — the distributed step
-    loop below runs unchanged, at the cost of the one probe pass."""
-    spark = words.sparkSession
-    chars = F.expr(
-        "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
-    )
-    repr_df = words.select(
-        F.concat(
-            F.lit("<"), F.concat_ws("><", chars), F.lit("><_>")
-        ).alias("repr"),
-        "freq",
-    )
-    # BOUNDED driver-side collect, by design: at most local_below+1 rows of
-    # the vocabulary-sized (word, freq) aggregate — ≤ ~10 MB at the 200k
-    # default — never corpus data.  The cap IS the measured condition: an
-    # over-cap vocabulary falls through to the distributed loop below.
+    A vocabulary of at most ``local_below`` words is collected (one
+    bounded job) and merged on the driver.  A larger one runs the step
+    loop in Spark: per step, one pair aggregate whose one-row argmax is
+    collected, then the rule applied to the word table, which is
+    localCheckpointed so the lineage stays one step deep."""
+    repr_df = words.select(_bpe_repr().alias("repr"), "freq")
     head = repr_df.limit(local_below + 1).collect()
     if len(head) <= local_below:
-        merges = _bpe_learn_local([(r["repr"], r["freq"]) for r in head], steps)
-        # Single-slice parallelize + localCheckpoint (r15 optimization): a
-        # bare createDataFrame(list) is a PYTHON-parallelized RDD split
-        # over defaultParallelism partitions, and every consumer scan of
-        # it — bpe_apply_merges builds one broadcast per step, so `steps`
-        # consumers minimum — launches a job whose every task attaches a
-        # Python worker to deserialize pickled rows (~0.2 s/scan of pure
-        # machinery for a `steps`-row table; 6+ such scans in
-        # corpus_e2e).  numSlices=1 keeps the table in ONE Python
-        # partition (a coalesce(1) instead would make one task re-compute
-        # all 32 Python partitions SEQUENTIALLY, each re-attaching a
-        # worker — measured +6 s/query), and the eager localCheckpoint
-        # pays that single worker attach once, making each later
-        # rule-broadcast a one-task JVM scan of the checkpointed block.
-        # The table is vocabulary-step-bounded (`steps` rows), so the
-        # checkpoint is trivially scale-safe.
-        rdd = spark.sparkContext.parallelize(merges, numSlices=1)
-        return (
-            spark.createDataFrame(rdd, _BPE_MERGE_SCHEMA)
-            .localCheckpoint()
-            .orderBy("step")
-        )
+        return _bpe_learn_local([(r["repr"], r["freq"]) for r in head], steps)
 
-    # Distributed fallback.  Each step's subtree references every earlier
-    # step twice (the merge rule is a 1-row aggregate over the previous
-    # word table), so a lazy chain re-evaluates prefixes combinatorially
-    # — and each re-evaluation would re-scan the CORPUS for the word
-    # counts.  localCheckpoint (not persist) is the iterative-algorithm
-    # tool here: it BOTH materializes the vocabulary-bounded step state
-    # (one corpus scan total, `steps` vocab-sized passes after) AND
-    # truncates lineage — with persist alone the logical plan still nests
-    # doubly per step and merely PRINTING it (explain, UI, plan
-    # contracts) expands 2^steps and OOMs the driver (measured at
-    # steps=6).
     cur = repr_df.localCheckpoint(eager=True)
-    merge_rows = []
+    toks = F.split(F.expr("substring(repr, 2, length(repr) - 2)"), "><")
+    idx = F.when(
+        F.size(toks) >= 2, F.sequence(F.lit(1), F.size(toks) - 1)
+    ).otherwise(F.expr("array()").cast("array<int>"))
+    rules = []
     for step in range(1, steps + 1):
-        toks = F.split(F.expr("substring(repr, 2, length(repr) - 2)"), "><")
-        idx = F.when(
-            F.size(toks) >= 2, F.sequence(F.lit(1), F.size(toks) - 1)
-        ).otherwise(F.expr("array()").cast("array<int>"))
-        pairs = (
+        best = (
             cur.select("freq", toks.alias("t"), F.explode(idx).alias("i"))
             .select(
                 F.element_at("t", F.col("i")).alias("a"),
@@ -2734,107 +2712,44 @@ def bpe_learn(
             )
             .groupBy("a", "b")
             .agg(F.sum("freq").alias("cnt"))
+            .orderBy(F.col("cnt").desc(), "a", "b")
+            .first()
         )
-        best = (
-            pairs.orderBy(F.col("cnt").desc(), "a", "b")
-            .limit(1)
-            .localCheckpoint(eager=True)
-        )
-        merge_rows.append(
-            best.select(
-                F.lit(step).alias("step"),
-                F.col("a").alias("pair_left"),
-                F.col("b").alias("pair_right"),
-                F.concat("a", "b").alias("merged"),
-                F.col("cnt").cast("bigint").alias("cnt"),
-            )
-        )
-        cur = (
-            cur.crossJoin(F.broadcast(best))
-            .select(
-                F.replace(
-                    F.col("repr"),
-                    F.concat(F.lit("<"), "a", F.lit("><"), "b", F.lit(">")),
-                    F.concat(F.lit("<"), "a", "b", F.lit(">")),
-                ).alias("repr"),
-                "freq",
-            )
-            .localCheckpoint(eager=True)
-        )
-    out = merge_rows[0]
-    for m in merge_rows[1:]:
-        out = out.unionByName(m)
-    return out.orderBy("step")
+        if best is None:
+            break
+        a, b, c = best
+        rules.append((step, a, b, a + b, c))
+        cur = cur.select(
+            _bpe_apply(F.col("repr"), rules[-1:]).alias("repr"), "freq"
+        ).localCheckpoint(eager=True)
+    return rules
 
 
-def bpe_apply_merges(
-    df: DataFrame, merges: DataFrame, steps: int, repr_col: str = "r"
-) -> DataFrame:
-    """Apply ``steps`` learned merge rules (from :func:`bpe_learn`) to a
-    bracketed-repr column, in merge order, as ONE literal-replace
-    projection chain — zero joins, zero shuffles, full codegen — which
-    is what makes tokenizer application embarrassingly parallel at
-    100 TB.  Shared by :func:`bpe_encode` and
-    :func:`corpus_tokenize_pack` so learn and both apply legs cannot
-    drift.
-
-    The rules are pulled to the driver first: a ≤``steps``-row collect
-    of the vocabulary-step-bounded merge table (same bounded-collect
-    posture as ``bpe_learn``'s local-tier probe — never corpus data).
-    The previous form kept the rules distributed, one broadcast 1-row
-    cross join per rule; that cost ``steps`` SEQUENTIAL broadcast-build
-    barriers before the corpus pass could start, and each consumer of
-    the apply leg re-derived all of them (r16 measurement: the serial
-    rule-broadcast chain, not the encode projection, dominated
-    bpe_encode).  With literal rules the whole application folds into
-    the scan-side projection and the barriers disappear at every
-    scale.  Raises ``ValueError`` when the merge table holds fewer than
-    ``steps`` rules, rather than silently applying fewer."""
-    rules = (
-        merges.where(F.col("step") <= steps)
-        .select("step", "pair_left", "pair_right")
-        .orderBy("step")
-        .collect()
+def _bpe_word_tokens(docs: DataFrame, *carry: str, **per_word) -> DataFrame:
+    """``(*carry, *per_word, n)``: one row per word of ``docs``, with the
+    ``per_word`` columns computed from its ``word`` and its token count
+    ``n`` under the first ``_BPE_STEPS`` rules learned from ``docs``
+    itself.  The ``<_>`` end-of-word marker counts as one token.  Raises
+    ``ValueError`` when fewer rules can be learned, rather than encode
+    with fewer."""
+    rules = bpe_learn(_bpe_word_freqs(docs), steps=_BPE_STEPS)
+    if len(rules) < _BPE_STEPS:
+        raise ValueError(f"bpe: steps={_BPE_STEPS}, only {len(rules)} rules")
+    extra = [c.alias(k) for k, c in per_word.items()]
+    toks = F.split(F.expr("substring(r, 2, length(r) - 2)"), "><")
+    return (
+        _bpe_words(docs, *carry)
+        .select(*carry, *extra, _bpe_apply(_bpe_repr(), rules).alias("r"))
+        .select(*carry, *per_word, F.size(toks).alias("n"))
     )
-    if len(rules) < steps:
-        raise ValueError(f"bpe_apply_merges: steps={steps}, only {len(rules)} rules")
-    expr = F.col(repr_col)
-    for r in rules:
-        a, b = r["pair_left"], r["pair_right"]
-        expr = F.replace(expr, F.lit(f"<{a}><{b}>"), F.lit(f"<{a}{b}>"))
-    others = [c for c in df.columns if c != repr_col]
-    return df.select(*others, expr.alias(repr_col))
 
 
-def _bpe_encode_oracle(steps: int = _BPE_STEPS) -> str:
-    """DuckDB twin of :func:`bpe_encode`: the learn chain of
-    :func:`_bpe_oracle` (same materialized CTEs) followed by a per-doc
-    encode pass applying the ``steps`` learned merges in order."""
-    learn = _bpe_oracle(steps)
-    with_block = learn.split("\nSELECT * FROM (")[0]
-    repl = "repr"
-    for s in range(1, steps + 1):
-        repl = (
-            f"replace({repl}, '<' || (SELECT a FROM b{s}) || '><'"
-            f" || (SELECT b FROM b{s}) || '>', '<' || (SELECT a FROM b{s})"
-            f" || (SELECT b FROM b{s}) || '>')"
-        )
-    return f"""{with_block},
-docw AS MATERIALIZED (
-  SELECT doc_id,
-         '<' || array_to_string(
-           list_transform(range(1, length(word) + 1), i -> word[i]), '><')
-         || '><_>' AS repr
-  FROM (
-    SELECT doc_id, unnest(string_split_regex(
-             lower(regexp_replace(text, '[^a-zA-Z ]', ' ', 'g')),
-             '\\s+')) AS word
-    FROM documents
-  ) WHERE word != ''
-),
+def _bpe_encode_oracle() -> str:
+    return f"""WITH {_bpe_learn_sql()},
+{_bpe_docw_sql("doc_id")},
 enc AS (
   SELECT doc_id, len(string_split(substr(r, 2, length(r) - 2), '><')) AS n
-  FROM (SELECT doc_id, {repl} AS r FROM docw)
+  FROM (SELECT doc_id, {_bpe_chain_sql()} AS r FROM docw)
 )
 SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
        CAST(SUM(n) AS BIGINT) AS n_tokens
@@ -2843,53 +2758,12 @@ FROM enc GROUP BY doc_id ORDER BY doc_id"""
 
 @query("bpe_encode", _bpe_encode_oracle())
 def bpe_encode(spark, sf_dir):
-    """Tokenizer APPLICATION leg completing :func:`bpe_merges`: encode
-    every document with the corpus-learned merge rules and report per-doc
-    word and BPE-token counts — the number a training pipeline actually
-    bills by (sequence packing, mixture quotas, and context budgeting all
-    consume token counts, and token_counts' fixed ceil(len/4) heuristic is
-    exactly what this replaces).  The merge table is learned once
-    (vocabulary-bounded, see bpe_merges) and each rule is a broadcast
-    1-row join; encoding is then an embarrassingly parallel string pass
-    over the corpus — the 100 TB shape of every production tokenizer run.
-    Word splitting and merge application share bpe_merges' kernel
-    expressions, so learn and encode cannot drift apart."""
+    """Per document, its word count and its token count under the BPE
+    rules of :func:`bpe_merges`.  The rules are literals in the encode
+    projection, so encoding is one scan-side pass over the corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    words = (
-        docs.select(
-            F.explode(
-                F.split(
-                    F.lower(F.regexp_replace("text", "[^a-zA-Z ]", " ")),
-                    r"\s+",
-                )
-            ).alias("word")
-        )
-        .where(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    merges = bpe_learn(words, steps=_BPE_STEPS)
-    chars = F.expr(
-        "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
-    )
-    docw = docs.select(
-        "doc_id",
-        F.explode(
-            F.split(
-                F.lower(F.regexp_replace("text", "[^a-zA-Z ]", " ")), r"\s+"
-            )
-        ).alias("word"),
-    ).where(F.col("word") != "")
-    cur = docw.select(
-        "doc_id",
-        F.concat(F.lit("<"), F.concat_ws("><", chars), F.lit("><_>")).alias(
-            "r"
-        ),
-    )
-    cur = bpe_apply_merges(cur, merges, _BPE_STEPS)
-    toks = F.split(F.expr("substring(r, 2, length(r) - 2)"), "><")
     return (
-        cur.select("doc_id", F.size(toks).alias("n"))
+        _bpe_word_tokens(docs, "doc_id")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_words"),
@@ -2899,47 +2773,19 @@ def bpe_encode(spark, sf_dir):
     )
 
 
-def _tokenize_pack_oracle(
-    steps: int = _BPE_STEPS,
-    capacity: int = _PACK_CAPACITY,
-    corpus: str = "documents",
-) -> str:
-    """DuckDB twin of :func:`corpus_tokenize_pack`: the BPE learn chain of
-    :func:`_bpe_oracle` (same materialized CTEs), the per-doc encode pass
-    of :func:`_bpe_encode_oracle` carrying (lang, source), then the exact
-    first-fit recursion of ``_PACK_SQL`` over BPE token counts — the full
-    learn → encode → pack DAG replayed in one SQL statement.  ``corpus``
-    names the (lang, source, doc_id, text) relation, as in
-    :func:`_bpe_oracle`."""
-    learn = _bpe_oracle(steps, corpus=corpus)
-    with_block = learn.split("\nSELECT * FROM (")[0].replace(
-        "WITH ", "WITH RECURSIVE ", 1
-    )
-    repl = "repr"
-    for s in range(1, steps + 1):
-        repl = (
-            f"replace({repl}, '<' || (SELECT a FROM b{s}) || '><'"
-            f" || (SELECT b FROM b{s}) || '>', '<' || (SELECT a FROM b{s})"
-            f" || (SELECT b FROM b{s}) || '>')"
-        )
-    return f"""{with_block},
-docw AS MATERIALIZED (
-  SELECT lang, source, doc_id,
-         '<' || array_to_string(
-           list_transform(range(1, length(word) + 1), i -> word[i]), '><')
-         || '><_>' AS repr
-  FROM (
-    SELECT lang, source, doc_id, unnest(string_split_regex(
-             lower(regexp_replace(text, '[^a-zA-Z ]', ' ', 'g')),
-             '\\s+')) AS word
-    FROM {corpus}
-  ) WHERE word != ''
-),
+def _tokenize_pack_oracle(corpus: str = "documents", pre: str = "") -> str:
+    """The learn CTEs over ``corpus`` (a ``(lang, source, doc_id, text)``
+    relation), the per-doc encode carrying ``(lang, source)``, then the
+    first-fit recursion of ``_PACK_SQL`` over the token counts.  ``pre``
+    is prepended to the CTE list."""
+    capacity = _PACK_CAPACITY
+    return f"""WITH RECURSIVE {pre}{_bpe_learn_sql(corpus)},
+{_bpe_docw_sql("lang, source, doc_id", corpus)},
 enc AS MATERIALIZED (
   SELECT lang, source, doc_id,
          CAST(SUM(len(string_split(substr(r, 2, length(r) - 2), '><')))
               AS BIGINT) AS n_tok
-  FROM (SELECT lang, source, doc_id, {repl} AS r FROM docw)
+  FROM (SELECT lang, source, doc_id, {_bpe_chain_sql()} AS r FROM docw)
   GROUP BY 1, 2, 3
 ),
 ordered AS (
@@ -2966,97 +2812,33 @@ SELECT lang, source, doc_id, n_tok, pack_id FROM packed"""
 
 @query("corpus_tokenize_pack", _tokenize_pack_oracle())
 def corpus_tokenize_pack(spark, sf_dir):
-    """The end-to-end tokenize→pack leg of a training-data pipeline
-    (r6 VERDICT task 6): learn the BPE merges from the corpus
-    (:func:`bpe_learn`, vocabulary-bounded iteration), encode every
-    document with them (:func:`bpe_apply_merges` — a zero-shuffle
-    broadcast-rule projection chain), and pack the resulting REAL token
-    counts into 128-token training contexts with exact first-fit
-    (:func:`first_fit_pack`) — one DAG, where ``pack_sequences`` packed
-    heuristic whitespace counts.
-
-    Plan shape (pinned by tests/test_plan_contracts.py): after the learn
-    phase (whose state is vocabulary-sized, localCheckpointed), the
-    corpus-side plan has exactly TWO data shuffles — the per-doc token
-    aggregate and the per-shard pack walk; merge application adds only
-    broadcast exchanges.  Documents with no alphabetic words have no
-    tokens and are dropped by both engines (same rule as bpe_encode).
-
-    At 100 TB: learn state is the vocabulary (MBs); encode is
-    embarrassingly parallel; packing buckets by doc_id range
-    (``n_buckets``) so the sequential walk is bucket-bounded, per
-    first_fit_pack's scale note."""
-    docs = load_table(spark, sf_dir, "documents")
-    return tokenize_pack_frame(docs)
+    """Tokenize → pack over the whole corpus: :func:`tokenize_pack_frame`
+    on ``documents``.  Documents with no alphabetic words have no tokens
+    and are dropped by both engines."""
+    return tokenize_pack_frame(load_table(spark, sf_dir, "documents"))
 
 
 def tokenize_pack_frame(docs: "DataFrame") -> "DataFrame":
-    """The learn → encode → pack DAG over any ``(lang, source, doc_id,
-    text)`` frame — shared by :func:`corpus_tokenize_pack` (full corpus)
-    and :func:`corpus_e2e` (curated + mixture-selected corpus) so the two
-    registrations run the identical kernel and cannot drift.  Input goes
-    through ``sources.spread`` (measured-condition repartition): the
-    word-explode and encode projections are CPU-bound and the fixture
-    parquet is one row group; on pre-split cluster input the condition
-    is false and no shuffle is added."""
-    from tamar_spark.sources import spread
-
-    docs = spread(docs)
-    words = (
-        docs.select(
-            F.explode(
-                F.split(
-                    F.lower(F.regexp_replace("text", "[^a-zA-Z ]", " ")),
-                    r"\s+",
-                )
-            ).alias("word")
-        )
-        .where(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    merges = bpe_learn(words, steps=_BPE_STEPS)
-    chars = F.expr(
-        "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
-    )
-    docw = docs.select(
-        "lang",
-        "source",
-        "doc_id",
-        F.explode(
-            F.split(
-                F.lower(F.regexp_replace("text", "[^a-zA-Z ]", " ")), r"\s+"
-            )
-        ).alias("word"),
-    ).where(F.col("word") != "")
-    cur = docw.select(
-        "lang",
-        "source",
-        "doc_id",
-        F.concat(F.lit("<"), F.concat_ws("><", chars), F.lit("><_>")).alias(
-            "r"
-        ),
-    )
-    cur = bpe_apply_merges(cur, merges, _BPE_STEPS)
-    toks = F.split(F.expr("substring(r, 2, length(r) - 2)"), "><")
+    """Learn the BPE rules from a ``(lang, source, doc_id, text)`` frame,
+    count each document's tokens with them, and pack the counts into
+    128-token contexts with exact first-fit (:func:`first_fit_pack`).
+    Shared by :func:`corpus_tokenize_pack` and :func:`corpus_e2e`.  Input
+    goes through ``sources.spread``: the word and encode projections are
+    CPU-bound, and on input already split over the cores no shuffle is
+    added.  The corpus-side plan shuffles twice: the per-doc token
+    aggregate and the per-shard pack walk."""
     per_doc = (
-        cur.select("lang", "source", "doc_id", F.size(toks).alias("n"))
+        _bpe_word_tokens(spread(docs), "lang", "source", "doc_id")
         .groupBy("lang", "source", "doc_id")
         .agg(F.sum("n").cast("bigint").alias("n_tok"))
     )
     return first_fit_pack(per_doc)
 
 
-def _e2e_oracle(
-    steps: int = _BPE_STEPS, capacity: int = _PACK_CAPACITY
-) -> str:
-    """DuckDB twin of :func:`corpus_e2e`, built by CHAINING the existing
-    stage twins (r7 VERDICT task 5): the full ``_CURATE_SQL`` runs as a
-    subquery whose ``keep`` verdicts define the curated pool, the
-    ``data_mixture`` quota arithmetic replays over that pool, and the
-    selected corpus feeds the parameterized learn→encode→pack twin
-    (:func:`_tokenize_pack_oracle` with ``corpus='sel_docs'``) — one SQL
-    statement replaying the one-lineage Spark DAG stage for stage."""
+def _e2e_oracle() -> str:
+    """The stage twins chained: ``_CURATE_SQL``'s ``keep`` verdicts define
+    the curated pool, the ``data_mixture`` quotas select from it, and the
+    selected corpus ``sel_docs`` feeds :func:`_tokenize_pack_oracle`."""
     wts_values = ", ".join(
         f"('{l}', {w})" for l, w in _MIXTURE_WEIGHTS
     )
@@ -3082,50 +2864,22 @@ sel_docs AS MATERIALIZED (
   SELECT d.lang, d.source, d.doc_id, d.text
   FROM documents d JOIN epicked USING (doc_id)
 )"""
-    tp = _tokenize_pack_oracle(steps, capacity, corpus="sel_docs")
-    return tp.replace("WITH RECURSIVE ", "WITH RECURSIVE " + pre + ",\n", 1)
+    return _tokenize_pack_oracle(corpus="sel_docs", pre=pre + ",\n")
 
 
 @query("corpus_e2e", _e2e_oracle())
 def corpus_e2e(spark, sf_dir):
-    """The pretraining-data build END TO END in one lineage (r7 VERDICT
-    task 5): curate (Gopher repetition quality + exact dedup + benchmark
-    decontamination, :func:`curate_verdicts`) → mixture (exact language
-    quotas by deterministic md5 rank, :func:`mixture_sample`) → tokenize
-    (BPE learned ON THE SELECTED CORPUS — the tokenizer sees exactly what
-    training will see, which is why the composition order matters and a
-    bolted-together pipeline of independent jobs gets it wrong) → pack
-    (exact first-fit into 128-token contexts, :func:`first_fit_pack`).
-    Every stage is the registered kernel the standalone queries run, so
-    the composition cannot drift from the parts; the oracle chains the
-    same stage twins into one SQL statement.
+    """The pretraining-data build in one lineage: curate
+    (:func:`curate_verdicts`) → exact language quotas
+    (:func:`mixture_sample`) → BPE learned on the selected corpus and
+    first-fit packing (:func:`tokenize_pack_frame`).  Every stage is the
+    kernel the standalone queries run, and the oracle chains their twins.
 
-    Materialization points, stated honestly: the curated pool and the
-    selected corpus are each lazily localCheckpointed — ``kept`` because
-    the mixture's two legs (stratum counts, per-stratum rank) would
-    otherwise evaluate the fold-heavy verdict projection twice, and
-    ``corpus`` because the BPE word-frequency aggregate and the per-doc
-    encode both consume it; :func:`bpe_learn` checkpoints its
-    vocabulary-bounded step state as always.  Everything else — verdict
-    folds, quota broadcast, rank filter, merge application, token
-    aggregate, pack walk — is one Catalyst lineage, pinned by the plan
-    contract (shuffle budget + the single FlatMapGroupsInPandas pack
-    kernel as the only Python stage).
-
-    Scale: each stage keeps its own scale story (per-doc folds; bounded
-    quota broadcast; vocabulary-bounded learn state; embarrassingly
-    parallel encode; bucket-bounded pack walk) — composing them adds no
-    new wide operator, only the two bounded materializations.  The
-    upfront repartition is CONDITIONAL on measured input parallelism:
-    the fixture parquet is one row group, so Spark hands the whole
-    corpus to one task and the verdict folds (token sort + runs fold +
-    n-gram transforms per row, the genuinely CPU-bound stage) serialize
-    — measured 12.3 s single-task vs ~1 s spread over the cores.  At
-    100 TB the input arrives in thousands of splits and the condition is
-    false, so no shuffle is added (the same measured-condition pattern
-    as the kcore broadcast)."""
-    from tamar_spark.sources import spread
-
+    The curated verdicts and the selected corpus are lazily
+    localCheckpointed; everything else is one Catalyst lineage whose only
+    Python stage is the pack walk.  The input goes through
+    ``sources.spread``, which repartitions only input narrower than the
+    cores."""
     return e2e_frame(spread(load_table(spark, sf_dir, "documents")))
 
 
@@ -3294,37 +3048,13 @@ def dsir_select(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _bpe_fertility_oracle(steps: int = _BPE_STEPS) -> str:
-    """DuckDB twin of :func:`bpe_fertility`: the learn chain of
-    :func:`_bpe_oracle`, the per-word encode of :func:`_bpe_encode_oracle`
-    carrying ``lang`` and the normalized word length, then one
-    per-language rollup of the fertility ratios."""
-    learn = _bpe_oracle(steps)
-    with_block = learn.split("\nSELECT * FROM (")[0]
-    repl = "repr"
-    for s in range(1, steps + 1):
-        repl = (
-            f"replace({repl}, '<' || (SELECT a FROM b{s}) || '><'"
-            f" || (SELECT b FROM b{s}) || '>', '<' || (SELECT a FROM b{s})"
-            f" || (SELECT b FROM b{s}) || '>')"
-        )
-    return f"""{with_block},
-docw AS MATERIALIZED (
-  SELECT lang, length(word) AS wlen,
-         '<' || array_to_string(
-           list_transform(range(1, length(word) + 1), i -> word[i]), '><')
-         || '><_>' AS repr
-  FROM (
-    SELECT lang, unnest(string_split_regex(
-             lower(regexp_replace(text, '[^a-zA-Z ]', ' ', 'g')),
-             '\\s+')) AS word
-    FROM documents
-  ) WHERE word != ''
-),
+def _bpe_fertility_oracle() -> str:
+    return f"""WITH {_bpe_learn_sql()},
+{_bpe_docw_sql("lang", extra=" length(word) AS wlen,")},
 enc AS (
   SELECT lang, wlen,
          len(string_split(substr(r, 2, length(r) - 2), '><')) AS n
-  FROM (SELECT lang, wlen, {repl} AS r FROM docw)
+  FROM (SELECT lang, wlen, {_bpe_chain_sql()} AS r FROM docw)
 )
 SELECT lang,
        CAST(COUNT(*) AS BIGINT) AS n_words,
@@ -3337,60 +3067,14 @@ FROM enc GROUP BY lang ORDER BY lang"""
 
 @query("bpe_fertility", _bpe_fertility_oracle())
 def bpe_fertility(spark, sf_dir):
-    """Tokenizer EVALUATION leg on top of the learn/encode pair: per
-    language, the fertility of the corpus-learned BPE — tokens per word —
-    and the characters-per-token compression, the two numbers a tokenizer
-    review actually reads (fertility >> 1 on a language means its text
-    pays more context budget per word; the metric behind every
-    "tokenizer X penalizes language Y" analysis, cf. the multilingual
-    fertility tables of the XLM-R / NLLB papers).  Note the `<_>`
-    end-of-word marker counts one token per word on both sides, exactly
-    as in bpe_encode, so fertility is (subwords+1)/word — comparable
-    across runs because the convention is pinned by the shared kernel.
-
-    Plan: the merge table is learned once (vocabulary-bounded); the
-    encode pass carries (lang, word-length) through the same broadcast
-    replace chain as bpe_encode (shared kernel — the legs cannot drift);
-    the rollup is one tiny per-language aggregate.  Ratios are exact
-    integer sums with ONE double division each, rounded identically on
-    both engines."""
+    """Per language, the fertility of the corpus-learned BPE (tokens per
+    word) and its characters per token.  The ``<_>`` end-of-word marker
+    counts one token per word on both engines, so fertility is
+    (subwords + 1) / word.  Ratios are exact integer sums with one double
+    division each, rounded identically on both engines."""
     docs = load_table(spark, sf_dir, "documents")
-    words = (
-        docs.select(
-            F.explode(
-                F.split(
-                    F.lower(F.regexp_replace("text", "[^a-zA-Z ]", " ")),
-                    r"\s+",
-                )
-            ).alias("word")
-        )
-        .where(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    merges = bpe_learn(words, steps=_BPE_STEPS)
-    chars = F.expr(
-        "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
-    )
-    docw = docs.select(
-        "lang",
-        F.explode(
-            F.split(
-                F.lower(F.regexp_replace("text", "[^a-zA-Z ]", " ")), r"\s+"
-            )
-        ).alias("word"),
-    ).where(F.col("word") != "")
-    cur = docw.select(
-        "lang",
-        F.length("word").alias("wlen"),
-        F.concat(F.lit("<"), F.concat_ws("><", chars), F.lit("><_>")).alias(
-            "r"
-        ),
-    )
-    cur = bpe_apply_merges(cur, merges, _BPE_STEPS)
-    toks = F.split(F.expr("substring(r, 2, length(r) - 2)"), "><")
     return (
-        cur.select("lang", "wlen", F.size(toks).alias("n"))
+        _bpe_word_tokens(docs, "lang", wlen=F.length("word"))
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_words"),

@@ -2219,6 +2219,21 @@ def test_rounded_aggregates_stable_under_repartitioning(spark, sf_dir):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def test_caller_set_width_survives_a_query_call(spark, sf_dir):
+    """A session is prepared once: a shuffle width the caller sets after
+    that survives both the query wrapper and ``Environment``."""
+    from tamar_spark.queries import QUERIES
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    QUERIES["session_agg"](spark, sf_dir)
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        QUERIES["session_agg"](spark, sf_dir)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def test_simhash_120bit_pigeonhole_exhaustive_with_straddling_chunks(spark):
     """The 120-bit pigeonhole must find EVERY pair within the hamming
     bound — including at max_hamming=8, where 9 chunks of 13 bits make

@@ -89,9 +89,9 @@ CONTRACTS = [
     # min/max IVM: safe fold + endangered-group rescan, all group lists
     # and change batches broadcast; aggregates dominate the exchanges
     ("cdc_incremental_minmax", 10, 4),
-    # BPE: step state is localCheckpoint-truncated, so the visible plan is
-    # the final union/encode only — the checkpoint keeps BOTH the executed
-    # chain linear and the plan printable (lazy nesting doubles per step)
+    # BPE: the rules are learned on the driver, so the visible plan is the
+    # local rule relation (bpe_merges) or the encode with the rules as
+    # literal replaces and the per-doc aggregate (bpe_encode)
     ("bpe_merges", 3, 0),
     ("bpe_encode", 4, 0),
     # triangles: lease-scoped persisted oriented edges (r9 task 4) +
@@ -627,13 +627,11 @@ def test_paragraph_filter_plan_contract(spark, sf_dir):
 
 
 def test_tokenize_pack_encode_stage_is_projection_only(spark, sf_dir):
-    """corpus_tokenize_pack (r6 VERDICT task 6): after the vocabulary-
-    bounded learn phase (localCheckpointed, not in this plan), the
-    corpus-side DAG must shuffle exactly twice — the per-doc token
-    aggregate and the per-shard pack walk.  Merge application is 6
-    broadcast 1-row rules folded into the projection chain; if a refactor
-    ever makes rule application shuffle (e.g. a real join on a token
-    key), this pins the regression."""
+    """corpus_tokenize_pack: the rules are learned on the driver (not in
+    this plan) and applied as literal replaces in the encode projection,
+    so the corpus-side DAG shuffles exactly twice — the per-doc token
+    aggregate and the per-shard pack walk.  Rule application that joins
+    or shuffles would break this."""
     df = QUERIES["corpus_tokenize_pack"](spark, sf_dir)
     got = shuffle_count(df)
     assert got == 2, f"expected 2 data shuffles, got {got}"
@@ -850,6 +848,74 @@ def test_internal_persists_are_lease_scoped(spark, sf_dir, qname):
     del df
     gc.collect()
     assert registry() - before == set(), f"{qname} leaked persisted RDDs"
+
+
+def test_cache_lease_keeps_a_cache_another_lease_holds(spark):
+    """Two live leased frames whose persisted plans are equal share one
+    Spark cache entry: dropping one must leave the other planned on the
+    cache, and dropping both releases it."""
+    import gc
+
+    from tamar_spark.operators.cache import leased_persist, scope_caches
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+
+    def build():
+        base = leased_persist(spark.range(1000).selectExpr("id AS k", "id % 7 AS v"))
+        return scope_caches(base.join(base.selectExpr("k", "v AS w"), "k"), base)
+
+    def cached_scans(df):
+        return df.filter("k >= 0")._jdf.queryExecution().executedPlan().toString().count(
+            "InMemoryTableScan"
+        )
+
+    gc.collect()
+    assert cache_manager.isEmpty()
+    first = build()
+    second = build()
+    assert cached_scans(first) == cached_scans(second) == 2
+    del first
+    gc.collect()
+    assert cached_scans(second) == 2
+    assert second.count() == 1000
+    del second
+    gc.collect()
+    assert cache_manager.isEmpty()
+
+
+def test_cache_lease_counts_hold_under_concurrent_threads(spark):
+    """More threads than cores lease and release one plan at once: no
+    count is lost, so the last release leaves no lease and no cache."""
+    import sys
+    import threading
+
+    from tamar_spark.operators import cache
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    errors = []
+
+    def work():
+        try:
+            for _ in range(5):
+                df = cache.leased_persist(spark.range(100).selectExpr("id AS k"))
+                df._tamar_cache_lease.release()
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    threads = [threading.Thread(target=work) for _ in range(8)]
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert not cache._HELD
+    assert cache_manager.isEmpty()
 
 
 def test_cache_lease_composition_and_release(spark):

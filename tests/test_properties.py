@@ -841,27 +841,24 @@ def test_bpe_learn_matches_reference_model(spark, pairs):
     )
     expected = _py_bpe(word_freqs, 3)
     for local_below in (200_000, 0):
-        got = [
-            (r.step, r.pair_left, r.pair_right, r.merged, r.cnt)
-            for r in bpe_learn(df, steps=3, local_below=local_below).collect()
-        ]
+        got = bpe_learn(df, steps=3, local_below=local_below)
         assert got == expected, f"local_below={local_below}"
 
 
-def test_bpe_apply_merges_rejects_truncated_merge_table(spark):
-    """A merge table shorter than ``steps`` must raise, not under-apply."""
+def test_bpe_rejects_truncated_merge_rules(spark):
+    """Rules apply in order; a corpus that yields fewer rules than the
+    encoder needs must raise, not under-apply."""
     import pytest
 
-    from tamar_spark.queries_pipeline import bpe_apply_merges
+    from tamar_spark.queries_pipeline import _bpe_apply, _bpe_word_tokens
 
-    merges = spark.createDataFrame(
-        [(1, "a", "b", "ab", 3), (2, "ab", "c", "abc", 2)],
-        "step INT, pair_left STRING, pair_right STRING, merged STRING, cnt BIGINT",
-    )
+    rules = [(1, "a", "b", "ab", 3), (2, "ab", "c", "abc", 2)]
     df = spark.createDataFrame([(1, "<a><b><c><_>")], "doc_id long, r string")
-    assert bpe_apply_merges(df, merges, 2).first()["r"] == "<abc><_>"
-    with pytest.raises(ValueError, match="steps=3, only 2 rules"):
-        bpe_apply_merges(df, merges, 3)
+    assert df.select(_bpe_apply(F.col("r"), rules).alias("r")).first()["r"] == "<abc><_>"
+    # "abc" alone yields ab, abc, abc_ and then no pair is left
+    docs = spark.createDataFrame([(1, "abc")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="steps=6, only 3 rules"):
+        _bpe_word_tokens(docs, "doc_id")
 
 
 token_list_strategy = st.lists(

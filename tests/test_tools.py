@@ -36,6 +36,23 @@ def test_code_lines_and_plan_snapshot_run(spark, sf_dir, tmp_path):
     assert "== stream 0 ==" not in (tmp_path / "session_agg.txt").read_text()
 
 
+def test_plan_snapshot_gates_initial_plan_and_hashes_oracles(spark, sf_dir, tmp_path):
+    """The gate file holds AQE's initial plan, the final plan goes to
+    ``final/``, and ``oracles.sha256`` has one line per oracle."""
+    import hashlib
+
+    from tamar_spark.queries import ORACLES
+
+    snap = _load_tool("plan_snapshot")
+    snap.snapshot(spark, str(tmp_path), sf_dir, {"session_agg"})
+    assert "isFinalPlan=false" in (tmp_path / "session_agg.txt").read_text()
+    assert "isFinalPlan=true" in (tmp_path / "final" / "session_agg.txt").read_text()
+    lines = (tmp_path / "oracles.sha256").read_text().splitlines()
+    assert len(lines) == len(ORACLES)
+    want = hashlib.sha256(ORACLES["session_agg"].encode()).hexdigest()
+    assert f"{want}  session_agg" in lines
+
+
 def test_plan_snapshot_masks_aqe_numbering():
     """Two runs of one commit number AQE nodes, codegen stages and query
     stages differently; the normalised text must not, and must keep the

@@ -7,23 +7,28 @@ Usage::
 Runs every query of ``tamar_spark.queries.QUERIES`` (or the ``--only``
 subset) in registration order on a vanilla ``local[$SPARK_GRAFT_CPUS]``
 session, against the scale-factor directory ``--sf`` (default
-``$SPARK_GRAFT_SF_DIR``).  ``OUT_DIR/<query>.txt`` holds:
+``$SPARK_GRAFT_SF_DIR``).  It writes:
 
-- for each stream the query starts, the formatted plan of its last
-  micro-batch (``DataStreamWriter.start`` is wrapped to capture the
-  query handle);
-- the formatted plan of the returned DataFrame after it has been
-  collected, i.e. the executed (final adaptive) plan.
+- ``OUT_DIR/<query>.txt``, the gate: for each stream the query starts,
+  the formatted plan of its last micro-batch (``DataStreamWriter.start``
+  is wrapped to capture the query handle), then the formatted plan of the
+  returned DataFrame taken before it is collected, i.e. AQE's initial
+  plan;
+- ``OUT_DIR/final/<query>.txt``: the formatted plan after the collect,
+  i.e. the final adaptive plan, whose join sides AQE picks at run time;
+- ``OUT_DIR/oracles.sha256``: one ``<sha256>  <query>`` line per
+  ``ORACLES`` entry.
 
 Ids and labels that change from run to run are replaced by fixed tokens
 and the per-node detail blocks are sorted (see :func:`normalise`), so the
-output of two commits can be compared with ``diff -r``.
+gate of two commits can be compared with ``diff -r --exclude final``.
 """
 
 from __future__ import annotations
 
 import argparse
 import contextlib
+import hashlib
 import os
 import re
 import sys
@@ -122,27 +127,49 @@ def _formatted(spark, query_execution) -> str:
     return query_execution.explainString(mode)
 
 
+def _write(path: str, text: str) -> None:
+    with open(path, "w", encoding="utf-8") as f:
+        f.write(text)
+
+
+def write_oracle_hashes(out_dir: str) -> None:
+    """Write ``out_dir/oracles.sha256``, one line per oracle SQL string."""
+    from tamar_spark.queries import ORACLES
+
+    _write(
+        os.path.join(out_dir, "oracles.sha256"),
+        "".join(
+            f"{hashlib.sha256(sql.encode()).hexdigest()}  {name}\n"
+            for name, sql in sorted(ORACLES.items())
+        ),
+    )
+
+
 def snapshot(spark, out_dir: str, sf_dir: str, only=None) -> list:
-    """Write ``out_dir/<name>.txt`` for each query; return the names written."""
+    """Write the gate and final plan of each query and the oracle hashes;
+    return the names written."""
     from tamar_spark.queries import QUERIES
 
     names = [n for n in QUERIES if only is None or n in only]
     missing = sorted(set(only or ()) - set(QUERIES))
     if missing:
         raise KeyError(f"unknown queries: {missing}")
-    os.makedirs(out_dir, exist_ok=True)
+    os.makedirs(os.path.join(out_dir, "final"), exist_ok=True)
+    write_oracle_hashes(out_dir)
     for name in names:
         with capture_streams() as started:
             df = QUERIES[name](spark, sf_dir)
+            initial = _formatted(spark, df._jdf.queryExecution())
             df.collect()
         parts = []
         for i, q in enumerate(started):
             q.awaitTermination()
             last = q._jsq.streamingQuery().lastExecution()
             parts.append(f"== stream {i} ==\n{_formatted(spark, last)}")
-        parts.append(f"== result ==\n{_formatted(spark, df._jdf.queryExecution())}")
-        with open(os.path.join(out_dir, f"{name}.txt"), "w", encoding="utf-8") as f:
-            f.write(normalise("\n".join(parts)))
+        parts.append(f"== result ==\n{initial}")
+        _write(os.path.join(out_dir, f"{name}.txt"), normalise("\n".join(parts)))
+        final = _formatted(spark, df._jdf.queryExecution())
+        _write(os.path.join(out_dir, "final", f"{name}.txt"), normalise(final))
     return names
 
 
