@@ -94,6 +94,18 @@ _CHANGED_IN_ROUND = {
     # property-tested on ≥1k-paragraph docs).
     "crawl_normalize": 15,
     "paragraph_filter": 15,
+    # r18: the media operators emit the caller's id column through one
+    # per-row Arrow adapter and the payload synthesis is one per-value
+    # UDF; table_profile is one unpivot + single-distinct aggregate.
+    # Only the queries whose plan shape changed are pinned: the rotation
+    # head holds 50 queries and the r17 entries keep 43 of them live.
+    "video_frames": 18,
+    "audio_wav_meta": 18,
+    "audio_pcm_stats": 18,
+    "audio_silence_segments": 18,
+    "image_bmp_pixels": 18,
+    "image_png_pixels": 18,
+    "table_profile": 18,
     # r17: min-label propagation deleted; both queries now run the
     # large-star/small-star connected components that dedup_clusters_star
     # ran — the engine rewrite carries a fresh attestation.

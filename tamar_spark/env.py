@@ -37,20 +37,18 @@ def get_spark(
     shuffle_partitions: Optional[int] = None,
     extra_conf: Optional[dict] = None,
 ) -> SparkSession:
-    """Create (or get) a SparkSession tuned for this engine.
+    """Create (or get) a SparkSession tuned for this engine and prepared
+    by :func:`prep_session`; ``shuffle_partitions``, when given, then
+    replaces the prepared shuffle width and survives later query calls.
 
     In local test mode this is ``local[$SPARK_GRAFT_CPUS]``; on a cluster the
     caller supplies ``master``/conf via spark-submit and we only set SQL-level
     knobs (all runtime-safe).
     """
-    cpus = _default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -68,10 +66,12 @@ def get_spark(
     if master is not None:
         builder = builder.master(master)
     elif not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
-        builder = builder.master(f"local[{cpus}]")
+        builder = builder.master(f"local[{_default_parallelism()}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = prep_session(builder.getOrCreate())
+    if shuffle_partitions:
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return spark
 
 
@@ -79,13 +79,15 @@ _PREPARED = "spark.tamar.sessionPrepared"
 
 
 def prep_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable conf to an externally-provided session, once.
+    """Apply runtime-settable conf to a session, once.
 
-    Used when a harness hands us its own SparkSession: we can only set
-    runtime-mutable SQL confs here (timezone matters for parquet timestamp
-    comparisons against naive-timestamp oracles like DuckDB).  A conf the
-    session rejects raises.  A session already prepared is returned as it
-    is, so a conf the caller sets afterwards (say, the shuffle width)
+    Sets the UTC session timezone (parquet timestamps compare against
+    naive-timestamp oracles such as DuckDB), AQE, the shuffle width
+    ``$SPARK_GRAFT_CPUS``, the codegen method-split threshold and
+    ``nanosAsLong`` (TIMESTAMP(NANOS) parquet reads as long, which
+    :func:`tamar_spark.sources.load_table` truncates to µs).  A conf the
+    session rejects raises.  A session already prepared is returned as
+    it is, so a conf the caller sets afterwards (say, the shuffle width)
     survives every later query call.
     """
     if spark.conf.get(_PREPARED, None) == "true":
@@ -101,6 +103,7 @@ def prep_session(spark: SparkSession) -> SparkSession:
     # small-SF wall clock and risks JIT bailout (>8KB bytecode) at any
     # scale; whole-stage codegen itself stays ON
     spark.conf.set("spark.sql.codegen.methodSplitThreshold", "128")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set(_PREPARED, "true")
     return spark
 

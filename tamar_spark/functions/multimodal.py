@@ -4,8 +4,9 @@ Image/audio/video content is carried as a ``binary`` column plus a metadata
 struct (:data:`MEDIA_SCHEMA`): payload bytes stay columnar in parquet, and
 metadata predicates prune row groups without touching payloads.
 
-Decode stages are Arrow-batched ``mapInPandas`` over pure-Python parsers
-with no codec dependency:
+Every decode operator is one ``mapInPandas`` stage built by
+:func:`tamar_spark.functions._arrow.per_row` over a pure-Python parser with
+no codec dependency, and emits the caller's ``id_col``:
 
 - images (:func:`decode_image_pixels`): BMP, binary PPM/PGM, PNG and
   baseline JPEG, dispatched on magic bytes.  A recognised format with a
@@ -14,18 +15,19 @@ with no codec dependency:
 - video (:func:`sample_frames`): MJPEG and rawvideo frame splitting.
 - audio (:func:`decode_audio`, :func:`pcm_stats`,
   :func:`pcm_silence_segments`): RIFF/WAV PCM.
+- JPEG round trips (:func:`jpeg_roundtrip_check`,
+  :func:`mjpeg_frame_pixel_check`): encode, decode and a bounded-error
+  pixel comparison.
 
-Other containers and codecs raise ``NotImplementedError`` at execution.
-Decode stages are CPU-bound: select metadata-only projections for
-filtering and joins, and re-attach payloads late.
+Per-value payload synthesis goes through
+:func:`tamar_spark.functions._arrow.per_value`.  Other containers and
+codecs raise ``NotImplementedError`` at execution.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -34,6 +36,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from tamar_spark.functions._arrow import per_row
 
 __all__ = [
     "MEDIA_SCHEMA",
@@ -941,76 +945,64 @@ def parse_jpeg(buf: bytes):
     return w_, h, out.shape[-1], out.tobytes()
 
 
+# The JPEG round-trip operating point: 8 px/row RGB frames at quality 99,
+# every decoded pixel within 12 of its source byte (the largest error
+# measured over the sf0.1 fixture is 5).
+_JPEG_WIDTH = 8
+_JPEG_QUALITY = 99
+_JPEG_MAX_ERR = 12
+_MJPEG_FRAME_ROWS = 8
+_MJPEG_EVERY_N = 4
+
+
+def _jpeg_within_bound(jpeg: bytes, src: bytes, rows: int):
+    """Decode ``jpeg`` → ``(width, height, n_channels, ok)``; ``ok`` when
+    the geometry is ``_JPEG_WIDTH`` × ``rows`` RGB and every pixel is
+    within ``_JPEG_MAX_ERR`` of ``src``."""
+    import numpy as np
+
+    w, h, nch, px = parse_jpeg(jpeg)
+    want = np.frombuffer(src, dtype=np.uint8).astype(np.int64)
+    got = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+    ok = (
+        w == _JPEG_WIDTH
+        and h == rows
+        and nch == 3
+        and len(got) == len(want)
+        and int(np.abs(want - got).max()) <= _JPEG_MAX_ERR
+    )
+    return w, h, nch, bool(ok)
+
+
 def jpeg_roundtrip_check(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    width: int = 8,
-    quality: int = 99,
-    max_err: int = 12,
     restart_interval: int = 0,
 ) -> DataFrame:
-    """Encode each row's utf-8 bytes as a baseline JPEG and decode it
-    back, emitting ``(id, width, height, n_channels, decode_ok)`` where
-    ``decode_ok`` = dimensions round-tripped AND every recovered pixel is
-    within ``max_err`` of the source byte.  JPEG is lossy, so the PNG
-    query's hash-the-source trick cannot work here; the bounded-error
-    boolean is the self-verified-check pattern (approx_distinct_users):
-    a broken Huffman walk, zigzag, dequant, or IDCT produces garbage
-    pixels and fails the bound — only a working codec pair passes.
-    Measured at quality 99 the true max error over the ENTIRE sf0.1
-    fixture is 5 (BASELINE.md r12; quality 97 read 15 — too close to a
-    bound), so the 12 bound has 2.4× margin and the boolean is stable
-    against float wobble.  ``restart_interval`` threads through to the
-    encoder (r13), so the same check exercises the DRI/RSTn restart
-    protocol end-to-end: a decoder that mis-walks segment boundaries,
-    forgets the DC-predictor reset, or miscounts the marker cycle fails
-    the bound (or raises) on every multi-MCU document.  One Arrow-batched
-    ``mapInPandas`` stage, no shuffle; per-row CPU-bound work that
-    partitions embarrassingly."""
-    import numpy as np
+    """Encode each row's utf-8 bytes as one baseline JPEG of full
+    ``_JPEG_WIDTH``-pixel RGB rows (DRI/RSTn every ``restart_interval``
+    MCUs when nonzero), decode it back and emit ``(id_col, width, height,
+    n_channels, decode_ok)``, ``decode_ok`` as in
+    :func:`_jpeg_within_bound`.  A row shorter than one pixel row
+    raises ``ValueError``."""
+    row_bytes = _JPEG_WIDTH * 3
 
-    row_bytes = width * 3
+    def jpeg_roundtrip(rid, text):
+        pay = (text or "").encode("utf-8")
+        rows = len(pay) // row_bytes
+        jpeg = make_jpeg(
+            pay,
+            width=_JPEG_WIDTH,
+            quality=_JPEG_QUALITY,
+            restart_interval=restart_interval,
+        )
+        yield (rid, *_jpeg_within_bound(jpeg, pay[: rows * row_bytes], rows))
 
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, ncs, oks = [], [], [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                pay = (t or "").encode("utf-8")
-                n = (len(pay) // row_bytes) * row_bytes
-                jp = make_jpeg(
-                    pay,
-                    width=width,
-                    quality=quality,
-                    restart_interval=restart_interval,
-                )
-                w, h, nch, px = parse_jpeg(jp)
-                src = np.frombuffer(pay[:n], dtype=np.uint8).astype(np.int64)
-                dec = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                ok = (
-                    w == width
-                    and nch == 3
-                    and len(dec) == n
-                    and h == n // row_bytes
-                    and int(np.abs(src - dec).max()) <= max_err
-                )
-                ids.append(i)
-                ws.append(w)
-                hs.append(h)
-                ncs.append(nch)
-                oks.append(bool(ok))
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "width": ws,
-                    "height": hs,
-                    "n_channels": ncs,
-                    "decode_ok": oks,
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        check,
+    return per_row(
+        df,
+        [id_col, text_col],
+        jpeg_roundtrip,
         f"{id_col} long, width int, height int, n_channels int, decode_ok boolean",
     )
 
@@ -1019,95 +1011,48 @@ def mjpeg_frame_pixel_check(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    frame_rows: int = 8,
-    every_n: int = 4,
-    quality: int = 99,
-    max_err: int = 12,
     restart_interval: int = 0,
 ) -> DataFrame:
-    """End-to-end MJPEG PIXEL decode (r12 — composes the two real video
-    pieces that previously stopped at frame boundaries): each row's
-    utf-8 bytes are chunked into ``frame_rows``-row frames, every chunk
-    is encoded as a baseline JPEG, the frames are concatenated into a
-    genuine MJPEG stream, the stream is re-split by the STRUCTURAL
-    segment walker (:func:`_iter_jpeg_frames` — the same splitter
-    sample_frames uses, so the split is computed from marker structure,
-    not remembered from construction), and every ``every_n``-th frame is
-    entropy-decoded back to pixels and bounded-error-checked against its
-    source chunk.  Emits one row per SAMPLED frame:
-    ``(id, frame_idx, width, height, n_channels, decode_ok)``.
-    ``decode_ok`` additionally requires the splitter to have recovered
-    exactly the constructed frame count — a miscounted split shifts
-    every downstream comparison and fails the bound.
-    ``restart_interval`` (r13) synthesizes each frame with the DRI/RSTn
-    restart protocol real camera MJPEG carries — the structural splitter
-    skips RSTn as standalone markers and the entropy decoder resyncs at
-    them, so the full camera-shaped composition is exercised end to end
-    (pinned by ``test_mjpeg_restart_stream_composition``).  One
-    Arrow-batched ``mapInPandas`` stage, no shuffle."""
-    import numpy as np
+    """Chunk each row's utf-8 bytes into ``_MJPEG_FRAME_ROWS``-row JPEG
+    frames, concatenate them into one MJPEG stream, re-split it with
+    :func:`_iter_jpeg_frames` and decode every ``_MJPEG_EVERY_N``-th
+    frame.  Emits one row per sampled frame: ``(id_col, frame_idx,
+    width, height, n_channels, decode_ok)``; ``decode_ok`` also needs
+    the split to recover every frame.  Rows shorter than one frame emit
+    nothing."""
+    frame_bytes = _MJPEG_FRAME_ROWS * _JPEG_WIDTH * 3
 
-    frame_bytes = frame_rows * 24  # 8 px/row RGB
-
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, ws, hs, ncs, oks = [], [], [], [], [], []
-            for rid, t in zip(pdf[id_col], pdf[text_col]):
-                pay = (t or "").encode("utf-8")
-                n_frames = len(pay) // frame_bytes
-                if n_frames <= 0:
-                    continue
-                chunks = [
-                    pay[k * frame_bytes : (k + 1) * frame_bytes]
-                    for k in range(n_frames)
-                ]
-                stream = b"".join(
-                    make_jpeg(
-                        c,
-                        width=8,
-                        quality=quality,
-                        restart_interval=restart_interval,
-                    )
-                    for c in chunks
-                )
-                bounds = list(_iter_jpeg_frames(stream))
-                split_ok = len(bounds) == n_frames
-                for k in range(0, n_frames, every_n):
-                    ok = split_ok
-                    w = h = nch = 0
-                    if split_ok:
-                        s, e = bounds[k]
-                        w, h, nch, px = parse_jpeg(stream[s:e])
-                        src = np.frombuffer(chunks[k], dtype=np.uint8).astype(
-                            np.int64
-                        )
-                        dec = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                        ok = (
-                            w == 8
-                            and h == frame_rows
-                            and nch == 3
-                            and len(dec) == len(src)
-                            and int(np.abs(src - dec).max()) <= max_err
-                        )
-                    ids.append(rid)
-                    idxs.append(k)
-                    ws.append(w if split_ok else 8)
-                    hs.append(h if split_ok else frame_rows)
-                    ncs.append(nch if split_ok else 3)
-                    oks.append(bool(ok))
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "frame_idx": idxs,
-                    "width": ws,
-                    "height": hs,
-                    "n_channels": ncs,
-                    "decode_ok": oks,
-                }
+    def mjpeg_frames(rid, text):
+        pay = (text or "").encode("utf-8")
+        chunks = [
+            pay[k * frame_bytes : (k + 1) * frame_bytes]
+            for k in range(len(pay) // frame_bytes)
+        ]
+        stream = b"".join(
+            make_jpeg(
+                c,
+                width=_JPEG_WIDTH,
+                quality=_JPEG_QUALITY,
+                restart_interval=restart_interval,
+            )
+            for c in chunks
+        )
+        bounds = list(_iter_jpeg_frames(stream))
+        for k in range(0, len(chunks), _MJPEG_EVERY_N):
+            if len(bounds) != len(chunks):
+                yield rid, k, _JPEG_WIDTH, _MJPEG_FRAME_ROWS, 3, False
+                continue
+            s, e = bounds[k]
+            yield (
+                rid,
+                k,
+                *_jpeg_within_bound(stream[s:e], chunks[k], _MJPEG_FRAME_ROWS),
             )
 
-    return df.select(id_col, text_col).mapInPandas(
-        check,
+    return per_row(
+        df,
+        [id_col, text_col],
+        mjpeg_frames,
         f"{id_col} long, frame_idx int, width int, height int, "
         "n_channels int, decode_ok boolean",
     )
@@ -1131,43 +1076,25 @@ def _parse_raster(buf: bytes):
     )
 
 
-_PIXEL_SCHEMA = (
-    "id long, width int, height int, n_channels int, pixel_sha string"
-)
-
-
 def decode_image_pixels(
     df: DataFrame, id_col: str = "id", payload_col: str = "payload"
 ) -> DataFrame:
-    """PIXEL-level decode of the stdlib-decodable rasters (BMP, binary
-    PPM/PGM, PNG, baseline JPEG — magic-byte dispatch): parse the
-    container for real — flip bottom-up rows, strip stride padding,
-    inflate+unfilter, or entropy-decode —
-    and emit ``(id, width, height, n_channels, pixel_sha)`` where
-    ``pixel_sha`` is sha256 over the row-major TOP-DOWN unpadded pixel
-    bytes.  The hash is the proof the decode is real: it only matches a
-    reference if row order and stride handling are exactly right, which a
-    header-only peek can't fake.  Arrow-batched ``mapInPandas``.  At
-    execution, a recognised format with a corrupt body raises the parser's
-    ``ValueError`` and any other payload ``NotImplementedError``."""
+    """Decode each BMP, binary PPM/PGM, PNG or baseline JPEG payload
+    (magic-byte dispatch) to ``(id_col, width, height, n_channels,
+    pixel_sha)``, ``pixel_sha`` the sha256 of the row-major top-down
+    unpadded pixel bytes.  A recognised format with a corrupt body
+    raises the parser's ``ValueError``; any other payload raises
+    ``NotImplementedError``."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = pdf[payload_col].map(
-                lambda b: _parse_raster(bytes(b or b""))
-            )
-            out = pd.DataFrame()
-            out["id"] = pdf[id_col]
-            out["width"] = parsed.map(lambda t: t[0]).astype("int32")
-            out["height"] = parsed.map(lambda t: t[1]).astype("int32")
-            out["n_channels"] = parsed.map(lambda t: t[2]).astype("int32")
-            out["pixel_sha"] = parsed.map(
-                lambda t: hashlib.sha256(t[3]).hexdigest()
-            )
-            yield out
+    def decode_image(rid, payload):
+        w, h, nch, px = _parse_raster(bytes(payload or b""))
+        yield rid, w, h, nch, hashlib.sha256(px).hexdigest()
 
-    return df.select(id_col, payload_col).mapInPandas(
-        decode, schema=_PIXEL_SCHEMA
+    return per_row(
+        df,
+        [id_col, payload_col],
+        decode_image,
+        f"{id_col} long, width int, height int, n_channels int, pixel_sha string",
     )
 
 
@@ -1232,58 +1159,39 @@ def sample_frames(
     height: int = 0,
     channels: int = 3,
 ) -> DataFrame:
-    """Sample every ``every_n``-th frame from video payloads: 1→n rows
-    ``(id, frame_idx, n_bytes, sha)`` via Arrow-batched ``mapInPandas``.
-
-    Two pure-Python container splitters are real (no codec dependency):
-    ``fmt="mjpeg"`` walks JPEG segment structure (:func:`_iter_jpeg_frames`)
-    and ``fmt="rawvideo"`` slices fixed-size ``width*height*channels``
-    frames.  Other containers raise ``NotImplementedError`` at execution —
-    an ffmpeg-class decoder is out of scope.  Each emitted row carries
-    the frame's byte length and content sha256, so downstream
-    dedup/feature stages key on frames without re-reading payloads.
-    """
+    """Every ``every_n``-th frame of each video payload as ``(id_col,
+    frame_idx, n_bytes, sha)``, ``sha`` the frame's sha256.
+    ``fmt="mjpeg"`` splits on JPEG segment structure
+    (:func:`_iter_jpeg_frames`); ``fmt="rawvideo"`` slices
+    ``width*height*channels``-byte frames and raises ``ValueError`` when
+    one of them is not positive.  Any other ``fmt`` raises
+    ``NotImplementedError`` at execution."""
     if fmt == "rawvideo" and (width <= 0 or height <= 0 or channels <= 0):
         raise ValueError("rawvideo frame sampling needs width/height/channels")
     frame_size = width * height * channels
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            idxs: list = []
-            sizes: list = []
-            shas: list = []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                buf = bytes(payload or b"")
-                if fmt == "mjpeg":
-                    bounds = list(_iter_jpeg_frames(buf))
-                elif fmt == "rawvideo":
-                    bounds = [
-                        (k * frame_size, (k + 1) * frame_size)
-                        for k in range(len(buf) // frame_size)
-                    ]
-                else:
-                    raise NotImplementedError(
-                        f"video container {fmt!r} not supported "
-                        "(mjpeg, rawvideo)"
-                    )
-                for k in range(0, len(bounds), every_n):
-                    s, e = bounds[k]
-                    ids.append(rid)
-                    idxs.append(k)
-                    sizes.append(e - s)
-                    shas.append(hashlib.sha256(buf[s:e]).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "n_bytes": pd.Series(sizes, dtype="int64"),
-                    "sha": pd.Series(shas, dtype="object"),
-                }
+    def sample(rid, payload):
+        buf = bytes(payload or b"")
+        if fmt == "mjpeg":
+            bounds = list(_iter_jpeg_frames(buf))
+        elif fmt == "rawvideo":
+            bounds = [
+                (k * frame_size, (k + 1) * frame_size)
+                for k in range(len(buf) // frame_size)
+            ]
+        else:
+            raise NotImplementedError(
+                f"video container {fmt!r} not supported (mjpeg, rawvideo)"
             )
+        for k in range(0, len(bounds), every_n):
+            s, e = bounds[k]
+            yield rid, k, e - s, hashlib.sha256(buf[s:e]).hexdigest()
 
-    return df.select(id_col, payload_col).mapInPandas(
-        sample, schema="id long, frame_idx int, n_bytes long, sha string"
+    return per_row(
+        df,
+        [id_col, payload_col],
+        sample,
+        f"{id_col} long, frame_idx int, n_bytes long, sha string",
     )
 
 
@@ -1348,80 +1256,61 @@ def _parse_wav(buf: bytes):
     return (sr, ch, bps, data_size // block)
 
 
-_AUDIO_SCHEMA = (
-    "id long, sample_rate int, n_channels int, bits_per_sample int,"
-    " n_samples long, duration_ms double"
-)
-
-
 def decode_audio(
     df: DataFrame,
     id_col: str = "id",
     payload_col: str = "payload",
 ) -> DataFrame:
-    """Decode audio payload headers to ``(sample_rate, n_channels,
-    bits_per_sample, n_samples, duration_ms)`` via Arrow-batched
-    ``mapInPandas``.
+    """RIFF/WAV PCM header of each payload as ``(id_col, sample_rate,
+    n_channels, bits_per_sample, n_samples, duration_ms)``, with
+    ``duration_ms = n_samples * 1000.0 / sample_rate``.  Any other
+    payload raises ``NotImplementedError``."""
 
-    RIFF/WAV PCM is parsed for REAL (:func:`_parse_wav` — pure Python
-    chunk walk, no codec dependency; this reads container metadata, it
-    does not decode compressed audio).  Other containers raise
-    ``NotImplementedError`` at execution.  ``duration_ms`` is the raw
-    IEEE division ``n_samples * 1000.0 / sample_rate`` (exactly-rounded,
-    so cross-engine deterministic)."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            srs: list = []
-            chs: list = []
-            bits: list = []
-            ns: list = []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                meta = _parse_wav(bytes(payload or b""))
-                if meta is None:
-                    raise NotImplementedError(
-                        "audio container not supported (RIFF/WAV PCM only)"
-                    )
-                sr, ch, bps, n = meta
-                ids.append(rid)
-                srs.append(sr)
-                chs.append(ch)
-                bits.append(bps)
-                ns.append(n)
-            out = pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "sample_rate": pd.Series(srs, dtype="int32"),
-                    "n_channels": pd.Series(chs, dtype="int32"),
-                    "bits_per_sample": pd.Series(bits, dtype="int32"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                }
+    def wav_header(rid, payload):
+        meta = _parse_wav(bytes(payload or b""))
+        if meta is None:
+            raise NotImplementedError(
+                "audio container not supported (RIFF/WAV PCM only)"
             )
-            out["duration_ms"] = (
-                out["n_samples"] * 1000.0 / out["sample_rate"]
-            ).astype("float64")
-            yield out
+        sr, ch, bps, n = meta
+        yield rid, sr, ch, bps, n, n * 1000.0 / sr
 
-    return df.select(id_col, payload_col).mapInPandas(
-        decode, schema=_AUDIO_SCHEMA
+    return per_row(
+        df,
+        [id_col, payload_col],
+        wav_header,
+        f"{id_col} long, sample_rate int, n_channels int, bits_per_sample int,"
+        " n_samples long, duration_ms double",
     )
 
 
-_PCM_STATS_SCHEMA = (
-    "id long, n_samples bigint, peak_abs int, clip_frac double,"
-    " rms double, duration_ms double"
-)
+def _pcm16(payload, op: str):
+    """``(samples, n_channels, sample_rate)`` of a 16-bit PCM WAV
+    payload, ``samples`` all channels interleaved as int64.  Raises
+    ``NotImplementedError`` on a non-PCM or non-16-bit payload and
+    ``ValueError`` on an empty or truncated data chunk."""
+    import numpy as np
+
+    buf = bytes(payload or b"")
+    meta = _walk_wav(buf)
+    if meta is None or meta[0] != 1:
+        raise NotImplementedError("audio container not supported (RIFF/WAV PCM only)")
+    _, ch, sr, bps, off, size = meta
+    if bps != 16:
+        raise NotImplementedError(f"{op} reads 16-bit PCM only")
+    n_vals = size // 2
+    if sr == 0 or ch == 0 or n_vals == 0:
+        raise ValueError("empty or malformed PCM data chunk")
+    if off + size > len(buf):
+        raise ValueError("truncated WAV data chunk")
+    samples = np.frombuffer(buf[off : off + n_vals * 2], dtype="<i2")
+    return samples.astype(np.int64), ch, sr
 
 
 def _exact_sum_sq(s, chunk: int = 1 << 20) -> int:
-    """Exact Σs² for an int64 sample vector of ANY length.  A single
-    ``np.sum(s * s)`` accumulates in int64 and wraps silently past
-    ~2³³ samples (each |s|² ≤ 2³⁰, so 2³³ terms reach the 2⁶³ edge —
-    r13 ADVICE).  Chunked accumulation keeps every numpy partial
-    provably in range — ``np.dot`` over ≤ 2²⁰ samples is ≤ 2⁵⁰ — and
-    the cross-chunk sum is arbitrary-precision Python int, so the
-    result is exact for any document size."""
+    """Exact Σs² of an int64 sample vector of any length: int64 numpy
+    partials over ``chunk``-sample slices (at most 2⁵⁰ each at the
+    default), summed as Python ints."""
     import numpy as np
 
     return sum(
@@ -1432,83 +1321,33 @@ def _exact_sum_sq(s, chunk: int = 1 << 20) -> int:
 def pcm_stats(
     df: DataFrame, id_col: str = "id", payload_col: str = "payload"
 ) -> DataFrame:
-    """Sample-level PCM features through the RIFF data chunk (r13 —
-    audio analysis previously stopped at header metadata): parse each
-    payload's chunk structure with the same walk ``decode_audio`` uses,
-    then read the 16-bit little-endian samples and emit
-    ``(n_samples, peak_abs, clip_frac, rms, duration_ms)``.
-
-    Determinism across engines: ``peak_abs``/``clip_frac`` are integer-
-    derived; ``rms`` is ``sqrt(sum(s²)/n)`` with the sum of squares
-    accumulated EXACTLY via :func:`_exact_sum_sq` (int64 numpy partials
-    bounded at 2⁵⁰ per 2²⁰-sample chunk, Python-int cross-chunk sum —
-    exact at ANY document size, where a flat int64 accumulation wraps
-    past ~2³³ samples) — both engines then perform the same
-    two IEEE operations on the same integers, so the double is
-    bit-identical with no rounding step.  Clipping counts samples at
-    full scale (|s| ≥ 32767).  Multi-channel data is analyzed
-    interleaved (all channels pooled); ``duration_ms`` uses frames =
-    data/block like ``decode_audio``.  Non-PCM or non-16-bit payloads
-    raise ``NotImplementedError`` loudly.
-
-    Scale: one Arrow-batched ``mapInPandas`` stage, no shuffle — the
-    same bounded-decode plan shape as the image rows; cost ∝ sample
-    bytes and partitions embarrassingly."""
+    """Sample statistics of each 16-bit PCM payload (:func:`_pcm16`,
+    channels pooled): ``(id_col, n_samples, peak_abs, clip_frac, rms,
+    duration_ms)``.  ``clip_frac`` counts ``|s| >= 32767``; ``rms`` is
+    ``sqrt(Σs² / n)`` over the exact integer Σs²; ``duration_ms`` counts
+    frames of all channels."""
     import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, peaks, clips, rmss, durs = [], [], [], [], [], []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                buf = bytes(payload or b"")
-                meta = _walk_wav(buf)
-                if meta is None or meta[0] != 1:
-                    raise NotImplementedError(
-                        "audio container not supported (RIFF/WAV PCM only)"
-                    )
-                _, ch, sr, bps, off, size = meta
-                if bps != 16:
-                    raise NotImplementedError(
-                        "pcm_stats reads 16-bit PCM only"
-                    )
-                block = ch * 2
-                n_vals = size // 2
-                if sr == 0 or block == 0 or n_vals == 0:
-                    raise ValueError("empty or malformed PCM data chunk")
-                if off + size > len(buf):
-                    # declared-size trust would silently compute stats
-                    # over fewer samples than n_samples reports
-                    raise ValueError("truncated WAV data chunk")
-                s = np.frombuffer(
-                    buf[off : off + n_vals * 2], dtype="<i2"
-                ).astype(np.int64)
-                sum_sq = _exact_sum_sq(s)  # exact at any length
-                ids.append(rid)
-                ns.append(n_vals)
-                peaks.append(int(np.abs(s).max()))
-                clips.append(int((np.abs(s) >= 32767).sum()) / n_vals)
-                rmss.append(float(np.sqrt(float(sum_sq) / n_vals)))
-                durs.append((size // block) * 1000.0 / sr)
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                    "peak_abs": pd.Series(peaks, dtype="int32"),
-                    "clip_frac": pd.Series(clips, dtype="float64"),
-                    "rms": pd.Series(rmss, dtype="float64"),
-                    "duration_ms": pd.Series(durs, dtype="float64"),
-                }
-            )
+    def stats(rid, payload):
+        s, ch, sr = _pcm16(payload, "pcm_stats")
+        n = len(s)
+        mag = np.abs(s)
+        yield (
+            rid,
+            n,
+            int(mag.max()),
+            int((mag >= 32767).sum()) / n,
+            float(np.sqrt(float(_exact_sum_sq(s)) / n)),
+            (n // ch) * 1000.0 / sr,
+        )
 
-    return df.select(id_col, payload_col).mapInPandas(
-        stats, schema=_PCM_STATS_SCHEMA
+    return per_row(
+        df,
+        [id_col, payload_col],
+        stats,
+        f"{id_col} long, n_samples bigint, peak_abs int, clip_frac double,"
+        " rms double, duration_ms double",
     )
-
-
-_SILENCE_SCHEMA = (
-    "id long, seg_idx int, start_sample bigint, n_samples bigint,"
-    " duration_ms double"
-)
 
 
 def pcm_silence_segments(
@@ -1518,68 +1357,25 @@ def pcm_silence_segments(
     thresh: int = 0,
     min_len: int = 10,
 ) -> DataFrame:
-    """Silence/activity segmentation over 16-bit PCM — the VAD-style
-    preprocessing stage a speech corpus pipeline runs before transcribe/
-    align (r13): parse the RIFF data chunk (same walk as
-    :func:`pcm_stats`), mark samples with ``|s| <= thresh`` silent, and
-    emit one row per MAXIMAL silent run of at least ``min_len`` samples:
-    ``(id, seg_idx, start_sample, n_samples, duration_ms)`` with
-    ``seg_idx`` numbering a document's runs in stream order.
-
-    Run detection is vectorized gaps-and-islands over the boolean mask
-    (numpy diff on the padded mask — no Python per-sample loop), so cost
-    ∝ sample bytes; one Arrow-batched ``mapInPandas`` stage, no shuffle,
-    the same bounded-decode plan shape as the other media rows.
-    Non-PCM / non-16-bit payloads raise loudly (the :func:`pcm_stats`
-    contract).  Duration uses the fmt-chunk sample rate."""
+    """Maximal runs of at least ``min_len`` samples with ``|s| <= thresh``
+    in each 16-bit PCM payload (:func:`_pcm16`): one row per run,
+    ``(id_col, seg_idx, start_sample, n_samples, duration_ms)``, with
+    ``seg_idx`` numbering a payload's runs in stream order."""
     import numpy as np
 
-    def segs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, starts, lens, durs = [], [], [], [], []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                buf = bytes(payload or b"")
-                meta = _walk_wav(buf)
-                if meta is None or meta[0] != 1:
-                    raise NotImplementedError(
-                        "audio container not supported (RIFF/WAV PCM only)"
-                    )
-                _, ch, sr, bps, off, size = meta
-                if bps != 16:
-                    raise NotImplementedError(
-                        "pcm_silence_segments reads 16-bit PCM only"
-                    )
-                n_vals = size // 2
-                if sr == 0 or n_vals == 0:
-                    raise ValueError("empty or malformed PCM data chunk")
-                if off + size > len(buf):
-                    raise ValueError("truncated WAV data chunk")
-                s = np.frombuffer(buf[off : off + n_vals * 2], dtype="<i2")
-                quiet = np.abs(s.astype(np.int32)) <= thresh
-                # maximal-run boundaries: transitions of the padded mask
-                edges = np.diff(np.r_[False, quiet, False].astype(np.int8))
-                run_starts = np.flatnonzero(edges == 1)
-                run_ends = np.flatnonzero(edges == -1)
-                k = 0
-                for a, b in zip(run_starts, run_ends):
-                    if b - a < min_len:
-                        continue
-                    ids.append(rid)
-                    idxs.append(k)
-                    starts.append(int(a))
-                    lens.append(int(b - a))
-                    durs.append((b - a) * 1000.0 / sr)
-                    k += 1
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "seg_idx": pd.Series(idxs, dtype="int32"),
-                    "start_sample": pd.Series(starts, dtype="int64"),
-                    "n_samples": pd.Series(lens, dtype="int64"),
-                    "duration_ms": pd.Series(durs, dtype="float64"),
-                }
-            )
+    def silences(rid, payload):
+        s, _, sr = _pcm16(payload, "pcm_silence_segments")
+        quiet = np.abs(s) <= thresh
+        edges = np.diff(np.r_[False, quiet, False].astype(np.int8))
+        runs = zip(np.flatnonzero(edges == 1), np.flatnonzero(edges == -1))
+        kept = [(int(a), int(b - a)) for a, b in runs if b - a >= min_len]
+        for k, (start, n) in enumerate(kept):
+            yield rid, k, start, n, n * 1000.0 / sr
 
-    return df.select(id_col, payload_col).mapInPandas(
-        segs, schema=_SILENCE_SCHEMA
+    return per_row(
+        df,
+        [id_col, payload_col],
+        silences,
+        f"{id_col} long, seg_idx int, start_sample bigint, n_samples bigint,"
+        " duration_ms double",
     )

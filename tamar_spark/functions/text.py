@@ -5,7 +5,9 @@ the "scalar function library" capability the reference entirely lacks
 (SURVEY §2.7: arbitrary Rust closures instead of a function library).
 
 Used by the dedup/quality/language queries; each has a DuckDB-expressible
-twin so results are oracle-checkable.
+twin so results are oracle-checkable.  The crawl kernels that need Python
+(entity, compression, WARC/HTTP, charset, Unicode and IDN) are scalar pandas
+UDFs built by :func:`tamar_spark.functions._arrow.per_value`.
 """
 
 from __future__ import annotations
@@ -13,6 +15,8 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import Column, functions as F
+
+from tamar_spark.functions._arrow import per_value
 
 __all__ = [
     "tokens",
@@ -183,54 +187,24 @@ HTML_ENTITIES = (
 
 
 def decode_numeric_entities(text: Column) -> Column:
-    """Decode arbitrary numeric character references — ``&#NNN;`` and
-    ``&#xHH;``/``&#XHH;`` — to their Unicode code points (r13 VERDICT
-    task 1b: the fixed :data:`HTML_ENTITIES` table is the honest
-    pure-codegen scope, but real pages carry arbitrary references, and
-    a per-match ``chr()`` needs exactly one Arrow-batched stage — the
-    audio rows' plan shape).
-
-    Strict code-point semantics, malformed-verbatim everywhere else
-    (the conservative slice of WHATWG "character reference" handling):
-
-    - decimal ``&#65;`` and hex ``&#x41;``/``&#X41;`` decode for code
-      points 1..0x10FFFF excluding the surrogate block D800-DFFF;
-    - ``&#0;`` (NUL), surrogates, values past 0x10FFFF, and OVERLONG
-      references (more than 7 digits — every valid code point fits)
-      pass through VERBATIM, as do unterminated (``&#65``) and
-      non-numeric (``&#xZZ;``) forms — a malformed reference must
-      never corrupt neighboring text;
-    - the WHATWG windows-1252 remapping of the C1 range is out of
-      scope (documented, not silently approximated).
-
-    Composition rule: this is a SINGLE-PASS decoder — its output is
-    final text and must never be re-scanned by another entity pass
-    (``&#38;lt;`` decodes to the literal ``&lt;``, and a second pass
-    would corrupt it to ``<`` — the numeric spelling of the
-    ``&amp;``-last hazard; r14 review finding).  Standalone use is
-    fine; inside :func:`html_main_text` the ``numeric_entities=True``
-    path therefore decodes numeric AND named references together in
-    one pass instead of chaining this before the fixed table.
-
-    Scale: one Arrow-batched pandas UDF (vectorized ``re.sub`` per
-    batch), no shuffle; cost ∝ bytes like the codegen stages around
-    it."""
+    """Decode numeric character references (``&#NNN;``, ``&#xHH;``,
+    ``&#XHH;``) to their code points in one left-to-right pass; the
+    output is never re-scanned, so ``&#38;lt;`` gives the literal
+    ``&lt;``.  Code points 1..0x10FFFF outside D800-DFFF decode; ``&#0;``,
+    surrogates, values past 0x10FFFF, references of more than 7 digits,
+    unterminated and non-numeric forms pass through verbatim.  The
+    windows-1252 remap of the C1 range is not applied.  One scalar
+    pandas UDF."""
     return _entity_decode_single_pass(text, named=())
 
 
 def _entity_decode_single_pass(text: Column, named=None) -> Column:
-    """One left-to-right scan decoding numeric character references
-    plus the ``named`` entity table ((entity, char) pairs, matched as
-    alternatives at the same scan position) — the WHATWG shape: a
-    reference's replacement text is never re-read as markup, so
-    ``&#38;lt;`` → literal ``&lt;``, ``&amp;#65;`` → literal
-    ``&#65;``, and ``&&#108;t;`` → literal ``&lt;`` (the bare ``&``
-    cannot combine with decoded output).  Malformed/out-of-range
-    references pass through verbatim (see
-    :func:`decode_numeric_entities`)."""
+    """One left-to-right scan decoding numeric character references and
+    the ``named`` ``(entity, char)`` table (default
+    :data:`HTML_ENTITIES`) as alternatives at each position; replacement
+    text is never re-read, and malformed references pass through as in
+    :func:`decode_numeric_entities`."""
     import re
-
-    from pyspark.sql.functions import pandas_udf
 
     if named is None:
         named = HTML_ENTITIES
@@ -252,35 +226,24 @@ def _entity_decode_single_pass(text: Column, named=None) -> Column:
             return m.group(0)
         return chr(cp)
 
-    def _decode(s):
-        return s.map(lambda t: None if t is None else pat.sub(repl, t))
+    def entity_decode(t):
+        return pat.sub(repl, t)
 
-    return pandas_udf(_decode, "string")(text)
+    return per_value(entity_decode, "string")(text)
 
 
 def deflate_compress(data: Column, fmt: str = "gzip") -> Column:
-    """DEFLATE-family compression of a ``binary`` column — the forward
-    direction of the transport layer, primarily so the decompression
-    kernel can be proven by a synthesis round trip (the multimodal
-    rows' both-directions convention; also genuinely useful for
-    writing WARC-shaped output).  ``fmt``: ``gzip`` (RFC 1952 member,
-    ``mtime=0`` so the 10-byte header is DETERMINISTIC — the default
-    header embeds a timestamp, which would make every run's bytes
-    differ), ``zlib`` (RFC 1950), or ``raw`` (RFC 1951, headerless).
-    One Arrow stage; compression level fixed at 6 (zlib default) for
-    reproducible bytes within an environment."""
+    """DEFLATE-family compression of a ``binary`` column at level 6:
+    ``fmt`` ``gzip`` (RFC 1952, ``mtime=0`` so the header is
+    deterministic), ``zlib`` (RFC 1950) or ``raw`` (RFC 1951); any other
+    ``fmt`` raises ``ValueError``.  One scalar pandas UDF."""
     import gzip as _gzip
     import zlib as _zlib
-
-    from pyspark.sql.functions import pandas_udf
 
     if fmt not in ("gzip", "zlib", "raw"):
         raise ValueError(f"unsupported fmt: {fmt!r}")
 
-    def _one(b):
-        if b is None:
-            return None
-        b = bytes(b)
+    def deflate(b):
         if fmt == "gzip":
             return _gzip.compress(b, compresslevel=6, mtime=0)
         if fmt == "zlib":
@@ -288,51 +251,26 @@ def deflate_compress(data: Column, fmt: str = "gzip") -> Column:
         co = _zlib.compressobj(6, _zlib.DEFLATED, -15)
         return co.compress(b) + co.flush()
 
-    def _comp(s):
-        return s.map(_one)
-
-    return pandas_udf(_comp, "binary")(data)
+    return per_value(deflate, "binary")(data)
 
 
 def decompress_payload(data: Column, max_bytes: int | None = None) -> Column:
-    """Transport decompression for crawl ingestion (r15) — the stage
-    BEFORE :func:`decode_charset`: real crawl payloads (WARC records,
-    Content-Encoding bodies) arrive as DEFLATE-family bytes.  Returns
-    a struct ``(data, codec, ok, n_out)``; one Arrow stage.
+    """Transport decompression of a ``binary`` column to a struct
+    ``(data, codec, ok, n_out)``, detected by magic bytes only; never
+    raises.
 
-    Deterministic detection by magic bytes only (no sniffing):
+    - ``1F 8B`` → gzip.  Concatenated members decompress in sequence;
+      trailing non-member bytes keep the prefix with ``ok=false``; a
+      corrupt stream gives ``data=NULL, ok=false``.
+    - A valid zlib header (CM=8, ``(CMF<<8|FLG) % 31 == 0``) → zlib.  The
+      check is weak, so a body that fails to inflate passes through as
+      ``store``.
+    - Anything else, raw RFC 1951 included → ``store``: bytes verbatim,
+      ``ok=true``.
 
-    - ``1F 8B`` → gzip (RFC 1952).  CONCATENATED members decompress
-      in sequence (the WARC convention — one member per record);
-      non-member trailing garbage keeps the decompressed prefix and
-      reports ``ok=false`` (an anomaly flag, never an exception);
-    - a valid zlib header (CM=8, (CMF<<8|FLG) % 31 == 0) → zlib
-      (RFC 1950).  The 2-byte check is weak (~1/500 of random byte
-      pairs pass — e.g. ASCII ``"H,"``), so a zlib candidate that
-      FAILS to inflate falls back to ``store`` verbatim rather than
-      reporting corruption (the detection was the wrong part; a
-      truly-corrupt zlib body is indistinguishable from stored bytes
-      that happen to share the header, and passthrough is the
-      non-destructive reading);
-    - anything else → ``store``: bytes pass through verbatim,
-      ``ok=true`` (raw RFC 1951 streams are headerless and therefore
-      indistinguishable from stored bytes — a stated non-goal; use an
-      explicit schema column when a pipeline carries raw deflate).
-
-    A corrupt GZIP stream returns ``data=NULL, ok=false`` with
-    ``codec='gzip'`` (the 1F 8B magic is strong evidence the bytes
-    really were gzip; never throws — one bad record must not kill a
-    100 TB scan).  ``max_bytes`` is the zip-bomb guard: the
-    inflate is INCREMENTAL (``decompressobj`` with a byte cap), so a
-    bomb is abandoned mid-stream — ``data=NULL, ok=false`` — without
-    ever materializing the blow-up.
-
-    Scale: one Arrow stage, no shuffle, cost ∝ compressed bytes;
-    compose ``decompress → decode_charset → html_main_text →
-    unicode_normalize`` for the full byte-to-key crawl front end."""
+    ``max_bytes`` caps the incremental inflate: past it the stream is
+    abandoned with ``data=NULL, ok=false``.  One scalar pandas UDF."""
     import zlib as _zlib
-
-    from pyspark.sql.functions import pandas_udf
 
     def _inflate(b, wbits):
         """(out_bytes, ok) under the cap; raises zlib.error on corrupt."""
@@ -359,175 +297,87 @@ def decompress_payload(data: Column, max_bytes: int | None = None) -> Column:
                 continue  # next concatenated gzip member
             return bytes(out), False  # trailing garbage: flag, keep prefix
 
-    def _one(b):
-        if b is None:
-            return None
-        b = bytes(b)
+    def decompress(b):
         if b.startswith(b"\x1f\x8b"):
-            codec = "gzip"
-            wbits = 31
-        elif (
-            len(b) >= 2
-            and (b[0] & 0x0F) == 8
-            and ((b[0] << 8) | b[1]) % 31 == 0
-        ):
-            codec = "zlib"
-            wbits = 15
+            codec, wbits = "gzip", 31
+        elif len(b) >= 2 and (b[0] & 0x0F) == 8 and ((b[0] << 8) | b[1]) % 31 == 0:
+            codec, wbits = "zlib", 15
         else:
-            return {
-                "data": b,
-                "codec": "store",
-                "ok": True,
-                "n_out": len(b),
-            }
+            return b, "store", True, len(b)
         try:
             out, ok = _inflate(b, wbits)
         except _zlib.error:
             if codec == "zlib":
                 # weak 2-byte header, failed body: the detection was
-                # wrong — pass through as stored bytes (see docstring)
-                return {
-                    "data": b,
-                    "codec": "store",
-                    "ok": True,
-                    "n_out": len(b),
-                }
+                # wrong — pass through as stored bytes
+                return b, "store", True, len(b)
             out, ok = None, False
-        return {
-            "data": out,
-            "codec": codec,
-            "ok": ok,
-            "n_out": None if out is None else len(out),
-        }
+        return out, codec, ok, None if out is None else len(out)
 
-    def _dec(s):
-        import pandas as pd
-
-        return pd.DataFrame(
-            [
-                _one(v)
-                or {"data": None, "codec": None, "ok": None, "n_out": None}
-                for v in s
-            ],
-            columns=["data", "codec", "ok", "n_out"],
-        )
-
-    return pandas_udf(
-        _dec, "data binary, codec string, ok boolean, n_out bigint"
+    return per_value(
+        decompress, "data binary, codec string, ok boolean, n_out bigint"
     )(data)
 
 
+def _http_like_headers(b: bytes, sep: int) -> tuple:
+    """``(first line, {lowercased name: stripped value})`` of the
+    latin-1 header block ``b[:sep]``; the first ``:`` splits a header
+    and the first occurrence of a name wins."""
+    lines = b[:sep].decode("latin-1").split("\r\n")
+    hdr: dict = {}
+    for line in lines[1:]:
+        k, c, v = line.partition(":")
+        if c:
+            hdr.setdefault(k.strip().lower(), v.strip())
+    return lines[0], hdr
+
+
 def warc_parse(data: Column) -> Column:
-    """Parse ONE WARC record (ISO 28500 / the public WARC/1.0-1.1
-    format — the Common Crawl container) from a ``binary`` column into
-    a struct ``(warc_type, target_uri, warc_date, record_id,
-    content_type, content_length, payload, ok)``; one Arrow stage.
+    """Parse one WARC/1.0 or WARC/1.1 record per ``binary`` value into a
+    struct ``(warc_type, target_uri, warc_date, record_id, content_type,
+    content_length, payload, ok)``; never raises.
 
-    The one-record-per-row model is the DISTRIBUTED reading of a WARC
-    file: in ``.warc.gz`` each record is its own gzip member (the
-    convention :func:`decompress_payload` walks), so a source that
-    splits members — or any record-framing input format — hands this
-    kernel exactly one record's bytes per row, and the parse is
-    embarrassingly parallel with no cross-row state.
+    - A bad version line or no blank CRLF line → all-NULL fields,
+      ``ok=false``.
+    - Headers as in :func:`_http_like_headers`.
+    - ``Content-Length`` selects the payload.  Missing or non-digit →
+      ``ok=false`` with the whole remainder as payload; fewer bytes left
+      than declared → ``ok=false, payload=NULL``.
+    - After the payload only ``\\r\\n\\r\\n``, ``\\r\\n`` or nothing may
+      follow, else ``ok=false`` with the payload kept.
 
-    Grammar handled, all failures as ``ok=false`` (never an exception
-    — one malformed record must not kill a 100 TB scan):
+    No obs-fold headers and no ``WARC-Segment`` reassembly.  One scalar
+    pandas UDF."""
+    invalid = (None,) * 7 + (False,)
 
-    - version line ``WARC/1.0`` or ``WARC/1.1`` terminated by CRLF;
-      anything else → full-null row with ``ok=false``;
-    - named headers up to the first blank CRLF line, split at the
-      first ``:``, names case-insensitive (folded to lowercase for
-      lookup), values stripped; headers are ASCII by spec and are
-      decoded latin-1 (total — the scan itself can never fail);
-    - ``Content-Length`` (mandatory per spec) selects the payload:
-      the next N bytes after the blank line.  A missing/non-digit
-      length → ``ok=false`` with the whole remainder as payload (the
-      non-destructive reading); a SHORT payload (fewer than N bytes
-      remain — a truncated record) → ``ok=false, payload=NULL``;
-    - trailing bytes after the payload must be the record terminator
-      (``\\r\\n\\r\\n``, one CRLF, or nothing — the boundary a
-      member-split source leaves); anything else → ``ok=false`` with
-      the payload kept.
-
-    Stated scope: no continuation-line (obs-fold) headers, no
-    ``WARC-Segment`` reassembly (segmented records parse as their
-    individual segments), no revisit-deduplication semantics — the
-    record's named fields pass through for a downstream operator.
-
-    Scale: one Arrow stage, no shuffle, cost ∝ record bytes; compose
-    ``warc_parse → http_response_split → decode_charset →
-    html_main_text → unicode_normalize`` for the full crawl chain."""
-    from pyspark.sql.functions import pandas_udf
-
-    _null = {
-        "warc_type": None,
-        "target_uri": None,
-        "warc_date": None,
-        "record_id": None,
-        "content_type": None,
-        "content_length": None,
-        "payload": None,
-        "ok": False,
-    }
-
-    def _one(b):
-        if b is None:
-            return None
-        b = bytes(b)
+    def parse_warc(b):
         sep = b.find(b"\r\n\r\n")
         if sep < 0 or not b.startswith(b"WARC/"):
-            return dict(_null)
-        head = b[:sep].decode("latin-1")
-        lines = head.split("\r\n")
-        if lines[0] not in ("WARC/1.0", "WARC/1.1"):
-            return dict(_null)
-        hdr = {}
-        for line in lines[1:]:
-            k, c, v = line.partition(":")
-            if c:
-                hdr.setdefault(k.strip().lower(), v.strip())
+            return invalid
+        version, hdr = _http_like_headers(b, sep)
+        if version not in ("WARC/1.0", "WARC/1.1"):
+            return invalid
+        named = tuple(
+            hdr.get(k)
+            for k in (
+                "warc-type",
+                "warc-target-uri",
+                "warc-date",
+                "warc-record-id",
+                "content-type",
+            )
+        )
         rest = b[sep + 4 :]
-        out = {
-            "warc_type": hdr.get("warc-type"),
-            "target_uri": hdr.get("warc-target-uri"),
-            "warc_date": hdr.get("warc-date"),
-            "record_id": hdr.get("warc-record-id"),
-            "content_type": hdr.get("content-type"),
-            "content_length": None,
-            "payload": rest,
-            "ok": False,
-        }
         cl = hdr.get("content-length", "")
         if not cl.isdigit():
-            return out  # mandatory header missing/garbled
+            return (*named, None, rest, False)  # mandatory header missing
         n = int(cl)
-        out["content_length"] = n
         if len(rest) < n:
-            out["payload"] = None  # truncated record
-            return out
-        out["payload"] = rest[:n]
-        out["ok"] = rest[n:] in (b"", b"\r\n", b"\r\n\r\n")
-        return out
+            return (*named, n, None, False)  # truncated record
+        return (*named, n, rest[:n], rest[n:] in (b"", b"\r\n", b"\r\n\r\n"))
 
-    def _parse(s):
-        import pandas as pd
-
-        return pd.DataFrame(
-            [_one(v) or dict(_null, ok=None) for v in s],
-            columns=[
-                "warc_type",
-                "target_uri",
-                "warc_date",
-                "record_id",
-                "content_type",
-                "content_length",
-                "payload",
-                "ok",
-            ],
-        )
-
-    return pandas_udf(
-        _parse,
+    return per_value(
+        parse_warc,
         "warc_type string, target_uri string, warc_date string, "
         "record_id string, content_type string, content_length bigint, "
         "payload binary, ok boolean",
@@ -535,65 +385,36 @@ def warc_parse(data: Column) -> Column:
 
 
 def http_response_split(data: Column) -> Column:
-    """Split an HTTP/1.x RESPONSE message (RFC 9112 framing — the
-    payload of a WARC ``response`` record) into a struct ``(status,
-    content_type, body, ok)``; one Arrow stage.
+    """Split an HTTP/1.x response per ``binary`` value into a struct
+    ``(status, content_type, body, ok)``; never raises.
 
-    - status line ``HTTP/1.<d> <3-digit status> ...`` terminated by
-      CRLF; anything else (including the GET/POST request form a WARC
-      ``request`` record carries) → full-null ``ok=false``;
-    - headers to the first blank CRLF line, first-``:`` split,
-      case-insensitive names, latin-1 header scan (total);
-    - ``body`` is everything after the blank line, never decoded:
-      at-rest WARC payloads are already de-chunked by the crawler, so
-      ``Transfer-Encoding`` is ignored; when a digit ``Content-Length``
-      disagrees with the body size, ``ok=false`` with the body kept.
+    - The status line must be ``HTTP/1.<d> <3-digit status> ...``;
+      anything else, a request line included → all-NULL fields,
+      ``ok=false``.
+    - Headers as in :func:`_http_like_headers`.
+    - ``body`` is everything after the blank line, not decoded;
+      ``Transfer-Encoding`` and ``Content-Encoding`` are ignored.  A digit
+      ``Content-Length`` that disagrees with the body size gives
+      ``ok=false`` with the body kept.
 
-    No ``Content-Encoding`` handling: compression is
-    :func:`decompress_payload`'s job, composed on the returned body."""
-    from pyspark.sql.functions import pandas_udf
+    One scalar pandas UDF."""
+    invalid = (None, None, None, False)
 
-    _null = {"status": None, "content_type": None, "body": None, "ok": False}
-
-    def _one(b):
-        if b is None:
-            return None
-        b = bytes(b)
+    def split_http(b):
         sep = b.find(b"\r\n\r\n")
         if sep < 0 or not b.startswith(b"HTTP/1."):
-            return dict(_null)
-        head = b[:sep].decode("latin-1")
-        lines = head.split("\r\n")
-        parts = lines[0].split(" ")
-        if len(parts) < 2 or not (
-            len(parts[1]) == 3 and parts[1].isdigit()
-        ):
-            return dict(_null)
-        hdr = {}
-        for line in lines[1:]:
-            k, c, v = line.partition(":")
-            if c:
-                hdr.setdefault(k.strip().lower(), v.strip())
+            return invalid
+        status_line, hdr = _http_like_headers(b, sep)
+        parts = status_line.split(" ")
+        if len(parts) < 2 or not (len(parts[1]) == 3 and parts[1].isdigit()):
+            return invalid
         body = b[sep + 4 :]
         cl = hdr.get("content-length", "")
         ok = not cl.isdigit() or int(cl) == len(body)
-        return {
-            "status": int(parts[1]),
-            "content_type": hdr.get("content-type"),
-            "body": body,
-            "ok": ok,
-        }
+        return int(parts[1]), hdr.get("content-type"), body, ok
 
-    def _split(s):
-        import pandas as pd
-
-        return pd.DataFrame(
-            [_one(v) or dict(_null, ok=None) for v in s],
-            columns=["status", "content_type", "body", "ok"],
-        )
-
-    return pandas_udf(
-        _split, "status int, content_type string, body binary, ok boolean"
+    return per_value(
+        split_http, "status int, content_type string, body binary, ok boolean"
     )(data)
 
 
@@ -626,7 +447,7 @@ _CHARSET_PRESCAN_BYTES = 1024
 
 def decode_charset(data: Column) -> Column:
     """Charset decode of crawl payload bytes into a struct ``(text,
-    encoding, n_replaced)``; one Arrow stage.
+    encoding, n_replaced)``.
 
     The encoding is the first hint that resolves:
 
@@ -640,135 +461,72 @@ def decode_charset(data: Column) -> Column:
 
     Undecodable byte runs become U+FFFD and ``n_replaced`` counts them
     exactly; ``encoding`` is the canonical codec name used.  No
-    statistical sniffing, no UTF-32 BOM, no ``<?xml`` charset."""
+    statistical sniffing, no UTF-32 BOM, no ``<?xml`` charset.  One
+    scalar pandas UDF."""
+    import codecs
     import re
 
-    from pyspark.sql.functions import pandas_udf
+    meta_re = re.compile(
+        r"(?is)<meta[^>]{0,256}?charset\s*=\s*[\"']?\s*([a-z0-9_.:+-]+)"
+    )
+    count = [0]
 
-    def _decode_batch(s):
-        import codecs
+    def count_replace(exc):
+        if isinstance(exc, UnicodeDecodeError):
+            count[0] += 1
+            return ("\ufffd", exc.end)
+        raise exc
 
-        meta_re = re.compile(
-            r"(?is)<meta[^>]{0,256}?charset\s*=\s*[\"']?\s*"
-            r"([a-z0-9_.:+-]+)"
-        )
-        count = [0]
+    def resolve(label: str) -> str | None:
+        lab = label.strip().lower()
+        if lab in _CHARSET_WHATWG_1252:
+            return "cp1252"
+        try:
+            return codecs.lookup(lab).name
+        except LookupError:
+            return None
 
-        def _counting_replace(exc):
-            if isinstance(exc, UnicodeDecodeError):
-                count[0] += 1
-                return ("�", exc.end)
-            raise exc
+    def decode(b):
+        if b.startswith(b"\xef\xbb\xbf"):
+            enc, payload = "utf-8", b[3:]
+        elif b.startswith(b"\xff\xfe"):
+            enc, payload = "utf-16-le", b[2:]
+        elif b.startswith(b"\xfe\xff"):
+            enc, payload = "utf-16-be", b[2:]
+        else:
+            payload = b
+            m = meta_re.search(b[:_CHARSET_PRESCAN_BYTES].decode("latin-1"))
+            enc = (resolve(m.group(1)) if m else None) or "utf-8"
+        # the handler is global to the worker: register this closure's
+        # counter before each decode
+        codecs.register_error("tamar_count_replace", count_replace)
+        count[0] = 0
+        text = payload.decode(enc, errors="tamar_count_replace")
+        return text, enc, count[0]
 
-        # module-keyed name: registration is global to the worker and
-        # idempotent; the handler reads the closure's counter, which
-        # is reset per value (Arrow workers are single-threaded)
-        codecs.register_error("tamar_count_replace", _counting_replace)
-
-        def _resolve(label: str) -> str | None:
-            lab = label.strip().lower()
-            if lab in _CHARSET_WHATWG_1252:
-                return "cp1252"
-            try:
-                return codecs.lookup(lab).name
-            except LookupError:
-                return None
-
-        def _one(b):
-            if b is None:
-                return None
-            b = bytes(b)
-            if b.startswith(b"\xef\xbb\xbf"):
-                enc, payload = "utf-8", b[3:]
-            elif b.startswith(b"\xff\xfe"):
-                enc, payload = "utf-16-le", b[2:]
-            elif b.startswith(b"\xfe\xff"):
-                enc, payload = "utf-16-be", b[2:]
-            else:
-                enc, payload = None, b
-                head = b[:_CHARSET_PRESCAN_BYTES].decode("latin-1")
-                m = meta_re.search(head)
-                if m:
-                    enc = _resolve(m.group(1))
-                if enc is None:
-                    enc = "utf-8"
-            count[0] = 0
-            text = payload.decode(enc, errors="tamar_count_replace")
-            return {
-                "text": text,
-                "encoding": enc,
-                "n_replaced": count[0],
-            }
-
-        import pandas as pd
-
-        return pd.DataFrame(
-            [
-                _one(v) or {"text": None, "encoding": None, "n_replaced": None}
-                for v in s
-            ],
-            columns=["text", "encoding", "n_replaced"],
-        )
-
-    return pandas_udf(
-        _decode_batch, "text string, encoding string, n_replaced bigint"
-    )(data)
+    return per_value(decode, "text string, encoding string, n_replaced bigint")(data)
 
 
 def unicode_normalize(
     text: Column, form: str = "NFC", casefold: bool = False
 ) -> Column:
-    """Unicode normalization — the r14-VERDICT lead gap: the same
-    spelling in NFC vs NFD (``café`` composed U+00E9 vs ``cafe`` +
-    combining U+0301 — ubiquitous in real crawl data: macOS filenames,
-    copy-paste chains) previously split dedup_exact's md5, every
-    MinHash/SimHash shingle set, and the canonical_url host fold, with
-    no kernel and no declared scope line.
-
-    ``form`` is one of the four UAX #15 normal forms (``NFC`` default;
-    ``NFD``/``NFKC``/``NFKD`` opt-in — compatibility forms fold
-    ligatures ``ﬁ`` → ``fi``, fullwidth ``Ａ`` → ``A``, superscripts
-    ``²`` → ``2``, which is a LOSSY choice a pipeline must opt into).
-    ``casefold=True`` applies the full Unicode case fold after
-    normalization and re-normalizes (case folding can denormalize —
-    the standard fold-then-renormalize composition, the shape of
-    NFKC_Casefold without its default-ignorable removals).
-
-    Composition: opt-in FIRST stage of the dedup-key kernels — feed
-    ``unicode_normalize(text)`` into :func:`fingerprint` /
-    :func:`normalize_ws` / the shingle builders when the corpus is
-    real crawl text; :func:`idn_fold_host` applies the NFC rule to
-    host labels internally.  Idempotent (a normal form is a fixed
-    point by definition, and full case folding is idempotent);
-    NFC(NFD(x)) == NFC(x) and the composed/decomposed collapse are
-    pinned by property tests.
-
-    Scope (stated): no whitespace or case changes unless
-    ``casefold=True`` (use :func:`normalize_ws` for the lowercase+
-    whitespace canonical form), no locale-tailored folds (Turkish
-    dotless-i), no UTS-46/PRECIS profile, no default-ignorable
-    stripping.
-
-    Scale: one Arrow-batched pandas UDF (``unicodedata.normalize``
-    per batch — the :func:`decode_numeric_entities` plan shape), no
-    shuffle, cost ∝ bytes; real pipelines run it fused into the same
-    projection as the rest of the text chain."""
+    """Unicode normal form ``form`` (``NFC``, ``NFD``, ``NFKC`` or
+    ``NFKD``; any other raises ``ValueError``) of a string column.  With
+    ``casefold=True`` the full Unicode case fold follows and the result
+    is normalized again.  Idempotent.  No whitespace changes, no
+    locale-tailored folds, no default-ignorable stripping.  One scalar
+    pandas UDF."""
     if form not in ("NFC", "NFD", "NFKC", "NFKD"):
         raise ValueError(f"unsupported normal form: {form!r}")
     import unicodedata
 
-    from pyspark.sql.functions import pandas_udf
-
-    def _one(t: str) -> str:
+    def normalize(t: str) -> str:
         out = unicodedata.normalize(form, t)
         if casefold:
             out = unicodedata.normalize(form, out.casefold())
         return out
 
-    def _norm(s):
-        return s.map(lambda t: None if t is None else _one(t))
-
-    return pandas_udf(_norm, "string")(text)
+    return per_value(normalize, "string")(text)
 
 
 def html_main_text(html: Column, numeric_entities: bool = False) -> Column:
@@ -1060,38 +818,16 @@ def url_host(url: Column, idn: bool = False) -> Column:
 
 
 def idn_fold_host(host: Column) -> Column:
-    """Fold internationalized domain labels to punycode ASCII (RFC
-    3492) so a Unicode host and its ``xn--`` DNS form are ONE dedup
-    key (r14 VERDICT task 4 — previously a declared canonical_url
-    non-goal, and ``xn--`` hosts are common in real URL corpora).
-    Input is an already-lowercased bare host (:func:`url_host`'s
-    output); per ``.``-separated label:
-
-    - pure-ASCII label without the ``xn--`` prefix: verbatim;
-    - label containing non-ASCII: NFC-normalize (two Unicode
-      spellings of one name must land on one key — the r15
-      normalization rule, see :func:`unicode_normalize`), then
-      ``'xn--' + punycode`` (stdlib RFC 3492 codec);
-    - existing ``xn--<p>`` label: decode ``p``, NFC-normalize, and
-      RE-encode — canonicalizing alias spellings (an ``xn--`` form
-      that encodes a non-NFC string folds onto the NFC key);
-      INVALID punycode passes through VERBATIM (a malformed label
-      must never corrupt the host or throw at 100 TB).
-
-    Scope (stated, not silently approximated): RFC 3492 encoding
-    only — no UTS-46/IDNA2008 mapping tables, bidi or contextual-rule
-    validation, and no 63-octet label-length enforcement; the case
-    fold is url_host's lowercase, applied BEFORE this stage.
-
-    Scale: one Arrow-batched pandas UDF, no shuffle, cost ∝ labels —
-    and Catalyst co-batches it with any sibling Arrow stage of the
-    same projection into a single ArrowEvalPython node (verified by
-    the crawl_normalize plan contract)."""
+    """Fold the labels of an already-lowercased bare host to RFC 3492
+    punycode, so a Unicode host and its ``xn--`` form are one key.  Per
+    ``.``-separated label: pure ASCII without ``xn--`` stays verbatim; a
+    non-ASCII label is NFC-normalized and encoded as ``xn--`` +
+    punycode; an ``xn--`` label is decoded, NFC-normalized and encoded
+    again, and invalid punycode stays verbatim.  No UTS-46/IDNA2008
+    mapping, no bidi or label-length checks.  One scalar pandas UDF."""
     import unicodedata
 
-    from pyspark.sql.functions import pandas_udf
-
-    def _fold_label(lab: str) -> str:
+    def fold_label(lab: str) -> str:
         if lab.startswith("xn--"):
             try:
                 decoded = lab[4:].encode("ascii").decode("punycode")
@@ -1107,14 +843,10 @@ def idn_fold_host(host: Column) -> Column:
         except UnicodeError:  # defensive: stdlib encode accepts any str
             return lab
 
-    def _fold(s):
-        return s.map(
-            lambda h: None
-            if h is None
-            else ".".join(_fold_label(lab) for lab in h.split("."))
-        )
+    def fold_host(h: str) -> str:
+        return ".".join(fold_label(lab) for lab in h.split("."))
 
-    return pandas_udf(_fold, "string")(host)
+    return per_value(fold_host, "string")(host)
 
 
 def bpe_ish_token_count(text: Column) -> Column:

@@ -31,7 +31,7 @@ from tamar_spark import windows
 from tamar_spark.operators import dedup as D
 from tamar_spark.operators import similarity as S
 from tamar_spark.operators.asof import asof_join
-from tamar_spark.functions import text as T
+from tamar_spark.functions import multimodal as M, text as T
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
@@ -1481,28 +1481,53 @@ FROM idx
 """,
 )
 def video_frames(spark, sf_dir):
-    """Video frame sampling through the REAL rawvideo splitter
-    (:func:`tamar_spark.functions.multimodal.sample_frames`): each
-    document's utf-8 bytes stand in for an 8×4×1 rawvideo payload (the
-    fixture set has no binary video column; documents are pure ASCII at
-    every SF, so byte slicing and the oracle's character slicing agree),
-    every 2nd frame is sampled, and each emitted row carries the frame's
-    exact byte length and content sha256.  The kernel is the production
-    path — Arrow-batched ``mapInPandas``, 1→n fan-out, frame hash computed
-    in the executor — only the payload synthesis is fixture-driven."""
-    from tamar_spark.functions import multimodal as M
-
+    """Every 2nd frame of each document's utf-8 bytes read as an 8×4×1
+    rawvideo payload, through :func:`M.sample_frames`."""
     docs = load_table(spark, sf_dir, "documents")
-    vids = docs.select(
-        F.col("doc_id").alias("id"),
-        F.encode(F.col("text"), "UTF-8").alias("payload"),
+    vids = docs.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("payload"))
+    return M.sample_frames(
+        vids,
+        id_col="doc_id",
+        every_n=2,
+        fmt="rawvideo",
+        width=8,
+        height=4,
+        channels=1,
     )
-    frames = M.sample_frames(
-        vids, every_n=2, fmt="rawvideo", width=8, height=4, channels=1
-    )
-    return frames.select(
-        F.col("id").alias("doc_id"), "frame_idx", "n_bytes", "sha"
-    )
+
+
+def _doc_payload(docs: DataFrame, encode) -> DataFrame:
+    """``(doc_id, payload)`` with ``payload = encode(utf-8 bytes of
+    text)``, one scalar pandas UDF named after ``encode``; a NULL text
+    gives a NULL payload."""
+    from tamar_spark.functions._arrow import per_value
+
+    def payload(t):
+        return encode(t.encode("utf-8"))
+
+    payload.__name__ = encode.__name__
+    synth = per_value(payload, "binary")
+    return docs.select("doc_id", synth(F.col("text")).alias("payload"))
+
+
+def _pcm_wav(silence: bool):
+    """Encoder of the two PCM queries: the bytes as 16-bit PCM with the
+    high byte of every odd sample XOR 0x80 (so negative samples occur),
+    alternate 25-sample blocks zeroed when ``silence``, wrapped by
+    :func:`M.make_wav`."""
+    import numpy as np
+
+    def pcm_wav(b):
+        arr = np.frombuffer(b, dtype=np.uint8).copy()
+        arr[3::4] ^= 0x80
+        if silence:
+            k = np.arange(len(arr) // 2)
+            quiet = k[(k // 25) % 2 == 0]
+            arr[2 * quiet] = 0
+            arr[2 * quiet + 1] = 0
+        return M.make_wav(arr.tobytes())
+
+    return pcm_wav
 
 
 @query(
@@ -1519,37 +1544,12 @@ FROM documents
 """,
 )
 def audio_wav_meta(spark, sf_dir):
-    """Audio metadata through the REAL RIFF/WAV chunk parser
-    (:func:`tamar_spark.functions.multimodal.decode_audio`): each
-    document's utf-8 bytes are wrapped in a canonical 8 kHz mono 16-bit
-    PCM container (``make_wav`` — the fixture set has no audio column),
-    then the decode stage walks the RIFF chunks for real on the executor.
-    The oracle derives the same header fields arithmetically from the
-    text length (ASCII fixture: chars == bytes; 16-bit mono → n_samples =
-    bytes/2; duration is an exactly-rounded IEEE division, so the value
-    hash is engine-stable)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from tamar_spark.functions import multimodal as M
-
-    def _to_wav(texts):
-        return texts.map(lambda t: M.make_wav((t or "").encode("utf-8")))
-
-    to_wav = pandas_udf(_to_wav, "binary")
-
+    """Each document's utf-8 bytes wrapped as 8 kHz mono 16-bit PCM
+    (:func:`M.make_wav`) and read back by :func:`M.decode_audio`.  The
+    oracle derives the header from ``length(text)``, equal to the byte
+    count on the ASCII fixture."""
     docs = load_table(spark, sf_dir, "documents")
-    wavs = docs.select(
-        F.col("doc_id").alias("id"), to_wav(F.col("text")).alias("payload")
-    )
-    return M.decode_audio(wavs).select(
-        F.col("id").alias("doc_id"),
-        "sample_rate",
-        "n_channels",
-        "bits_per_sample",
-        "n_samples",
-        "duration_ms",
-    )
+    return M.decode_audio(_doc_payload(docs, M.make_wav), id_col="doc_id")
 
 
 @query(
@@ -1579,54 +1579,11 @@ FROM v GROUP BY doc_id
 """,
 )
 def audio_pcm_stats(spark, sf_dir):
-    """Sample-level audio features through the REAL RIFF data chunk (r13
-    — audio_wav_meta stopped at the header; this reads the samples):
-    each document's utf-8 bytes become signed 16-bit little-endian PCM
-    — with the HIGH byte of every odd sample XOR 0x80 so the corpus
-    carries genuinely negative samples (pure ASCII high bytes are < 128,
-    which would leave the sign bit untouched and the signedness path
-    untested) — wrapped by ``make_wav`` and re-parsed on the executor by
-    :func:`tamar_spark.functions.multimodal.pcm_stats`: chunk walk, data
-    extraction, int16 interpretation, then n_samples / peak / clipping
-    fraction / RMS / duration.  The oracle rebuilds the identical sample
-    stream arithmetically (ASCII fixture: chars == bytes; ascii char ^
-    0x80 == +128 for bytes < 128; two's-complement via the u−65536
-    fold).  RMS is engine-stable because the sum of squares is EXACT
-    (integer) on both sides and the final divide+sqrt are two correctly-
-    rounded IEEE ops on identical inputs — no rounding needed.  The
-    fixture never reaches full scale so ``clip_frac`` is 0 here; the
-    threshold path is pinned by unit tests with synthetic extremes.
-
-    Scale: same shape as the image rows — one Arrow-batched
-    ``mapInPandas`` stage, no shuffle, cost ∝ sample bytes (reference
-    parity: the map/process operator family, src/lib.rs:127-174)."""
-    from pyspark.sql.functions import pandas_udf
-
-    from tamar_spark.functions import multimodal as M
-
-    def _to_wav(texts):
-        def f(t):
-            b = bytearray((t or "").encode("utf-8"))
-            for i in range(3, len(b), 4):  # high byte of every odd sample
-                b[i] ^= 0x80
-            return M.make_wav(bytes(b))
-
-        return texts.map(f)
-
-    to_wav = pandas_udf(_to_wav, "binary")
-
-    docs = load_table(spark, sf_dir, "documents")
-    wavs = docs.filter(F.length("text") >= 2).select(
-        F.col("doc_id").alias("id"), to_wav(F.col("text")).alias("payload")
-    )
-    return M.pcm_stats(wavs).select(
-        F.col("id").alias("doc_id"),
-        "n_samples",
-        "peak_abs",
-        "clip_frac",
-        "rms",
-        "duration_ms",
-    )
+    """:func:`M.pcm_stats` over each document's bytes as signed 16-bit
+    PCM (:func:`_pcm_wav`), documents of at least 2 bytes.  The oracle
+    rebuilds the same samples from the ASCII text."""
+    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") >= 2)
+    return M.pcm_stats(_doc_payload(docs, _pcm_wav(False)), id_col="doc_id")
 
 
 @query(
@@ -1653,61 +1610,12 @@ FROM blocks WHERE seg_len >= 10
 """,
 )
 def audio_silence_segments(spark, sf_dir):
-    """Silence/activity segmentation over real PCM (r13 — the VAD-style
-    stage a speech pipeline runs before transcribe/align): the synthesis
-    zeroes alternating 25-sample blocks of each document's signed PCM
-    stream (the remaining samples keep |s| ≥ 32 — ASCII low bytes — so
-    silent and active regions are unambiguous), then
-    :func:`tamar_spark.functions.multimodal.pcm_silence_segments` walks
-    the RIFF data chunk on the executor and detects MAXIMAL silent runs
-    (|s| ≤ 0, ≥ 10 samples) with vectorized gaps-and-islands over the
-    sample mask.  One row per detected segment with stream-order
-    numbering.
-
-    The oracle reconstructs the expected segments arithmetically from
-    the known mask (even blocks, tail-clipped, short-tail dropped), so
-    the hash only matches if the chunk walk, int16 interpretation, run
-    detection, minimum-length rule, and numbering all agree — a
-    detector that merges runs across an active block, misses a
-    boundary, or numbers dropped tails wrongly diverges.  ASCII fixture
-    assumption (chars == bytes) as in audio_pcm_stats.
-
-    Scale: one Arrow-batched ``mapInPandas`` stage, no shuffle; cost ∝
-    sample bytes (reference parity: the map/process operator family,
-    src/lib.rs:127-174)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    from tamar_spark.functions import multimodal as M
-
-    def _to_wav(texts):
-        def f(t):
-            b = bytearray((t or "").encode("utf-8"))
-            for i in range(3, len(b), 4):  # signedness, as audio_pcm_stats
-                b[i] ^= 0x80
-            arr = np.frombuffer(bytes(b), dtype=np.uint8).copy()
-            n = len(arr) // 2
-            k = np.arange(n)
-            silent = (k // 25) % 2 == 0
-            arr[2 * k[silent]] = 0
-            arr[2 * k[silent] + 1] = 0
-            return M.make_wav(arr.tobytes())
-
-        return texts.map(f)
-
-    to_wav = pandas_udf(_to_wav, "binary")
-
-    docs = load_table(spark, sf_dir, "documents")
-    wavs = docs.filter(F.length("text") >= 2).select(
-        F.col("doc_id").alias("id"), to_wav(F.col("text")).alias("payload")
-    )
-    return M.pcm_silence_segments(wavs).select(
-        F.col("id").alias("doc_id"),
-        "seg_idx",
-        "start_sample",
-        "n_samples",
-        "duration_ms",
-    )
+    """:func:`M.pcm_silence_segments` over the :func:`audio_pcm_stats`
+    samples with alternate 25-sample blocks zeroed (:func:`_pcm_wav`);
+    the other samples keep ``|s| >= 32``.  The oracle derives the
+    expected runs from the text length."""
+    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") >= 2)
+    return M.pcm_silence_segments(_doc_payload(docs, _pcm_wav(True)), id_col="doc_id")
 
 
 @query(
@@ -1725,42 +1633,11 @@ WHERE length(text) >= 45
 """,
 )
 def image_bmp_pixels(spark, sf_dir):
-    """REAL image decode without any codec library (r6 VERDICT task 9):
-    each document's utf-8 bytes become the top-down RGB pixel rows of a
-    genuine 24-bit BMP (``make_bmp`` — 15 px/row so the 45-byte rows get
-    3 bytes of mandatory 4-byte-stride padding, and rows are stored
-    bottom-up per the spec), then ``decode_image_pixels`` parses the
-    container back on the executor: header fields, row flip, stride
-    strip, and a sha256 over the recovered row-major pixel bytes.  The
-    oracle computes that hash directly from the text prefix (ASCII
-    fixture: chars == bytes), so a match proves the BOTH-direction
-    round trip — any error in stride, row order, or header layout
-    changes the hash.  This puts image decode on the same codec-free
-    REAL standard as the MJPEG frame walk and the RIFF/WAV parser;
-    codec-compressed formats remain the documented non-goal.
-    Docs shorter than one pixel row (45 bytes) have no valid BMP and are
-    filtered identically in both engines."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from tamar_spark.functions import multimodal as M
-
-    def _to_bmp(texts):
-        return texts.map(lambda t: M.make_bmp((t or "").encode("utf-8")))
-
-    to_bmp = pandas_udf(_to_bmp, "binary")
-
-    docs = load_table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.length("text") >= 45).select(
-        F.col("doc_id").alias("id"), to_bmp(F.col("text")).alias("payload")
-    )
-    return M.decode_image_pixels(imgs).select(
-        F.col("id").alias("doc_id"),
-        "width",
-        "height",
-        "n_channels",
-        "pixel_sha",
-    )
+    """Each document of at least one 45-byte row as a 15 px/row 24-bit
+    BMP (:func:`M.make_bmp`), decoded by :func:`M.decode_image_pixels`.
+    The oracle hashes the text prefix of whole rows."""
+    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") >= 45)
+    return M.decode_image_pixels(_doc_payload(docs, M.make_bmp), id_col="doc_id")
 
 
 @query(
@@ -1778,49 +1655,12 @@ WHERE length(text) >= 33
 """,
 )
 def image_png_pixels(spark, sf_dir):
-    """REAL decode of a COMPRESSED image codec with zero new
-    dependencies (r7 VERDICT task 4): each document's utf-8 bytes become
-    the RGB pixel rows of a genuine 8-bit PNG (``make_png`` — 11 px/row;
-    every scanline filtered with type ``row % 5``, cycling None, Sub,
-    Up, Average, Paeth), then ``decode_image_pixels`` decodes it back on
-    the executor: CRC-verified chunk walk, zlib inflate of the IDAT
-    stream, and per-scanline unfiltering of all five filter types.  The
-    sha256 over the reconstructed pixel bytes only matches the oracle's
-    hash of the raw text prefix (ASCII fixture: chars == bytes) if every
-    filter reconstruction — modular add, floor-average, the Paeth
-    tie-break order — is exactly right, which no header peek or offset
-    copy can fake: the bytes in the file are DEFLATE-compressed and
-    don't contain the pixels verbatim.  This retires the "no compressed
-    codec decode" caveat for the most common raster format; entropy-
-    coded media (JPEG scans, H.264) remain the documented non-goal.
-    Docs shorter than one pixel row (33 bytes) are filtered identically
-    in both engines.
-
-    Scale: identical shape to ``image_bmp_pixels`` — one Arrow-batched
-    ``pandas_udf`` synthesis stage and one ``mapInPandas`` decode stage,
-    no shuffle at all; decode is per-row CPU-bound work that partitions
-    embarrassingly (reference parity: the map/process operator family,
-    src/lib.rs:127-174)."""
-    from pyspark.sql.functions import pandas_udf
-
-    from tamar_spark.functions import multimodal as M
-
-    def _to_png(texts):
-        return texts.map(lambda t: M.make_png((t or "").encode("utf-8")))
-
-    to_png = pandas_udf(_to_png, "binary")
-
-    docs = load_table(spark, sf_dir, "documents")
-    imgs = docs.filter(F.length("text") >= 33).select(
-        F.col("doc_id").alias("id"), to_png(F.col("text")).alias("payload")
-    )
-    return M.decode_image_pixels(imgs).select(
-        F.col("id").alias("doc_id"),
-        "width",
-        "height",
-        "n_channels",
-        "pixel_sha",
-    )
+    """Each document of at least one 33-byte row as an 11 px/row RGB PNG
+    with every filter type (:func:`M.make_png`), decoded by
+    :func:`M.decode_image_pixels`.  The oracle hashes the text prefix of
+    whole rows."""
+    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") >= 33)
+    return M.decode_image_pixels(_doc_payload(docs, M.make_png), id_col="doc_id")
 
 
 @query(
@@ -1836,44 +1676,12 @@ WHERE length(text) >= 24
 """,
 )
 def image_jpeg_roundtrip(spark, sf_dir):
-    """REAL baseline JPEG encode + ENTROPY DECODE, numpy + stdlib only
-    (r12 — shrinks the declared entropy-codec non-goal): each document's
-    utf-8 bytes become the RGB rows of a genuine baseline JFIF JPEG
-    (``make_jpeg`` — 8 px/row, 4:4:4, IJG-scaled standard quant tables
-    and canonical Huffman tables embedded in DQT/DHT, float DCT, DC
-    prediction, run-length AC coding, byte stuffing), then ``parse_jpeg``
-    decodes it back on the executor: marker walk, table parse, bit-level
-    Huffman decode with unstuffing and EOB/ZRL semantics, dequantize,
-    inverse zigzag, IDCT, YCbCr→RGB, crop.  JPEG is LOSSY, so unlike
-    image_png_pixels the pixel hash cannot equal the source hash; the
-    proof is the bounded-error check (the approx_distinct_users
-    self-verified-boolean pattern): ``decode_ok`` is true iff the
-    decoded dimensions match the source-derived geometry AND every
-    recovered pixel is within 12 of its source byte — the measured true
-    max error at quality 99 is 5 over the ENTIRE sf0.1 fixture, and a
-    broken Huffman walk / zigzag / dequant / IDCT produces garbage that
-    fails the bound, so the oracle hash (which asserts TRUE for every
-    doc) only matches when the full codec pair works.  4:2:0/4:2:2
-    chroma decodes for real (r12) and restart intervals round-trip
-    (r13, image_jpeg_rst_roundtrip); progressive JPEG, sampling beyond
-    2×2, and H.264 remain the loud out-of-scope line.
-    Docs shorter than one pixel row (24 bytes) are filtered identically
-    in both engines.  The oracle derives geometry from ``length(text)``
-    in CHARACTERS while the Spark side uses utf-8 BYTES — equal only
-    because the fixture is ASCII (the image_png_pixels assumption,
-    stated here per the r12 ADVICE so a non-ASCII fixture is a known
-    divergence point, not a silent one).
-
-    Scale: one Arrow-batched ``mapInPandas`` stage, no shuffle —
-    identical plan shape to image_png_pixels; decode is per-row
-    CPU-bound numpy work that partitions embarrassingly (reference
-    parity: the map/process operator family, src/lib.rs:127-174)."""
-    from tamar_spark.functions import multimodal as M
-
+    """:func:`M.jpeg_roundtrip_check` over documents of at least one
+    24-byte pixel row; the oracle expects ``decode_ok`` true and derives
+    the geometry from ``length(text)``, equal to the byte count on the
+    ASCII fixture."""
     docs = load_table(spark, sf_dir, "documents")
-    return M.jpeg_roundtrip_check(
-        docs.filter(F.length("text") >= 24), text_col="text", id_col="doc_id"
-    )
+    return M.jpeg_roundtrip_check(docs.filter(F.length("text") >= 24))
 
 
 @query(
@@ -1889,35 +1697,11 @@ WHERE length(text) >= 24
 """,
 )
 def image_jpeg_rst_roundtrip(spark, sf_dir):
-    """The r12 JPEG round trip under the DRI/RSTn RESTART protocol (r13
-    — closes the one scope line real camera MJPEG hits immediately:
-    hardware encoders almost always emit restart intervals so a damaged
-    scan can resynchronize).  Same encode→entropy-decode→bounded-error
-    construction as image_jpeg_roundtrip, but the encoder writes a DRI
-    segment and an RSTm marker after EVERY MCU (interval 1 — the
-    maximal-marker layout), so multi-MCU documents exercise the full 0-7
-    marker cycle, per-segment byte alignment, and the DC-predictor
-    reset.  A decoder that misses the reset drifts every post-restart
-    DC level and fails the 12 bound; one that mis-walks segment
-    boundaries raises — either way ``decode_ok`` goes false and the
-    oracle hash (TRUE for every doc with ≥1 pixel row) breaks.
-    Corrupted restart streams (out-of-sequence / missing / surplus
-    markers, RST with no DRI) are pinned to raise by the adversarial
-    unit tests.  Oracle geometry uses ``length(text)`` characters vs
-    the Spark side's utf-8 bytes — equal only on the ASCII fixture
-    (stated per the r12 ADVICE, as in image_jpeg_roundtrip).
-
-    Scale: identical plan shape to image_jpeg_roundtrip — one
-    Arrow-batched ``mapInPandas`` stage, no shuffle, per-row CPU-bound
-    codec work that partitions embarrassingly."""
-    from tamar_spark.functions import multimodal as M
-
+    """:func:`image_jpeg_roundtrip` with a DRI/RSTn restart marker after
+    every MCU."""
     docs = load_table(spark, sf_dir, "documents")
     return M.jpeg_roundtrip_check(
-        docs.filter(F.length("text") >= 24),
-        text_col="text",
-        id_col="doc_id",
-        restart_interval=1,
+        docs.filter(F.length("text") >= 24), restart_interval=1
     )
 
 
@@ -1937,39 +1721,12 @@ WHERE length(text) >= 192
 """,
 )
 def video_frame_pixels(spark, sf_dir):
-    """MJPEG frame sampling with REAL PIXEL DECODE (r12 — closes the gap
-    video_frames left open: the structural splitter found frame
-    boundaries but pixels stayed opaque): each document's bytes become
-    8-row JPEG frames concatenated into a genuine MJPEG stream, the
-    stream is re-split by the marker-structure walker (the same
-    ``_iter_jpeg_frames`` sample_frames uses — the split is computed
-    from segment structure, so an entropy-stream mis-walk miscounts
-    frames and fails every row), and every 4th frame is Huffman-decoded
-    back to pixels and checked within the measured error bound of its
-    source chunk (quality 99 / bound 12 — the image_jpeg_roundtrip
-    operating point).  One row per SAMPLED frame; the oracle derives the
-    sampled frame indices and geometry from the text length and asserts
-    TRUE, so the hash only matches if synthesis, container split,
-    entropy decode, and the bound all hold for every sampled frame of
-    every document.  Docs shorter than one frame (192 bytes) are
-    filtered identically in both engines.  Frame counts and indices
-    derive from ``length(text)`` characters in the oracle vs utf-8
-    bytes on the Spark side — equal only on the ASCII fixture (stated
-    per the r12 ADVICE, as in image_png_pixels).
-
-    Scale: one Arrow-batched ``mapInPandas`` stage, no shuffle — frame
-    decode is per-row CPU work that partitions embarrassingly; at 100 TB
-    the same stage runs over real camera MJPEG with the sampling ratio
-    as the cost dial (decode cost ∝ sampled frames, split cost ∝ bytes).
-    The restart intervals real camera MJPEG carries decode as of r13
-    (image_jpeg_rst_roundtrip pins the protocol), so that claim no
-    longer rides on a NotImplementedError."""
-    from tamar_spark.functions import multimodal as M
-
+    """:func:`M.mjpeg_frame_pixel_check` over documents of at least one
+    192-byte frame; the oracle expects ``decode_ok`` true for every 4th
+    frame and derives the frame count from ``length(text)``, equal to
+    the byte count on the ASCII fixture."""
     docs = load_table(spark, sf_dir, "documents")
-    return M.mjpeg_frame_pixel_check(
-        docs.filter(F.length("text") >= 192), text_col="text", id_col="doc_id"
-    )
+    return M.mjpeg_frame_pixel_check(docs.filter(F.length("text") >= 192))
 
 
 # ---------------------------------------------------------------------------
@@ -2256,15 +2013,14 @@ def _events_stream(spark, sf_dir, watermark: str | None = "10 minutes"):
     ``withWatermark`` themselves.
 
     Adapts to the fixture's physical type with :func:`load_table`'s rule:
-    TIMESTAMP(NANOS) parquet is read as long (``nanosAsLong``) and
+    on the prepared session TIMESTAMP(NANOS) parquet is read as long and
     truncated ns→µs like DuckDB does; TIMESTAMP(MICROS) parquet arrives as
     TIMESTAMP_NTZ and is cast to LTZ (a value identity under the UTC
     session timezone) so window bounds and emitted schemas are stable
     either way."""
+    prep_session(spark)
     path = _events_path(sf_dir)
     ns_cols = ts_ns_columns(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = spark.read.parquet(path).schema
     ts_fix = (
         F.timestamp_micros(F.expr("ts div 1000"))

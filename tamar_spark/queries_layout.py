@@ -1341,45 +1341,24 @@ FROM orders"""
     + "\nORDER BY col_name",
 )
 def table_profile(spark, sf_dir):
-    """Data-profiling pass (the Deequ/Great-Expectations primitive): per
-    column of the orders table, row count, NULL count, and EXACT distinct
-    count, in ONE job.  Spark plans the six exact COUNT DISTINCTs as a
-    single Expand + aggregate (each input row fans out once per column),
-    so the table is scanned once regardless of column count; the result
-    is one row, unpivoted driver-free via ``stack``.  At 100 TB the exact
-    distinct expand is the deliberate-profiling path — continuous
-    monitoring uses ``approx_count_distinct`` (approx_distinct_users),
-    which aggregates in constant space.  All outputs are exact integers —
-    nothing for a float hash to disagree on.
-
-    Deliberately NOT spread (r16, measured): the Expand+partial-distinct
-    stage runs as one 0.75 s task on the one-row-group fixture, but the
-    conditional round-robin made the query SLOWER (interleaved A/B
-    median 2.12 → 2.79 s) — with p partitions each distinct value
-    survives partial aggregation once per partition, so the exchange
-    carries up to p× the bytes and the final merge re-deduplicates them;
-    the parallelism win loses to the partial-agg dilution.  At scale the
-    scan arrives pre-split and the question is moot."""
+    """Per column of ``_PROFILE_COLS`` in orders: row count, NULL count
+    and exact distinct count.  One unpivot of the columns cast to string
+    (a cast that keeps distinctness) and one ``groupBy(col_name)`` with a
+    single ``countDistinct``, so no multi-distinct ``Expand`` makes the
+    plan differ between JVMs; the table is scanned once.  The cells are
+    hash-partitioned by ``col_name`` once, which both aggregation steps
+    of the distinct count reuse."""
     o = load_table(spark, sf_dir, "orders")
-    aggs = []
-    for c in _PROFILE_COLS:
-        aggs += [
-            F.count(F.lit(1)).alias(f"{c}__n"),
-            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(
-                f"{c}__nulls"
-            ),
-            F.countDistinct(c).alias(f"{c}__distinct"),
-        ]
-    one = o.agg(*aggs)
-    stack = ", ".join(
-        f"'{c}', {c}__n, {c}__nulls, {c}__distinct" for c in _PROFILE_COLS
-    )
+    cells = o.select(
+        *[F.col(c).cast("string").alias(c) for c in _PROFILE_COLS]
+    ).unpivot([], _PROFILE_COLS, "col_name", "v")
     return (
-        one.select(
-            F.expr(
-                f"stack({len(_PROFILE_COLS)}, {stack}) AS"
-                " (col_name, n_rows, n_null, n_distinct)"
-            )
+        cells.repartition("col_name")
+        .groupBy("col_name")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            (F.count(F.lit(1)) - F.count("v")).alias("n_null"),
+            F.countDistinct("v").alias("n_distinct"),
         )
         .orderBy("col_name")
     )

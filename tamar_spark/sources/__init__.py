@@ -3,9 +3,9 @@
 Loading.  The reference's ``Source`` trait is a push-based task (reference
 src/lib.rs:60-62); here sources are Spark readers.  Parquet timestamps stored
 as TIMESTAMP(NANOS), which Spark cannot read natively, are read through
-``spark.sql.legacy.parquet.nanosAsLong`` and converted ``ns div 1000`` →
-``timestamp_micros`` — the same truncation DuckDB applies, so oracle
-comparisons line up exactly.  The conversion is a projection inside
+``spark.sql.legacy.parquet.nanosAsLong`` (set once by ``prep_session``)
+and converted ``ns div 1000`` → ``timestamp_micros`` — the same truncation
+DuckDB applies, so oracle comparisons line up exactly.  The conversion is a projection inside
 whole-stage codegen; pruning and pushdown on other columns are unaffected.
 
 Partitioning policy.  Every partition-width decision in the library is made
@@ -46,6 +46,8 @@ from typing import Dict, Iterable, Optional
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from tamar_spark.env import prep_session
 
 __all__ = [
     "default_parallelism",
@@ -241,11 +243,12 @@ def pin_session_width(df: DataFrame, *keys) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table with nanosecond-timestamp normalization."""
+    """Load one fixture table on a prepared session (:func:`prep_session`
+    reads TIMESTAMP(NANOS) as long), truncating nanosecond columns to
+    µs timestamps."""
+    prep_session(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     ns_cols = ts_ns_columns(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))

@@ -473,6 +473,84 @@ def test_multimodal_decode(spark):
         M.decode_image_pixels(df).collect()
 
 
+def test_media_operators_on_empty_input_keep_their_schema(spark):
+    """Over a zero-row input each media operator returns zero rows with
+    exactly its declared schema, the caller's id column first."""
+    from pyspark.sql.types import StructType
+
+    from tamar_spark.functions import multimodal as M
+
+    media = spark.createDataFrame([], "vid long, payload binary")
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    check = "n_channels int, decode_ok boolean"
+    cases = [
+        (
+            M.sample_frames(media, id_col="vid"),
+            "vid long, frame_idx int, n_bytes long, sha string",
+        ),
+        (
+            M.decode_image_pixels(media, id_col="vid"),
+            "vid long, width int, height int, n_channels int, pixel_sha string",
+        ),
+        (
+            M.decode_audio(media, id_col="vid"),
+            "vid long, sample_rate int, n_channels int, bits_per_sample int,"
+            " n_samples long, duration_ms double",
+        ),
+        (
+            M.pcm_stats(media, id_col="vid"),
+            "vid long, n_samples bigint, peak_abs int, clip_frac double,"
+            " rms double, duration_ms double",
+        ),
+        (
+            M.pcm_silence_segments(media, id_col="vid"),
+            "vid long, seg_idx int, start_sample bigint, n_samples bigint,"
+            " duration_ms double",
+        ),
+        (
+            M.jpeg_roundtrip_check(docs),
+            f"doc_id long, width int, height int, {check}",
+        ),
+        (
+            M.mjpeg_frame_pixel_check(docs),
+            f"doc_id long, frame_idx int, width int, height int, {check}",
+        ),
+    ]
+    for df, ddl in cases:
+        assert df.schema == StructType.fromDDL(ddl), (ddl, df.schema)
+        assert df.collect() == [], ddl
+
+
+def test_text_kernels_map_null_to_null(spark):
+    """Every per-value text kernel maps a NULL input to NULL, or to a
+    struct whose fields are all NULL."""
+    from tamar_spark.functions import text as T
+
+    df = spark.createDataFrame([(None, None)], "s string, b binary")
+    s, b = F.col("s"), F.col("b")
+    scalars = {
+        "entities": T.decode_numeric_entities(s),
+        "html": T.html_main_text(s, numeric_entities=True),
+        "deflate": T.deflate_compress(b),
+        "nfc": T.unicode_normalize(s),
+        "idn": T.idn_fold_host(s),
+    }
+    structs = {
+        "inflate": T.decompress_payload(b),
+        "warc": T.warc_parse(b),
+        "http": T.http_response_split(b),
+        "charset": T.decode_charset(b),
+    }
+    row = df.select(
+        *[c.alias(k) for k, c in scalars.items()],
+        *[c.alias(k) for k, c in structs.items()],
+    ).collect()[0]
+    for k in scalars:
+        assert row[k] is None, k
+    for k in structs:
+        assert row[k] is not None and all(v is None for v in row[k]), (k, row[k])
+
+
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
     """The declarative filter path must push predicates into the parquet scan
     (SURVEY §4.1 — the single most important design rule)."""
@@ -2231,6 +2309,23 @@ def test_caller_set_width_survives_a_query_call(spark, sf_dir):
         QUERIES["session_agg"](spark, sf_dir)
         assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
     finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_get_spark_width_survives_the_first_query_call(spark, sf_dir):
+    """``get_spark(shuffle_partitions=N)`` prepares the session itself,
+    so the first query call on a fresh session keeps width N."""
+    from tamar_spark.env import get_spark
+    from tamar_spark.queries import QUERIES
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.unset("spark.tamar.sessionPrepared")  # a fresh session
+    try:
+        session = get_spark(shuffle_partitions=3)
+        QUERIES["session_agg"](session, sf_dir)
+        assert session.conf.get("spark.sql.shuffle.partitions") == "3"
+    finally:
+        spark.conf.set("spark.tamar.sessionPrepared", "true")
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
