@@ -15,7 +15,7 @@ from typing import Callable, Iterable, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DataType, StructType
 
 
 def per_value(fn: Callable, ddl: str):
@@ -24,7 +24,7 @@ def per_value(fn: Callable, ddl: str):
     declares fields; for a struct type ``fn`` returns a tuple in field
     order.  Sibling calls in one projection share one ``ArrowEvalPython``
     node."""
-    rtype = StructType.fromDDL(ddl)
+    rtype = DataType.fromDDL(ddl)
     if isinstance(rtype, StructType):
         names = rtype.names
         null = (None,) * len(names)
