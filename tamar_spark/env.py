@@ -34,12 +34,13 @@ def _default_parallelism() -> int:
 def get_spark(
     app_name: str = "tamar-spark",
     master: Optional[str] = None,
-    shuffle_partitions: Optional[int] = None,
     extra_conf: Optional[dict] = None,
 ) -> SparkSession:
     """Create (or get) a SparkSession tuned for this engine and prepared
-    by :func:`prep_session`; ``shuffle_partitions``, when given, then
-    replaces the prepared shuffle width and survives later query calls.
+    by :func:`prep_session`, whose confs override an ``extra_conf`` entry
+    for the same key on a new session.  To change one of them (say, the shuffle
+    width), ``spark.conf.set`` it on the returned session; the value
+    survives later query calls.
 
     In local test mode this is ``local[$SPARK_GRAFT_CPUS]``; on a cluster the
     caller supplies ``master``/conf via spark-submit and we only set SQL-level
@@ -69,10 +70,7 @@ def get_spark(
         builder = builder.master(f"local[{_default_parallelism()}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = prep_session(builder.getOrCreate())
-    if shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    return spark
+    return prep_session(builder.getOrCreate())
 
 
 _PREPARED = "spark.tamar.sessionPrepared"

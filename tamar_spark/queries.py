@@ -1499,7 +1499,7 @@ def video_frames(spark, sf_dir):
 def _doc_payload(docs: DataFrame, encode) -> DataFrame:
     """``(doc_id, payload)`` with ``payload = encode(utf-8 bytes of
     text)``, one scalar pandas UDF named after ``encode``; a NULL text
-    gives a NULL payload."""
+    is encoded as the empty string."""
     from tamar_spark.functions._arrow import per_value
 
     def payload(t):
@@ -1507,7 +1507,8 @@ def _doc_payload(docs: DataFrame, encode) -> DataFrame:
 
     payload.__name__ = encode.__name__
     synth = per_value(payload, "binary")
-    return docs.select("doc_id", synth(F.col("text")).alias("payload"))
+    text = F.coalesce(F.col("text"), F.lit(""))
+    return docs.select("doc_id", synth(text).alias("payload"))
 
 
 def _pcm_wav(silence: bool):

@@ -1342,23 +1342,44 @@ FROM orders"""
 )
 def table_profile(spark, sf_dir):
     """Per column of ``_PROFILE_COLS`` in orders: row count, NULL count
-    and exact distinct count.  One unpivot of the columns cast to string
-    (a cast that keeps distinctness) and one ``groupBy(col_name)`` with a
-    single ``countDistinct``, so no multi-distinct ``Expand`` makes the
-    plan differ between JVMs; the table is scanned once.  The cells are
-    hash-partitioned by ``col_name`` once, which both aggregation steps
-    of the distinct count reuse."""
+    and exact distinct count, one row per column (zeros on an empty
+    table).  ``stack`` emits row ``gid = i`` with column ``i``'s value in
+    slot ``v{i}`` and NULL in the others; the rows are counted per
+    (gid, slots), partially in the scan tasks, and one global aggregate
+    folds those counts.  That is the plan Spark builds for several
+    ``countDistinct`` calls, written out so the group order is fixed:
+    Spark's own ``Expand`` orders the groups differently between JVMs.
+    The table is scanned once."""
     o = load_table(spark, sf_dir, "orders")
-    cells = o.select(
-        *[F.col(c).cast("string").alias(c) for c in _PROFILE_COLS]
-    ).unpivot([], _PROFILE_COLS, "col_name", "v")
+    k = len(_PROFILE_COLS)
+    slots = [f"v{i}" for i in range(k)]
+    rows = ", ".join(
+        f"{i}, " + ", ".join(c if j == i else "NULL" for j in range(k))
+        for i, c in enumerate(_PROFILE_COLS)
+    )
+    counts = (
+        o.selectExpr(f"stack({k}, {rows}) AS (gid, {', '.join(slots)})")
+        .groupBy("gid", *slots)
+        .count()
+    )
+    aggs = []
+    for i, c in enumerate(_PROFILE_COLS):
+        n = F.when(F.col("gid") == i, F.col("count"))
+        v = F.col(slots[i])
+        aggs += [
+            F.coalesce(F.sum(n), F.lit(0)).alias(f"{c}__n"),
+            F.coalesce(F.sum(F.when(v.isNull(), n)), F.lit(0)).alias(f"{c}__nulls"),
+            F.count(F.when(v.isNotNull(), n)).alias(f"{c}__distinct"),
+        ]
+    stack = ", ".join(
+        f"'{c}', {c}__n, {c}__nulls, {c}__distinct" for c in _PROFILE_COLS
+    )
     return (
-        cells.repartition("col_name")
-        .groupBy("col_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            (F.count(F.lit(1)) - F.count("v")).alias("n_null"),
-            F.countDistinct("v").alias("n_distinct"),
+        counts.agg(*aggs)
+        .select(
+            F.expr(
+                f"stack({k}, {stack}) AS (col_name, n_rows, n_null, n_distinct)"
+            )
         )
         .orderBy("col_name")
     )

@@ -521,6 +521,52 @@ def test_media_operators_on_empty_input_keep_their_schema(spark):
         assert df.collect() == [], ddl
 
 
+def test_synthesis_queries_encode_null_text_as_empty(spark, tmp_path):
+    """A NULL ``documents.text`` is synthesized as the empty string:
+    ``audio_wav_meta`` reads it as a 0-sample WAV and the four
+    length-filtered synthesis queries drop it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tamar_spark.queries import QUERIES
+
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array([1, 2], pa.int64()),
+            "text": pa.array([None, "x" * 64], pa.string()),
+        }),
+        str(tmp_path / "documents.parquet"),
+    )
+    sf = str(tmp_path)
+    got = {r.doc_id: r for r in QUERIES["audio_wav_meta"](spark, sf).collect()}
+    assert (got[1].n_samples, got[1].duration_ms) == (0, 0.0)
+    assert (got[2].n_samples, got[2].duration_ms) == (32, 4.0)
+    for name in (
+        "audio_pcm_stats",
+        "audio_silence_segments",
+        "image_bmp_pixels",
+        "image_png_pixels",
+    ):
+        assert {r.doc_id for r in QUERIES[name](spark, sf).collect()} == {2}, name
+
+
+def test_table_profile_on_empty_orders_matches_oracle(spark, sf_dir, tmp_path):
+    """Over a zero-row orders table ``table_profile`` gives one all-zero
+    row per profiled column, as its DuckDB oracle does."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from tamar_spark.queries import ORACLES, QUERIES
+
+    path = str(tmp_path / "orders.parquet")
+    pq.write_table(pq.read_table(f"{sf_dir}/orders.parquet").slice(0, 0), path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM read_parquet('{path}')")
+    want = con.execute(ORACLES["table_profile"]).fetchall()
+    got = [tuple(r) for r in QUERIES["table_profile"](spark, str(tmp_path)).collect()]
+    assert got == want and len(got) == 6 and {r[1:] for r in got} == {(0, 0, 0)}
+
+
 def test_text_kernels_map_null_to_null(spark):
     """Every per-value text kernel maps a NULL input to NULL, or to a
     struct whose fields are all NULL."""
@@ -2313,15 +2359,16 @@ def test_caller_set_width_survives_a_query_call(spark, sf_dir):
 
 
 def test_get_spark_width_survives_the_first_query_call(spark, sf_dir):
-    """``get_spark(shuffle_partitions=N)`` prepares the session itself,
-    so the first query call on a fresh session keeps width N."""
+    """``get_spark`` prepares the session itself, so a shuffle width set
+    on the session it returns survives the first query call."""
     from tamar_spark.env import get_spark
     from tamar_spark.queries import QUERIES
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.unset("spark.tamar.sessionPrepared")  # a fresh session
     try:
-        session = get_spark(shuffle_partitions=3)
+        session = get_spark()
+        session.conf.set("spark.sql.shuffle.partitions", "3")
         QUERIES["session_agg"](session, sf_dir)
         assert session.conf.get("spark.sql.shuffle.partitions") == "3"
     finally:

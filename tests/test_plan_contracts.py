@@ -103,7 +103,7 @@ CONTRACTS = [
     ("cep_funnel_sequence", 2, 0),  # one user-key window stage, two lags
     ("cep_runs", 2, 0),  # gaps-and-islands: shared user shuffle + agg
     ("trend_ols", 2, 0),  # 1-row t0 broadcast + one exact-moment agg
-    ("table_profile", 2, 0),  # one Expand + aggregate; single table scan
+    ("table_profile", 2, 0),  # stack + per-(gid, value) counts + global fold
     # per-row array fold does sentence-split, lang-ID, and the segment
     # collapse in one projection — no window functions, no KEYED shuffle.
     # sources.spread adds one conditional ROUND-ROBIN redistribution on
